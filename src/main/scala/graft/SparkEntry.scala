@@ -94,15 +94,32 @@ object SparkEntry {
     graft.queries.TextQueries.queries
 
   /** Drop staging relations a query pinned for its own execution (q56's
-    * eagerly-cached `v_sql_bands`). The cache must outlive the RETURNED
-    * lazy DataFrame until the caller materializes it — uncaching inside the
-    * query builder would silently recompute the corpus scan per join side —
-    * so harnesses (Bench, Verify) call this after each query's write
-    * instead; otherwise the band relation rides executor memory into every
-    * subsequent query of the pass. */
+    * eagerly-cached `v_sql_bands`, the [[stagingDir]] directories). They
+    * must outlive the RETURNED lazy DataFrame until the caller
+    * materializes it — uncaching inside the query builder would silently
+    * recompute the corpus scan per join side — so harnesses (Bench,
+    * Verify) call this after each query's write instead; otherwise the
+    * band relation rides executor memory into every subsequent query of
+    * the pass. */
   def releaseStaging(s: SparkSession): Unit = {
     s.sql("UNCACHE TABLE IF EXISTS v_sql_bands")
     s.sql("DROP TABLE IF EXISTS sql_bands_stage")
+    stagedDirs.synchronized(stagedDirs.remove(s)).getOrElse(Nil)
+      .foreach(d => org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(d)))
+  }
+
+  private val stagedDirs = scala.collection.mutable.Map.empty[SparkSession, List[String]]
+
+  /** A fresh temp directory that [[releaseStaging]] deletes: for queries
+    * whose returned lazy DataFrame still reads files they wrote (q210 /
+    * q211 / q244's persisted ANN index, q277's stored SetSim index), so the
+    * directory has to outlive the query builder but not the harness's
+    * write.
+    */
+  private[graft] def stagingDir(s: SparkSession, prefix: String): String = {
+    val d = java.nio.file.Files.createTempDirectory(prefix).toString
+    stagedDirs.synchronized(stagedDirs(s) = d :: stagedDirs.getOrElse(s, Nil))
+    d
   }
 
   /** q176's body against any events relation — factored so [[ScaleProbe]]

@@ -1,13 +1,12 @@
 package graft.functions
 
 import org.apache.spark.sql.{Column, SparkSession}
-import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graft.Bridge
 import org.apache.spark.sql.graft.expressions.{CosineSimilarity, DotProduct}
 
 /** Vector-column functions. Cosine/dot ride the codegen Catalyst expressions
-  * in [[graft.expressions]]; norms compose built-in higher-order functions so
-  * everything stays inside whole-stage codegen (no UDF hot path).
+  * in [[graft.expressions]] (whole-stage codegen, no UDF hot path); `dot` /
+  * `cosine` are their driver-side twins for query-batch-sized work.
   *
   * Semantics source: the reference scores retrieval by the index's cosine
   * metric (`QA_using_pinecone.py:40-44`) over 1536-dim ada-002 vectors
@@ -22,18 +21,25 @@ object VectorFunctions {
   def dotProduct(a: Column, b: Column): Column =
     Bridge.toColumn(DotProduct(Bridge.toExpr(a), Bridge.toExpr(b)))
 
-  /** L2 norm via built-in higher-order aggregate (codegen'd). */
-  def l2Norm(a: Column): Column =
-    sqrt(aggregate(a, lit(0.0), (acc, x) => acc + x.cast("double") * x.cast("double")))
-
-  /** Plain-Scala cosine for driver-side / packer use; same accumulation
-    * order as the Catalyst expression.
+  /** Plain-Scala dot product for driver-side use: the [[DotProduct]]
+    * accumulation (double, ascending index, common prefix only), so results
+    * are bit-identical to the Catalyst expression.
     */
-  def cosine(a: Array[Float], b: Array[Float]): Double = {
+  def dot(a: Array[Double], b: Array[Double]): Double = {
+    val n = math.min(a.length, b.length)
+    var d = 0.0; var i = 0
+    while (i < n) { d += a(i) * b(i); i += 1 }
+    d
+  }
+
+  /** Plain-Scala cosine for driver-side use; same accumulation order as the
+    * [[CosineSimilarity]] expression (0.0 for zero-norm inputs).
+    */
+  def cosine(a: Array[Double], b: Array[Double]): Double = {
     val n = math.min(a.length, b.length)
     var dot = 0.0; var na = 0.0; var nb = 0.0; var i = 0
     while (i < n) {
-      val x = a(i).toDouble; val y = b(i).toDouble
+      val x = a(i); val y = b(i)
       dot += x * y; na += x * x; nb += y * y; i += 1
     }
     if (na == 0.0 || nb == 0.0) 0.0 else dot / (math.sqrt(na) * math.sqrt(nb))

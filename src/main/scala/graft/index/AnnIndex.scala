@@ -1,8 +1,12 @@
 package graft.index
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
+import org.apache.spark.sql.catalyst.util.SQLOrderingUtil
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{IntegerType, LongType, StructField, StructType}
 
 import graft.functions.VectorFunctions
 import graft.operators.IvfIndex
@@ -21,19 +25,30 @@ import graft.operators.IvfIndex
   *     code), PARTITIONED BY the coarse cell (`centroid_id`) — the IVF
   *     "inverted list" layout expressed as parquet partition directories
   *
-  * [[query]] reads ONLY those three relations: the probed-cell id list is
-  * a static `isin` predicate over the partition column, so the codes scan
-  * is PARTITION-PRUNED to nprobe·|queries| directories and the raw
-  * embedding corpus is never touched on the serve path (plan-pinned in
-  * the spec; q210 pins it against the inline q184 arithmetic). At 100 TB
-  * the serve-side cost is the probed cells' code lists — ~1/k of an
-  * 8-byte-per-vector table per probe — plus broadcast-sized LUT joins.
+  * [[query]] reads ONLY those three relations, each with the fixed schema
+  * [[build]] writes (no inference job). Centroids, codebook and the query
+  * batch are broadcast-sized, so cell ranking and the LUT run on the
+  * driver; the probed-cell id list is a static `isin` predicate over the
+  * partition column, so the codes scan is PARTITION-PRUNED to
+  * nprobe·|queries| directories and the raw embedding corpus is never
+  * touched on the serve path (plan-pinned in the spec; q210 pins it
+  * against the inline q184 arithmetic). Per batch that is two metadata
+  * collects, two broadcast local relations and one exchange keyed by
+  * query. At 100 TB the serve-side cost is the probed cells' code lists
+  * — ~1/k of an 8-byte-per-vector table per probe — plus broadcast-sized
+  * LUT joins.
   *
   * Arithmetic is bit-identical to q178/q184: encode by max-margin argmax
   * (dot − ‖c‖²/2), ADC sums BIGINT micro-units, ties broken on lowest
   * code/vec_id.
   */
 object AnnIndex {
+
+  // The relations [[build]] writes, declared once so every serve-path read
+  // skips parquet schema inference (one Spark job per read).
+  private val CentroidsSchema = "centroid_id INT, centroid ARRAY<FLOAT>"
+  private val CodebookSchema = "s BIGINT, code BIGINT, cent ARRAY<FLOAT>"
+  private val CodesSchema = "vec_id BIGINT, s BIGINT, code BIGINT, centroid_id INT"
 
   /** Scan the corpus once; persist centroids + codebook + cell-partitioned
     * codes under `dir`. The PQ codebook is Lloyd-trained
@@ -99,44 +114,82 @@ object AnnIndex {
     * (`query_id`, `qv`); `excludeSelf` drops `vec_id == query_id` hits for
     * corpus-sourced query sets (the q184 recall convention). Output:
     * (query_id, rank, vec_id, adc_u).
+    *
+    * Everything sized by the query batch or the index metadata runs on the
+    * driver: the centroids (k rows), the codebook (m·kcode rows) and the
+    * batch are collected (a literal batch collects without a job), then
+    * cells are ranked per query (cosine desc, lowest `centroid_id` on
+    * ties, top `nprobe`) and the LUT is built with the same kernels and
+    * ordering as the relational form ([[VectorFunctions.cosine]],
+    * [[VectorFunctions.dot]], Spark's double order). The (query, cell)
+    * pairs and the LUT enter the plan as broadcast local relations, so the
+    * only distributed work is the partition-pruned codes scan, the ADC sum
+    * and the top-k window.
     */
   def query(spark: SparkSession, dir: String, queries: DataFrame,
       k: Int, nprobe: Int, m: Int = 8, sub: Int = 8,
       excludeSelf: Boolean = false): DataFrame = {
     import spark.implicits._
-    val cents = spark.read.parquet(s"$dir/centroids.parquet")
-      .localCheckpoint(false) // k rows; probed twice (cells + collect)
-    val cb = spark.read.parquet(s"$dir/codebook.parquet")
-    val subs = broadcast((0 until m).map(_.toLong).toDF("s"))
-    val q = queries.localCheckpoint(false) // cell ranking + LUT read it
-    val wc = Window.partitionBy($"query_id").orderBy($"csc".desc, $"centroid_id")
-    val qcells = q.crossJoin(broadcast(cents))
-      .select($"query_id", $"centroid_id",
-        VectorFunctions.cosineSim($"qv", $"centroid").as("csc"))
-      .withColumn("cell_rank", row_number().over(wc))
-      .filter($"cell_rank" <= nprobe)
-      .select($"query_id", $"centroid_id")
-      .localCheckpoint(false) // candidate join + the isin collect below
+    def vectors(df: DataFrame, key: Column, v: String): Array[(Any, Array[Double])] =
+      df.select(key, col(v).cast("array<double>")).collect()
+        .map(r => r.get(0) -> (if (r.isNullAt(1)) null else r.getSeq[Double](1).toArray))
+    val cents = vectors(spark.read.schema(CentroidsSchema)
+      .parquet(s"$dir/centroids.parquet"), $"centroid_id", "centroid")
+      .map { case (c, v) => c.asInstanceOf[Int] -> v }
+    // only the m subspaces the query vector is cut into get LUT entries
+    val cb = vectors(spark.read.schema(CodebookSchema)
+      .parquet(s"$dir/codebook.parquet"), struct($"s", $"code"), "cent")
+      .map { case (r: Row, v) => (r.getLong(0), r.getLong(1), v) }
+      .filter { case (s, _, _) => s >= 0 && s < m }.toSeq
+    // a null query_id never matches the LUT join; vectors sharing an id
+    // are ranked together, as a per-id window ranks them
+    val batch = vectors(queries, $"query_id", "qv").filter(_._1 != null)
+      .groupBy(_._1).toSeq.map { case (id, vs) => id -> vs.map(_._2).toSeq }
+    val cellRows = batch.flatMap { case (id, vs) =>
+      val scored = for (qv <- vs; (c, cv) <- cents)
+        yield (Option(qv).map(VectorFunctions.cosine(_, cv)), c)
+      scored.sortWith(cellBefore).take(nprobe).map { case (_, c) => Row(id, c) }
+    }
+    val lutRows = for ((id, vs) <- batch; qv <- vs; (s, code, cent) <- cb) yield {
+      val dotU = if (qv == null) null else math.floor(VectorFunctions.dot(
+        qv.slice((s * sub).toInt, (s * sub + sub).toInt), cent) * 1000000.0).toLong
+      Row(id, s, code, dotU)
+    }
+    val qid = queries.schema("query_id")
+    def local(rows: Seq[Row], fields: StructField*): DataFrame =
+      broadcast(spark.createDataFrame(rows.asJava, StructType(qid +: fields)))
+    val qcells = local(cellRows, StructField("centroid_id", IntegerType))
+    val lut = local(lutRows, StructField("s", LongType),
+      StructField("code", LongType), StructField("dot_u", LongType))
     // nprobe·|queries| cell ids -> a STATIC partition-pruning predicate on
-    // the codes scan (the collect is bounded by the query batch, never data)
-    val probed = qcells.select($"centroid_id").distinct()
-      .as[Int].collect().sorted.toSeq
-    val lut = q.crossJoin(subs)
-      .select($"query_id", $"s",
-        slice($"qv", ($"s" * sub + 1).cast("int"), lit(sub)).as("qs"))
-      .join(broadcast(cb), Seq("s"))
-      .select($"query_id", $"s", $"code",
-        floor(VectorFunctions.dotProduct($"qs", $"cent") * lit(1000000.0))
-          .cast("long").as("dot_u"))
-    val codes = spark.read.parquet(s"$dir/codes.parquet")
+    // the codes scan (bounded by the query batch, never by data)
+    val probed = cellRows.map(_.getInt(1)).distinct.sorted
+    val codes = spark.read.schema(CodesSchema).parquet(s"$dir/codes.parquet")
       .filter($"centroid_id".isin(probed.map(Integer.valueOf): _*))
-    val adc = codes.join(broadcast(qcells), Seq("centroid_id"))
+    val adc = codes.join(qcells, Seq("centroid_id"))
       .filter(if (excludeSelf) $"vec_id" =!= $"query_id" else lit(true))
-      .join(broadcast(lut), Seq("query_id", "s", "code"))
+      .join(lut, Seq("query_id", "s", "code"))
+      // one exchange serves both the ADC sum and the top-k window: a
+      // map-side partial sum would shuffle m× fewer rows but costs a
+      // second exchange, i.e. one more job per ask
+      .repartition($"query_id")
       .groupBy($"query_id", $"vec_id")
       .agg(sum($"dot_u").as("adc_u"))
     val wk = Window.partitionBy($"query_id").orderBy($"adc_u".desc, $"vec_id")
     adc.withColumn("rank", row_number().over(wk)).filter($"rank" <= k)
       .select($"query_id", $"rank".cast("long").as("rank"), $"vec_id", $"adc_u")
+  }
+
+  /** `csc DESC NULLS LAST, centroid_id ASC` with Spark's double order
+    * (NaN above every number, -0.0 == 0.0); a null vector scores null.
+    */
+  private def cellBefore(a: (Option[Double], Int), b: (Option[Double], Int)): Boolean = {
+    val bySc = (a._1, b._1) match {
+      case (Some(x), Some(y)) => SQLOrderingUtil.compareDoubles(y, x)
+      case (Some(_), None) => -1
+      case (None, Some(_)) => 1
+      case _ => 0
+    }
+    if (bySc != 0) bySc < 0 else a._2 < b._2
   }
 }

@@ -994,8 +994,7 @@ private[graft] object AnnQueries {
     "q210_ann_index_serve" -> ((s, dir) => {
       import s.implicits._
       val emb = t(s, dir, "embeddings")
-      val idxDir = java.nio.file.Files
-        .createTempDirectory("graft_annidx").toString
+      val idxDir = stagingDir(s, "graft_annidx")
       graft.index.AnnIndex.build(emb, idxDir)
       val queries = emb.filter($"vec_id" < 16)
         .select($"vec_id".as("query_id"), $"embedding".as("qv"))
@@ -1019,8 +1018,7 @@ private[graft] object AnnQueries {
       val emb = t(s, dir, "embeddings")
       val base = emb.filter(pmod($"vec_id", lit(4L)) =!= 0)
       val delta = emb.filter(pmod($"vec_id", lit(4L)) === 0)
-      val idxDir = java.nio.file.Files
-        .createTempDirectory("graft_anndelta").toString
+      val idxDir = stagingDir(s, "graft_anndelta")
       graft.index.AnnIndex.build(base, idxDir)
       graft.index.AnnIndex.appendDelta(s, idxDir, delta)
       val queries = emb.filter($"vec_id" < 16)
@@ -1083,8 +1081,7 @@ private[graft] object AnnQueries {
     "q244_ann_recall_serve" -> ((s, dir) => {
       import s.implicits._
       val emb = t(s, dir, "embeddings")
-      val idxDir = java.nio.file.Files
-        .createTempDirectory("graft_annrecall").toString
+      val idxDir = stagingDir(s, "graft_annrecall")
       graft.index.AnnIndex.build(emb, idxDir)
       val queries = emb.filter($"vec_id" < 16)
         .select($"vec_id".as("query_id"), $"embedding".as("qv"))

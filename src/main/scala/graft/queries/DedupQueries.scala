@@ -770,8 +770,7 @@ private[graft] object DedupQueries {
           explode(sequence(lit(0L), lit(2L))).as("w"))
         .select(($"base" + $"w").as("win_id"),
           $"text".substr(($"w" * $"stride" + 1).cast("int"), $"wlen".cast("int")).as("wtext"))
-      val idxDir = java.nio.file.Files
-        .createTempDirectory("graft_setsimidx").toString
+      val idxDir = stagingDir(s, "graft_setsimidx")
       graft.operators.SetSimJoin.buildIndex(
         win.filter(pmod($"win_id", lit(4L)) =!= 0), idxDir,
         "win_id", "wtext", shingleN = 5, tau4 = 5000L)

@@ -67,6 +67,13 @@ object Retriever {
     * text by key. Exactness is traded for serve cost — q244 measures the
     * recall gap against the brute-force path on the same queries. Returns
     * (hits in rank order, assembled prompt).
+    *
+    * Job shape per ask: [[graft.index.AnnIndex.query]] collects the
+    * centroids and the codebook (one job each) and ranks cells and builds
+    * the LUT on the driver; the prompt's collect then runs the broadcasts
+    * (probed cells, LUT, context text), the pruned codes scan with its one
+    * exchange, and the result stage. The k rows are put in rank order in a
+    * single partition, so no range-partitioned sort runs.
     */
   def askViaIndex(
       index: DataFrame,
@@ -87,7 +94,7 @@ object Retriever {
       .query(spark, idxDir, queries, k, nprobe, m, sub)
       .join(index.select(col(idCol).cast("long").as("vec_id"), col(textCol)),
         Seq("vec_id"))
-      .orderBy(col("rank"))
+      .coalesce(1).sortWithinPartitions(col("rank"))
     (hits, assembleContext(hits, question, textCol))
   }
 }

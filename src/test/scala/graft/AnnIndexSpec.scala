@@ -1,8 +1,12 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.JobNames
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.expressions.Window
+import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
+import graft.functions.VectorFunctions
 import graft.index.AnnIndex
 
 /** Build/serve split of the persisted IVFADC index: the serve path must
@@ -60,6 +64,51 @@ class AnnIndexSpec extends AnyFunSuite {
     cb
   }
 
+  /** The relational form of [[AnnIndex.query]] (cell ranking and LUT as
+    * Spark joins and windows over the persisted relations): the reference
+    * the driver-side serve must reproduce row for row.
+    */
+  private def relationalQuery(dir: String, queries: DataFrame, k: Int,
+      nprobe: Int, m: Int, sub: Int, excludeSelf: Boolean = false): DataFrame = {
+    import spark.implicits._
+    val cents = spark.read.parquet(s"$dir/centroids.parquet")
+    val cb = spark.read.parquet(s"$dir/codebook.parquet")
+    val wc = Window.partitionBy($"query_id").orderBy($"csc".desc, $"centroid_id")
+    val qcells = queries.crossJoin(broadcast(cents))
+      .select($"query_id", $"centroid_id",
+        VectorFunctions.cosineSim($"qv", $"centroid").as("csc"))
+      .withColumn("cell_rank", row_number().over(wc))
+      .filter($"cell_rank" <= nprobe)
+      .select($"query_id", $"centroid_id")
+    val lut = graft.operators.PqCodebook.lut(queries, cb, m, sub)
+    val adc = spark.read.parquet(s"$dir/codes.parquet")
+      .join(qcells, Seq("centroid_id"))
+      .filter(if (excludeSelf) $"vec_id" =!= $"query_id" else lit(true))
+      .join(lut, Seq("query_id", "s", "code"))
+      .groupBy($"query_id", $"vec_id")
+      .agg(sum($"dot_u").as("adc_u"))
+    val wk = Window.partitionBy($"query_id").orderBy($"adc_u".desc, $"vec_id")
+    adc.withColumn("rank", row_number().over(wk)).filter($"rank" <= k)
+      .select($"query_id", $"rank".cast("long").as("rank"), $"vec_id", $"adc_u")
+  }
+
+  /** 60 "doc i" records embedded by the ask path's own embedder, persisted
+    * as a vector-index table, and their AnnIndex (m = 8, sub = 2) under
+    * `dir/idx`.
+    */
+  private def askFixture(prefix: String): (DataFrame, String, graft.embed.DeterministicEmbedder) = {
+    import spark.implicits._
+    val dir = java.nio.file.Files.createTempDirectory(prefix).toString
+    val embedder = new graft.embed.DeterministicEmbedder(16)
+    (0 until 60).map(i => (i.toLong, embedder.embedOne(s"doc $i").toSeq, s"text of doc $i"))
+      .toDF("vector_id", "content_vector", "text")
+      .write.mode("overwrite").parquet(s"$dir/corpus.parquet")
+    val index = spark.read.parquet(s"$dir/corpus.parquet")
+    AnnIndex.build(index.select($"vector_id".as("vec_id"),
+      $"content_vector".as("embedding")), s"$dir/idx", m = 8, sub = 2, kcode = 16)
+    (index, dir, embedder)
+  }
+
   test("serve path: codes scan is partition-pruned to the probed cells; the raw corpus is never read") {
     import spark.implicits._
     val dir = java.nio.file.Files.createTempDirectory("graft_annpin").toString
@@ -94,16 +143,9 @@ class AnnIndexSpec extends AnyFunSuite {
 
   test("askViaIndex: retrieval runs off the persisted index; the context join prunes the corpus scan to (id, text); prompt assembles in rank order") {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft_annask").toString
-    val embedder = new graft.embed.DeterministicEmbedder(16)
     // corpus whose vectors come from the SAME embedder so the question
     // "doc 7" retrieves doc 7's own vector as the top hit
-    (0 until 60).map(i => (i.toLong, embedder.embedOne(s"doc $i").toSeq, s"text of doc $i"))
-      .toDF("vector_id", "content_vector", "text")
-      .write.mode("overwrite").parquet(s"$dir/corpus.parquet")
-    val index = spark.read.parquet(s"$dir/corpus.parquet")
-    AnnIndex.build(index.select($"vector_id".as("vec_id"),
-      $"content_vector".as("embedding")), s"$dir/idx", m = 8, sub = 2, kcode = 16)
+    val (index, dir, embedder) = askFixture("graft_annask")
     val (hits, prompt) = graft.query.Retriever.askViaIndex(
       index, s"$dir/idx", "doc 7", embedder, k = 3, nprobe = 3, m = 8, sub = 2)
     val plan = hits.queryExecution.executedPlan.toString
@@ -128,6 +170,91 @@ class AnnIndexSpec extends AnyFunSuite {
       rows.map(_.getString(4)).toSeq)
     assert(prompt.startsWith(rows.map(_.getString(4)).mkString("\n")))
     assert(prompt.endsWith("\n\n Question: doc 7"))
+  }
+
+  test("askViaIndex runs at most 10 Spark jobs; the serve path runs no parquet schema-inference job") {
+    import spark.implicits._
+    val (index, dir, embedder) = askFixture("graft_annjobs")
+    val (prompt, jobs) = JobNames.during(spark.sparkContext) {
+      graft.query.Retriever.askViaIndex(
+        index, s"$dir/idx", "doc 7", embedder, k = 3, nprobe = 3, m = 8, sub = 2)._2
+    }
+    assert(prompt.endsWith("\n\n Question: doc 7"))
+    assert(jobs.size <= 10, s"${jobs.size} jobs:\n" + jobs.mkString("\n"))
+    val (_, serveJobs) = JobNames.during(spark.sparkContext) {
+      AnnIndex.query(spark, s"$dir/idx",
+          Seq((0L, embedder.embedOne("doc 7").toSeq)).toDF("query_id", "qv"),
+          k = 3, nprobe = 3, m = 8, sub = 2)
+        .collect()
+    }
+    assert(!serveJobs.flatten.exists(_.startsWith("parquet at AnnIndex")),
+      serveJobs.mkString("\n"))
+    org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(dir))
+  }
+
+  test("driver-side cell ranking and LUT: same rows as the relational form on degenerate batches") {
+    import spark.implicits._
+    val m = 8
+    val sub = 2
+    val dir = java.nio.file.Files.createTempDirectory("graft_anndegen").toString
+    (0 until 120).map(i => (i.toLong, vec(i))).toDF("vec_id", "embedding")
+      .write.mode("overwrite").parquet(s"$dir/emb.parquet")
+    AnnIndex.build(spark.read.parquet(s"$dir/emb.parquet"), s"$dir/idx",
+      m = m, sub = sub, kcode = 16)
+    val cells = spark.read.parquet(s"$dir/idx/centroids.parquet").count().toInt
+    def same(what: String, queries: DataFrame, k: Int, nprobe: Int,
+        excludeSelf: Boolean = false): Array[org.apache.spark.sql.Row] = {
+      val got = AnnIndex.query(spark, s"$dir/idx", queries, k, nprobe, m, sub, excludeSelf)
+        .collect().sortBy(r => (r.getLong(0), r.getLong(1)))
+      val want = relationalQuery(s"$dir/idx", queries, k, nprobe, m, sub, excludeSelf)
+        .collect().sortBy(r => (r.getLong(0), r.getLong(1)))
+      assert(got.toSeq == want.toSeq, what)
+      got
+    }
+    val empty = same("empty batch",
+      Seq.empty[(Long, Seq[Float])].toDF("query_id", "qv"), k = 5, nprobe = 2)
+    assert(empty.isEmpty)
+    val all = same("nprobe above the cell count",
+      Seq((0L, vec(3)), (1L, vec(77))).toDF("query_id", "qv"), k = 10, nprobe = cells + 5)
+    assert(all.length == 20)
+    // every cell scores cosine 0.0: the tie keeps the lowest centroid ids
+    val zero = same("all-zero query vector",
+      Seq((0L, Seq.fill(16)(0.0f))).toDF("query_id", "qv"), k = 5, nprobe = 2)
+    val zeroCells = spark.read.parquet(s"$dir/idx/codes.parquet")
+      .filter($"vec_id".isin(zero.map(_.getLong(2)): _*))
+      .select($"centroid_id").distinct().as[Int].collect().toSet
+    assert(zero.length == 5 && zeroCells.subsetOf(Set(0, 1)), zeroCells)
+    same("query vector shorter than m·sub",
+      Seq((0L, vec(5).take(5)), (1L, vec(9).take(1))).toDF("query_id", "qv"), k = 5, nprobe = 3)
+    // a null vector scores null everywhere: lowest cells, null adc_u
+    same("null query vector",
+      Seq((0L, null: Seq[Float]), (1L, vec(4))).toDF("query_id", "qv"), k = 3, nprobe = 2)
+    same("two vectors under one query_id",
+      Seq((0L, vec(3)), (0L, vec(50)), (1L, vec(4))).toDF("query_id", "qv"), k = 4, nprobe = 3)
+    same("array<double> queries, excludeSelf",
+      (0 until 6).map(i => (i.toLong, vec(i).map(_.toDouble))).toDF("query_id", "qv"),
+      k = 10, nprobe = 4, excludeSelf = true)
+    org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(dir))
+  }
+
+  test("q210's index directory is deleted by releaseStaging") {
+    import spark.implicits._
+    // a 40-vector, 64-dim embeddings table: q210 builds with m = 8, sub = 8
+    val sf = java.nio.file.Files.createTempDirectory("graft_annsf").toString
+    (0 until 40).map(i => (i.toLong, (0 until 64).map(d => math.sin(i * 31 + d * 7 + 1).toFloat), i % 4))
+      .toDF("vec_id", "embedding", "label")
+      .write.parquet(s"$sf/embeddings.parquet")
+    val tmp = new java.io.File(System.getProperty("java.io.tmpdir"))
+    def annDirs(): Set[String] = Option(tmp.listFiles()).toSeq.flatten
+      .filter(_.getName.startsWith("graft_annidx")).map(_.getPath).toSet
+    val before = annDirs()
+    val rows = SparkEntry.queries("q210_ann_index_serve")(spark, sf).collect()
+    assert(rows.nonEmpty)
+    val made = annDirs() -- before
+    assert(made.nonEmpty, "q210 built its index outside java.io.tmpdir")
+    SparkEntry.releaseStaging(spark)
+    assert(made.forall(d => !new java.io.File(d).exists()), made)
+    org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(sf))
   }
 
   test("appendDelta: delta-only encode against the stored codebook; base code files untouched; on-disk codes match the driver-side replay") {

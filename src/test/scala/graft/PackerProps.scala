@@ -64,7 +64,7 @@ object PackerProps extends Properties("ChunkPacker") {
   }
 
   property("cosine bounds and symmetry") = {
-    val vec = Gen.listOfN(16, Gen.chooseNum(-5.0f, 5.0f)).map(_.toArray)
+    val vec = Gen.listOfN(16, Gen.chooseNum(-5.0f, 5.0f)).map(_.map(_.toDouble).toArray)
     forAll(vec, vec) { (a, b) =>
       val ab = graft.functions.VectorFunctions.cosine(a, b)
       val ba = graft.functions.VectorFunctions.cosine(b, a)
