@@ -2,11 +2,11 @@ package graft.index
 
 import scala.jdk.CollectionConverters._
 
-import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Encoders, Row, SparkSession}
 import org.apache.spark.sql.catalyst.util.SQLOrderingUtil
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{IntegerType, LongType, StructField, StructType}
+import org.apache.spark.sql.types.{DoubleType, IntegerType, LongType, StructField, StructType}
 
 import graft.functions.VectorFunctions
 import graft.operators.IvfIndex
@@ -44,8 +44,8 @@ import graft.operators.IvfIndex
   */
 object AnnIndex {
 
-  // The relations [[build]] writes, declared once so every serve-path read
-  // skips parquet schema inference (one Spark job per read).
+  // The relations [[build]] writes, declared once so every serve-path and
+  // delta read skips parquet schema inference (one Spark job per read).
   private val CentroidsSchema = "centroid_id INT, centroid ARRAY<FLOAT>"
   private val CodebookSchema = "s BIGINT, code BIGINT, cent ARRAY<FLOAT>"
   private val CodesSchema = "vec_id BIGINT, s BIGINT, code BIGINT, centroid_id INT"
@@ -55,37 +55,21 @@ object AnnIndex {
     * ([[graft.operators.PqCodebook.train]], round 12 — exact-integer
     * micro-sum means, `trainIters = 2` is the measured recall knee;
     * `trainIters = 0` reproduces the pre-round-12 raw seed grid).
+    *
+    * Job shape: the centroid and codebook training jobs and their two
+    * writes, one codebook collect, then [[encodeCells]] — a narrow
+    * encode pass, one `(vec_id, s)` exchange, one `centroid_id`
+    * exchange and the partitioned write.
     */
   def build(emb: DataFrame, dir: String,
       m: Int = 8, sub: Int = 8, kcode: Int = 16, trainIters: Int = 2): Unit = {
-    val spark = emb.sparkSession
-    import spark.implicits._
     val cents = IvfIndex.centroids(emb, k = 0, iters = 0)
     cents.write.mode("overwrite").parquet(s"$dir/centroids.parquet")
-    val cells = IvfIndex.assign(emb, cents, "vec_id", "embedding")
-      .select($"vec_id", $"centroid_id")
     val cb = graft.operators.PqCodebook.train(emb, m, sub, kcode, trainIters)
     cb.write.mode("overwrite").parquet(s"$dir/codebook.parquet")
-    // cluster by the partition column before the partitioned write
-    // (guide §6): without it every write task touches every cell
-    // directory — tasks × cells tiny files whose open/commit overhead
-    // dominates the build AND every later pruned serve scan; keyed
-    // repartition makes files-per-cell ~1 (AQE sizes the task count)
-    encodeCodes(emb, cb, m, sub)
-      .join(cells, Seq("vec_id"))
-      .repartition(col("centroid_id"))
-      .write.mode("overwrite").partitionBy("centroid_id")
-      .parquet(s"$dir/codes.parquet")
+    writeCodes(encodeCells(emb, centroidVectors(cents), codebookVectors(cb, m), sub),
+      dir, "overwrite")
   }
-
-  /** PQ-encode `emb` against codebook `cb`: max-margin argmax per
-    * sub-block (dot − ‖c‖²/2, ties → lowest code), the q178 algebra
-    * (delegates to [[graft.operators.PqCodebook.encode]]).
-    * Returns (vec_id, s, code); the codebook side is broadcast.
-    */
-  private def encodeCodes(emb: DataFrame, cb: DataFrame,
-      m: Int, sub: Int): DataFrame =
-    graft.operators.PqCodebook.encode(emb, cb, m, sub)
 
   /** Nightly delta append: encode ONLY the arriving vectors against the
     * STORED centroids + codebook (both broadcast-sized reads) and append
@@ -95,20 +79,97 @@ object AnnIndex {
     * is the operational counterpart: when the delta distribution departs
     * from the codebook's training corpus, rebuild — this operator makes
     * the refresh cheap enough to schedule nightly either way.
+    *
+    * Job shape: two metadata collects read with the schemas [[build]]
+    * writes (no inference job), then [[encodeCells]]' two exchanges and
+    * the append — five jobs.
     */
   def appendDelta(spark: SparkSession, dir: String, delta: DataFrame,
       m: Int = 8, sub: Int = 8): Unit = {
-    import spark.implicits._
-    val cents = spark.read.parquet(s"$dir/centroids.parquet")
-    val cb = spark.read.parquet(s"$dir/codebook.parquet")
-    val cells = IvfIndex.assign(delta, cents, "vec_id", "embedding")
-      .select($"vec_id", $"centroid_id")
-    encodeCodes(delta, cb, m, sub)
-      .join(cells, Seq("vec_id"))
-      .repartition(col("centroid_id")) // one file per touched cell (§6)
-      .write.mode("append").partitionBy("centroid_id")
-      .parquet(s"$dir/codes.parquet")
+    val cents = centroidVectors(
+      spark.read.schema(CentroidsSchema).parquet(s"$dir/centroids.parquet"))
+    val cb = codebookVectors(
+      spark.read.schema(CodebookSchema).parquet(s"$dir/codebook.parquet"), m)
+    writeCodes(encodeCells(delta, cents, cb, sub), dir, "append")
   }
+
+  // cluster by the partition column before the partitioned write (guide
+  // §6): without it every write task touches every cell directory —
+  // tasks × cells tiny files whose open/commit overhead dominates the
+  // build AND every later pruned serve scan; keyed repartition makes
+  // files-per-cell ~1 (AQE sizes the task count)
+  private def writeCodes(codes: DataFrame, dir: String, mode: String): Unit =
+    codes.repartition(col("centroid_id"))
+      .write.mode(mode).partitionBy("centroid_id")
+      .parquet(s"$dir/codes.parquet")
+
+  /** Cell and PQ codes of every (`vec_id`, `embedding`) row in ONE narrow
+    * pass: (vec_id, s, code, centroid_id). Each row scores every centroid
+    * (cosine desc, ties to the lowest `centroid_id`) and, per subspace `s`
+    * of `cb`, every code (max-margin dot − ‖c‖²/2, ties to the lowest
+    * code) with the driver-side kernels, under Spark's double order with
+    * null scores lowest — the q178 `IvfIndex.assign` ⋈ `PqCodebook.encode`
+    * algebra without its two broadcast joins and the join on `vec_id`.
+    * The `(vec_id, s)` group keeps the relational form's semantics:
+    * vectors sharing an id merge into one best cell and code, and null ids
+    * drop. Centroids and codebook travel in the closure (broadcast-sized,
+    * the contract `assign`'s `broadcast(centroids)` already relies on).
+    */
+  private def encodeCells(emb: DataFrame, cents: Array[(Int, Array[Double])],
+      cb: Seq[(Long, Long, Array[Double])], sub: Int): DataFrame = {
+    val spark = emb.sparkSession
+    import spark.implicits._
+    val subspaces = cb.groupBy(_._1).toSeq.sortBy(_._1).map { case (s, codes) =>
+      s -> codes.map { case (_, code, cent) =>
+        (code, cent, Option(cent).map(c => VectorFunctions.dot(c, c) / 2.0))
+      }.toArray
+    }.toArray
+    val scored = StructType(Seq(
+      StructField("vec_id", emb.schema("vec_id").dataType),
+      StructField("s", LongType, nullable = false),
+      StructField("centroid_id", IntegerType, nullable = false),
+      StructField("csc", DoubleType),
+      StructField("code", LongType, nullable = false),
+      StructField("sc", DoubleType)))
+    emb.select(col("vec_id"), col("embedding").cast("array<double>"))
+      .flatMap { r =>
+        if (r.isNullAt(0) || cents.isEmpty) Iterator.empty
+        else {
+          val v = if (r.isNullAt(1)) null else r.getSeq[Double](1).toArray
+          val (csc, cell) = top(cents.iterator.map { case (c, cv) =>
+            (if (v == null || cv == null) None else Some(VectorFunctions.cosine(v, cv))) -> c.toLong
+          })
+          subspaces.iterator.map { case (s, codes) =>
+            val sv = if (v == null) null else v.slice((s * sub).toInt, (s * sub + sub).toInt)
+            val (sc, code) = top(codes.iterator.map { case (code, cent, half) =>
+              (if (sv == null) None else half.map(VectorFunctions.dot(sv, cent) - _)) -> code
+            })
+            Row(r.get(0), s, cell.toInt, csc.getOrElse(null), code, sc.getOrElse(null))
+          }
+        }
+      }(Encoders.row(scored))
+      .groupBy($"vec_id", $"s")
+      .agg(max_by($"code", struct($"sc", -$"code")).as("code"),
+        max_by($"centroid_id", struct($"csc", -$"centroid_id")).as("centroid_id"))
+  }
+
+  /** The (score, id) pair [[ranksAbove]] every other one. */
+  private def top(cands: Iterator[(Option[Double], Long)]): (Option[Double], Long) =
+    cands.reduceLeft((a, b) => if (ranksAbove(b._1, b._2, a._1, a._2)) b else a)
+
+  private def vectors(df: DataFrame, key: Column, v: String): Array[(Any, Array[Double])] =
+    df.select(key, col(v).cast("array<double>")).collect()
+      .map(r => r.get(0) -> (if (r.isNullAt(1)) null else r.getSeq[Double](1).toArray))
+
+  private def centroidVectors(cents: DataFrame): Array[(Int, Array[Double])] =
+    vectors(cents, col("centroid_id"), "centroid")
+      .map { case (c, v) => c.asInstanceOf[Int] -> v }
+
+  /** (s, code, cent) of the `m` subspaces a vector is cut into. */
+  private def codebookVectors(cb: DataFrame, m: Int): Seq[(Long, Long, Array[Double])] =
+    vectors(cb, struct(col("s"), col("code")), "cent")
+      .map { case (r: Row, v) => (r.getLong(0), r.getLong(1), v) }
+      .filter { case (s, _, _) => s >= 0 && s < m }.toSeq
 
   /** Top-k per query against the PERSISTED index only. `queries` carries
     * (`query_id`, `qv`); `excludeSelf` drops `vec_id == query_id` hits for
@@ -130,17 +191,11 @@ object AnnIndex {
       k: Int, nprobe: Int, m: Int = 8, sub: Int = 8,
       excludeSelf: Boolean = false): DataFrame = {
     import spark.implicits._
-    def vectors(df: DataFrame, key: Column, v: String): Array[(Any, Array[Double])] =
-      df.select(key, col(v).cast("array<double>")).collect()
-        .map(r => r.get(0) -> (if (r.isNullAt(1)) null else r.getSeq[Double](1).toArray))
-    val cents = vectors(spark.read.schema(CentroidsSchema)
-      .parquet(s"$dir/centroids.parquet"), $"centroid_id", "centroid")
-      .map { case (c, v) => c.asInstanceOf[Int] -> v }
+    val cents = centroidVectors(
+      spark.read.schema(CentroidsSchema).parquet(s"$dir/centroids.parquet"))
     // only the m subspaces the query vector is cut into get LUT entries
-    val cb = vectors(spark.read.schema(CodebookSchema)
-      .parquet(s"$dir/codebook.parquet"), struct($"s", $"code"), "cent")
-      .map { case (r: Row, v) => (r.getLong(0), r.getLong(1), v) }
-      .filter { case (s, _, _) => s >= 0 && s < m }.toSeq
+    val cb = codebookVectors(
+      spark.read.schema(CodebookSchema).parquet(s"$dir/codebook.parquet"), m)
     // a null query_id never matches the LUT join; vectors sharing an id
     // are ranked together, as a per-id window ranks them
     val batch = vectors(queries, $"query_id", "qv").filter(_._1 != null)
@@ -148,7 +203,8 @@ object AnnIndex {
     val cellRows = batch.flatMap { case (id, vs) =>
       val scored = for (qv <- vs; (c, cv) <- cents)
         yield (Option(qv).map(VectorFunctions.cosine(_, cv)), c)
-      scored.sortWith(cellBefore).take(nprobe).map { case (_, c) => Row(id, c) }
+      scored.sortWith((a, b) => ranksAbove(a._1, a._2, b._1, b._2))
+        .take(nprobe).map { case (_, c) => Row(id, c) }
     }
     val lutRows = for ((id, vs) <- batch; qv <- vs; (s, code, cent) <- cb) yield {
       val dotU = if (qv == null) null else math.floor(VectorFunctions.dot(
@@ -180,16 +236,18 @@ object AnnIndex {
       .select($"query_id", $"rank".cast("long").as("rank"), $"vec_id", $"adc_u")
   }
 
-  /** `csc DESC NULLS LAST, centroid_id ASC` with Spark's double order
-    * (NaN above every number, -0.0 == 0.0); a null vector scores null.
+  /** `score DESC NULLS LAST, id ASC` with Spark's double order (NaN above
+    * every number, -0.0 == 0.0) — the order of the relational forms'
+    * windows and struct `max_by`s; a null vector scores null.
     */
-  private def cellBefore(a: (Option[Double], Int), b: (Option[Double], Int)): Boolean = {
-    val bySc = (a._1, b._1) match {
+  private def ranksAbove(a: Option[Double], aId: Long,
+      b: Option[Double], bId: Long): Boolean = {
+    val bySc = (a, b) match {
       case (Some(x), Some(y)) => SQLOrderingUtil.compareDoubles(y, x)
       case (Some(_), None) => -1
       case (None, Some(_)) => 1
       case _ => 0
     }
-    if (bySc != 0) bySc < 0 else a._2 < b._2
+    if (bySc != 0) bySc < 0 else aId < bId
   }
 }

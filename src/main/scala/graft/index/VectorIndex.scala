@@ -4,6 +4,7 @@ import org.apache.hadoop.fs.{FileContext, Options, Path}
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 
 /** The vector index as a Parquet-backed table with pipeline-2 semantics
   * (`pipeline2.py:117-225`): records `(vector_id, content_vector, title,
@@ -35,6 +36,12 @@ import org.apache.spark.sql.functions._
   * closes the data-overwrite window, not every interleaving (a true CAS
   * needs the store's conditional primitives) — serialize writers
   * externally.
+  *
+  * Schema per version: an instance remembers the schema of the version it
+  * last wrote (its next state's schema) or, for a version another writer
+  * made, the schema its first read inferred. Re-reading that version
+  * passes the schema to the reader, so only the first read of a foreign
+  * version pays a parquet schema-inference job.
   */
 final class VectorIndex(spark: SparkSession, path: String) {
 
@@ -57,11 +64,24 @@ final class VectorIndex(spark: SparkSession, path: String) {
 
   def exists: Boolean = fs.exists(pointerPath)
 
+  // (version, schema) this instance last wrote or inferred
+  private var known: Option[(Long, StructType)] = None
+
   /** Reads the version that is current NOW — a snapshot: later mutations
     * write new version dirs, so a DataFrame obtained here stays readable
     * until its version is GC'd (one mutation later).
     */
-  def read: DataFrame = spark.read.parquet(versionDir(currentVersion).toString)
+  def read: DataFrame = {
+    val v = currentVersion
+    val dir = versionDir(v).toString
+    known match {
+      case Some((`v`, schema)) => spark.read.schema(schema).parquet(dir)
+      case _ =>
+        val df = spark.read.parquet(dir)
+        known = Some(v -> df.schema)
+        df
+    }
+  }
 
   /** Index dimension derived from data, as the reference creates indexes
     * (`pipeline2.py:134-138`); 0 for an absent or empty index.
@@ -73,10 +93,10 @@ final class VectorIndex(spark: SparkSession, path: String) {
 
   /** Upsert chunk rows (columns: title, text, content_vector). Ids are
     * minted `title + "_" + n` with n = row_number per title ordered by
-    * `ordCol`, OFFSET by the number of records the title already holds —
-    * the per-form twin of `pipeline2.py:130-132` (the reference uses the
-    * global CSV index; per-title numbering keeps id minting shuffle-local
-    * and stable under any partitioning at scale).
+    * `ordCol`, OFFSET per mode below — the per-form twin of
+    * `pipeline2.py:130-132` (the reference uses the global CSV index;
+    * per-title numbering keeps id minting shuffle-local and stable under
+    * any partitioning at scale).
     *
     * Two id-minting modes:
     *  - `append = false` (default, reference parity): ids index the INCOMING
@@ -84,26 +104,35 @@ final class VectorIndex(spark: SparkSession, path: String) {
     *    (idempotent), but a PARTIAL batch for an existing title overwrites
     *    that title's low ids (the reference re-uploads whole forms, so this
     *    matches `pipeline2.py`'s model).
-    *  - `append = true`: ids continue from the title's existing record
-    *    count, so incremental adds never clobber prior records.
+    *  - `append = true`: ids continue from the title's highest minted
+    *    number + 1 (its record count when nothing was deleted), so
+    *    incremental adds never clobber prior records, also after
+    *    [[deleteByIds]]; the new ids are fresh by construction, so the
+    *    next state is a plain union with no anti-join.
+    *
+    * Reads the current version once.
     */
   def upsert(records: DataFrame, ordCol: String, append: Boolean = false): Unit = {
     val w = Window.partitionBy($"title").orderBy(col(ordCol))
     val numbered = records.withColumn("__rn", row_number().over(w) - 1)
-    val withIds = (
-      if (!exists || !append) numbered.withColumn("__base", lit(0L))
-      else {
-        val existingCounts = read.groupBy($"title").agg(count(lit(1)).as("__base"))
-        numbered.join(broadcast(existingCounts), Seq("title"), "left")
+    val cur = if (exists) Some(read) else None
+    val withIds = (cur match {
+      case Some(c) if append =>
+        val minted = expr("try_cast(substring(vector_id, length(title) + 2) as bigint)")
+        val nextFree = c.groupBy($"title").agg((max(minted) + 1).as("__base"))
+        numbered.join(broadcast(nextFree), Seq("title"), "left")
           .withColumn("__base", coalesce($"__base", lit(0L)))
-      })
+      case _ => numbered.withColumn("__base", lit(0L))
+    })
       .withColumn("vector_id",
         concat($"title", lit("_"), ($"__base" + $"__rn").cast("string")))
       .select($"vector_id", $"content_vector", $"title", $"text")
-    val next =
-      if (!exists) withIds
-      else read.join(withIds.select("vector_id"), Seq("vector_id"), "left_anti")
-        .unionByName(withIds)
+    val next = cur match {
+      case None => withIds
+      case Some(c) if append => c.unionByName(withIds)
+      case Some(c) =>
+        c.join(withIds.select("vector_id"), Seq("vector_id"), "left_anti").unionByName(withIds)
+    }
     rewrite(next)
   }
 
@@ -146,6 +175,7 @@ final class VectorIndex(spark: SparkSession, path: String) {
     try out.write(nxt.toString.getBytes("UTF-8")) finally out.close()
     FileContext.getFileContext(fs.getUri, hconf)
       .rename(tmp, pointerPath, Options.Rename.OVERWRITE)
+    known = Some(nxt -> next.schema)
     val keep = Set(cur, nxt)
     fs.listStatus(root).foreach { st =>
       val name = st.getPath.getName

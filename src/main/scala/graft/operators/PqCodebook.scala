@@ -122,21 +122,16 @@ object PqCodebook {
   }
 
   /** In-process Lloyd, arithmetic-identical to the distributed loop:
-    * ascending-index double-accumulated dots, argmax of (dot − ‖c‖²/2)
-    * with ties to the LOWEST code, cluster means as BIGINT micro-unit
-    * sums divided once in double and cast to float, empty codes keeping
-    * their previous centroid.
+    * ascending-index double-accumulated dots ([[VectorFunctions.dot]] over
+    * vectors widened to double once — exact for float input), argmax of
+    * (dot − ‖c‖²/2) with ties to the LOWEST code, cluster means as BIGINT
+    * micro-unit sums divided once in double and cast to float, empty codes
+    * keeping their previous centroid.
     */
   private def trainLocal(spark: org.apache.spark.sql.SparkSession,
       sorted: Array[(Long, Seq[Float])], m: Int, sub: Int, kcode: Int,
       iters: Int): DataFrame = {
-    def dot(a: Array[Float], b: Array[Float]): Double = {
-      val n = math.min(a.length, b.length)
-      var d = 0.0; var i = 0
-      while (i < n) { d += a(i).toDouble * b(i).toDouble; i += 1 }
-      d
-    }
-    val vecs = sorted.map(_._2.toArray)
+    val vecs = sorted.map(_._2.map(_.toDouble).toArray)
     // seed grid: the kcode lowest-id vectors' sub-blocks
     val cb = Array.tabulate(m, kcode) { (s, c) =>
       java.util.Arrays.copyOfRange(vecs(c), s * sub, s * sub + sub)
@@ -146,7 +141,7 @@ object PqCodebook {
       val cnt = Array.fill(m, kcode)(0L)
       var s = 0
       while (s < m) {
-        val halfN = Array.tabulate(kcode)(c => dot(cb(s)(c), cb(s)(c)) / 2.0)
+        val halfN = Array.tabulate(kcode)(c => VectorFunctions.dot(cb(s)(c), cb(s)(c)) / 2.0)
         var v = 0
         while (v < vecs.length) {
           val sv = java.util.Arrays.copyOfRange(vecs(v), s * sub, s * sub + sub)
@@ -154,14 +149,14 @@ object PqCodebook {
           var bestSc = Double.NegativeInfinity
           var c = 0
           while (c < kcode) {
-            val sc = dot(sv, cb(s)(c)) - halfN(c)
+            val sc = VectorFunctions.dot(sv, cb(s)(c)) - halfN(c)
             if (sc > bestSc) { bestSc = sc; best = c } // ties keep LOWEST code
             c += 1
           }
           cnt(s)(best) += 1L
           var p = 0
           while (p < sub) {
-            su(s)(best)(p) += math.floor(sv(p).toDouble * 1000000.0).toLong
+            su(s)(best)(p) += math.floor(sv(p) * 1000000.0).toLong
             p += 1
           }
           v += 1
@@ -169,10 +164,11 @@ object PqCodebook {
         var c = 0
         while (c < kcode) {
           if (cnt(s)(c) > 0L) {
-            val mean = new Array[Float](sub)
+            val mean = new Array[Double](sub)
             var p = 0
             while (p < sub) {
-              mean(p) = (su(s)(c)(p).toDouble / cnt(s)(c).toDouble / 1000000.0).toFloat
+              // rounded to float as stored; widening back is exact
+              mean(p) = (su(s)(c)(p).toDouble / cnt(s)(c).toDouble / 1000000.0).toFloat.toDouble
               p += 1
             }
             cb(s)(c) = mean
@@ -183,7 +179,7 @@ object PqCodebook {
       }
     }
     val out = for (s <- 0 until m; c <- 0 until kcode)
-      yield org.apache.spark.sql.Row(s.toLong, c.toLong, cb(s)(c).toSeq)
+      yield org.apache.spark.sql.Row(s.toLong, c.toLong, cb(s)(c).map(_.toFloat).toSeq)
     spark.createDataFrame(
       spark.sparkContext.parallelize(out, 1),
       org.apache.spark.sql.types.StructType(Seq(

@@ -92,6 +92,24 @@ class AnnIndexSpec extends AnyFunSuite {
       .select($"query_id", $"rank".cast("long").as("rank"), $"vec_id", $"adc_u")
   }
 
+  /** The relational form of the build / appendDelta encode (the plan
+    * before the fused pass): `IvfIndex.assign` ⋈ `PqCodebook.encode` on
+    * `vec_id` against the index's stored centroids and codebook, clustered
+    * by cell — the reference the fused encode must reproduce row for row.
+    */
+  private def relationalCodes(emb: DataFrame, dir: String, m: Int, sub: Int): DataFrame = {
+    val cents = spark.read.parquet(s"$dir/centroids.parquet")
+    val cb = spark.read.parquet(s"$dir/codebook.parquet")
+    val cells = graft.operators.IvfIndex.assign(emb, cents, "vec_id", "embedding")
+      .select(col("vec_id"), col("centroid_id"))
+    graft.operators.PqCodebook.encode(emb, cb, m, sub)
+      .join(cells, Seq("vec_id"))
+      .repartition(col("centroid_id"))
+  }
+
+  private def codeRows(codes: DataFrame): Seq[String] =
+    codes.select("vec_id", "s", "code", "centroid_id").collect().map(_.toString).sorted.toSeq
+
   /** 60 "doc i" records embedded by the ask path's own embedder, persisted
     * as a vector-index table, and their AnnIndex (m = 8, sub = 2) under
     * `dir/idx`.
@@ -303,6 +321,78 @@ class AnnIndexSpec extends AnyFunSuite {
         assert(got((id, s.toLong)) == want(s), s"vec $id sub $s")
       }
     }
+  }
+
+  test("fused encode: build and appendDelta write the relational assign ⋈ encode rows, degenerate deltas included") {
+    import spark.implicits._
+    val m = 8
+    val sub = 2
+    val dir = java.nio.file.Files.createTempDirectory("graft_annfused").toString
+    def buildSame(what: String, emb: DataFrame, idx: String, m: Int, sub: Int): Unit = {
+      AnnIndex.build(emb, idx, m = m, sub = sub, kcode = 16)
+      assert(codeRows(spark.read.parquet(s"$idx/codes.parquet")) ==
+        codeRows(relationalCodes(emb, idx, m, sub)), what)
+    }
+    (0 until 80).map(i => (i.toLong, vec(i))).toDF("vec_id", "embedding")
+      .write.mode("overwrite").parquet(s"$dir/base.parquet")
+    val base = s"$dir/base"
+    buildSame("80-vector corpus", spark.read.parquet(s"$dir/base.parquet"), base, m, sub)
+    val (ask, askDir, _) = askFixture("graft_annfusedask")
+    buildSame("ask corpus", ask.select($"vector_id".as("vec_id"), $"content_vector".as("embedding")),
+      s"$askDir/idx2", m, sub)
+    org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(askDir))
+    buildSame("64-dim corpus at m = 8, sub = 8",
+      (0 until 40).map(i => (i.toLong, (0 until 64).map(d => math.sin(i * 31 + d * 7 + 1).toFloat)))
+        .toDF("vec_id", "embedding"), s"$dir/wide", 8, 8)
+    buildSame("int ids, one id held by two vectors",
+      ((0 until 50).map(i => (i, vec(i))) :+ (7 -> vec(77))).toDF("vec_id", "embedding"),
+      s"$dir/intids", m, sub)
+    // each delta lands in a fresh codes relation next to the base index's
+    // centroids and codebook, so the appended rows are the whole relation
+    def deltaSame(what: String, delta: DataFrame): Seq[String] = {
+      val idx = java.nio.file.Files.createTempDirectory(java.nio.file.Paths.get(dir), "delta").toString
+      for (rel <- Seq("centroids.parquet", "codebook.parquet"))
+        org.apache.commons.io.FileUtils.copyDirectory(
+          new java.io.File(s"$base/$rel"), new java.io.File(s"$idx/$rel"))
+      AnnIndex.appendDelta(spark, idx, delta, m = m, sub = sub)
+      val got = codeRows(spark.read.parquet(s"$idx/codes.parquet"))
+      assert(got == codeRows(relationalCodes(delta, idx, m, sub)), what)
+      got
+    }
+    val nullId: Option[Long] = None
+    def delta(rows: (Option[Long], Seq[Float])*): DataFrame = rows.toDF("vec_id", "embedding")
+    deltaSame("plain delta", (80 until 100).map(i => (i.toLong, vec(i))).toDF("vec_id", "embedding"))
+    assert(deltaSame("two vectors under one vec_id",
+      delta(Some(80L) -> vec(80), Some(80L) -> vec(81), Some(82L) -> vec(82))).size == 2 * m)
+    assert(deltaSame("null vec_id", delta(nullId -> vec(83), Some(84L) -> vec(84))).size == m)
+    deltaSame("null embedding", delta(Some(85L) -> null, Some(86L) -> vec(86)))
+    deltaSame("vectors shorter than m·sub",
+      delta(Some(87L) -> vec(87).take(5), Some(88L) -> vec(88).take(1), Some(89L) -> Seq.empty[Float]))
+    deltaSame("all-zero vector", delta(Some(90L) -> Seq.fill(16)(0.0f)))
+    deltaSame("NaN component", delta(Some(91L) -> vec(91).updated(3, Float.NaN)))
+    deltaSame("array<double> embeddings with int ids",
+      (0 until 6).map(i => (200 + i, vec(200 + i).map(_.toDouble))).toDF("vec_id", "embedding"))
+    // an empty delta appends nothing and does not throw
+    val before = spark.read.parquet(s"$base/codes.parquet").count()
+    AnnIndex.appendDelta(spark, base,
+      Seq.empty[(Long, Seq[Float])].toDF("vec_id", "embedding"), m = m, sub = sub)
+    assert(spark.read.parquet(s"$base/codes.parquet").count() == before)
+    org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(dir))
+  }
+
+  test("appendDelta runs at most 5 Spark jobs and no parquet schema-inference job") {
+    import spark.implicits._
+    val dir = java.nio.file.Files.createTempDirectory("graft_anndeltajobs").toString
+    AnnIndex.build((0 until 80).map(i => (i.toLong, vec(i))).toDF("vec_id", "embedding"),
+      s"$dir/idx", m = 8, sub = 2, kcode = 16)
+    val delta = (80 until 100).map(i => (i.toLong, vec(i))).toDF("vec_id", "embedding")
+    val (_, jobs) = JobNames.callStacks(spark.sparkContext) {
+      AnnIndex.appendDelta(spark, s"$dir/idx", delta, m = 8, sub = 2)
+    }
+    assert(jobs.size <= 5, s"${jobs.size} jobs:\n" + jobs.map(_.map(_.takeWhile(_ != '\n'))).mkString("\n"))
+    assert(!jobs.flatten.exists(_.contains("DataFrameReader.parquet")), jobs.mkString("\n"))
+    assert(spark.read.parquet(s"$dir/idx/codes.parquet").count() == 8L * 100)
+    org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(dir))
   }
 
   test("nprobe = all cells: persisted-index ADC equals the driver-side PQ brute force bit-for-bit") {

@@ -166,8 +166,55 @@ class SparkOpsSpec extends AnyFunSuite {
     assert(idx.read.count() == 2)
     idx.deleteByIds(Seq("formA_0"))
     assert(idx.read.as[(String, Seq[Float], String, String)].collect().map(_._1).toSet == Set("formA_1"))
+    // after a delete the title holds fewer records than its highest id:
+    // append mode mints past the highest id, never over a live record
+    val later = Seq(("formA", "text a4", 0L)).toDF("title", "text", "ord")
+      .withColumn("content_vector", org.apache.spark.sql.functions.lit(e.embedOne("z")))
+    idx.upsert(later, "ord", append = true)
+    assert(idx.read.select($"vector_id", $"text").as[(String, String)].collect().toMap ==
+      Map("formA_1" -> "text a2", "formA_2" -> "text a4"))
     idx.deleteAll()
     assert(idx.read.count() == 0)
+  }
+
+  test("vector index: re-reading a version it wrote or read costs no schema-inference job; read.schema matches the files after every mutation") {
+    import spark.implicits._
+    val path = s"${tmpDir("graft_idx_schema")}/index"
+    val idx = new VectorIndex(spark, path)
+    val e = new DeterministicEmbedder(8)
+    def batch(rows: (String, String, Long)*) = rows.toDF("title", "text", "ord")
+      .withColumn("content_vector", org.apache.spark.sql.functions.lit(e.embedOne("x")))
+    def onDisk(): org.apache.spark.sql.types.StructType = {
+      val v = new String(java.nio.file.Files.readAllBytes(
+        java.nio.file.Paths.get(path, "_CURRENT")), "UTF-8").trim
+      spark.read.parquet(s"$path/v$v").schema
+    }
+    def inferenceJobs(body: => Unit): Seq[String] =
+      org.apache.spark.JobNames.callStacks(spark.sparkContext)(body)._2.flatten
+        .filter(_.contains("DataFrameReader.parquet"))
+    idx.upsert(batch(("fA", "t1", 0L), ("fA", "t2", 1L), ("fB", "t3", 0L)), "ord")
+    assert(idx.read.schema == onDisk())
+    assert(inferenceJobs(idx.upsert(batch(("fA", "t4", 0L)), "ord", append = true)).isEmpty)
+    assert(idx.read.schema == onDisk())
+    assert(inferenceJobs(idx.deleteByForms(Seq("fB"))).isEmpty)
+    assert(idx.read.schema == onDisk())
+    idx.upsert(batch(("fA", "t1", 0L)), "ord")
+    assert(idx.read.schema == onDisk())
+    idx.deleteByIds(Seq("fA_1"))
+    assert(idx.read.schema == onDisk())
+    // a second instance infers the version it did not write, then reads it
+    // like the writer does
+    val other = new VectorIndex(spark, path)
+    val rows = idx.read.select($"vector_id", $"text").as[(String, String)].collect().toMap
+    assert(rows == Map("fA_0" -> "t1", "fA_2" -> "t4"))
+    assert(other.read.select($"vector_id", $"text").as[(String, String)].collect().toMap == rows)
+    assert(inferenceJobs(other.read.count()).isEmpty)
+    other.upsert(batch(("fC", "t5", 0L)), "ord", append = true)
+    assert(idx.read.count() == 3 && idx.read.schema == onDisk())
+    assert(inferenceJobs(other.stats.collect()).isEmpty)
+    idx.deleteAll()
+    assert(idx.read.schema == onDisk() && idx.read.count() == 0)
+    assert(other.read.schema == onDisk() && other.dimension == 0)
   }
 
   test("vector index: versioned snapshots, pointer swap, GC keeps current+previous") {
