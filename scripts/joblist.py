@@ -6,9 +6,11 @@ Usage:
         [--desc NAME] [--block K]
 
 Each line holds the job id, its job description (the job group a caller set
-with `setJobGroup`, e.g. a perfbench trace span; "-" when none), its call
-site, its duration and the driver gap since the previous job of the whole
-log ended (negative when it started before that job ended). An adaptive
+with `setJobGroup`, e.g. a perfbench trace span, or a size gate's
+"<site> gate: ..." line; "-" when none), its call site ("(no stage)" for a
+gate's decision, a job over zero partitions), its duration and the driver
+gap since the previous job of the whole log ended (negative when it
+started before that job ended). An adaptive
 query stage runs as its own job from a pool thread; its call site is shown
 as the stage's operator for the SQL action that owns it, e.g.
 "Exchange for parquet at AnnIndex.scala:110". `--desc NAME` keeps the jobs
@@ -69,7 +71,10 @@ def jobs(path):
         elif kind == "SparkListenerJobStart":
             props = e.get("Properties") or {}
             desc = props.get("spark.job.description") or "-"
-            site = max(e["Stage Infos"], key=lambda s: s["Stage ID"])["Stage Name"]
+            # a job over zero partitions (a LocalStrategy gate's decision)
+            # runs no stage
+            stages = e["Stage Infos"]
+            site = max(stages, key=lambda s: s["Stage ID"])["Stage Name"] if stages else "(no stage)"
             exec_id = props.get("spark.sql.execution.id")
             if "CompletableFuture" in site and exec_id in sql:
                 scope = json.loads(props.get("spark.rdd.scope") or '{"name": "result stage"}')
@@ -110,10 +115,11 @@ def main():
     def ms(v):
         return "-" if v is None else str(v)
 
-    print(f"{'job':>5}  {'desc':<16} {'call site':<60} {'ms':>6} {'gap_ms':>6}")
+    w = max([16] + [len(r[1]) for b in blocks for r in b])
+    print(f"{'job':>5}  {'desc':<{w}} {'call site':<60} {'ms':>6} {'gap_ms':>6}")
     for b in blocks:
         for j, desc, site, dur, gap, _, _ in b:
-            print(f"{j:>5}  {desc[:16]:<16} {site[:60]:<60} {ms(dur):>6} {ms(gap):>6}")
+            print(f"{j:>5}  {desc:<{w}} {site[:60]:<60} {ms(dur):>6} {ms(gap):>6}")
         if args.desc is not None:
             wall = max(r[6] or r[5] for r in b) - b[0][5]
             busy = sum(r[3] or 0 for r in b)

@@ -86,14 +86,15 @@ object ScaleProbe {
       s"auto staging picked ${if (overAutoBar) "cache" else "parquet-CTAS"} " +
         s"on the ${if (overAutoBar) "over" else "under"}-threshold probe corpus")
     SparkEntry.releaseStaging(spark)
-    // the losing variant, kept for the measured contrast: force the
-    // in-memory cache staging the shipped query uses at interactive scale
+    // the losing variant, kept for the measured contrast: an unreachable
+    // threshold forces the in-memory cache staging the shipped query uses
+    // at interactive scale
     val q56c = timed("q56_sql_dedup_cachestage_10x") {
-      spark.conf.set("spark.graft.sqlDedup.staging", "cache")
+      spark.conf.set("spark.graft.sqlDedup.autoTableBytes", Long.MaxValue.toString)
       scaled.createOrReplaceTempView("v_documents")
       SparkEntry.sqlDedupPipeline(spark)
     }
-    spark.conf.unset("spark.graft.sqlDedup.staging")
+    spark.conf.unset("spark.graft.sqlDedup.autoTableBytes")
     // drop the cache probe's band relation so the next probes measure
     // their own memory footprint, not q56's leftover cache
     SparkEntry.releaseStaging(spark)

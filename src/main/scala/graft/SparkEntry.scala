@@ -352,21 +352,20 @@ object SparkEntry {
     * statements. The band relation must be staged so the corpus scan +
     * MinHash pass runs ONCE (Spark inlines WITH-CTEs into every consumer,
     * so a single-statement form would compute signatures once per self-join
-    * side). Staging is ADAPTIVE, governed by `spark.graft.sqlDedup.staging`:
+    * side). Staging is chosen from the source relation's estimated size
+    * against `spark.graft.sqlDedup.autoTableBytes` (default 4 MiB — between
+    * the bench corpus where cache measured faster and the 10× probe corpus
+    * where CTAS did; any production corpus is far above):
     *
-    *  - `cache` — eagerly-cached temp view. Wins interactively at bench
-    *    scale (no disk round-trip), but ScaleProbe measured it LOSING at
-    *    10× (61-72 s vs 34-51 s): the in-memory row cache feeds both join
-    *    sides where the CTAS variant's self-join probes compressed
+    *  - at or below it, an eagerly-cached temp view. Wins interactively at
+    *    bench scale (no disk round-trip), but ScaleProbe measured it LOSING
+    *    at 10× (61-72 s vs 34-51 s): the in-memory row cache feeds both
+    *    join sides where the CTAS variant's self-join probes compressed
     *    columnar parquet scans.
-    *  - `table` — parquet CTAS (`sql_bands_stage`). The 100 TB deployment
+    *  - above it, a parquet CTAS (`sql_bands_stage`). The 100 TB deployment
     *    shape: the band relation lands columnar-compressed on storage the
     *    executors scan independently, nothing pins executor memory across
     *    the join. Still plain SQL a SQL-only user can type.
-    *  - `auto` (default) — CTAS once the source relation's estimated size
-    *    crosses `spark.graft.sqlDedup.autoTableBytes` (default 4 MiB —
-    *    between the bench corpus where cache measured faster and the 10×
-    *    probe corpus where CTAS did; any production corpus is far above).
     *
     * Both variants produce bit-identical output (same band SQL, same
     * verify statement — only the staging relation differs), so the oracle
@@ -378,14 +377,9 @@ object SparkEntry {
   def sqlDedupPipeline(s: SparkSession): DataFrame = {
     graft.functions.VectorFunctions.register(s)
     releaseStaging(s) // clean slate per run
-    val useTable = s.conf.get("spark.graft.sqlDedup.staging", "auto") match {
-      case "table" => true
-      case "cache" => false
-      case _ => // auto: file-stats estimate of the scan feeding the bands
-        val threshold =
-          s.conf.get("spark.graft.sqlDedup.autoTableBytes", (4L << 20).toString).toLong
-        s.table("v_documents").queryExecution.optimizedPlan.stats.sizeInBytes > threshold
-    }
+    // file-stats estimate of the scan feeding the bands
+    val useTable = s.table("v_documents").queryExecution.optimizedPlan.stats.sizeInBytes >
+      s.conf.get("spark.graft.sqlDedup.autoTableBytes", (4L << 20).toString).toLong
     val body = sqlBandsBodyN(s.sparkContext.defaultParallelism)
     val stage =
       if (useTable) {

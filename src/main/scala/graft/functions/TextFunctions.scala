@@ -102,10 +102,6 @@ object TextFunctions {
   def passwordValid(s: String): Boolean =
     s.matches("\\S{5,}") && java.util.regex.Pattern.compile("[!@#$%^&*]").matcher(s).find()
 
-  /** Run-scoped timestamp tag `%d_%m_%Y_%H_%M_%S` (`pipeline1.py:309`). */
-  def timestampTag(): Column =
-    date_format(current_timestamp(), "dd_MM_yyyy_HH_mm_ss")
-
   /** Random alphanumeric id of length n (`pipeline1.py:63-66`; ids only,
     * crypto strength not required).
     */
@@ -113,12 +109,5 @@ object TextFunctions {
     val chars = ('a' to 'z') ++ ('A' to 'Z') ++ ('0' to '9')
     val rnd = java.util.concurrent.ThreadLocalRandom.current()
     (1 to n).map(_ => chars(rnd.nextInt(chars.length))).mkString
-  }
-
-  /** Word-level n-gram shingles joined by a single space. */
-  def wordShingles(s: String, n: Int): Seq[String] = {
-    val words = s.trim.split("\\s+").toSeq.filter(_.nonEmpty)
-    if (words.length <= n) Seq(words.mkString(" "))
-    else words.sliding(n).map(_.mkString(" ")).toSeq
   }
 }

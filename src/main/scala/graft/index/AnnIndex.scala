@@ -57,7 +57,8 @@ object AnnIndex {
     * `trainIters = 0` reproduces the pre-round-12 raw seed grid).
     *
     * Job shape: the centroid and codebook training jobs and their two
-    * writes, one codebook collect, then [[encodeCells]] — a narrow
+    * writes, the codebook collect (job-free when the codebook was trained
+    * in-process: a local relation), then [[encodeCells]] — a narrow
     * encode pass, one `(vec_id, s)` exchange, one `centroid_id`
     * exchange and the partitioned write.
     */

@@ -131,14 +131,4 @@ object ChunkingJob {
       .withColumn("cumulativeTokenCount", sum(col("tokenCount")).over(upToHere))
       .drop("headingSeenBefore")
   }
-
-  /** A1 made deterministic: sections aggregated with explicit in-group order
-    * (`array_sort(collect_list(struct))` — collect_list alone is
-    * order-nondeterministic after shuffle).
-    */
-  def sectionsDF(sectionized: DataFrame): DataFrame =
-    sectionized
-      .groupBy(col("formName"), col("section"))
-      .agg(expr("array_join(transform(array_sort(collect_list(struct(lineNo, para))), x -> x.para), '\n')").as("chunk"))
-      .withColumn("tokenCount", TextFunctions.numTokensCol(col("chunk")))
 }

@@ -297,13 +297,6 @@ object Dedup {
       .distinct()
   }
 
-  /** Embedding near-dup: cosine above `threshold` marks a duplicate pair.
-    * Pairing strategy is the caller's (LSH buckets, consecutive ids, ANN
-    * candidates) — this is the verifier column.
-    */
-  def cosineNearDup(vecA: Column, vecB: Column, threshold: Double): Column =
-    graft.functions.VectorFunctions.cosineSim(vecA, vecB) > threshold
-
   /** Resolve near-dup pairs into clusters: every id gets
     * `keeper_id` = the minimum id of its connected component in the
     * undirected pair graph (ids not in any pair keep themselves).
@@ -329,9 +322,9 @@ object Dedup {
     * singleton majority is never shuffled through a propagation round.
     *
     * Round 16: the endpoint labels come from [[componentsOverEndpoints]] —
-    * a LOCAL union-find when the staged pair list is under
-    * `spark.graft.graph.localEdgeLimit` (the dup graph is a small quotient
-    * of the corpus; see [[LocalGraph]]), the unchanged distributed
+    * a LOCAL union-find when the staged pair list passes
+    * [[LocalStrategy.stage]] (the dup graph is a small quotient of the
+    * corpus; see [[LocalGraph]]), the unchanged distributed
     * min-label rounds otherwise. Output is bit-identical either way
     * (LocalGraphSpec pins the parity).
     */
@@ -348,15 +341,16 @@ object Dedup {
     * of [[resolveClusters]] over the endpoint set.
     */
   private[graft] def componentsOverEndpoints(pairs: DataFrame): DataFrame = {
-    val staged = LocalGraph.stage(pairs, "id_a", "id_b")
-    staged.edges match {
-      case Some(arr) =>
-        LocalGraph.componentLabelsDF(pairs.sparkSession, arr,
-          staged.df.schema.head.dataType)
-      case None =>
-        val endpoints = staged.df.select(col("id_a").as("id"))
-          .union(staged.df.select(col("id_b").as("id")))
-        resolveClusters(staged.df, endpoints)
+    val slim = pairs.select(col("id_a"), col("id_b"))
+    LocalStrategy.stage(slim, "components", LocalStrategy.oneIntegralType(slim))(
+        LocalStrategy.noNulls) match {
+      case Right(rows) =>
+        LocalGraph.componentLabelsDF(pairs.sparkSession, LocalGraph.longPairs(rows),
+          slim.schema.head.dataType)
+      case Left(staged) =>
+        val endpoints = staged.select(col("id_a").as("id"))
+          .union(staged.select(col("id_b").as("id")))
+        resolveClusters(staged, endpoints)
     }
   }
 

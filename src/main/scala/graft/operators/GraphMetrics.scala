@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
 
 /** Triangle counting and global clustering coefficient over an undirected
@@ -131,24 +131,20 @@ object GraphMetrics {
       k: Int = 2, rounds: Int = 8): (DataFrame, Int) = {
     // round 16: size-gated local peel (see LocalGraph) — identical rounds,
     // identical early exit, identical output; distributed loop unchanged
-    // above the edge limit
-    val staged = LocalGraph.stage(pairs, aCol, bCol)
-    staged.edges.foreach { arr =>
-      val spark = pairs.sparkSession
-      val idType = staged.df.schema.head.dataType
-      val (core, peels) = LocalGraph.kCore(arr, k, rounds)
-      val rows = core.map { case (v, d) => org.apache.spark.sql.Row(v, d) }
-      val df = spark.createDataFrame(
-        spark.sparkContext.parallelize(rows.toIndexedSeq, 1),
-        org.apache.spark.sql.types.StructType(Seq(
-          org.apache.spark.sql.types.StructField("v",
-            org.apache.spark.sql.types.LongType, nullable = false),
-          org.apache.spark.sql.types.StructField("core_degree",
-            org.apache.spark.sql.types.LongType, nullable = false))))
-      return (df.select(col("v").cast(idType).as("v"), col("core_degree")),
-        peels)
+    // when the gate hands off
+    val slim = pairs.select(col(aCol), col(bCol))
+    val staged = LocalStrategy.stage(slim, "k-core", LocalStrategy.oneIntegralType(slim))(
+        LocalStrategy.noNulls) match {
+      case Right(rows) =>
+        val (core, peels) = LocalGraph.kCore(LocalGraph.longPairs(rows), k, rounds)
+        val df = LocalStrategy.frame(pairs.sparkSession,
+          "v BIGINT NOT NULL, core_degree BIGINT NOT NULL",
+          core.map { case (v, d) => Row(v, d) }.toSeq)
+        return (df.select(col("v").cast(slim.schema.head.dataType).as("v"),
+          col("core_degree")), peels)
+      case Left(cut) => cut
     }
-    var edges = staged.df
+    var edges = staged
       .select(least(col(aCol), col(bCol)).as("lo"),
         greatest(col(aCol), col(bCol)).as("hi"))
       .filter(col("lo") =!= col("hi"))
@@ -253,30 +249,23 @@ object GraphMetrics {
       hops: Int = 3): DataFrame = {
     require(hops >= 1 && hops <= 8, s"hops must be in [1, 8], got $hops")
     // round 16: size-gated local BFS (see LocalGraph) — the pair graph is
-    // a small quotient of the corpus; under the edge limit the whole
-    // hops-bounded closure runs in-process with identical micro-unit
-    // arithmetic, above it the distributed frontier rounds run unchanged
-    val staged = LocalGraph.stage(pairs, aCol, bCol)
-    staged.edges.foreach { arr =>
-      val spark = pairs.sparkSession
-      val idType = staged.df.schema.head.dataType
-      val rows = LocalGraph.harmonicCentrality(arr, hops)
-        .map { case (id, n1, nf, h) => org.apache.spark.sql.Row(id, n1, nf, h) }
-      val df = spark.createDataFrame(
-        spark.sparkContext.parallelize(rows.toIndexedSeq, 1),
-        org.apache.spark.sql.types.StructType(Seq(
-          org.apache.spark.sql.types.StructField("id",
-            org.apache.spark.sql.types.LongType, nullable = false),
-          org.apache.spark.sql.types.StructField("n_1hop",
-            org.apache.spark.sql.types.LongType, nullable = false),
-          org.apache.spark.sql.types.StructField("n_far",
-            org.apache.spark.sql.types.LongType, nullable = false),
-          org.apache.spark.sql.types.StructField("h_micro",
-            org.apache.spark.sql.types.LongType, nullable = false))))
-      return df.select(col("id").cast(idType).as("id"),
-        col("n_1hop"), col("n_far"), col("h_micro"))
+    // a small quotient of the corpus; when the gate keeps it local the
+    // whole hops-bounded closure runs in-process with identical micro-unit
+    // arithmetic, otherwise the distributed frontier rounds run unchanged
+    val slim = pairs.select(col(aCol), col(bCol))
+    val staged = LocalStrategy.stage(slim, "harmonic centrality",
+        LocalStrategy.oneIntegralType(slim))(LocalStrategy.noNulls) match {
+      case Right(rows) =>
+        val df = LocalStrategy.frame(pairs.sparkSession,
+          "id BIGINT NOT NULL, n_1hop BIGINT NOT NULL, n_far BIGINT NOT NULL, " +
+            "h_micro BIGINT NOT NULL",
+          LocalGraph.harmonicCentrality(LocalGraph.longPairs(rows), hops)
+            .map { case (id, n1, nf, h) => Row(id, n1, nf, h) }.toSeq)
+        return df.select(col("id").cast(slim.schema.head.dataType).as("id"),
+          col("n_1hop"), col("n_far"), col("h_micro"))
+      case Left(cut) => cut
     }
-    val edges = staged.df
+    val edges = staged
       .select(col(aCol).as("src"), col(bCol).as("dst"))
       .filter(col("src") =!= col("dst"))
     val sym = edges
@@ -372,26 +361,23 @@ object GraphMetrics {
       rounds: Int): DataFrame = {
     // round 16: size-gated local rounds (see LocalGraph) — identical vote
     // counts and (count desc, label asc) ties; distributed loop unchanged
-    // above the edge limit
-    val staged = LocalGraph.stage(pairs, aCol, bCol)
-    staged.edges.foreach { arr =>
-      val spark = pairs.sparkSession
-      val idType = staged.df.schema.head.dataType
-      val rows = LocalGraph.labelPropagation(arr, rounds)
-        .map { case (id, lab) => org.apache.spark.sql.Row(id, lab) }
-      val df = spark.createDataFrame(
-        spark.sparkContext.parallelize(rows.toIndexedSeq, 1),
-        org.apache.spark.sql.types.StructType(Seq(
-          org.apache.spark.sql.types.StructField("id",
-            org.apache.spark.sql.types.LongType, nullable = false),
-          org.apache.spark.sql.types.StructField("label",
-            org.apache.spark.sql.types.LongType, nullable = false))))
-      return df.select(col("id").cast(idType).as("id"),
-        col("label").cast(idType).as("label"))
+    // when the gate hands off
+    val slim = pairs.select(col(aCol), col(bCol))
+    val staged = LocalStrategy.stage(slim, "label propagation",
+        LocalStrategy.oneIntegralType(slim))(LocalStrategy.noNulls) match {
+      case Right(rows) =>
+        val idType = slim.schema.head.dataType
+        val df = LocalStrategy.frame(pairs.sparkSession,
+          "id BIGINT NOT NULL, label BIGINT NOT NULL",
+          LocalGraph.labelPropagation(LocalGraph.longPairs(rows), rounds)
+            .map { case (id, lab) => Row(id, lab) }.toSeq)
+        return df.select(col("id").cast(idType).as("id"),
+          col("label").cast(idType).as("label"))
+      case Left(cut) => cut
     }
-    val edges = staged.df
+    val edges = staged
       .select(col(aCol).as("src"), col(bCol).as("dst"))
-      .union(staged.df.select(col(bCol).as("src"), col(aCol).as("dst")))
+      .union(staged.select(col(bCol).as("src"), col(aCol).as("dst")))
       .filter(col("src") =!= col("dst"))
       .localCheckpoint(false) // every round joins it
     var labels = edges.select(col("src").as("id")).distinct()

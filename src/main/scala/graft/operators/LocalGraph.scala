@@ -16,78 +16,25 @@ import org.apache.spark.sql.types._
   * job overhead whenever the edge list is small, and O(log diameter) or
   * fixed-k rounds of it.
   *
-  * This object applies the guide's §3.1 size-gated strategy choice to the
-  * ITERATION instead of a join: when the edge list (counted on its
-  * materialized checkpoint — one cheap action the distributed path pays
-  * anyway) fits under `spark.graft.graph.localEdgeLimit` (default 2^21
-  * rows ≈ tens of MB collected — the same order as a broadcast hash
-  * relation, which is also driver-built), collect it once, run the exact
-  * same integer fixpoint in-process, and return the result as a (small)
-  * local relation that downstream joins naturally broadcast. Above the
-  * limit, `None` — the caller runs the unchanged distributed loop (the
-  * 100 TB path). Every local algorithm replicates the distributed
-  * arithmetic EXACTLY (integer ppm ranks, min-label components,
-  * (count desc, label asc) vote ties, micro-unit reciprocals), which
-  * LocalGraphSpec pins by comparing both paths on engineered graphs.
-  *
-  * No state is kept across invocations: each call re-counts and
-  * re-collects from the DataFrame it is handed.
+  * This object holds the in-process algorithms; [[LocalStrategy.stage]]
+  * decides whether they run. When the edge list fits under
+  * `spark.graft.localRowLimit` rows (one count on its checkpoint — the
+  * materialization the distributed path pays anyway), shares one id type
+  * and holds no null endpoint, it is collected once, the exact same
+  * integer fixpoint runs in-process, and the result comes back as a local
+  * relation ([[LocalStrategy.frame]]) whose exact size statistics let
+  * downstream joins broadcast it. Otherwise the caller runs the unchanged
+  * distributed loop (the 100 TB path). Every local algorithm replicates
+  * the distributed arithmetic EXACTLY (integer ppm ranks, min-label
+  * components, (count desc, label asc) vote ties, micro-unit
+  * reciprocals), which LocalGraphSpec pins by comparing both paths on
+  * engineered graphs.
   */
 object LocalGraph {
 
-  /** Edge-count gate: at or below this, iterate locally. */
-  def edgeLimit(spark: SparkSession): Long =
-    spark.conf.getOption("spark.graft.graph.localEdgeLimit")
-      .map(_.toLong).getOrElse(1L << 21)
-
-  private def isIntegral(dt: DataType): Boolean =
-    dt == LongType || dt == IntegerType || dt == ShortType || dt == ByteType
-
-  private def asLong(v: Any): Long = v match {
-    case l: Long => l
-    case i: Int => i.toLong
-    case s: Short => s.toLong
-    case b: Byte => b.toLong
-    case other => other.asInstanceOf[Number].longValue()
-  }
-
-  /** Materialize + count + (maybe) collect the 2-column pair list.
-    * Returns the collected rows, or None when over the limit or the id
-    * types are not integral (the local orderings below assume integer
-    * ids). The checkpoint means an over-limit probe costs one
-    * materialization the distributed loops need anyway — callers should
-    * reuse [[staged]]'s DataFrame on the fallback path.
-    */
-  final case class Staged(df: DataFrame, edges: Option[Array[(Long, Long)]])
-
-  def stage(pairs: DataFrame, aCol: String, bCol: String): Staged = {
-    val spark = pairs.sparkSession
-    val slim = pairs.select(col(aCol), col(bCol)).localCheckpoint(false)
-    val integral = slim.schema.fields.forall(f => isIntegral(f.dataType))
-    if (!integral) return Staged(slim, None)
-    val n = slim.count()
-    if (n > edgeLimit(spark)) Staged(slim, None)
-    else {
-      val arr = slim.collect().map(r => (asLong(r.get(0)), asLong(r.get(1))))
-      Staged(slim, Some(arr))
-    }
-  }
-
-  /** [[stage]] for operators that never order ids (PageRank groups and
-    * sums only): any id type whose external value has value equality —
-    * both columns must share one type.
-    */
-  final case class StagedAny(df: DataFrame, edges: Option[Array[(Any, Any)]])
-
-  def stageAny(pairs: DataFrame, aCol: String, bCol: String): StagedAny = {
-    val spark = pairs.sparkSession
-    val slim = pairs.select(col(aCol), col(bCol)).localCheckpoint(false)
-    if (slim.schema.fields(0).dataType != slim.schema.fields(1).dataType)
-      return StagedAny(slim, None)
-    val n = slim.count()
-    if (n > edgeLimit(spark)) StagedAny(slim, None)
-    else StagedAny(slim, Some(slim.collect().map(r => (r.get(0), r.get(1)))))
-  }
+  /** The (a, b) pairs of collected rows of one integral id type. */
+  def longPairs(rows: Array[Row]): Array[(Long, Long)] =
+    rows.map(r => (r.getAs[Number](0).longValue, r.getAs[Number](1).longValue))
 
   /** Min-label connected components over an undirected pair list:
     * union-find with path halving, then every member labelled with its
@@ -132,11 +79,8 @@ object LocalGraph {
     */
   def componentLabelsDF(spark: SparkSession, edges: Array[(Long, Long)],
       idType: DataType): DataFrame = {
-    val rows = componentLabels(edges).map { case (id, k) => Row(id, k) }
-    val df = spark.createDataFrame(
-      spark.sparkContext.parallelize(rows.toIndexedSeq, 1),
-      StructType(Seq(StructField("id", LongType, nullable = false),
-        StructField("keeper_id", LongType, nullable = false))))
+    val df = LocalStrategy.frame(spark, "id BIGINT NOT NULL, keeper_id BIGINT NOT NULL",
+      componentLabels(edges).map { case (id, k) => Row(id, k) }.toSeq)
     if (idType == LongType) df
     else df.select(col("id").cast(idType).as("id"),
       col("keeper_id").cast(idType).as("keeper_id"))

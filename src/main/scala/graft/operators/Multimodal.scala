@@ -87,19 +87,6 @@ object Multimodal {
     spark.createDataFrame(rdd, outSchema)
   }
 
-  /** Pure-expression twin for oracle checks (byte length + md5 + the same
-    * md5-derived fake dimensions) — used when the "media" is demonstrably
-    * text bytes. Stays in whole-stage codegen.
-    */
-  def metaColumns(binaryCol: String): Seq[(String, org.apache.spark.sql.Column)] = {
-    val h = conv(substring(md5(col(binaryCol)), 1, 15), 16, 10).cast("long")
-    Seq(
-      "byte_length" -> length(col(binaryCol)).cast("long"),
-      "content_md5" -> md5(col(binaryCol)),
-      "fake_width" -> (h % 1920).cast("int"),
-      "fake_height" -> (h % 1080).cast("int"))
-  }
-
   private def md5Hex(bytes: Array[Byte]): String =
     java.security.MessageDigest.getInstance("MD5").digest(bytes)
       .map(b => f"$b%02x").mkString

@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
 
 /** PageRank (Page et al., 1999) over an edge list, in EXACT integer
@@ -74,31 +74,28 @@ object PageRank {
       broadcastNodeLimit: Long = 10000000L,
       toleranceU: Long = 0L): (DataFrame, Int) = {
     // round 16: size-gated local iteration (see LocalGraph) — the staged
-    // pair list is counted anyway; under the edge limit the whole integer
-    // ppm walk runs in-process with bit-identical arithmetic and early
-    // exit, above it the distributed rounds below run unchanged
-    val stagedAny = LocalGraph.stageAny(pairs, aCol, bCol)
-    stagedAny.edges.foreach { arr =>
-      val spark = pairs.sparkSession
-      val idType = stagedAny.df.schema.head.dataType
-      val (out, it) = LocalGraph.pageRank(arr, iters, toleranceU)
-      val rows = out.map { case (id, deg, r) => org.apache.spark.sql.Row(id, deg, r) }
-      val df = spark.createDataFrame(
-        spark.sparkContext.parallelize(rows.toIndexedSeq, 1),
-        org.apache.spark.sql.types.StructType(Seq(
-          org.apache.spark.sql.types.StructField("id", idType, nullable = true),
-          org.apache.spark.sql.types.StructField("deg",
-            org.apache.spark.sql.types.LongType, nullable = false),
-          org.apache.spark.sql.types.StructField("rank_u",
-            org.apache.spark.sql.types.LongType, nullable = false))))
-      return (df, it)
+    // pair list is counted anyway; when the gate keeps it local the whole
+    // integer ppm walk runs in-process with bit-identical arithmetic and
+    // early exit, otherwise the distributed rounds below run unchanged.
+    // PageRank only groups and compares ids, so any one shared id type
+    // qualifies (the q284 host graph has string ids)
+    val slim = pairs.select(col(aCol), col(bCol))
+    val staged = LocalStrategy.stage(slim, "pagerank", LocalStrategy.oneType(slim))(
+        LocalStrategy.noNulls) match {
+      case Right(rows) =>
+        val (out, it) =
+          LocalGraph.pageRank(rows.map(r => (r.get(0), r.get(1))), iters, toleranceU)
+        return (LocalStrategy.frame(pairs.sparkSession,
+          s"id ${slim.schema.head.dataType.sql}, deg BIGINT NOT NULL, rank_u BIGINT NOT NULL",
+          out.map { case (id, deg, r) => Row(id, deg, r) }.toSeq), it)
+      case Left(cut) => cut
     }
-    // the INPUT pairs are already staged by LocalGraph.stageAny: the
-    // symmetrizing union reads that checkpoint once per direction instead
-    // of re-running the whole upstream pipeline per branch (for the q108
-    // use the LSH dedup pipeline — a corpus scan + signature pass per
-    // branch; 7.4 s → 2.6 s at sf0.1)
-    val fwd = stagedAny.df.select(col(aCol).as("src"), col(bCol).as("dst"))
+    // the INPUT pairs are already staged by the gate: the symmetrizing
+    // union reads that checkpoint once per direction instead of re-running
+    // the whole upstream pipeline per branch (for the q108 use the LSH
+    // dedup pipeline — a corpus scan + signature pass per branch;
+    // 7.4 s → 2.6 s at sf0.1)
+    val fwd = staged.select(col(aCol).as("src"), col(bCol).as("dst"))
     // …then the edge list, which degree, adjacency and node set each read
     // (no distinct — see the contract above; self-loops still dropped)
     val sym = fwd.union(fwd.select(col("dst").as("src"), col("src").as("dst")))
@@ -155,27 +152,21 @@ object PageRank {
     // round 16: size-gated local walk, integral ids only (the seed set is
     // Seq[Long]); identical ppm arithmetic — running to a fixed point
     // early is output-invisible because the update is deterministic
-    val staged = LocalGraph.stage(pairs, aCol, bCol)
-    staged.edges.foreach { arr =>
-      val spark = pairs.sparkSession
-      val idType = staged.df.schema.head.dataType
-      val seedSet: Set[Any] = seeds.map(_.asInstanceOf[Any]).toSet
-      val (out, _) = LocalGraph.pageRank(
-        arr.map { case (a, b) => (a: Any, b: Any) }, iters, toleranceU = 0L,
-        seedsU = Some(seedSet))
-      val rows = out.map { case (id, deg, r) => org.apache.spark.sql.Row(id, deg, r) }
-      val df = spark.createDataFrame(
-        spark.sparkContext.parallelize(rows.toIndexedSeq, 1),
-        org.apache.spark.sql.types.StructType(Seq(
-          org.apache.spark.sql.types.StructField("id",
-            org.apache.spark.sql.types.LongType, nullable = false),
-          org.apache.spark.sql.types.StructField("deg",
-            org.apache.spark.sql.types.LongType, nullable = false),
-          org.apache.spark.sql.types.StructField("rank_u",
-            org.apache.spark.sql.types.LongType, nullable = false))))
-      return df.select(col("id").cast(idType).as("id"), col("deg"), col("rank_u"))
+    val slim = pairs.select(col(aCol), col(bCol))
+    val staged = LocalStrategy.stage(slim, "personalized pagerank",
+        LocalStrategy.oneIntegralType(slim))(LocalStrategy.noNulls) match {
+      case Right(rows) =>
+        val (out, _) = LocalGraph.pageRank(
+          LocalGraph.longPairs(rows).map { case (a, b) => (a: Any, b: Any) }, iters,
+          toleranceU = 0L, seedsU = Some(seeds.map(_.asInstanceOf[Any]).toSet))
+        val df = LocalStrategy.frame(pairs.sparkSession,
+          "id BIGINT NOT NULL, deg BIGINT NOT NULL, rank_u BIGINT NOT NULL",
+          out.map { case (id, deg, r) => Row(id, deg, r) }.toSeq)
+        return df.select(col("id").cast(slim.schema.head.dataType).as("id"),
+          col("deg"), col("rank_u"))
+      case Left(cut) => cut
     }
-    val fwd = staged.df.select(col(aCol).as("src"), col(bCol).as("dst"))
+    val fwd = staged.select(col(aCol).as("src"), col(bCol).as("dst"))
     val sym = fwd.union(fwd.select(col("dst").as("src"), col("src").as("dst")))
       .filter(col("src") =!= col("dst"))
       .localCheckpoint(false)

@@ -1,8 +1,9 @@
 package graft.operators
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{ArrayType, FloatType}
 
 import graft.functions.VectorFunctions
 
@@ -57,27 +58,43 @@ object PqCodebook {
     * Round 16: size-gated LOCAL Lloyd (the [[LocalGraph]] strategy applied
     * to codebook training) — each iteration of the distributed loop costs
     * one n·m-row shuffle, a positional-mean aggregation and an eager
-    * checkpoint, all fixed overhead when the corpus is small. Under
-    * `spark.graft.pq.localTrainLimit` vectors (default 2^20 — a 64-dim
-    * float corpus of that size collects to ~270 MB, the broadcast-relation
-    * order of magnitude) the SAME arithmetic (ascending-index double dot,
+    * checkpoint, all fixed overhead when the corpus is small. When
+    * [[LocalStrategy.stage]] keeps the (id, vector) corpus local (at most
+    * `spark.graft.localRowLimit` vectors, default 2^20 — a 64-dim float
+    * corpus of that size collects to ~270 MB, the broadcast-relation order
+    * of magnitude) the SAME arithmetic (ascending-index double dot,
     * max-margin argmax with lowest-code ties, micro-unit BIGINT mean) runs
-    * in-process; above it, the distributed loop below is unchanged.
-    * AnnIndexSpec/PqCodebookSpec parity covers both paths.
+    * in-process. The local path orders seeds as longs and slices float
+    * vectors without bounds checks, so it takes only an integral id column,
+    * `array<float>` vectors, at least `kcode` rows, no null id or vector
+    * and no vector shorter than m·sub; anything else — and any corpus over
+    * the limit — runs the distributed loop below, unchanged, over the
+    * gate's checkpoint (the input is evaluated once either way).
+    * LocalGraphSpec pins both paths' parity on those inputs.
     */
   def train(emb: DataFrame, m: Int, sub: Int, kcode: Int, iters: Int,
       idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame = {
     val spark = emb.sparkSession
     import spark.implicits._
-    val localLimit = spark.conf.getOption("spark.graft.pq.localTrainLimit")
-      .map(_.toLong).getOrElse(1L << 20)
-    if (iters > 0 && emb.count() <= localLimit) {
-      val rows = emb.select(col(idCol).cast("long"), col(vecCol))
-        .as[(Long, Seq[Float])].collect().sortBy(_._1)
-      return trainLocal(spark, rows, m, sub, kcode, iters)
+    val corpus = if (iters == 0) emb else {
+      val slim = emb.select(col(idCol), col(vecCol))
+      val schemaOk = LocalStrategy.oneIntegralType(slim.select(col(idCol))) &&
+        (slim.schema(1).dataType match { case ArrayType(FloatType, _) => true; case _ => false })
+      LocalStrategy.stage(slim, "pq train", schemaOk) { rows =>
+        rows.length >= kcode && LocalStrategy.noNulls(rows) && rows.forall { r =>
+          val v = r.getSeq[Any](1)
+          v.length >= m * sub && !v.contains(null)
+        }
+      } match {
+        case Right(rows) =>
+          val sorted = rows.map(r => (r.getAs[Number](0).longValue, r.getSeq[Float](1)))
+            .sortBy(_._1)
+          return trainLocal(spark, sorted, m, sub, kcode, iters)
+        case Left(cut) => cut
+      }
     }
     val subs = broadcast((0 until m).map(_.toLong).toDF("s"))
-    val seeds = emb.orderBy(col(idCol)).limit(kcode)
+    val seeds = corpus.orderBy(col(idCol)).limit(kcode)
       .withColumn("code",
         (row_number().over(Window.orderBy(col(idCol))) - 1).cast("long"))
     var cb = seeds.crossJoin(subs)
@@ -85,7 +102,7 @@ object PqCodebook {
         slice(col(vecCol), ($"s" * sub + 1).cast("int"), lit(sub)).as("cent"))
       .localCheckpoint(false) // m·kcode rows; feeds every iteration + caller
     if (iters == 0) return cb
-    val svs = subVectors(emb, m, sub, idCol, vecCol)
+    val svs = subVectors(corpus, m, sub, idCol, vecCol)
       .localCheckpoint(false) // scanned once per iteration; cut re-slicing
     for (_ <- 0 until iters) {
       val cbScore = cb.withColumn("half_norm2",
@@ -128,7 +145,7 @@ object PqCodebook {
     * micro-unit sums divided once in double and cast to float, empty codes
     * keeping their previous centroid.
     */
-  private def trainLocal(spark: org.apache.spark.sql.SparkSession,
+  private def trainLocal(spark: SparkSession,
       sorted: Array[(Long, Seq[Float])], m: Int, sub: Int, kcode: Int,
       iters: Int): DataFrame = {
     val vecs = sorted.map(_._2.map(_.toDouble).toArray)
@@ -178,19 +195,10 @@ object PqCodebook {
         s += 1
       }
     }
-    val out = for (s <- 0 until m; c <- 0 until kcode)
-      yield org.apache.spark.sql.Row(s.toLong, c.toLong, cb(s)(c).map(_.toFloat).toSeq)
-    spark.createDataFrame(
-      spark.sparkContext.parallelize(out, 1),
-      org.apache.spark.sql.types.StructType(Seq(
-        org.apache.spark.sql.types.StructField("s",
-          org.apache.spark.sql.types.LongType, nullable = false),
-        org.apache.spark.sql.types.StructField("code",
-          org.apache.spark.sql.types.LongType, nullable = false),
-        org.apache.spark.sql.types.StructField("cent",
-          org.apache.spark.sql.types.ArrayType(
-            org.apache.spark.sql.types.FloatType, containsNull = false),
-          nullable = false))))
+    LocalStrategy.frame(spark,
+      "s BIGINT NOT NULL, code BIGINT NOT NULL, cent ARRAY<FLOAT> NOT NULL",
+      for (s <- 0 until m; c <- 0 until kcode)
+        yield Row(s.toLong, c.toLong, cb(s)(c).map(_.toFloat).toSeq))
   }
 
   /** Compressed index: (idCol, s, code) — argmin-L2 encode of every

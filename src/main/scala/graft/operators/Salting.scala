@@ -25,19 +25,6 @@ object Salting {
     saltedBig.join(saltedSmall, Seq(key, "__salt")).drop("__salt")
   }
 
-  /** Two-phase (salted) aggregation: partial agg on (key, salt), final on
-    * key. `aggs` maps output column -> (partialAgg(inputCol), finalAgg).
-    * Counts/sums compose; see q43 for the query form.
-    */
-  def saltedCountSum(
-      df: DataFrame, key: String, valueCol: String,
-      saltSource: Column, saltFactor: Int): DataFrame =
-    df.withColumn("__salt", pmod(saltSource, lit(saltFactor)).cast("int"))
-      .groupBy(col(key), col("__salt"))
-      .agg(count(lit(1)).as("__pc"), sum(col(valueCol)).as("__ps"))
-      .groupBy(col(key))
-      .agg(sum(col("__pc")).as("n"), sum(col("__ps")).as("total"))
-
   /** The q129 diagnostic as a reusable probe: xxhash64 fingerprints of the
     * ≤ `topK` heaviest keys of `df` (any key type) whose row count exceeds
     * `hotKeyThreshold`, heaviest first. Per-key counts partial-aggregate

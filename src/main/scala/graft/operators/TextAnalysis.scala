@@ -68,8 +68,6 @@ object TextAnalysis {
     }.otherwise("und")
   }
 
-  def languageId(textCol: Column): Column = languageIdFromTokens(tokensCol(textCol))
-
   /** Quality-score components + composite in [0, 1]:
     * length score (saturating at 500 chars), alpha ratio, stopword presence,
     * mean word length window [3, 12]. Mirrors the shape of public corpus
@@ -95,9 +93,6 @@ object TextAnalysis {
     floor((lenScore + alphaRatio + stopScore + wordLenScore) / 4.0 * 10000.0) / 10000.0
   }
 
-  def qualityScore(textCol: Column): Column =
-    qualityScoreFromTokens(textCol, tokensCol(textCol))
-
   /** Language-ID + quality in ONE compiled loop per row:
     * `struct<lang_pred, quality>` — value-identical to
     * `languageIdFromTokens` + `qualityScoreFromTokens` over `tokensCol`
@@ -109,11 +104,6 @@ object TextAnalysis {
     Bridge.toColumn(org.apache.spark.sql.graft.expressions.LangQuality(
       Bridge.toExpr(textCol), Markers.toSeq.map { case (l, ws) => (l, ws) }))
   }
-
-  /** Token counts: engine BPE-ish tokenizer + whitespace variant. */
-  def tokenCounts(textCol: Column): Seq[(String, Column)] = Seq(
-    "n_tokens" -> TextFunctions.numTokensCol(textCol).cast("long"),
-    "ws_tokens" -> TextFunctions.wsTokenCountCol(textCol).cast("long"))
 
   /** Document fingerprint: min stable hash over word 3-gram shingles — a
     * 1-component MinHash usable as a cheap near-dup blocking key (winnowing

@@ -1457,55 +1457,54 @@ private[graft] object StatsQueries {
       val rows = pairs.groupBy($"cur").agg(sum($"c").as("c_cur"))
       val p = pairs.join(broadcast(rows), Seq("cur"))
         .select($"cur", $"nxt", expr("c * 1000000 div c_cur").as("p6"))
-        .localCheckpoint(false) // re-joined every iteration
       // round 16: the transition matrix is event-TYPE² sized (a quotient of
-      // the corpus, like the LocalGraph edge lists) — under the limit the
-      // 16 ppm steps run in-process with identical integer arithmetic;
-      // above it the distributed loop below runs unchanged
-      val localLimit = s.conf
-        .getOption("spark.graft.markov.localTransitionLimit")
-        .map(_.toLong).getOrElse(1L << 20)
-      if (p.count() <= localLimit) {
-        val trans = p.collect()
-          .map(r => (r.getString(0), r.getString(1), r.getLong(2)))
-        val states = trans.map(_._1).distinct
-        val t = states.length.toLong
-        var piM = states.map(st => st -> 1000000L / t).toMap
-        var prevM = piM
-        for (_ <- 1 to 16) {
-          prevM = piM
-          val next = scala.collection.mutable.HashMap.empty[String, Long]
-          trans.foreach { case (cur, nxt, p6) =>
-            piM.get(cur).foreach { pi6 =>
-              next(nxt) = next.getOrElse(nxt, 0L) + pi6 * p6 / 1000000L
+      // the corpus, like the LocalGraph edge lists) — when LocalStrategy
+      // keeps it local (under its row limit; it holds no null: `nxt` is
+      // filtered and the join on `cur` drops a null source) the 16 ppm
+      // steps run in-process with identical integer arithmetic; otherwise
+      // the distributed loop below runs unchanged over the gate's
+      // checkpoint, which every iteration re-joins
+      graft.operators.LocalStrategy.stage(p, "q249 markov")(_ => true) match {
+        case Right(rows) =>
+          val trans = rows.map(r => (r.getString(0), r.getString(1), r.getLong(2)))
+          val states = trans.map(_._1).distinct
+          val t = states.length.toLong
+          var piM = states.map(st => st -> 1000000L / t).toMap
+          var prevM = piM
+          for (_ <- 1 to 16) {
+            prevM = piM
+            val next = scala.collection.mutable.HashMap.empty[String, Long]
+            trans.foreach { case (cur, nxt, p6) =>
+              piM.get(cur).foreach { pi6 =>
+                next(nxt) = next.getOrElse(nxt, 0L) + pi6 * p6 / 1000000L
+              }
             }
+            piM = next.toMap
           }
-          piM = next.toMap
-        }
-        val out = piM.keySet.intersect(prevM.keySet).toSeq.sorted.map { st =>
-          (st, piM(st), math.abs(piM(st) - prevM(st)))
-        }
-        out.toDF("event_type", "pi6", "resid6").orderBy($"event_type")
-      } else {
-        val states = p.select($"cur".as("st")).distinct()
-          .localCheckpoint(false)
-        val nStates = broadcast(states.agg(count(lit(1)).as("t")))
-        var pi = states.crossJoin(nStates)
-          .select($"st", expr("1000000 div t").as("pi6"))
-          .localCheckpoint(false)
-        var prev = pi
-        for (_ <- 1 to 16) {
-          prev = pi
-          pi = pi.join(p, pi("st") === p("cur"))
-            .groupBy($"nxt")
-            .agg(sum(expr("pi6 * p6 div 1000000")).as("npi6"))
-            .select($"nxt".as("st"), $"npi6".as("pi6"))
+          val out = piM.keySet.intersect(prevM.keySet).toSeq.sorted.map { st =>
+            (st, piM(st), math.abs(piM(st) - prevM(st)))
+          }
+          out.toDF("event_type", "pi6", "resid6").orderBy($"event_type")
+        case Left(p) =>
+          val states = p.select($"cur".as("st")).distinct()
             .localCheckpoint(false)
-        }
-        pi.join(prev.select($"st", $"pi6".as("prev6")), Seq("st"))
-          .select($"st".as("event_type"), $"pi6",
-            abs($"pi6" - $"prev6").as("resid6"))
-          .orderBy($"event_type")
+          val nStates = broadcast(states.agg(count(lit(1)).as("t")))
+          var pi = states.crossJoin(nStates)
+            .select($"st", expr("1000000 div t").as("pi6"))
+            .localCheckpoint(false)
+          var prev = pi
+          for (_ <- 1 to 16) {
+            prev = pi
+            pi = pi.join(p, pi("st") === p("cur"))
+              .groupBy($"nxt")
+              .agg(sum(expr("pi6 * p6 div 1000000")).as("npi6"))
+              .select($"nxt".as("st"), $"npi6".as("pi6"))
+              .localCheckpoint(false)
+          }
+          pi.join(prev.select($"st", $"pi6".as("prev6")), Seq("st"))
+            .select($"st".as("event_type"), $"pi6",
+              abs($"pi6" - $"prev6").as("resid6"))
+            .orderBy($"event_type")
       }
     }),
 

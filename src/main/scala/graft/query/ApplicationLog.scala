@@ -5,8 +5,6 @@ import java.time.format.DateTimeFormatter
 
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.util.QueryExecutionListener
-import org.apache.spark.sql.execution.QueryExecution
 
 import graft.functions.TextFunctions
 
@@ -60,21 +58,6 @@ final class ApplicationLog(spark: SparkSession, val correlationId: String)
 
   def writeTo(path: String): Unit =
     toDF.write.mode(SaveMode.Append).parquet(path)
-
-  /** Optional automatic logging: every completed/failed SQL action becomes
-    * an Info/Error row (the listener analog of the reference wrapping each
-    * DAG task in try/log).
-    */
-  def attachQueryListener(component: String): QueryExecutionListener = {
-    val l = new QueryExecutionListener {
-      override def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit =
-        log(component, "Info", s"$funcName completed in ${durationNs / 1000000} ms")
-      override def onFailure(funcName: String, qe: QueryExecution, exception: Exception): Unit =
-        log(component, "Error", s"$funcName failed: ${exception.getMessage}")
-    }
-    spark.listenerManager.register(l)
-    l
-  }
 }
 
 object ApplicationLog {

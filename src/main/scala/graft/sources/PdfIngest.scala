@@ -21,17 +21,6 @@ object PdfIngest {
     if (m.find()) m.group(1) else s"InputPDF_$runId-$index.pdf"
   }
 
-  /** Columnar twin (P12 path mangling). `indexCol` must be the caller's
-    * stable row index (matching the scalar twin's `index` argument) — NOT
-    * monotonically_increasing_id, which is partition-dependent.
-    */
-  def pdfFilenameCol(linkCol: org.apache.spark.sql.Column, runId: String,
-      indexCol: org.apache.spark.sql.Column): org.apache.spark.sql.Column = {
-    val extracted = regexp_extract(linkCol, FilenameRegex, 1)
-    when(extracted =!= "", extracted)
-      .otherwise(concat(lit(s"InputPDF_$runId-"), indexCol.cast("string"), lit(".pdf")))
-  }
-
   final case class UrlCheck(url: String, status: Int, contentType: String, ok: Boolean, issue: String)
 
   /** S1 pre-flight validation (`pipeline1.py:331-368`): HEAD each URL;

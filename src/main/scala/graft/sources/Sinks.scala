@@ -21,13 +21,6 @@ object Sinks {
     out.write.option("header", true).mode(SaveMode.Overwrite).csv(path)
   }
 
-  /** S8 text sources: lines, or one row per file (wholetext). */
-  def readTextLines(spark: SparkSession, path: String): DataFrame =
-    spark.read.text(path)
-
-  def readWholeText(spark: SparkSession, path: String): DataFrame =
-    spark.read.option("wholetext", true).text(path)
-
   /** JSONL source with an explicit corrupt-record quarantine — the
     * ingest contract a 100 TB web-scrape drop needs: PERMISSIVE parse
     * against a REQUIRED schema, malformed lines captured in a corrupt

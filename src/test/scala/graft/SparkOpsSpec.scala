@@ -351,6 +351,21 @@ class SparkOpsSpec extends AnyFunSuite {
     val existing = Seq("f1", "f2").toDF("form_name")
     val processed = Seq("f2", "f3").toDF("form_name")
     assert(AppQueries.newForms(existing, processed).as[String].collect().toSeq == Seq("f3"))
+    // chat history: newest first, chat_id breaks a timestamp tie, skip/limit
+    // page through it; other users' chats never appear
+    val chats = Seq((10L, 1L, 100L), (11L, 1L, 300L), (12L, 1L, 300L), (13L, 1L, 200L),
+      (14L, 2L, 999L)).toDF("chat_id", "user_id", "created_ts")
+    def page(skip: Int, limit: Int): Seq[Long] =
+      AppQueries.chatHistory(chats, 1L, skip, limit).select("chat_id").as[Long].collect().toSeq
+    assert(page(0, 50) == Seq(12L, 11L, 13L, 10L))
+    assert(page(1, 2) == Seq(11L, 13L))
+    assert(page(4, 2).isEmpty)
+    // chats join their user over the FK; a chat without a user drops
+    val joined = AppQueries.chatsWithUsers(users.select("user_id", "user_email"), chats)
+      .select("chat_id", "user_email").as[(Long, String)].collect().sortBy(_._1).toSeq
+    assert(joined == Seq(10L, 11L, 12L, 13L).map(_ -> "a@b.com"))
+    val stats = Seq(("f1", 3), ("f2", 1), ("f1", 4)).toDF("form_name", "n_chunks")
+    assert(AppQueries.formCatalog(stats).as[String].collect().sorted.toSeq == Seq("f1", "f2"))
   }
 
   test("native sketch expressions: edge inputs + parity with HOF formulas") {
@@ -1249,20 +1264,13 @@ class SparkOpsSpec extends AnyFunSuite {
       assert(!spark.catalog.tableExists("sql_bands_stage"))
       assert(viaCache.nonEmpty)
 
-      spark.conf.set("spark.graft.sqlDedup.staging", "table")
+      // a 1-byte threshold forces CTAS: the source crosses it
+      spark.conf.set("spark.graft.sqlDedup.autoTableBytes", "1")
       val viaTable = run()
       assert(spark.catalog.tableExists("sql_bands_stage"))
       assert(!spark.catalog.isCached("v_sql_bands")) // cache path not taken
       assert(viaTable == viaCache) // staging is invisible in the output
-
-      // auto must flip to CTAS once the source crosses the size threshold
-      spark.conf.set("spark.graft.sqlDedup.staging", "auto")
-      spark.conf.set("spark.graft.sqlDedup.autoTableBytes", "1")
-      val viaAuto = run()
-      assert(spark.catalog.tableExists("sql_bands_stage"))
-      assert(viaAuto == viaCache)
     } finally {
-      spark.conf.unset("spark.graft.sqlDedup.staging")
       spark.conf.unset("spark.graft.sqlDedup.autoTableBytes")
       SparkEntry.releaseStaging(spark)
     }

@@ -8,7 +8,8 @@ import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, StageIn
   * its stages' call-site names (e.g. "parquet at AnnIndex.scala:107") or,
   * with [[callStacks]], their long call sites (the stack the job was
   * submitted from, e.g. starting "...DataFrameReader.parquet(" for a
-  * parquet schema-inference job).
+  * parquet schema-inference job), or with [[descriptions]] its job
+  * description.
   * Lives in `org.apache.spark` for the listener bus drain, which is
   * Spark-private: without it a job's start event may still be queued when
   * the block returns.
@@ -20,12 +21,22 @@ object JobNames {
   def callStacks[T](sc: SparkContext)(body: => T): (T, Seq[Seq[String]]) =
     record(sc, _.details)(body)
 
+  /** The job description (`spark.job.description`, null when unset) of
+    * each job the block launches.
+    */
+  def descriptions[T](sc: SparkContext)(body: => T): (T, Seq[String]) =
+    recordJobs(sc, _.properties.getProperty("spark.job.description"))(body)
+
   private def record[T](sc: SparkContext, what: StageInfo => String)(
-      body: => T): (T, Seq[Seq[String]]) = {
-    val jobs = ArrayBuffer.empty[Seq[String]]
+      body: => T): (T, Seq[Seq[String]]) =
+    recordJobs(sc, _.stageInfos.map(what))(body)
+
+  private def recordJobs[T, A](sc: SparkContext, what: SparkListenerJobStart => A)(
+      body: => T): (T, Seq[A]) = {
+    val jobs = ArrayBuffer.empty[A]
     val listener = new SparkListener {
       override def onJobStart(e: SparkListenerJobStart): Unit =
-        jobs.synchronized(jobs += e.stageInfos.map(what))
+        jobs.synchronized(jobs += what(e))
     }
     sc.listenerBus.waitUntilEmpty(60000L)
     sc.addSparkListener(listener)
