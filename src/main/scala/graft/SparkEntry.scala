@@ -149,7 +149,7 @@ object SparkEntry {
         hll($"bkt", $"rnk").as("regs"))
     val merged = aggOf(ev.filter($"ts" < lit(tcutNs)))
       .unionByName(aggOf(ev.filter($"ts" >= lit(tcutNs))))
-      .localCheckpoint(false) // scalar re-sum + register max both read it
+      .localCheckpoint() // scalar re-sum + register max both read it
     val scalars = merged.groupBy($"event_type", $"day")
       .agg(sum($"n").as("n"), sum($"sum_value_u").as("sum_value_u"))
     val regs = graft.operators.HllSketch.rollupRegisters(
@@ -179,7 +179,7 @@ object SparkEntry {
     val hashed = graft.operators.Multimodal.perceptualHashes(imgs, "img")
       .select($"doc_id", $"a0", $"a1", $"a2", $"a3",
         $"d0", $"d1", $"d2", $"d3")
-      .localCheckpoint(false) // banding + both verify sides read it
+      .localCheckpoint() // banding + both verify sides read it
     val bands = hashed.select($"doc_id",
       posexplode(array($"a0", $"a1", $"a2", $"a3")).as(Seq("b", "v")))
     val cand = bands.as("x").join(bands.as("y"),
@@ -251,7 +251,7 @@ object SparkEntry {
     val cnt = docs
       .select($"source", $"n_chars".as("v"))
       .groupBy($"source", $"v").agg(count(lit(1)).as("c"))
-      .localCheckpoint(false) // sizes, value cums, and the grid read it
+      .localCheckpoint() // sizes, value cums, and the grid read it
     val ns = cnt.groupBy($"source").agg(sum($"c").as("n1"))
     val tot = broadcast(cnt.agg(sum($"c").as("n")))
     val gcum = cnt.groupBy($"v").agg(sum($"c").as("cv"))
@@ -290,7 +290,7 @@ object SparkEntry {
     import s.implicits._
     val cents = graft.operators.IvfIndex.centroids(emb, k = 0, iters = 0)
     val cells = graft.operators.IvfIndex.assign(emb, cents, "vec_id", "embedding")
-      .localCheckpoint(false) // assignment scan feeds both pair-join sides
+      .localCheckpoint() // assignment scan feeds both pair-join sides
     // Salt the pair join: centroid_id alone has only k distinct values,
     // so the scoring stage would run k tasks no matter the cluster size.
     // Splitting the probe side by hash(src) and replicating the build
@@ -308,7 +308,7 @@ object SparkEntry {
           * lit(10000.0)).cast("long").as("cos4"))
       .withColumn("rn", row_number().over(w)).filter($"rn" <= 3)
       .select($"src", $"dst")
-      .localCheckpoint(false) // k-sized lists; mutuality joins it to itself
+      .localCheckpoint() // k-sized lists; mutuality joins it to itself
     val mutual = top
       .join(top.select($"dst".as("src"), $"src".as("dst")), Seq("src", "dst"))
       .filter($"src" < $"dst")

@@ -9,7 +9,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DoubleType, IntegerType, LongType, StructField, StructType}
 
 import graft.functions.VectorFunctions
-import graft.operators.IvfIndex
+import graft.operators.{IvfIndex, LocalStrategy, PqCodebook}
 
 /** Persisted IVFADC index with a build-once / query-many split — the
   * compressed-index analog of pipeline 2's vector index lifecycle
@@ -32,11 +32,11 @@ import graft.operators.IvfIndex
   * partition column, so the codes scan is PARTITION-PRUNED to
   * nprobe·|queries| directories and the raw embedding corpus is never
   * touched on the serve path (plan-pinned in the spec; q210 pins it
-  * against the inline q184 arithmetic). Per batch that is two metadata
-  * collects, two broadcast local relations and one exchange keyed by
-  * query. At 100 TB the serve-side cost is the probed cells' code lists
-  * — ~1/k of an 8-byte-per-vector table per probe — plus broadcast-sized
-  * LUT joins.
+  * against the inline q184 arithmetic). Per batch that is one metadata
+  * collect (centroids and codebook in one scan), two broadcast local
+  * relations and one exchange keyed by query. At 100 TB the serve-side
+  * cost is the probed cells' code lists — ~1/k of an 8-byte-per-vector
+  * table per probe — plus broadcast-sized LUT joins.
   *
   * Arithmetic is bit-identical to q178/q184: encode by max-margin argmax
   * (dot − ‖c‖²/2), ADC sums BIGINT micro-units, ties broken on lowest
@@ -56,19 +56,43 @@ object AnnIndex {
     * micro-sum means, `trainIters = 2` is the measured recall knee;
     * `trainIters = 0` reproduces the pre-round-12 raw seed grid).
     *
-    * Job shape: the centroid and codebook training jobs and their two
-    * writes, the codebook collect (job-free when the codebook was trained
-    * in-process: a local relation), then [[encodeCells]] — a narrow
-    * encode pass, one `(vec_id, s)` exchange, one `centroid_id`
-    * exchange and the partitioned write.
+    * One size gate: the slim (vec_id, embedding) input is staged once
+    * through [[LocalStrategy.staged]] ("ann build") under the PQ trainer's
+    * schema and row conditions ([[PqCodebook.localSchema]],
+    * [[PqCodebook.localRows]]). When it keeps the rows, the centroids (the
+    * k lowest ids numbered 0..k−1, k from n by [[IvfIndex.cellCount]]) and
+    * the codebook ([[PqCodebook.trainLocal]]) are derived from them
+    * in-process — O(k) seeding and the trainer the gate already sizes;
+    * the rows hold no more driver heap than `PqCodebook.train`'s gate.
+    * Any other input — over the row limit, non-integral ids, non-float
+    * vectors, fewer than `kcode` rows, a null id or vector, a vector
+    * shorter than m·sub — gets [[IvfIndex.centroids]]' count and seed
+    * collect and the distributed Lloyd loop ([[PqCodebook.lloyd]], no
+    * second gate) over the gate's checkpoint, plus the codebook collect.
+    * Either way every row is encoded by [[encodeCells]] over that
+    * checkpoint, so the input is evaluated once per row, and centroids
+    * and codebook are written as one file each. In-process job shape: the
+    * gate (count, collect, decision), the centroids and codebook writes,
+    * then [[encodeCells]]' `(vec_id, s)` exchange, the `centroid_id`
+    * exchange and the partitioned write — eight jobs.
     */
   def build(emb: DataFrame, dir: String,
       m: Int = 8, sub: Int = 8, kcode: Int = 16, trainIters: Int = 2): Unit = {
-    val cents = IvfIndex.centroids(emb, k = 0, iters = 0)
-    cents.write.mode("overwrite").parquet(s"$dir/centroids.parquet")
-    val cb = graft.operators.PqCodebook.train(emb, m, sub, kcode, trainIters)
-    cb.write.mode("overwrite").parquet(s"$dir/codebook.parquet")
-    writeCodes(encodeCells(emb, centroidVectors(cents), codebookVectors(cb, m), sub),
+    val spark = emb.sparkSession
+    val slim = emb.select(col("vec_id"), col("embedding"))
+    val (cut, kept) = LocalStrategy.staged(slim, "ann build", PqCodebook.localSchema(slim))(
+      PqCodebook.localRows(_, m, sub, kcode))
+    val (cents, cb) = kept match {
+      case Some(rows) =>
+        val sorted = PqCodebook.byId(rows)
+        (IvfIndex.seeded(spark, sorted.take(IvfIndex.cellCount(rows.length)).map(_._2).toSeq),
+          PqCodebook.trainLocal(spark, sorted, m, sub, kcode, trainIters))
+      case None =>
+        (IvfIndex.centroids(cut, k = 0, iters = 0), PqCodebook.lloyd(cut, m, sub, kcode, trainIters))
+    }
+    cents.coalesce(1).write.mode("overwrite").parquet(s"$dir/centroids.parquet")
+    cb.coalesce(1).write.mode("overwrite").parquet(s"$dir/codebook.parquet")
+    writeCodes(encodeCells(cut, centroidVectors(cents), codebookVectors(cb, m), sub),
       dir, "overwrite")
   }
 
@@ -81,18 +105,36 @@ object AnnIndex {
     * from the codebook's training corpus, rebuild — this operator makes
     * the refresh cheap enough to schedule nightly either way.
     *
-    * Job shape: two metadata collects read with the schemas [[build]]
-    * writes (no inference job), then [[encodeCells]]' two exchanges and
-    * the append — five jobs.
+    * Job shape: one [[metadata]] collect (no inference job), then
+    * [[encodeCells]]' two exchanges and the append — four jobs.
     */
   def appendDelta(spark: SparkSession, dir: String, delta: DataFrame,
       m: Int = 8, sub: Int = 8): Unit = {
-    val cents = centroidVectors(
-      spark.read.schema(CentroidsSchema).parquet(s"$dir/centroids.parquet"))
-    val cb = codebookVectors(
-      spark.read.schema(CodebookSchema).parquet(s"$dir/codebook.parquet"), m)
+    val (cents, cb) = metadata(spark, dir, m)
     writeCodes(encodeCells(delta, cents, cb, sub), dir, "append")
   }
+
+  /** Centroids and codebook of the index under `dir` in ONE scan: both
+    * relations read with one schema holding both schemas' columns (no
+    * inference job); a row's non-null key columns say which relation it
+    * came from.
+    */
+  private def metadata(spark: SparkSession, dir: String,
+      m: Int): (Array[(Int, Array[Double])], Seq[(Long, Long, Array[Double])]) = {
+    val both = spark.read.schema(s"$CentroidsSchema, $CodebookSchema")
+      .parquet(s"$dir/centroids.parquet", s"$dir/codebook.parquet")
+      .select(col("centroid_id"), col("centroid").cast("array<double>"),
+        col("s"), col("code"), col("cent").cast("array<double>"))
+      .collect()
+    val (cents, cb) = both.partition(!_.isNullAt(0))
+    (cents.map(r => r.getInt(0) -> doubles(r, 1)),
+      cb.map(r => (r.getLong(2), r.getLong(3), doubles(r, 4)))
+        .filter { case (s, _, _) => s >= 0 && s < m }.toSeq)
+  }
+
+  /** Column `i` of `r`, an `array<double>`, as an array (null stays null). */
+  private def doubles(r: Row, i: Int): Array[Double] =
+    if (r.isNullAt(i)) null else r.getSeq[Double](i).toArray
 
   // cluster by the partition column before the partitioned write (guide
   // §6): without it every write task touches every cell directory —
@@ -136,7 +178,7 @@ object AnnIndex {
       .flatMap { r =>
         if (r.isNullAt(0) || cents.isEmpty) Iterator.empty
         else {
-          val v = if (r.isNullAt(1)) null else r.getSeq[Double](1).toArray
+          val v = doubles(r, 1)
           val (csc, cell) = top(cents.iterator.map { case (c, cv) =>
             (if (v == null || cv == null) None else Some(VectorFunctions.cosine(v, cv))) -> c.toLong
           })
@@ -159,8 +201,7 @@ object AnnIndex {
     cands.reduceLeft((a, b) => if (ranksAbove(b._1, b._2, a._1, a._2)) b else a)
 
   private def vectors(df: DataFrame, key: Column, v: String): Array[(Any, Array[Double])] =
-    df.select(key, col(v).cast("array<double>")).collect()
-      .map(r => r.get(0) -> (if (r.isNullAt(1)) null else r.getSeq[Double](1).toArray))
+    df.select(key, col(v).cast("array<double>")).collect().map(r => r.get(0) -> doubles(r, 1))
 
   private def centroidVectors(cents: DataFrame): Array[(Int, Array[Double])] =
     vectors(cents, col("centroid_id"), "centroid")
@@ -178,8 +219,9 @@ object AnnIndex {
     * (query_id, rank, vec_id, adc_u).
     *
     * Everything sized by the query batch or the index metadata runs on the
-    * driver: the centroids (k rows), the codebook (m·kcode rows) and the
-    * batch are collected (a literal batch collects without a job), then
+    * driver: the centroids (k rows) and the codebook (m·kcode rows) are
+    * collected in one [[metadata]] scan and the batch is collected (a
+    * literal batch collects without a job), then
     * cells are ranked per query (cosine desc, lowest `centroid_id` on
     * ties, top `nprobe`) and the LUT is built with the same kernels and
     * ordering as the relational form ([[VectorFunctions.cosine]],
@@ -192,11 +234,8 @@ object AnnIndex {
       k: Int, nprobe: Int, m: Int = 8, sub: Int = 8,
       excludeSelf: Boolean = false): DataFrame = {
     import spark.implicits._
-    val cents = centroidVectors(
-      spark.read.schema(CentroidsSchema).parquet(s"$dir/centroids.parquet"))
     // only the m subspaces the query vector is cut into get LUT entries
-    val cb = codebookVectors(
-      spark.read.schema(CodebookSchema).parquet(s"$dir/codebook.parquet"), m)
+    val (cents, cb) = metadata(spark, dir, m)
     // a null query_id never matches the LUT join; vectors sharing an id
     // are ranked together, as a per-id window ranks them
     val batch = vectors(queries, $"query_id", "qv").filter(_._1 != null)

@@ -36,7 +36,7 @@ object EvalMetrics {
     import s.implicits._
     val hist = df
       .groupBy(col(groupCol).as("g"), col(valueCol).as("v"))
-      .agg(count(lit(1)).as("cnt")).localCheckpoint(false)
+      .agg(count(lit(1)).as("cnt")).localCheckpoint()
     val byV = hist.groupBy($"v").agg(sum($"cnt").as("tot"))
     val groups = hist.select($"g".as("tgt")).distinct()
     val pos = hist.select($"g".as("tgt"), $"v", $"cnt".as("pos"))
@@ -72,7 +72,7 @@ object EvalMetrics {
     val s = df.sparkSession
     import s.implicits._
     val cls = df.groupBy(col(q1), col(q2), col(bucketCol).as("b"))
-      .agg(count(lit(1)).as("cnt")).localCheckpoint(false)
+      .agg(count(lit(1)).as("cnt")).localCheckpoint()
     val glob = cls.groupBy($"b").agg(sum($"cnt").as("gcnt"))
       .withColumn("gcum", sum($"gcnt").over(
         Window.orderBy($"b")
@@ -124,7 +124,7 @@ object EvalMetrics {
         sum($"y").as("n_pos"))
       .select($"bin", $"n", expr("ssc div n").as("mean_score4"),
         expr("n_pos * 10000 div n").as("pos4"))
-      .localCheckpoint(false) // bin rows + ECE scalar both read it
+      .localCheckpoint() // bin rows + ECE scalar both read it
     val ece = broadcast(bins.agg(
       expr("sum(n * abs(mean_score4 - pos4)) div sum(n)").as("ece4")))
     bins.crossJoin(ece)
@@ -141,7 +141,7 @@ object EvalMetrics {
     import s.implicits._
     val daily = events
       .groupBy($"event_type", expr("(ts div 1000) div 86400000000").as("day"))
-      .agg(count(lit(1)).as("y")).localCheckpoint(false)
+      .agg(count(lit(1)).as("y")).localCheckpoint()
     val f7 = daily.select($"event_type", ($"day" + 7L).as("day"),
       $"y".as("f7"))
     val f1 = daily.select($"event_type", ($"day" + 1L).as("day"),
@@ -208,7 +208,7 @@ object EvalMetrics {
     import s.implicits._
     val daily = events
       .groupBy($"event_type", expr("(ts div 1000) div 86400000000").as("day"))
-      .agg(count(lit(1)).as("y")).localCheckpoint(false)
+      .agg(count(lit(1)).as("y")).localCheckpoint()
     val sAgg = daily.as("a").join(daily.as("b"),
         $"a.event_type" === $"b.event_type" && $"a.day" < $"b.day")
       .groupBy($"a.event_type".as("event_type"))

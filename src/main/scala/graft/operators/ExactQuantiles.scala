@@ -44,7 +44,7 @@ object ExactQuantiles {
     import spark.implicits._
     val v = col(valueCol).cast("long")
     val vals = df.select(v.as("v"), (v - pmod(v, lit(coarseWidth))).as("b"))
-      .localCheckpoint(false) // both passes read this projection
+      .localCheckpoint() // both passes read this projection
     // pass 1: coarse histogram + cumulative counts (bucket-count-sized)
     val wb = Window.orderBy(col("b"))
       .rowsBetween(Window.unboundedPreceding, -1)
@@ -57,7 +57,7 @@ object ExactQuantiles {
         col("rank") <= col("cum_before") + col("cnt"))
       .select(col("p4"), col("n"), col("rank"), col("b"),
         (col("rank") - col("cum_before")).as("res_rank"))
-      .localCheckpoint(false) // probs-sized; drives the pass-2 semi-join
+      .localCheckpoint() // probs-sized; drives the pass-2 semi-join
     // pass 2: exact per-value counts inside the (≤ probs.size) hit buckets
     val wv = Window.partitionBy(col("b")).orderBy(col("v"))
       .rowsBetween(Window.unboundedPreceding, -1)
@@ -90,12 +90,12 @@ object ExactQuantiles {
     val v = col(valueCol).cast("long")
     val vals = df.select(g.as("g"), v.as("v"),
         (v - pmod(v, lit(coarseWidth))).as("b"))
-      .localCheckpoint(false) // both passes read this projection
+      .localCheckpoint() // both passes read this projection
     val wb = Window.partitionBy(col("g")).orderBy(col("b"))
       .rowsBetween(Window.unboundedPreceding, -1)
     val h1 = vals.groupBy(col("g"), col("b")).agg(count(lit(1)).as("cnt"))
       .withColumn("cum_before", coalesce(sum(col("cnt")).over(wb), lit(0L)))
-      .localCheckpoint(false) // totals + the rank join both read it
+      .localCheckpoint() // totals + the rank join both read it
     val totals = h1.groupBy(col("g")).agg(sum(col("cnt")).as("n"))
     val targets = probs4.toDF("p4").crossJoin(totals)
       .withColumn("rank", expr("(p4 * n + 9999) div 10000"))
@@ -104,7 +104,7 @@ object ExactQuantiles {
         col("rank") <= col("cum_before") + col("cnt"))
       .select(col("g"), col("p4"), col("n"), col("rank"), col("b"),
         (col("rank") - col("cum_before")).as("res_rank"))
-      .localCheckpoint(false) // (groups × probs)-sized; drives pass 2
+      .localCheckpoint() // (groups × probs)-sized; drives pass 2
     val wv = Window.partitionBy(col("g"), col("b")).orderBy(col("v"))
       .rowsBetween(Window.unboundedPreceding, -1)
     val h2 = vals

@@ -49,11 +49,11 @@ object GraphMetrics {
       .select(least(col(aCol), col(bCol)).as("lo"),
         greatest(col(aCol), col(bCol)).as("hi"))
       .filter(col("lo") =!= col("hi"))
-      .localCheckpoint(false)
+      .localCheckpoint()
     val deg = edges.select(col("lo").as("v"))
       .union(edges.select(col("hi").as("v")))
       .groupBy("v").agg(count(lit(1)).as("d"))
-      .localCheckpoint(false) // node-sized; feeds orientation twice + wedge total
+      .localCheckpoint() // node-sized; feeds orientation twice + wedge total
     // orient each edge u→v with (deg, id) strictly increasing — the total
     // order that makes the triangle's minimal vertex the unique apex
     val fromLo = col("dlo") < col("dhi") ||
@@ -63,7 +63,7 @@ object GraphMetrics {
       .join(deg.select(col("v").as("hi"), col("d").as("dhi")), "hi")
       .select(when(fromLo, col("lo")).otherwise(col("hi")).as("u"),
         when(fromLo, col("hi")).otherwise(col("lo")).as("w"))
-      .localCheckpoint(false) // the wedge self-join reads it twice
+      .localCheckpoint() // the wedge self-join reads it twice
     // wedges at the apex: pairs of out-neighbors, emitted in canonical
     // order so the closing probe is a plain (lo, hi) equi-join
     val wedges = oriented.select(col("u"), col("w").as("x"))
@@ -157,7 +157,7 @@ object GraphMetrics {
         .union(edges.select(col("hi").as("v")))
         .groupBy("v").agg(count(lit(1)).as("c"))
         .filter(col("c") >= k)
-        .localCheckpoint(false) // node-sized; read by both semi-joins
+        .localCheckpoint() // node-sized; read by both semi-joins
       edges = edges
         .join(keep.select(col("v").as("lo")), Seq("lo"), "left_semi")
         .join(keep.select(col("v").as("hi")), Seq("hi"), "left_semi")
@@ -200,11 +200,11 @@ object GraphMetrics {
       .select(least(col(aCol), col(bCol)).as("lo"),
         greatest(col(aCol), col(bCol)).as("hi"))
       .filter(col("lo") =!= col("hi"))
-      .localCheckpoint(false) // degrees + the moment pass both read it
+      .localCheckpoint() // degrees + the moment pass both read it
     val deg = edges.select(col("lo").as("v"))
       .union(edges.select(col("hi").as("v")))
       .groupBy("v").agg(count(lit(1)).as("d"))
-      .localCheckpoint(false)
+      .localCheckpoint()
     val stats = edges
       .join(deg.select(col("v").as("lo"), col("d").as("dlo")), "lo")
       .join(deg.select(col("v").as("hi"), col("d").as("dhi")), "hi")
@@ -270,9 +270,9 @@ object GraphMetrics {
       .filter(col("src") =!= col("dst"))
     val sym = edges
       .unionByName(edges.select(col("dst").as("src"), col("src").as("dst")))
-      .localCheckpoint(false) // re-joined every hop
+      .localCheckpoint() // re-joined every hop
     var dist = sym.select(col("src").as("u"), col("dst").as("v"),
-      lit(1L).as("d")).localCheckpoint(false)
+      lit(1L).as("d")).localCheckpoint()
     var frontier = dist
     var h = 2
     while (h <= hops) {
@@ -282,8 +282,8 @@ object GraphMetrics {
         .select(col("u"), col("w").as("v")).distinct()
         .join(dist.select(col("u"), col("v")), Seq("u", "v"), "left_anti")
         .select(col("u"), col("v"), lit(h.toLong).as("d"))
-        .localCheckpoint(false)
-      dist = dist.unionByName(next).localCheckpoint(false)
+        .localCheckpoint()
+      dist = dist.unionByName(next).localCheckpoint()
       frontier = next
       h += 1
     }
@@ -314,7 +314,7 @@ object GraphMetrics {
     // round 16: stage the pair list ONCE — it feeds the component labels,
     // the flag gate and the BFS; without the cut the upstream pipeline
     // (for q221 the whole LSH dedup pass) re-ran per consumer
-    val p = pairs.localCheckpoint(false)
+    val p = pairs.localCheckpoint()
     val labels = Dedup.componentsOverEndpoints(
         p.select(col(aCol).as("id_a"), col(bCol).as("id_b")))
       .select(col("id"), col("keeper_id").as("__cid"))
@@ -325,7 +325,7 @@ object GraphMetrics {
       .select(col("id"),
         (col("__sz") * lit(10000L) > lit(maxShare4) * col("__n"))
           .cast("int").as("flagged"))
-      .localCheckpoint(false) // read by the edge gate and the final join
+      .localCheckpoint() // read by the edge gate and the final join
     val ok = flags.filter(col("flagged") === 0).select(col("id").as(aCol))
     val keptPairs = p.join(ok, Seq(aCol), "left_semi")
     flags.join(harmonicCentrality(keptPairs, aCol, bCol, hops), Seq("id"), "left")
@@ -379,10 +379,10 @@ object GraphMetrics {
       .select(col(aCol).as("src"), col(bCol).as("dst"))
       .union(staged.select(col(bCol).as("src"), col(aCol).as("dst")))
       .filter(col("src") =!= col("dst"))
-      .localCheckpoint(false) // every round joins it
+      .localCheckpoint() // every round joins it
     var labels = edges.select(col("src").as("id")).distinct()
       .select(col("id"), col("id").as("label"))
-      .localCheckpoint(false)
+      .localCheckpoint()
     val byVote = org.apache.spark.sql.expressions.Window
       .partitionBy(col("id")).orderBy(col("c").desc, col("label"))
     for (_ <- 1 to rounds) {
@@ -395,7 +395,7 @@ object GraphMetrics {
         .withColumn("rn", row_number().over(byVote))
         .filter(col("rn") === 1)
         .select(col("id"), col("label"))
-        .localCheckpoint(false)
+        .localCheckpoint()
     }
     labels
   }

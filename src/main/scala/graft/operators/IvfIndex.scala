@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -33,10 +33,13 @@ object IvfIndex {
     * `IntervalJoin.estimateBucketSize` gives `bucketSize = 0`).
     */
   def autoK(corpus: DataFrame,
-      targetCellSize: Long = DefaultTargetCellSize, kMin: Int = 8): Int = {
-    val n = corpus.count()
+      targetCellSize: Long = DefaultTargetCellSize, kMin: Int = 8): Int =
+    cellCount(corpus.count(), targetCellSize, kMin)
+
+  /** [[autoK]]'s formula for a corpus of `n` rows. */
+  def cellCount(n: Long,
+      targetCellSize: Long = DefaultTargetCellSize, kMin: Int = 8): Int =
     math.max(kMin.toLong, (n + targetCellSize - 1L) / targetCellSize).toInt
-  }
 
   /** Element-wise mean of grouped vectors via posexplode + positional avg —
     * k × dim rows, negligible next to the corpus scan.
@@ -74,7 +77,8 @@ object IvfIndex {
     * previous centroid.
     *
     * Seeds are numbered via a k-row collect (no single-partition window for
-    * k rows), and each iteration is `localCheckpoint`ed: without the cut,
+    * k rows; `array<double>` seeds are stored as floats, as every centroid
+    * is), and each iteration is `localCheckpoint`ed: without the cut,
     * iteration i's plan embeds all prior iterations — assignment recomputed
     * i times by iteration i and an optimizer blow-up at real scale.
     */
@@ -84,10 +88,8 @@ object IvfIndex {
     val spark = corpus.sparkSession
     import spark.implicits._
     val kEff = if (k > 0) k else autoK(corpus, targetCellSize)
-    val seeds = corpus.orderBy(col(idCol)).limit(kEff)
-      .select(col(vecCol)).as[Seq[Float]].collect()
-    var cents = seeds.zipWithIndex
-      .map { case (v, i) => (i, v) }.toSeq.toDF("centroid_id", "centroid")
+    var cents = seeded(spark, corpus.orderBy(col(idCol)).limit(kEff)
+      .select(col(vecCol).cast("array<float>")).as[Seq[Float]].collect().toSeq)
     for (_ <- 0 until iters) {
       val assigned = assign(corpus, cents, idCol, vecCol)
       val means = meanVectors(assigned.withColumnRenamed(vecCol, "__v"), "__v")
@@ -100,6 +102,14 @@ object IvfIndex {
         .localCheckpoint()
     }
     cents
+  }
+
+  /** Centroids (centroid_id, centroid) numbered 0..k−1 in `seeds` order:
+    * a local relation, so collecting it runs no job.
+    */
+  def seeded(spark: SparkSession, seeds: Seq[Seq[Float]]): DataFrame = {
+    import spark.implicits._
+    seeds.zipWithIndex.map { case (v, i) => (i, v) }.toDF("centroid_id", "centroid")
   }
 
   /** Per-query top-k probing the `nprobe` nearest cells. */

@@ -7,13 +7,16 @@ import org.apache.spark.sql.types._
 
 /** The one decision between an in-process strategy and its distributed
   * twin. The graph fixpoints ([[LocalGraph]]), the PQ Lloyd trainer
-  * ([[PqCodebook.train]]) and q249's Markov power iteration all run on a
-  * quotient of the corpus (a pair list, a sub-vector corpus, an event-type²
-  * matrix) that is usually small enough to collect; the distributed loops
-  * then pay fixed job overhead per round for nothing. [[stage]] decides:
+  * ([[PqCodebook.train]]), the ANN index build
+  * ([[graft.index.AnnIndex.build]]) and q249's Markov power iteration all
+  * run on a quotient of the corpus (a pair list, a vector corpus, an
+  * event-type² matrix) that is usually small enough to collect; the
+  * distributed loops then pay fixed job overhead per round for nothing. [[stage]] decides:
   *
   *  1. the slim input is checkpointed once (`localCheckpoint`, lazy);
-  *  2. it is counted over that checkpoint — the count materializes it;
+  *  2. it is counted over that checkpoint — the count materializes it, as
+  *     one RDD count (one job; a Dataset count under AQE runs two, its
+  *     exchange and its collect);
   *  3. only at or below `spark.graft.localRowLimit` rows (default 2^20) is
   *     it collected;
   *  4. the rows are returned only when the caller's `accept` holds on them.
@@ -56,7 +59,17 @@ object LocalStrategy {
     */
   def stage(df: DataFrame, site: String, schemaOk: Boolean = true)(
       accept: Array[Row] => Boolean): Either[DataFrame, Array[Row]] = {
-    val staged = df.localCheckpoint(false)
+    val (cut, rows) = staged(df, site, schemaOk)(accept)
+    rows.toRight(cut)
+  }
+
+  /** [[stage]]'s decision with the checkpoint handed back either way, for
+    * callers that run part of their work in-process and the rest as a
+    * distributed pass over the same materialized input.
+    */
+  def staged(df: DataFrame, site: String, schemaOk: Boolean = true)(
+      accept: Array[Row] => Boolean): (DataFrame, Option[Array[Row]]) = {
+    val cut = df.localCheckpoint(false)
     val limit = rowLimit(df.sparkSession)
     val sc = df.sparkSession.sparkContext
     def described[T](what: String)(job: => T): T = {
@@ -67,15 +80,15 @@ object LocalStrategy {
     val (seen, rows) =
       if (!schemaOk) ("schema", None)
       else {
-        val n = described(s"count, limit $limit")(staged.count())
+        val n = described(s"count, limit $limit")(cut.queryExecution.toRdd.count())
         (s"$n rows",
           if (n > limit) None
-          else Some(described(s"collect $n rows, limit $limit")(staged.collect())))
+          else Some(described(s"collect $n rows, limit $limit")(cut.collect())))
       }
     val local = rows.filter(accept)
     described(s"$seen, limit $limit → ${if (local.isDefined) "local" else "distributed"}")(
       sc.emptyRDD[Unit].count())
-    local.toRight(staged)
+    (cut, local)
   }
 
   /** A local relation of `rows` with a DDL schema: its size statistics are

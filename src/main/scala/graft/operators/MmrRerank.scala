@@ -67,7 +67,7 @@ object MmrRerank {
     // round 1: no penalty — the plain relevance argmax
     var selected = argmax(
       cand.withColumn("__mmr", lit(lambdaNum) * col("__rel")), 1)
-      .localCheckpoint(false)
+      .localCheckpoint()
     for (round <- 2 to k) {
       val remaining = cand.join(selected.select(col(qCol), col(idCol)),
         Seq(qCol, idCol), "left_anti")
@@ -87,7 +87,7 @@ object MmrRerank {
             lit(lambdaDen - lambdaNum) * col("__pen"))
       selected = selected
         .unionByName(argmax(penalized, round))
-        .localCheckpoint(false) // round i must not re-plan rounds < i
+        .localCheckpoint() // round i must not re-plan rounds < i
     }
     selected.select(col(qCol), col("pick_rank"), col(idCol),
       col("__mmr").as("mmr_u"))

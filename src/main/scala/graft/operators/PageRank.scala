@@ -12,7 +12,7 @@ import org.apache.spark.sql.functions._
   * micro-nat log-probs).
   *
   * Scale shape is the q53 label-propagation loop's: the degree-annotated
-  * adjacency list is built once and staged (lazy localCheckpoint — reused
+  * adjacency list is built once and staged (localCheckpoint — reused
   * every round, lineage paid once), each iteration is ONE equi-join
   * (ranks ⋈ adjacency on src) + one aggregation (sum of contributions by
   * dst) + a left join back to the node set for dangling-free re-seeding,
@@ -109,7 +109,7 @@ object PageRank {
     // adjacency with the degree attached — built once, read every round
     val adj = sym
       .join(nodeSized(nodes.select(col("id").as("src"), col("deg"))), "src")
-      .localCheckpoint(false)
+      .localCheckpoint()
     var rank = nodes.select(col("id"), lit(1000000L).as("rank_u"))
     var it = 0
     var converged = false
@@ -179,7 +179,7 @@ object PageRank {
     def nodeSized(df: DataFrame): DataFrame = if (small) broadcast(df) else df
     val adj = sym
       .join(nodeSized(nodes.select(col("id").as("src"), col("deg"))), "src")
-      .localCheckpoint(false)
+      .localCheckpoint()
     var rank = nodes.select(col("id"), (col("s") * lit(1000000L)).as("rank_u"))
     (0 until iters).foreach { _ =>
       val contrib = adj.join(nodeSized(rank), adj("src") === rank("id"))
@@ -190,7 +190,7 @@ object PageRank {
         .select(nodes("id"),
           (col("s") * lit(150000L) + expr("(85 * coalesce(mass, 0)) div 100"))
             .as("rank_u"))
-        .localCheckpoint(false)
+        .localCheckpoint()
     }
     nodes.join(nodeSized(rank), "id").select(col("id"), col("deg"), col("rank_u"))
   }

@@ -58,52 +58,72 @@ object PqCodebook {
     * Round 16: size-gated LOCAL Lloyd (the [[LocalGraph]] strategy applied
     * to codebook training) — each iteration of the distributed loop costs
     * one n·m-row shuffle, a positional-mean aggregation and an eager
-    * checkpoint, all fixed overhead when the corpus is small. When
+    * checkpoint, all fixed overhead when the corpus is small. `train` is
+    * the gate plus the two loops it chooses between: when
     * [[LocalStrategy.stage]] keeps the (id, vector) corpus local (at most
     * `spark.graft.localRowLimit` vectors, default 2^20 — a 64-dim float
     * corpus of that size collects to ~270 MB, the broadcast-relation order
-    * of magnitude) the SAME arithmetic (ascending-index double dot,
-    * max-margin argmax with lowest-code ties, micro-unit BIGINT mean) runs
-    * in-process. The local path orders seeds as longs and slices float
-    * vectors without bounds checks, so it takes only an integral id column,
-    * `array<float>` vectors, at least `kcode` rows, no null id or vector
-    * and no vector shorter than m·sub; anything else — and any corpus over
-    * the limit — runs the distributed loop below, unchanged, over the
-    * gate's checkpoint (the input is evaluated once either way).
-    * LocalGraphSpec pins both paths' parity on those inputs.
+    * of magnitude) [[trainLocal]] runs the SAME arithmetic (ascending-index
+    * double dot, max-margin argmax with lowest-code ties, micro-unit BIGINT
+    * mean) in-process; otherwise [[lloyd]], the distributed loop, runs over
+    * the gate's checkpoint (the input is evaluated once either way). The
+    * gate's conditions are [[localSchema]] and [[localRows]];
+    * `AnnIndex.build` stages its corpus under the same ones and calls the
+    * two loops directly. LocalGraphSpec pins both paths' parity on the
+    * inputs the conditions reject.
     */
   def train(emb: DataFrame, m: Int, sub: Int, kcode: Int, iters: Int,
       idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame = {
-    val spark = emb.sparkSession
-    import spark.implicits._
-    val corpus = if (iters == 0) emb else {
-      val slim = emb.select(col(idCol), col(vecCol))
-      val schemaOk = LocalStrategy.oneIntegralType(slim.select(col(idCol))) &&
-        (slim.schema(1).dataType match { case ArrayType(FloatType, _) => true; case _ => false })
-      LocalStrategy.stage(slim, "pq train", schemaOk) { rows =>
-        rows.length >= kcode && LocalStrategy.noNulls(rows) && rows.forall { r =>
-          val v = r.getSeq[Any](1)
-          v.length >= m * sub && !v.contains(null)
-        }
-      } match {
-        case Right(rows) =>
-          val sorted = rows.map(r => (r.getAs[Number](0).longValue, r.getSeq[Float](1)))
-            .sortBy(_._1)
-          return trainLocal(spark, sorted, m, sub, kcode, iters)
-        case Left(cut) => cut
-      }
+    if (iters == 0) return lloyd(emb, m, sub, kcode, iters, idCol, vecCol)
+    val slim = emb.select(col(idCol), col(vecCol))
+    LocalStrategy.stage(slim, "pq train", localSchema(slim))(localRows(_, m, sub, kcode)) match {
+      case Right(rows) => trainLocal(emb.sparkSession, byId(rows), m, sub, kcode, iters)
+      case Left(cut) => lloyd(cut, m, sub, kcode, iters, idCol, vecCol)
     }
+  }
+
+  /** The (id, vector) schema [[trainLocal]] reproduces: it orders seeds as
+    * longs and slices float vectors, so one integral id and `array<float>`.
+    */
+  def localSchema(slim: DataFrame): Boolean =
+    LocalStrategy.oneIntegralType(slim.select(slim.columns.head)) &&
+      (slim.schema(1).dataType match { case ArrayType(FloatType, _) => true; case _ => false })
+
+  /** The rows [[trainLocal]] reproduces: at least `kcode` of them, no null
+    * id or vector, no vector shorter than m·sub or holding a null element.
+    */
+  def localRows(rows: Array[Row], m: Int, sub: Int, kcode: Int): Boolean =
+    rows.length >= kcode && LocalStrategy.noNulls(rows) && rows.forall { r =>
+      val v = r.getSeq[Any](1)
+      v.length >= m * sub && !v.contains(null)
+    }
+
+  /** Rows that passed [[localSchema]] and [[localRows]] as (id, vector),
+    * ascending by id.
+    */
+  def byId(rows: Array[Row]): Array[(Long, Seq[Float])] =
+    rows.map(r => (r.getAs[Number](0).longValue, r.getSeq[Float](1))).sortBy(_._1)
+
+  /** The distributed Lloyd loop (the seed grid alone at `iters = 0`): one
+    * sub-vector scan, one n·m-row shuffle and an eager checkpoint per
+    * iteration. Centroids are `array<float>` whatever the vectors' element
+    * type, as `AnnIndex` reads its stored codebook.
+    */
+  def lloyd(corpus: DataFrame, m: Int, sub: Int, kcode: Int, iters: Int,
+      idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame = {
+    val spark = corpus.sparkSession
+    import spark.implicits._
     val subs = broadcast((0 until m).map(_.toLong).toDF("s"))
     val seeds = corpus.orderBy(col(idCol)).limit(kcode)
       .withColumn("code",
         (row_number().over(Window.orderBy(col(idCol))) - 1).cast("long"))
     var cb = seeds.crossJoin(subs)
       .select($"s", $"code",
-        slice(col(vecCol), ($"s" * sub + 1).cast("int"), lit(sub)).as("cent"))
-      .localCheckpoint(false) // m·kcode rows; feeds every iteration + caller
+        slice(col(vecCol), ($"s" * sub + 1).cast("int"), lit(sub)).cast("array<float>").as("cent"))
+      .localCheckpoint() // m·kcode rows; feeds every iteration + caller
     if (iters == 0) return cb
     val svs = subVectors(corpus, m, sub, idCol, vecCol)
-      .localCheckpoint(false) // scanned once per iteration; cut re-slicing
+      .localCheckpoint() // scanned once per iteration; cut re-slicing
     for (_ <- 0 until iters) {
       val cbScore = cb.withColumn("half_norm2",
         VectorFunctions.dotProduct($"cent", $"cent") / lit(2.0))
@@ -145,7 +165,7 @@ object PqCodebook {
     * micro-unit sums divided once in double and cast to float, empty codes
     * keeping their previous centroid.
     */
-  private def trainLocal(spark: SparkSession,
+  def trainLocal(spark: SparkSession,
       sorted: Array[(Long, Seq[Float])], m: Int, sub: Int, kcode: Int,
       iters: Int): DataFrame = {
     val vecs = sorted.map(_._2.map(_.toDouble).toArray)

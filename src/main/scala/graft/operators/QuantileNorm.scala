@@ -58,7 +58,7 @@ object QuantileNorm {
           expr("if(cu = 0, cast(0 as bigint), shiftleft(cast(1 as bigint), bkt - 1))")
             .as("v"))
         .agg(sum(col("cnt")).as("cnt"))
-        .localCheckpoint(false)
+        .localCheckpoint()
     }
     val sizes = hist.groupBy(col("source")).agg(sum(col("cnt")).as("ns"))
     val srcCum = hist

@@ -69,7 +69,7 @@ object RecordLinkage {
       .join(nominate(gr).as("b"), col("a.g") === col("b.g"))
       .select(col("a.id").as("lid"), col("b.id").as("rid"))
       .distinct()
-      .localCheckpoint(false) // candidate census + verify both read it
+      .localCheckpoint() // candidate census + verify both read it
     val nc = cand.groupBy(col("rid")).agg(count(lit(1)).as("n_cands"))
     val ver = cand
       .join(left.select(col(idL).as("lid"), col(nameL).as("__ln")), "lid")

@@ -308,12 +308,11 @@ private[graft] object AnnQueries {
       val emb = t(s, dir, "embeddings")
       val qs = emb.filter($"vec_id" < 10).select($"vec_id".as("query_id"), $"embedding")
       // truth and candidates are each read twice (hit count + NN-rank
-      // probe): stage the k·q-row results, not the scans (lazy — nothing
-      // runs at construction)
+      // probe): stage the k·q-row results, not the scans
       val truth = graft.operators.SimilaritySearch
-        .bruteForceTopK(emb, qs, k = 10).localCheckpoint(false)
+        .bruteForceTopK(emb, qs, k = 10).localCheckpoint()
       val cand = graft.operators.SimilaritySearch
-        .lshTopK(emb, qs, k = 10, dim = 64, planes = 4).localCheckpoint(false)
+        .lshTopK(emb, qs, k = 10, dim = 64, planes = 4).localCheckpoint()
       val hits = truth.select($"query_id", $"neighbor_id")
         .join(cand.select($"query_id", $"neighbor_id"), Seq("query_id", "neighbor_id"))
         .groupBy($"query_id").agg(count(lit(1)).as("n_hit"))
@@ -352,7 +351,7 @@ private[graft] object AnnQueries {
         .select($"centroid_id", $"vec_id",
           floor(graft.functions.VectorFunctions.cosineSim($"embedding", $"centroid")
             * lit(10000.0)).cast("long").as("cos4"))
-        .localCheckpoint(false) // stats + flagging read the scored cells
+        .localCheckpoint() // stats + flagging read the scored cells
       val stats = cells.groupBy($"centroid_id")
         .agg(count(lit(1)).as("n"), sum($"cos4").as("s1"),
           sum($"cos4" * $"cos4").as("s2"))
@@ -379,13 +378,13 @@ private[graft] object AnnQueries {
       val emb = t(s, dir, "embeddings")
       val qs = emb.filter($"vec_id" < 10).select($"vec_id".as("query_id"), $"embedding")
       val truth = graft.operators.SimilaritySearch
-        .bruteForceTopK(emb, qs, k = 10).localCheckpoint(false)
+        .bruteForceTopK(emb, qs, k = 10).localCheckpoint()
       // candidate ranking sees ONLY the 16-dim prefix of both sides
       val emb16 = emb.select($"vec_id", slice($"embedding", 1, 16).as("embedding"))
       val qs16 = qs.select($"query_id", slice($"embedding", 1, 16).as("embedding"))
       val cand = graft.operators.SimilaritySearch
         .bruteForceTopK(emb16, qs16, k = 10, qidCol = "query_id")
-        .localCheckpoint(false)
+        .localCheckpoint()
       val hits = truth.select($"query_id", $"neighbor_id")
         .join(cand.select($"query_id", $"neighbor_id"), Seq("query_id", "neighbor_id"))
         .groupBy($"query_id").agg(count(lit(1)).as("n_hit"))
@@ -411,13 +410,13 @@ private[graft] object AnnQueries {
     // 100 TB shape: postings written once bucketed by term; a k-term
     // phrase reads only its own terms' postings and runs k−1 equi-joins on
     // one shared (doc, pos) partitioning). The postings relation is staged
-    // once (lazy checkpoint — modelling the written index) and probed by
+    // once (checkpoint — modelling the written index) and probed by
     // both phrase chains.
     "q113_phrase_search" -> ((s, dir) => {
       import s.implicits._
       val post = graft.query.InvertedIndex
         .postings(t(s, dir, "documents"), "doc_id", "text")
-        .localCheckpoint(false)
+        .localCheckpoint()
       def hits(phrase: Seq[String]) =
         graft.query.InvertedIndex.phraseMatches(post, phrase)
           .groupBy($"doc_id")
@@ -471,7 +470,7 @@ private[graft] object AnnQueries {
       val cand = graft.operators.SimilaritySearch.bruteForceTopK(emb, queries, 8)
         .select($"query_id", $"neighbor_id",
           floor($"score" * 10000.0).cast("long").as("rel_u"))
-        .localCheckpoint(false) // candidate set feeds pairs AND the loop
+        .localCheckpoint() // candidate set feeds pairs AND the loop
       val vecs = emb.select($"vec_id", $"embedding")
       val pairs = cand.select($"query_id", $"neighbor_id".as("id_a"))
         .join(cand.select($"query_id", $"neighbor_id".as("id_b")), Seq("query_id"))
@@ -524,7 +523,7 @@ private[graft] object AnnQueries {
         .select($"query_id", $"qlabel", $"vec_id", $"label",
           floor(graft.functions.VectorFunctions.cosineSim($"embedding", $"qv")
             * lit(10000.0)).cast("long").as("cos4"))
-        .localCheckpoint(false) // one scored scan feeds pos/neg/n_harder
+        .localCheckpoint() // one scored scan feeds pos/neg/n_harder
       val w = org.apache.spark.sql.expressions.Window
         .partitionBy($"query_id").orderBy($"cos4".desc, $"vec_id")
       val pos = scored.filter($"label" === $"qlabel")
@@ -571,7 +570,7 @@ private[graft] object AnnQueries {
         .filter($"vec_id" =!= $"query_id")
         .select($"query_id", $"cell_rank", $"vec_id",
           VectorFunctions.cosineSim($"embedding", $"qv").as("sc"))
-        .localCheckpoint(false) // one scored relation feeds all sweep points
+        .localCheckpoint() // one scored relation feeds all sweep points
       val wb = Window.partitionBy($"query_id").orderBy($"sc".desc, $"vec_id")
       val brute = emb.crossJoin(broadcast(queries))
         .filter($"vec_id" =!= $"query_id")
@@ -579,7 +578,7 @@ private[graft] object AnnQueries {
           VectorFunctions.cosineSim($"embedding", $"qv").as("sc"))
         .withColumn("rn", row_number().over(wb)).filter($"rn" <= 10)
         .select($"query_id", $"vec_id")
-        .localCheckpoint(false) // k·queries-sized truth set
+        .localCheckpoint() // k·queries-sized truth set
       val sweep = Seq(1L, 2L, 4L, 8L).toDF("nprobe")
       val wk = Window.partitionBy($"nprobe", $"query_id")
         .orderBy($"sc".desc, $"vec_id")
@@ -624,7 +623,7 @@ private[graft] object AnnQueries {
           VectorFunctions.cosineSim($"embedding", $"qv").as("sc"))
         .withColumn("rn", row_number().over(wb)).filter($"rn" <= 10)
         .select($"query_id", $"vec_id")
-        .localCheckpoint(false) // 10·queries-sized truth feeds both sweeps
+        .localCheckpoint() // 10·queries-sized truth feeds both sweeps
       def sweep(cents: DataFrame, grid: String): DataFrame = {
         val cells = graft.operators.IvfIndex.assign(emb, cents, "vec_id", "embedding")
         val wq = Window.partitionBy($"query_id").orderBy($"csc".desc, $"centroid_id")
@@ -637,7 +636,7 @@ private[graft] object AnnQueries {
           .filter($"vec_id" =!= $"query_id")
           .select($"query_id", $"cell_rank", $"vec_id",
             VectorFunctions.cosineSim($"embedding", $"qv").as("sc"))
-          .localCheckpoint(false) // one scored relation feeds all sweep points
+          .localCheckpoint() // one scored relation feeds all sweep points
         val sweepDf = Seq(1L, 2L, 4L).toDF("nprobe")
         val wk = Window.partitionBy($"nprobe", $"query_id")
           .orderBy($"sc".desc, $"vec_id")
@@ -691,7 +690,7 @@ private[graft] object AnnQueries {
       val emb = t(s, dir, "embeddings")
       val cb = graft.operators.PqCodebook.train(emb, m, sub, kcode, iters = 2)
       val codes = graft.operators.PqCodebook.encode(emb, cb, m, sub)
-        .localCheckpoint(false) // the compressed index — ADC reads ONLY this
+        .localCheckpoint() // the compressed index — ADC reads ONLY this
       val queries = emb.filter($"vec_id" < 16)
         .select($"vec_id".as("query_id"), $"embedding".as("qv"))
       val lut = graft.operators.PqCodebook.lut(queries, cb, m, sub)
@@ -750,7 +749,7 @@ private[graft] object AnnQueries {
         .agg(sum($"dot_u").as("adc_u"))
         .withColumn("rn", row_number().over(wq)).filter($"rn" <= shortlist)
         .select($"query_id", $"vec_id", $"rn")
-        .localCheckpoint(false) // shortlist feeds raw-ADC top-10 + rerank
+        .localCheckpoint() // shortlist feeds raw-ADC top-10 + rerank
       // exact re-score of ONLY the shortlist: 50 raw-vector reads/query
       val wr = Window.partitionBy($"query_id").orderBy($"ex_u".desc, $"vec_id")
       val reranked = short
@@ -769,7 +768,7 @@ private[graft] object AnnQueries {
             .cast("long").as("dot_u"))
         .withColumn("rn", row_number().over(wb)).filter($"rn" <= 10)
         .select($"query_id", $"vec_id")
-        .localCheckpoint(false) // truth feeds all three recall columns
+        .localCheckpoint() // truth feeds all three recall columns
       def hits(cand: DataFrame, name: String) = cand
         .join(brute, Seq("query_id", "vec_id"))
         .groupBy($"query_id").agg(count(lit(1)).as(name))
@@ -807,12 +806,12 @@ private[graft] object AnnQueries {
       val cells = graft.operators.IvfIndex
         .assign(emb, cents, "vec_id", "embedding")
         .select($"vec_id", $"centroid_id")
-        .localCheckpoint(false) // coarse index; candidate filter reads it
+        .localCheckpoint() // coarse index; candidate filter reads it
       // round 12: Lloyd-trained codebook (q178's train, shared machinery)
       val cb = graft.operators.PqCodebook.train(emb, m, sub, kcode, iters = 2)
       val codes = graft.operators.PqCodebook.encode(emb, cb, m, sub)
         .join(cells, Seq("vec_id")) // codes carry their cell — the index layout
-        .localCheckpoint(false)
+        .localCheckpoint()
       val queries = emb.filter($"vec_id" < 16)
         .select($"vec_id".as("query_id"), $"embedding".as("qv"))
       val wc = Window.partitionBy($"query_id").orderBy($"csc".desc, $"centroid_id")
@@ -830,7 +829,7 @@ private[graft] object AnnQueries {
         .join(broadcast(lut), Seq("query_id", "s", "code"))
         .groupBy($"query_id", $"vec_id", $"cell_rank")
         .agg(sum($"dot_u").as("adc_u"))
-        .localCheckpoint(false)
+        .localCheckpoint()
       val wb = Window.partitionBy($"query_id").orderBy($"dot_u".desc, $"vec_id")
       val brute = emb.crossJoin(broadcast(queries))
         .filter($"vec_id" =!= $"query_id")
@@ -839,12 +838,12 @@ private[graft] object AnnQueries {
             .cast("long").as("dot_u"))
         .withColumn("rn", row_number().over(wb)).filter($"rn" <= 10)
         .select($"query_id", $"vec_id")
-        .localCheckpoint(false)
+        .localCheckpoint()
       val sweep = Seq(1L, 2L, 4L, 8L).toDF("nprobe")
       val wk = Window.partitionBy($"nprobe", $"query_id")
         .orderBy($"adc_u".desc, $"vec_id")
       val scored = cand.join(broadcast(sweep), $"cell_rank" <= $"nprobe")
-        .localCheckpoint(false) // candidate counts + top-k both read it
+        .localCheckpoint() // candidate counts + top-k both read it
       val hits = scored
         .withColumn("rn", row_number().over(wk)).filter($"rn" <= 10)
         .join(brute, Seq("query_id", "vec_id"))
@@ -915,7 +914,7 @@ private[graft] object AnnQueries {
       val queries = emb.filter($"vec_id".isin(0, 1, 2))
         .select($"vec_id".as("query_id"), $"embedding")
       val r1 = graft.operators.SimilaritySearch.bruteForceTopK(emb, queries, 5)
-        .select($"query_id", $"neighbor_id").localCheckpoint(false)
+        .select($"query_id", $"neighbor_id").localCheckpoint()
       val fb = r1
         .join(emb.select($"vec_id".as("neighbor_id"), $"embedding"), Seq("neighbor_id"))
         .select($"query_id", posexplode($"embedding").as(Seq("pos", "comp")))

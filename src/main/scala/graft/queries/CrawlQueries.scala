@@ -163,7 +163,7 @@ private[graft] object CrawlQueries {
     "q284_host_graph" -> ((s, dir) => {
       import s.implicits._
       val edges = hostEdges(t(s, dir, "documents"))
-        .localCheckpoint(false) // degree aggs + pair list all read it
+        .localCheckpoint() // degree aggs + pair list all read it
       val pairs = edges.select(
         least($"src_host", $"dst_host").as("a"),
         greatest($"src_host", $"dst_host").as("b")).distinct()
@@ -433,7 +433,7 @@ private[graft] object CrawlQueries {
       // chain never re-runs per branch
       val rollup = links.groupBy($"url", $"anchor", $"src_domain")
         .agg(count(lit(1)).as("n"))
-        .localCheckpoint(false)
+        .localCheckpoint()
       val perAnchor = rollup.groupBy($"url", $"anchor")
         .agg(sum($"n").cast("long").as("n"))
       perAnchor.groupBy($"url")
@@ -540,7 +540,7 @@ private[graft] object CrawlQueries {
         .filter($"warc_type" =!= "warcinfo")
         .select($"warc_type", $"payload_digest",
           length($"payload").cast("long").as("payload_len"))
-        .localCheckpoint(false) // census + resolution join both read it
+        .localCheckpoint() // census + resolution join both read it
       val responses = recs.filter($"warc_type" === "response")
         .select($"payload_digest".as("rd")).distinct()
       recs.groupBy($"warc_type")
@@ -660,7 +660,7 @@ private[graft] object CrawlQueries {
           graft.operators.UrlOps.registrableDomainPsl(
             host, graft.operators.UrlOps.pslSnapshot).as("domain"),
           (score > 0).cast("int").as("keep"))
-        .localCheckpoint(false) // the prior agg and the join-back both read it
+        .localCheckpoint() // the prior agg and the join-back both read it
       val prior = scored.groupBy($"domain")
         .agg(count(lit(1)).as("n_docs"), sum($"keep").as("n_keep"))
         .withColumn("prior_ppm",
@@ -882,7 +882,7 @@ private[graft] object CrawlQueries {
           .otherwise(0))
         .withColumn("digest", sha2($"text", 256))
         .drop("text")
-        .localCheckpoint(false) // domain rollup + gated output both read it
+        .localCheckpoint() // domain rollup + gated output both read it
       // shuffle 1: trap signals and the prior share one domain rollup,
       // broadcast back (domains are a corpus quotient)
       val dom = uu.groupBy($"domain")
@@ -1061,7 +1061,7 @@ private[graft] object CrawlQueries {
           when($"http_status" === 200 && $"content_type".startsWith("text/html"),
             graft.operators.HtmlOps.metaRefreshUrl(decode($"payload", "UTF-8")))
             .otherwise("").as("meta_target"))
-        .localCheckpoint(false) // starts + edges + final-status all read it
+        .localCheckpoint() // starts + edges + final-status all read it
       val httpEdges = recs
         .filter($"http_status" >= 300 && $"http_status" < 400 &&
           $"http_location" =!= "")

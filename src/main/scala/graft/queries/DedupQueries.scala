@@ -447,7 +447,7 @@ private[graft] object DedupQueries {
         .select($"doc_id", explode(graft.operators.QualitySignals.ngramsStrict(
           graft.operators.TextAnalysis.tokensCol($"text"), 5)).as("g"))
         .select($"doc_id", xxhash64($"g").as("h")).distinct()
-        .localCheckpoint(false) // distinct doc-gram set feeds df + per-doc agg
+        .localCheckpoint() // distinct doc-gram set feeds df + per-doc agg
       val df5 = g.groupBy($"h").agg(count(lit(1)).as("nd"))
       val per = g.join(df5, Seq("h"))
         .groupBy($"doc_id")
@@ -529,7 +529,7 @@ private[graft] object DedupQueries {
       val docs = t(s, dir, "documents")
       val pairs = graft.operators.Dedup.nearDupPairs(docs, "doc_id", "text",
         numHashes = 8, shingle = 4, bands = 4, rowsPerBand = 2, threshold = 0.75)
-        .localCheckpoint(false) // labels + strengths both read it
+        .localCheckpoint() // labels + strengths both read it
       val lab = graft.operators.Dedup
         .resolveClustersSparse(pairs, docs.select($"doc_id"))
       val strength = pairs
@@ -537,7 +537,7 @@ private[graft] object DedupQueries {
         .unionByName(pairs
           .select($"id_b".as("id"), expr("cast(floor(est_jac * 10000) as bigint)").as("w4")))
         .groupBy($"id").agg(sum($"w4").as("strength4"), count(lit(1)).as("degree"))
-      val labeled = lab.join(strength, Seq("id")).localCheckpoint(false)
+      val labeled = lab.join(strength, Seq("id")).localCheckpoint()
       val wm = Window.partitionBy($"keeper_id").orderBy($"strength4".desc, $"id")
       labeled.withColumn("rk", row_number().over(wm)).filter($"rk" === 1)
         .join(labeled.groupBy($"keeper_id").agg(count(lit(1)).as("n_members")),
@@ -577,18 +577,18 @@ private[graft] object DedupQueries {
       val docs = t(s, dir, "documents")
       val sub = docs.filter(pmod(graft.functions.HashFunctions.stableHash64(
           concat(lit("de:"), $"doc_id".cast("string"))), lit(8L)) === 0)
-        .select($"doc_id", $"text").localCheckpoint(false)
+        .select($"doc_id", $"text").localCheckpoint()
       val gramsAll = sub.select($"doc_id",
           explode(graft.operators.Dedup.shinglesCol($"text", 4)).as("g"))
         .select($"doc_id",
           pmod(graft.functions.HashFunctions.stableHash64($"g"),
             lit(2147483647L)).as("gh"))
-        .distinct().localCheckpoint(false)
+        .distinct().localCheckpoint()
       val hot = gramsAll.groupBy($"gh").agg(count(lit(1)).as("df"))
-        .filter($"df" > 64L).select($"gh").localCheckpoint(false)
+        .filter($"df" > 64L).select($"gh").localCheckpoint()
       val nCapped = broadcast(hot.agg(count(lit(1)).as("n_grams_capped")))
       val grams = gramsAll.join(hot, Seq("gh"), "left_anti")
-        .localCheckpoint(false)
+        .localCheckpoint()
       val sizes = grams.groupBy($"doc_id").agg(count(lit(1)).as("sz"))
       val inter = grams.as("a").join(grams.as("b"),
           $"a.gh" === $"b.gh" && $"a.doc_id" < $"b.doc_id")
@@ -596,7 +596,7 @@ private[graft] object DedupQueries {
         .agg(count(lit(1)).as("ni"))
         .join(sizes.select($"doc_id".as("id_a"), $"sz".as("sza")), "id_a")
         .join(sizes.select($"doc_id".as("id_b"), $"sz".as("szb")), "id_b")
-        .localCheckpoint(false) // three thresholds read it
+        .localCheckpoint() // three thresholds read it
       val th = Seq(2500L, 5000L, 7500L).toDF("t4")
       val truth = inter.crossJoin(broadcast(th))
         .filter($"ni" * 10000L >= $"t4" * ($"sza" + $"szb" - $"ni"))
@@ -605,7 +605,7 @@ private[graft] object DedupQueries {
           numHashes = 8, shingle = 4, bands = 4, rowsPerBand = 2, threshold = 0.0)
         .join(sub.select($"doc_id".as("id_a")), "id_a")
         .join(sub.select($"doc_id".as("id_b")), "id_b")
-        .localCheckpoint(false)
+        .localCheckpoint()
       val pred = predAll.crossJoin(broadcast(th))
         .filter($"est_jac" * 10000.0 >= $"t4".cast("double"))
         .select($"t4", $"id_a", $"id_b")
@@ -741,7 +741,7 @@ private[graft] object DedupQueries {
           explode(sequence(lit(0L), lit(2L))).as("w"))
         .select(($"base" + $"w").as("win_id"),
           $"text".substr(($"w" * $"stride" + 1).cast("int"), $"wlen".cast("int")).as("wtext"))
-        .localCheckpoint(false) // base and delta sides both read it
+        .localCheckpoint() // base and delta sides both read it
       graft.operators.SetSimJoin
         .deltaJoin(win.filter(pmod($"win_id", lit(4L)) =!= 0),
           win.filter(pmod($"win_id", lit(4L)) === 0),
@@ -807,7 +807,7 @@ private[graft] object DedupQueries {
         when(pmod($"doc_id", lit(2L)) === 0,
           concat($"text", lit(" cafe\u0301 jalapen\u0303o")))
           .otherwise(concat($"text", lit(" beta"))).as("txt"))
-      val corpus2 = va.unionByName(vb).localCheckpoint(false)
+      val corpus2 = va.unionByName(vb).localCheckpoint()
       val nfc = Bridge.toColumn(
         org.apache.spark.sql.graft.expressions.NfcNormalize(Bridge.toExpr($"txt")))
       def census(h: org.apache.spark.sql.Column, pfx: String) = corpus2
@@ -834,10 +834,10 @@ private[graft] object DedupQueries {
           t(s, dir, "documents"), "doc_id", "text",
           numHashes = 8, shingle = 4, bands = 4, rowsPerBand = 2,
           threshold = 0.5)
-        .localCheckpoint(false) // five τ cuts read one verified relation
+        .localCheckpoint() // five τ cuts read one verified relation
       val taus = broadcast(Seq(0.5, 0.625, 0.75, 0.875, 1.0).toDF("tau"))
       val cut = pairs.crossJoin(taus).filter($"est_jac" >= $"tau")
-        .localCheckpoint(false) // pair counts + endpoint distinct
+        .localCheckpoint() // pair counts + endpoint distinct
       val np = cut.groupBy($"tau").agg(count(lit(1)).as("n_pairs"))
       val nd = cut
         .select($"tau", explode(array($"id_a", $"id_b")).as("id"))
@@ -863,7 +863,7 @@ private[graft] object DedupQueries {
       val sigs = graft.operators.Dedup
         .minhashSig(docs, "text", numHashes = 8, shingle = 4)
         .select($"doc_id", $"minhash")
-        .localCheckpoint(false) // joined to both pair sides
+        .localCheckpoint() // joined to both pair sides
       val cand = graft.operators.Dedup.nearDupPairs(
           docs, "doc_id", "text",
           numHashes = 8, shingle = 4, bands = 4, rowsPerBand = 2,

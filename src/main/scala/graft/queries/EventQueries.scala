@@ -223,8 +223,8 @@ private[graft] object EventQueries {
         .withColumn("bkt", graft.operators.HllSketch.bucketCol($"h", p))
         .withColumn("rnk", graft.operators.HllSketch.rankExpr("h", p))
         .groupBy($"day").agg(hll($"bkt", $"rnk").as("regs"))
-        .localCheckpoint(false) // the persisted register table
-      val days = daily.select($"day").localCheckpoint(false)
+        .localCheckpoint() // the persisted register table
+      val days = daily.select($"day").localCheckpoint()
       val fan = daily
         .withColumn("target_day", explode(sequence($"day", $"day" + 6)))
         .join(days.select($"day".as("target_day")), Seq("target_day"), "left_semi")
@@ -261,7 +261,7 @@ private[graft] object EventQueries {
         .select($"user_id", $"event_id".as("p_id"),
           expr("cast(floor(value * 1000000) as bigint)").as("value_u"),
           ($"ts" - lit(604800000000000L)).as("lo"), $"ts".as("hi"))
-        .localCheckpoint(false) // interval side + the direct anti-join
+        .localCheckpoint() // interval side + the direct anti-join
       val touches = ev.filter($"event_type" =!= "purchase")
         .select($"user_id", $"ts".as("t_ts"), $"event_id".as("t_id"),
           $"event_type".as("channel"))
@@ -280,7 +280,7 @@ private[graft] object EventQueries {
         .withColumn("tot0", sum($"credit0").over(Window.partitionBy($"p_id")))
         .withColumn("credit_u", $"credit0" +
           when($"rn" === $"n", $"value_u" - $"tot0").otherwise(lit(0L)))
-        .localCheckpoint(false) // channel rollup + the direct anti-join
+        .localCheckpoint() // channel rollup + the direct anti-join
       val attributed = credited.groupBy($"channel")
         .agg(count(lit(1)).as("n_touchpoints"), sum($"credit_u").as("credit_u"))
       val direct = purchases
@@ -351,7 +351,7 @@ private[graft] object EventQueries {
         .withColumn("e3", lead($"e1", 2).over(w))
         .filter($"e3".isNotNull)
         .groupBy($"e1", $"e2", $"e3").agg(count(lit(1)).as("n_paths"))
-        .localCheckpoint(false) // census + total share both read it
+        .localCheckpoint() // census + total share both read it
       val tot = broadcast(tri.agg(sum($"n_paths").as("n_tot")))
       tri.crossJoin(tot)
         .select(concat_ws(">", $"e1", $"e2", $"e3").as("path"), $"n_paths",

@@ -184,7 +184,7 @@ private[graft] object GraphQueries {
         threshold = 0.75)
       val edges = pairs.select($"id_a".as("src"), $"id_b".as("dst"))
         .union(pairs.select($"id_b".as("src"), $"id_a".as("dst")))
-        .localCheckpoint(false) // wedge join reads it three ways
+        .localCheckpoint() // wedge join reads it three ways
       val deg = edges.groupBy($"src".as("id")).agg(count(lit(1)).as("deg"))
       val wedges = edges.as("e1").join(edges.as("e2"),
           $"e1.dst" === $"e2.src" && $"e1.src" < $"e2.dst")

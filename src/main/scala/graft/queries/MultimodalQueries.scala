@@ -82,7 +82,7 @@ private[graft] object MultimodalQueries {
       val docs = t(s, dir, "documents").select($"doc_id")
       val pairs = imagePhashPairs(docs)
         .filter($"ham_a" <= 6)
-        .localCheckpoint(false) // labels + the pair census both read it
+        .localCheckpoint() // labels + the pair census both read it
       val lab = graft.operators.Dedup.resolveClustersSparse(
         pairs.select($"id_a", $"id_b"), docs)
       val sizes = lab.groupBy($"keeper_id")
@@ -203,7 +203,7 @@ private[graft] object MultimodalQueries {
       val wavs = graft.operators.Multimodal.synthAudioGroups(
         docs, "doc_id", groupDiv = 4, nSamples = 64, sampleRate = 8000)
       val feats = graft.operators.Multimodal.audioSignBands(wavs, "wav")
-        .localCheckpoint(false) // band explode + verify both read it
+        .localCheckpoint() // band explode + verify both read it
       val ex = feats.select($"doc_id",
         posexplode(array($"ab0", $"ab1", $"ab2", $"ab3")).as(Seq("band", "bh")))
       val cand = ex.as("a").join(ex.as("b"),

@@ -848,9 +848,9 @@ private[graft] object PipelineQueries {
         .select($"doc_id", explode(expr(
           "transform(sequence(2, size(w)), i -> struct(element_at(w, i - 1) AS p, element_at(w, i) AS c))")).as("b"))
         .select($"doc_id", $"b.p".as("p"), $"b.c".as("c"))
-        .localCheckpoint(false) // one corpus scan; counts + scoring read this
+        .localCheckpoint() // one corpus scan; counts + scoring read this
       val bic = bi.groupBy($"p", $"c").agg(count(lit(1)).as("cbi"))
-        .localCheckpoint(false)
+        .localCheckpoint()
       val prevc = bic.groupBy($"p").agg(sum($"cbi").as("cp"))
       val curc = bic.groupBy($"c").agg(sum($"cbi").as("cc"))
       val tot = bic.agg(sum($"cbi").as("nbi"))
@@ -953,7 +953,7 @@ private[graft] object PipelineQueries {
         .select($"doc_id", $"lang", $"source",
           graft.operators.TextAnalysis.tokensCol($"text").as("w"))
         .select($"doc_id", $"lang", $"source", size($"w").cast("long").as("n_tok"), $"w")
-        .localCheckpoint(false) // survivors feed three gram profiles + split
+        .localCheckpoint() // survivors feed three gram profiles + split
       val qs = graft.operators.QualitySignals
       def topCnt(n: Int, out: String) = base
         .select($"doc_id", explode(qs.ngramsStrict($"w", n)).as("g"))
@@ -1032,7 +1032,7 @@ private[graft] object PipelineQueries {
           graft.operators.TextAnalysis.tokensCol($"text"), 5)).as("g"))
         .select($"split", xxhash64($"g").as("h"))
         .groupBy($"h").agg(collect_set($"split").as("ss"))
-        .localCheckpoint(false) // per-gram split sets feed sizes + overlap
+        .localCheckpoint() // per-gram split sets feed sizes + overlap
       val sizes = sg.select(explode($"ss").as("split"))
         .groupBy($"split").agg(count(lit(1)).as("n"))
       sg.select(explode($"ss").as("split_a"), $"ss")
@@ -1063,7 +1063,7 @@ private[graft] object PipelineQueries {
         org.apache.spark.sql.catalyst.encoders.ExpressionEncoder[(Long, Long)]())
       def stats(df: DataFrame, key: String): (DataFrame, DataFrame) = {
         val counts = df.groupBy(col(key).as("k")).agg(count(lit(1)).as("c"))
-          .localCheckpoint(false) // one count shuffle feeds HH + totals
+          .localCheckpoint() // one count shuffle feeds HH + totals
         val hh = counts.agg(topk($"c", $"k").as("top"))
           .select(posexplode($"top"))
           .select($"col._2".as("k"), $"col._1".as("c"))
@@ -1245,9 +1245,9 @@ private[graft] object PipelineQueries {
         .select($"user_id",
           when($"ts" < t1, "train").when($"ts" >= t2, "test")
             .otherwise("embargo").as("split"))
-        .localCheckpoint(false) // feeds split stats + both overlap sides
+        .localCheckpoint() // feeds split stats + both overlap sides
       val trainUsers = ev.filter($"split" === "train")
-        .select($"user_id").distinct().localCheckpoint(false)
+        .select($"user_id").distinct().localCheckpoint()
       val overlap = broadcast(ev.filter($"split" === "test")
         .select($"user_id").distinct()
         .join(trainUsers, Seq("user_id"), "left_semi")
@@ -1298,10 +1298,10 @@ private[graft] object PipelineQueries {
       import s.implicits._
       val docs = t(s, dir, "documents")
       val del = docs.filter($"doc_id" % 5 === 0)
-        .select($"doc_id".as("__del")).localCheckpoint(false)
+        .select($"doc_id".as("__del")).localCheckpoint()
       def audit(name: String, df: DataFrame, keyName: String): DataFrame = {
         val kept = df.join(broadcast(del), col(keyName) === $"__del", "left_anti")
-          .localCheckpoint(false) // after-image feeds count + orphan probe
+          .localCheckpoint() // after-image feeds count + orphan probe
         broadcast(df.agg(count(lit(1)).as("n_before")))
           .crossJoin(broadcast(kept.agg(count(lit(1)).as("n_after"))))
           .crossJoin(broadcast(
@@ -1480,7 +1480,7 @@ private[graft] object PipelineQueries {
       import s.implicits._
       val deg = t(s, dir, "events").groupBy($"user_id", $"event_type")
         .agg(count(lit(1)).as("d"))
-        .localCheckpoint(false) // six filtered views read it
+        .localCheckpoint() // six filtered views read it
       Seq(("click", "view"), ("error", "signup"), ("purchase", "view"))
         .map { case (a, b) =>
           graft.operators.Salting.estimateJoinSize(
@@ -1510,7 +1510,7 @@ private[graft] object PipelineQueries {
           expr("((ts div 1000) div 3600000000) % 6").as("slot"))
         .agg(count(lit(1)).as("n_rows"),
           sum(expr("cast(floor(value * 1000000) as bigint)")).as("bytes_u"))
-        .localCheckpoint(false) // horizon scalar + plan both read it
+        .localCheckpoint() // horizon scalar + plan both read it
       val horizon = broadcast(files.agg(max($"day").as("mx")))
       files.crossJoin(horizon)
         .select($"day", $"n_rows", $"bytes_u",
@@ -2007,7 +2007,7 @@ private[graft] object PipelineQueries {
             $"m", lit(".com/sitemap-1.xml</loc></sitemap></sitemapindex>"))
             .as("xml"))
       val sitemaps = nonIndex.unionByName(children).unionByName(index)
-        .localCheckpoint(false) // entries and index edges both read it
+        .localCheckpoint() // entries and index edges both read it
       val entries = graft.operators.Sitemap.urlEntries(sitemaps, "url", "xml")
       val viaIdx = graft.operators.Sitemap.childLocs(sitemaps, "url", "xml")
         .select($"child_url".as("sitemap_url")).distinct()

@@ -295,8 +295,8 @@ private[graft] object StatsQueries {
         .withColumn("bkt", graft.operators.HllSketch.bucketCol($"h", p))
         .withColumn("rnk", graft.operators.HllSketch.rankExpr("h", p))
         .groupBy($"source").agg(hll($"bkt", $"rnk").as("regs"))
-        .localCheckpoint(false) // source-count-sized; feeds both join sides
-      val vocab = tok.select($"source", $"w").distinct().localCheckpoint(false)
+        .localCheckpoint() // source-count-sized; feeds both join sides
+      val vocab = tok.select($"source", $"w").distinct().localCheckpoint()
       val exact = vocab.toDF("src_a", "w")
         .join(vocab.toDF("src_b", "w"), Seq("w"))
         .filter($"src_a" < $"src_b")
@@ -334,7 +334,7 @@ private[graft] object StatsQueries {
         .select($"source",
           size(graft.operators.TextAnalysis.tokensCol($"text")).cast("long").as("nt"))
         .groupBy($"source").agg(sum($"nt").as("n_tok"))
-        .localCheckpoint(false) // source-count-sized; three derived aggs
+        .localCheckpoint() // source-count-sized; three derived aggs
       val tot = per.agg(sum($"n_tok").as("tot"))
       val r = per.crossJoin(broadcast(tot))
         .withColumn("share_bp", expr("(n_tok * 10000) div tot"))
@@ -365,7 +365,7 @@ private[graft] object StatsQueries {
       val cs = t(s, dir, "documents")
         .select($"source", explode(graft.operators.TextAnalysis.tokensCol($"text")).as("w"))
         .groupBy($"source", $"w").agg(count(lit(1)).as("c_s"))
-        .localCheckpoint(false) // one corpus shuffle; c_g/n_s/n_g derive from it
+        .localCheckpoint() // one corpus shuffle; c_g/n_s/n_g derive from it
       val cg = cs.groupBy($"w").agg(sum($"c_s").as("c_g"))
       val ns = cs.groupBy($"source").agg(sum($"c_s").as("n_s"))
       val ng = cg.agg(sum($"c_g").as("n_g"))
@@ -397,9 +397,9 @@ private[graft] object StatsQueries {
       val dw = t(s, dir, "documents")
         .select($"doc_id", explode(graft.operators.TextAnalysis.tokensCol($"text")).as("w"))
         .distinct()
-        .localCheckpoint(false) // doc×vocab sized; feeds df + the pair join
+        .localCheckpoint() // doc×vocab sized; feeds df + the pair join
       val dfr = dw.groupBy($"w").agg(count(lit(1)).as("df"))
-      val kept = dfr.filter($"df" >= 50).localCheckpoint(false)
+      val kept = dfr.filter($"df" >= 50).localCheckpoint()
       val nd = t(s, dir, "documents").agg(count(lit(1)).as("n_docs"))
       val kdw = dw.join(broadcast(kept.select($"w")), Seq("w"))
       kdw.select($"doc_id", $"w".as("wa"))
@@ -462,7 +462,7 @@ private[graft] object StatsQueries {
       val hourly = t(s, dir, "events")
         .select(expr("ts div 3600000000000").as("hour_bucket"))
         .groupBy($"hour_bucket").agg(count(lit(1)).as("n"))
-        .localCheckpoint(false) // contributions + the target join read it
+        .localCheckpoint() // contributions + the target join read it
       val contrib = hourly
         .select($"hour_bucket", $"n", explode(expr("sequence(1, 24)")).as("k"))
         .select(($"hour_bucket" + $"k").as("hour_bucket"),
@@ -508,7 +508,7 @@ private[graft] object StatsQueries {
       val hourly = t(s, dir, "events")
         .select($"event_type", expr("ts div 3600000000000").as("hour_bucket"))
         .groupBy($"event_type", $"hour_bucket").agg(count(lit(1)).as("n"))
-        .localCheckpoint(false) // feeds the median, the MAD and the flags
+        .localCheckpoint() // feeds the median, the MAD and the flags
       val wm = Window.partitionBy($"event_type").orderBy($"n", $"hour_bucket")
       val wc = Window.partitionBy($"event_type")
       val med = hourly
@@ -606,8 +606,8 @@ private[graft] object StatsQueries {
         .withColumn("bkt", graft.operators.HllSketch.bucketCol($"h", p))
         .withColumn("rnk", graft.operators.HllSketch.rankExpr("h", p))
         .groupBy($"source", $"lang").agg(hll($"bkt", $"rnk").as("regs"))
-        .localCheckpoint(false) // the register table — all rollups read this
-      val vocab = tok.distinct().localCheckpoint(false) // exact sidecar
+        .localCheckpoint() // the register table — all rollups read this
+      val vocab = tok.distinct().localCheckpoint() // exact sidecar
       def e4 = fq4(graft.operators.HllSketch.estimateExpr("regs", p)).as("est4")
       val lvl0 = base
         .join(vocab.groupBy($"source", $"lang").agg(count(lit(1)).as("n_exact")),
@@ -694,7 +694,7 @@ private[graft] object StatsQueries {
         .groupBy($"user_id")
         .agg(sum(when($"ts" < lit(cut), $"vu").otherwise(0L)).as("xu"),
           sum(when($"ts" >= lit(cut), $"vu").otherwise(0L)).as("yu"))
-        .localCheckpoint(false) // moments + arm rollup both read it
+        .localCheckpoint() // moments + arm rollup both read it
       val mom = broadcast(users.agg(
         count(lit(1)).as("n"), sum($"xu").as("sx"), sum($"yu").as("sy"),
         sum($"xu".cast("decimal(19,0)") * $"yu".cast("decimal(19,0)")).as("sxy"),
@@ -826,7 +826,7 @@ private[graft] object StatsQueries {
           t(s, dir, "events").select($"user_id", $"ts", $"event_id", $"event_type"),
           "user_id", "ts", "event_id", gap = 21600000000000L)
         .select($"user_id", $"session_seq", $"event_type").distinct()
-        .localCheckpoint(false) // singles, pairs, and N all read it
+        .localCheckpoint() // singles, pairs, and N all read it
       val n = broadcast(st.select($"user_id", $"session_seq").distinct()
         .agg(count(lit(1)).as("n_sess")))
       val singles = st.groupBy($"event_type").agg(count(lit(1)).as("n_t"))
@@ -1049,7 +1049,7 @@ private[graft] object StatsQueries {
       val daily = t(s, dir, "events")
         .groupBy($"event_type", expr("(ts div 1000) div 86400000000").as("day"))
         .agg(count(lit(1)).as("y"))
-        .localCheckpoint(false) // pair join + OLS moments both read it
+        .localCheckpoint() // pair join + OLS moments both read it
       val pairs = daily.as("a")
         .join(daily.as("b"),
           $"a.event_type" === $"b.event_type" && $"a.day" < $"b.day")
@@ -1250,7 +1250,7 @@ private[graft] object StatsQueries {
           when($"day" < $"d0" + 15L, lit("old")).otherwise(lit("new"))
             .as("half"))
         .groupBy($"event_type", $"half").agg(count(lit(1)).as("n"))
-        .localCheckpoint(false)
+        .localCheckpoint()
       val tot = broadcast(halves.groupBy($"half").agg(sum($"n").as("tn"))
         .groupBy().pivot("half", Seq("old", "new")).agg(first($"tn"))
         .select($"old".as("n_old_tot"), $"new".as("n_new_tot")))
@@ -1286,7 +1286,7 @@ private[graft] object StatsQueries {
       val daily = t(s, dir, "events")
         .groupBy($"event_type",
           expr("(ts div 1000) div 86400000000").as("day"))
-        .agg(count(lit(1)).as("y")).localCheckpoint(false)
+        .agg(count(lit(1)).as("y")).localCheckpoint()
       val contrib = daily
         .select($"event_type", $"day", $"y",
           posexplode(lit(wts)).as(Seq("k", "w")))
@@ -1377,7 +1377,7 @@ private[graft] object StatsQueries {
         .groupBy($"event_type",
           expr("((ts div 1000) div 86400000000) % 7").as("weekday"))
         .agg(count(lit(1)).as("n"))
-        .localCheckpoint(false) // margins + total + cells all read it
+        .localCheckpoint() // margins + total + cells all read it
       val mt = cells.groupBy($"event_type").agg(sum($"n").as("n_t"))
       val mw = cells.groupBy($"weekday").agg(sum($"n").as("n_w"))
       val tot = broadcast(cells.agg(sum($"n").as("big_n")))
@@ -1391,7 +1391,7 @@ private[graft] object StatsQueries {
             * (cast(n as decimal(38,0)) * big_n - cast(n_t as decimal(38,0)) * n_w)
             * 10000 div (cast(n_t as decimal(38,0)) * n_w * big_n) as bigint)""")
             .as("cell4"))
-        .localCheckpoint(false) // cell rows + the statistic both read it
+        .localCheckpoint() // cell rows + the statistic both read it
       val stat = broadcast(scored.agg(sum($"cell4").as("chi2_4")))
       scored.crossJoin(stat)
         .select($"event_type", $"weekday", $"n", $"exp_milli", $"cell4",
@@ -1487,11 +1487,11 @@ private[graft] object StatsQueries {
           out.toDF("event_type", "pi6", "resid6").orderBy($"event_type")
         case Left(p) =>
           val states = p.select($"cur".as("st")).distinct()
-            .localCheckpoint(false)
+            .localCheckpoint()
           val nStates = broadcast(states.agg(count(lit(1)).as("t")))
           var pi = states.crossJoin(nStates)
             .select($"st", expr("1000000 div t").as("pi6"))
-            .localCheckpoint(false)
+            .localCheckpoint()
           var prev = pi
           for (_ <- 1 to 16) {
             prev = pi
@@ -1499,7 +1499,7 @@ private[graft] object StatsQueries {
               .groupBy($"nxt")
               .agg(sum(expr("pi6 * p6 div 1000000")).as("npi6"))
               .select($"nxt".as("st"), $"npi6".as("pi6"))
-              .localCheckpoint(false)
+              .localCheckpoint()
           }
           pi.join(prev.select($"st", $"pi6".as("prev6")), Seq("st"))
             .select($"st".as("event_type"), $"pi6",
@@ -1544,7 +1544,7 @@ private[graft] object StatsQueries {
       val perType = ev.groupBy($"event_type")
         .agg(sum(when($"cohort" === 0L, 1L).otherwise(0L)).as("k0"),
           sum(when($"cohort" === 1L, 1L).otherwise(0L)).as("k1"))
-        .localCheckpoint(false) // totals + the per-type pass read it
+        .localCheckpoint() // totals + the per-type pass read it
       val tot = broadcast(perType.agg(sum($"k0").as("n0"), sum($"k1").as("n1")))
       val withP = perType.crossJoin(tot)
         .withColumn("z", expr(
@@ -1559,14 +1559,14 @@ private[graft] object StatsQueries {
              * (0.319381530D * t - 0.356563782D * t * t + 1.781477937D * t * t * t
                 - 1.821255978D * t * t * t * t + 1.330274429D * t * t * t * t * t))
              * 1000000.0D) as bigint)"""))
-        .localCheckpoint(false) // m rows; rank + m-count read it
+        .localCheckpoint() // m rows; rank + m-count read it
       val m = broadcast(withP.agg(count(lit(1)).as("m")))
       val ranked = withP.crossJoin(m)
         .withColumn("bh_rank", row_number().over(
           org.apache.spark.sql.expressions.Window
             .orderBy($"p6", $"event_type")) // m-row window, never corpus
           .cast("long"))
-        .localCheckpoint(false) // the step-up max + the output read it
+        .localCheckpoint() // the step-up max + the output read it
       val cut = broadcast(ranked
         .filter($"p6" * $"m" <= $"bh_rank" * lit(50000L))
         .agg(coalesce(max($"bh_rank"), lit(0L)).as("max_rej")))
@@ -1592,7 +1592,7 @@ private[graft] object StatsQueries {
       import s.implicits._
       val daily = t(s, dir, "events")
         .groupBy($"event_type", expr("(ts div 1000) div 86400000000").as("day"))
-        .agg(count(lit(1)).as("y")).localCheckpoint(false)
+        .agg(count(lit(1)).as("y")).localCheckpoint()
       val d0 = broadcast(daily.agg(min($"day").as("d0")))
       val joined = daily.join(
           daily.select($"event_type", ($"day" + 7L).as("day"), $"y".as("f7")),
@@ -1600,7 +1600,7 @@ private[graft] object StatsQueries {
         .crossJoin(d0)
         .select($"event_type", $"day", abs($"y" - $"f7").as("resid"),
           ($"day" < $"d0" + 21L).cast("int").as("is_cal"))
-        .localCheckpoint(false) // calibration rank + eval coverage read it
+        .localCheckpoint() // calibration rank + eval coverage read it
       val cal = joined.filter($"is_cal" === 1)
         .withColumn("rk", row_number().over(
           org.apache.spark.sql.expressions.Window

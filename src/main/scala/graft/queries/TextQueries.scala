@@ -297,12 +297,14 @@ private[graft] object TextQueries {
       // the frequency table feeds the ranker AND the totals (and the
       // ranker reads it twice for its prefix offsets): checkpoint the
       // VOCAB-sized result once so the corpus token aggregation runs once.
-      // LAZY (eager=false): materializes at the first action, so merely
-      // CONSTRUCTING the query (plan-pin tests) stays job-free
+      // Eager, as every shared cut: a lazy one is computed by each of the
+      // concurrent jobs of the plans that read it, and once the first job
+      // truncates its lineage the others' tasks report metrics of a plan
+      // the driver has already dropped
       val freq = t(s, dir, "documents")
         .select(explode(graft.operators.TextAnalysis.tokensCol($"text")).as("w"))
         .groupBy($"w").agg(count(lit(1)).as("c"))
-        .localCheckpoint(false)
+        .localCheckpoint()
       val ranked = graft.operators.Batching.globalRunningSum(
         freq, Seq($"c".desc, $"w"), "c", numPartitions = 8,
         outPos = "rk", outCum = "cum")
@@ -453,7 +455,7 @@ private[graft] object TextQueries {
           size($"tk").cast("long").as("n_tok"),
           aggregate($"tk", lit(0), (a, x) => a + length(x)).cast("long").as("sum_len"),
           size(filter($"tk", x => x.isin(stopAny: _*))).cast("long").as("n_stop"))
-        .localCheckpoint(false) // lazy: construction stays job-free
+        .localCheckpoint() // its three consumers read it once
       val dup = base.withColumn("n_occ",
         count(lit(1)).over(Window.partitionBy($"h")))
       val per = dup.groupBy($"source").agg(
@@ -463,7 +465,7 @@ private[graft] object TextQueries {
           sum(when($"n_tok".between(20, 80) && $"n_stop" > 0 &&
             $"sum_len".cast("double") / $"n_tok" >= 3.0 &&
             $"sum_len".cast("double") / $"n_tok" <= 6.0, 1L).otherwise(0L)).as("n_quality"))
-        .localCheckpoint(false)
+        .localCheckpoint()
       val ent = base.groupBy($"source", $"lang").agg(count(lit(1)).as("nl"))
         .join(broadcast(per.select($"source", $"n_docs")), "source")
         .select($"source",
@@ -545,9 +547,9 @@ private[graft] object TextQueries {
         .select($"doc_id", explode(expr(
           "transform(sequence(2, size(w)), i -> struct(element_at(w, i - 1) AS p, element_at(w, i) AS c))")).as("b"))
         .select($"doc_id", $"b.p".as("p"), $"b.c".as("c"))
-        .localCheckpoint(false) // one corpus scan; counts + scoring read this
+        .localCheckpoint() // one corpus scan; counts + scoring read this
       val bic = bi.groupBy($"p", $"c").agg(count(lit(1)).as("cbi"))
-        .localCheckpoint(false) // vocab²-bounded; feeds three derived tables
+        .localCheckpoint() // vocab²-bounded; feeds three derived tables
       val prevc = bic.groupBy($"p").agg(sum($"cbi").as("cp"))
       val curc = bic.groupBy($"c").agg(sum($"cbi").as("cc"))
       val tot = bic.agg(sum($"cbi").as("nbi"))
@@ -608,7 +610,7 @@ private[graft] object TextQueries {
       val base = t(s, dir, "documents")
         .select($"doc_id", graft.operators.TextAnalysis.tokensCol($"text").as("w"))
         .select($"doc_id", size($"w").as("n_tok"), $"w")
-        .localCheckpoint(false) // one corpus scan feeds all three gram profiles
+        .localCheckpoint() // one corpus scan feeds all three gram profiles
       def topCnt(n: Int, out: String) = base
         .select($"doc_id", explode(qs.ngramsStrict($"w", n)).as("g"))
         .groupBy($"doc_id", $"g").agg(count(lit(1)).as("c"))
@@ -739,7 +741,7 @@ private[graft] object TextQueries {
       val cents = graft.operators.IvfIndex.centroids(emb, k = 8, iters = 0)
       val cells = graft.operators.IvfIndex.assign(emb, cents, "vec_id", "embedding")
         .join(emb.select($"vec_id", $"label".cast("long").as("label")), Seq("vec_id"))
-        .localCheckpoint(false) // assignment feeds both pair-join sides
+        .localCheckpoint() // assignment feeds both pair-join sides
       val a = cells.select($"centroid_id", $"vec_id".as("src"),
         $"label".as("label_a"), $"embedding".as("va"))
       val b = cells.select($"centroid_id", $"vec_id".as("dst"),
@@ -851,7 +853,7 @@ private[graft] object TextQueries {
           * log(cnt.cast("double") / n.cast("double")) * lit(1000000.0)).cast("long")
       val cells = t(s, dir, "documents")
         .groupBy($"lang", $"source").agg(count(lit(1)).as("c"))
-        .localCheckpoint(false) // cell table feeds all three entropy aggs
+        .localCheckpoint() // cell table feeds all three entropy aggs
       val nRow = broadcast(cells.agg(sum($"c").as("n")))
       val hj = cells.crossJoin(nRow).agg(sum(entU($"c", $"n")).as("hj_u"))
       val hl = cells.groupBy($"lang").agg(sum($"c").as("cl")).crossJoin(nRow)
@@ -1007,7 +1009,7 @@ private[graft] object TextQueries {
       import s.implicits._
       val wf = graft.operators.BpeTokenizer.wordFrequencies(
           t(s, dir, "documents"), graft.operators.TextAnalysis.tokensCol($"text"))
-        .localCheckpoint(false) // train's 6 argmax rounds + the encode read it
+        .localCheckpoint() // train's 6 argmax rounds + the encode read it
       val merges = graft.operators.BpeTokenizer.train(wf, 6)
       wf.select(
           size(element_at(

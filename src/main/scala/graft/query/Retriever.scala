@@ -68,12 +68,12 @@ object Retriever {
     * recall gap against the brute-force path on the same queries. Returns
     * (hits in rank order, assembled prompt).
     *
-    * Job shape per ask: [[graft.index.AnnIndex.query]] collects the
-    * centroids and the codebook (one job each) and ranks cells and builds
-    * the LUT on the driver; the prompt's collect then runs the broadcasts
-    * (probed cells, LUT, context text), the pruned codes scan with its one
-    * exchange, and the result stage. The k rows are put in rank order in a
-    * single partition, so no range-partitioned sort runs.
+    * Job shape per ask, six jobs: [[graft.index.AnnIndex.query]] collects
+    * the centroids and the codebook in one scan (one job) and ranks cells
+    * and builds the LUT on the driver; the prompt's collect then runs the
+    * broadcasts (probed cells, LUT, context text), the pruned codes scan
+    * with its one exchange, and the result stage. The k rows are put in
+    * rank order in a single partition, so no range-partitioned sort runs.
     */
   def askViaIndex(
       index: DataFrame,

@@ -48,7 +48,7 @@ object Sinks {
       // Spark's lazy corrupt-column contract: referencing the corrupt
       // column requires it to be materialized through a checkpoint-like
       // boundary; cache-free localCheckpoint keeps this a one-pass read
-      .localCheckpoint(false)
+      .localCheckpoint()
     val clean = raw.filter(col(corruptCol).isNull)
       .select(schema.fieldNames.map(col): _*)
     val quarantine = raw.filter(col(corruptCol).isNotNull)

@@ -190,7 +190,7 @@ class AnnIndexSpec extends AnyFunSuite {
     assert(prompt.endsWith("\n\n Question: doc 7"))
   }
 
-  test("askViaIndex runs at most 10 Spark jobs; the serve path runs no parquet schema-inference job") {
+  test("askViaIndex runs at most 6 Spark jobs; the serve path runs no parquet schema-inference job") {
     import spark.implicits._
     val (index, dir, embedder) = askFixture("graft_annjobs")
     val (prompt, jobs) = JobNames.during(spark.sparkContext) {
@@ -198,7 +198,7 @@ class AnnIndexSpec extends AnyFunSuite {
         index, s"$dir/idx", "doc 7", embedder, k = 3, nprobe = 3, m = 8, sub = 2)._2
     }
     assert(prompt.endsWith("\n\n Question: doc 7"))
-    assert(jobs.size <= 10, s"${jobs.size} jobs:\n" + jobs.mkString("\n"))
+    assert(jobs.size <= 6, s"${jobs.size} jobs:\n" + jobs.mkString("\n"))
     val (_, serveJobs) = JobNames.during(spark.sparkContext) {
       AnnIndex.query(spark, s"$dir/idx",
           Seq((0L, embedder.embedOne("doc 7").toSeq)).toDF("query_id", "qv"),
@@ -380,7 +380,7 @@ class AnnIndexSpec extends AnyFunSuite {
     org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(dir))
   }
 
-  test("appendDelta runs at most 5 Spark jobs and no parquet schema-inference job") {
+  test("appendDelta runs at most 4 Spark jobs and no parquet schema-inference job") {
     import spark.implicits._
     val dir = java.nio.file.Files.createTempDirectory("graft_anndeltajobs").toString
     AnnIndex.build((0 until 80).map(i => (i.toLong, vec(i))).toDF("vec_id", "embedding"),
@@ -389,7 +389,7 @@ class AnnIndexSpec extends AnyFunSuite {
     val (_, jobs) = JobNames.callStacks(spark.sparkContext) {
       AnnIndex.appendDelta(spark, s"$dir/idx", delta, m = 8, sub = 2)
     }
-    assert(jobs.size <= 5, s"${jobs.size} jobs:\n" + jobs.map(_.map(_.takeWhile(_ != '\n'))).mkString("\n"))
+    assert(jobs.size <= 4, s"${jobs.size} jobs:\n" + jobs.map(_.map(_.takeWhile(_ != '\n'))).mkString("\n"))
     assert(!jobs.flatten.exists(_.contains("DataFrameReader.parquet")), jobs.mkString("\n"))
     assert(spark.read.parquet(s"$dir/idx/codes.parquet").count() == 8L * 100)
     org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(dir))

@@ -232,23 +232,126 @@ class LocalGraphSpec extends AnyFunSuite {
     }
   }
 
+  /** The "ann build" gate's choices among `jobs`' descriptions. */
+  private def annChoices(jobs: Seq[String]): Seq[String] =
+    jobs.filter(d => d != null && d.startsWith("ann build gate:") && d.contains("→"))
+      .map(_.split("→ ").last)
+
+  /** Every row of the three relations `AnnIndex.build` writes for `emb`,
+    * and the gate's choice, with the limit unset and then at 0.
+    */
+  private def buildBoth(emb: DataFrame, m: Int = 8, sub: Int = 2)
+      : ((Seq[String], Seq[String]), (Seq[String], Seq[String])) = {
+    val root = java.nio.file.Files.createTempDirectory("graft_localann").toString
+    var n = 0
+    def built(): (Seq[String], Seq[String]) = {
+      n += 1
+      val dir = s"$root/idx$n"
+      val (_, jobs) = JobNames.descriptions(spark.sparkContext)(
+        AnnIndex.build(emb, dir, m = m, sub = sub, kcode = 16))
+      (Seq("centroids", "codebook", "codes").flatMap(rel =>
+        rows(spark.read.parquet(s"$dir/$rel.parquet")).map(r => s"$rel $r")), annChoices(jobs))
+    }
+    try onBothPaths(built())
+    finally org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(root))
+  }
+
   test("AnnIndex.build on 10 vectors succeeds and equals the limit-0 build") {
     val s = spark
     import s.implicits._
-    val emb = (0 until 10).map(i => (i.toLong, vec(i))).toDF("vec_id", "embedding")
-    val root = java.nio.file.Files.createTempDirectory("graft_localann").toString
-    var n = 0
-    def built(): Seq[String] = {
-      n += 1
-      val dir = s"$root/idx$n"
-      AnnIndex.build(emb, dir, m = 8, sub = 2, kcode = 16)
-      Seq("centroids", "codebook", "codes").flatMap(rel =>
-        rows(spark.read.parquet(s"$dir/$rel.parquet")).map(r => s"$rel $r"))
+    val ((local, choice), (dist, _)) =
+      buildBoth((0 until 10).map(i => (i.toLong, vec(i))).toDF("vec_id", "embedding"))
+    assert(local == dist)
+    assert(choice == Seq("distributed"))
+    assert(local.count(_.startsWith("codes ")) == 8 * 10)
+  }
+
+  test("AnnIndex.build: the in-process build writes the distributed build's centroids, codebook and codes") {
+    val s = spark
+    import s.implicits._
+    val embedder = new graft.embed.DeterministicEmbedder(16)
+    val cases = Seq(
+      ("80-vector corpus", (0 until 80).map(i => (i.toLong, vec(i))), 2),
+      ("ask corpus", (0 until 60).map(i => (i.toLong, embedder.embedOne(s"doc $i").toSeq)), 2),
+      ("64-dim corpus at m = 8, sub = 8",
+        (0 until 40).map(i => (i.toLong, (0 until 64).map(d => math.sin(i * 31 + d * 7 + 1).toFloat))), 8))
+    for ((what, vs, sub) <- cases) {
+      val ((local, localChoice), (dist, distChoice)) =
+        buildBoth(vs.toDF("vec_id", "embedding"), sub = sub)
+      assert(local == dist, what)
+      assert(localChoice == Seq("local") && distChoice == Seq("distributed"), what)
+      assert(local.count(_.startsWith("codes ")) == 8 * vs.size, what)
     }
+  }
+
+  test("AnnIndex.build hands inputs the in-process build cannot reproduce to the distributed build") {
+    val s = spark
+    import s.implicits._
+    val base = (0 until 40).map(i => (Option(i.toLong), vec(i)))
+    val cases = Seq(
+      "null id" -> base.updated(3, (None, vec(3))).toDF("vec_id", "embedding"),
+      "null vector" -> base.updated(5, (Some(5L), null)).toDF("vec_id", "embedding"),
+      "2-element vector" -> base.updated(7, (Some(7L), vec(7).take(2))).toDF("vec_id", "embedding"),
+      "string ids" -> (0 until 40).map(i => (f"v$i%02d", vec(i))).toDF("vec_id", "embedding"),
+      "array<double> embeddings" ->
+        (0 until 40).map(i => (i.toLong, vec(i).map(_.toDouble))).toDF("vec_id", "embedding"))
+    for ((what, emb) <- cases) {
+      val ((local, choice), (dist, _)) = buildBoth(emb)
+      assert(local == dist, what)
+      assert(choice == Seq("distributed"), what)
+      assert(local.exists(_.startsWith("codes ")), what)
+    }
+    // an index built from array<double> embeddings serves and takes deltas
+    val doubles = cases.last._2
+    val dir = java.nio.file.Files.createTempDirectory("graft_annbuilddouble").toString
     try {
-      val (local, dist) = onBothPaths(built())
-      assert(local == dist)
-      assert(local.count(_.startsWith("codes ")) == 8 * 10)
+      AnnIndex.build(doubles, dir, m = 8, sub = 2, kcode = 16)
+      AnnIndex.appendDelta(spark, dir, doubles.limit(3), m = 8, sub = 2)
+      val hits = AnnIndex.query(spark, dir, Seq((0L, vec(3))).toDF("query_id", "qv"),
+        k = 3, nprobe = 2, m = 8, sub = 2).collect()
+      assert(hits.length == 3)
+    } finally org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(dir))
+  }
+
+  test("AnnIndex.build evaluates its input once per row on either path") {
+    val s = spark
+    import s.implicits._
+    val root = java.nio.file.Files.createTempDirectory("graft_annevals").toString
+    try for (limit <- Seq(None, Some("0"))) {
+      val evals = spark.sparkContext.longAccumulator("ann build input evaluations")
+      val seen = udf { (_: Long) => evals.add(1); true }.asNondeterministic()
+      val emb = spark.range(0, 80)
+        .select($"id".as("vec_id"),
+          expr("transform(sequence(0, 15), d -> cast(sin(id * 31 + d * 7 + 1) as float))")
+            .as("embedding"))
+        .filter(seen($"vec_id"))
+      limit.fold(spark.conf.unset(Limit))(spark.conf.set(Limit, _))
+      try AnnIndex.build(emb, s"$root/idx${limit.isDefined}", m = 8, sub = 2, kcode = 16)
+      finally spark.conf.unset(Limit)
+      assert(evals.value == 80L, s"limit $limit")
+    } finally org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(root))
+  }
+
+  test("AnnIndex.build on 80 vectors runs at most 8 Spark jobs behind one gate decision") {
+    val s = spark
+    import s.implicits._
+    val root = java.nio.file.Files.createTempDirectory("graft_annbuildjobs").toString
+    try {
+      (0 until 80).map(i => (i.toLong, vec(i))).toDF("vec_id", "embedding")
+        .write.parquet(s"$root/emb.parquet")
+      val emb = spark.read.parquet(s"$root/emb.parquet")
+      val (_, descs) = JobNames.descriptions(spark.sparkContext)(
+        AnnIndex.build(emb, s"$root/idx1", m = 8, sub = 2, kcode = 16))
+      val (_, names) = JobNames.during(spark.sparkContext)(
+        AnnIndex.build(emb, s"$root/idx2", m = 8, sub = 2, kcode = 16))
+      assert(descs.size <= 8, s"${descs.size} jobs:\n" + descs.mkString("\n"))
+      assert(annChoices(descs) == Seq("local"), descs)
+      assert(!descs.exists(d => d != null && d.startsWith("pq train gate")), descs)
+      assert(!names.flatten.exists(_.startsWith("count at IvfIndex")), names)
+      // centroids and codebook are one file each
+      for (rel <- Seq("centroids", "codebook"))
+        assert(new java.io.File(s"$root/idx1/$rel.parquet").list()
+          .count(_.endsWith(".parquet")) == 1, rel)
     } finally org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(root))
   }
 
