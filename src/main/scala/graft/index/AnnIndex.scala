@@ -1,7 +1,8 @@
 package graft.index
 
-import scala.jdk.CollectionConverters._
+import java.util.concurrent.ConcurrentHashMap
 
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{Column, DataFrame, Encoders, Row, SparkSession}
 import org.apache.spark.sql.catalyst.util.SQLOrderingUtil
 import org.apache.spark.sql.expressions.Window
@@ -32,11 +33,12 @@ import graft.operators.{IvfIndex, LocalStrategy, PqCodebook}
   * partition column, so the codes scan is PARTITION-PRUNED to
   * nprobe·|queries| directories and the raw embedding corpus is never
   * touched on the serve path (plan-pinned in the spec; q210 pins it
-  * against the inline q184 arithmetic). Per batch that is one metadata
-  * collect (centroids and codebook in one scan), two broadcast local
-  * relations and one exchange keyed by query. At 100 TB the serve-side
-  * cost is the probed cells' code lists — ~1/k of an 8-byte-per-vector
-  * table per probe — plus broadcast-sized LUT joins.
+  * against the inline q184 arithmetic). Centroids and codebook are read
+  * once per index and kept on the driver while their files are unchanged
+  * ([[metadata]]), so a batch runs the pruned codes scan and one exchange
+  * keyed by query. At 100 TB the serve-side cost is the probed cells'
+  * code lists — ~1/k of an 8-byte-per-vector table per probe — plus a
+  * batch-sized LUT in the scan's closure.
   *
   * Arithmetic is bit-identical to q178/q184: encode by max-margin argmax
   * (dot − ‖c‖²/2), ADC sums BIGINT micro-units, ties broken on lowest
@@ -71,10 +73,12 @@ object AnnIndex {
     * second gate) over the gate's checkpoint, plus the codebook collect.
     * Either way every row is encoded by [[encodeCells]] over that
     * checkpoint, so the input is evaluated once per row, and centroids
-    * and codebook are written as one file each. In-process job shape: the
-    * gate (count, collect, decision), the centroids and codebook writes,
-    * then [[encodeCells]]' `(vec_id, s)` exchange, the `centroid_id`
-    * exchange and the partitioned write — eight jobs.
+    * and codebook are written as one file each and kept in the
+    * [[metadata]] memo under those files' identity, so the first
+    * [[query]] or [[appendDelta]] after a build reads neither. In-process
+    * job shape: the gate (count, collect, decision), the centroids and
+    * codebook writes, then [[encodeCells]]' `(vec_id, s)` exchange, the
+    * `centroid_id` exchange and the partitioned write — eight jobs.
     */
   def build(emb: DataFrame, dir: String,
       m: Int = 8, sub: Int = 8, kcode: Int = 16, trainIters: Int = 2): Unit = {
@@ -92,8 +96,9 @@ object AnnIndex {
     }
     cents.coalesce(1).write.mode("overwrite").parquet(s"$dir/centroids.parquet")
     cb.coalesce(1).write.mode("overwrite").parquet(s"$dir/codebook.parquet")
-    writeCodes(encodeCells(cut, centroidVectors(cents), codebookVectors(cb, m), sub),
-      dir, "overwrite")
+    val meta = Meta(centroidVectors(cents), codebookVectors(cb))
+    memo.put(dir, fileIdentity(spark, dir) -> meta)
+    writeCodes(encodeCells(cut, meta.cents, below(meta.cb, m), sub), dir, "overwrite")
   }
 
   /** Nightly delta append: encode ONLY the arriving vectors against the
@@ -105,8 +110,10 @@ object AnnIndex {
     * from the codebook's training corpus, rebuild — this operator makes
     * the refresh cheap enough to schedule nightly either way.
     *
-    * Job shape: one [[metadata]] collect (no inference job), then
-    * [[encodeCells]]' two exchanges and the append — four jobs.
+    * Job shape: [[metadata]] (no job while the memo holds the index's
+    * centroids and codebook, as after a [[build]] in this driver; else one
+    * collect), then [[encodeCells]]' two exchanges and the append — three
+    * jobs.
     */
   def appendDelta(spark: SparkSession, dir: String, delta: DataFrame,
       m: Int = 8, sub: Int = 8): Unit = {
@@ -114,23 +121,61 @@ object AnnIndex {
     writeCodes(encodeCells(delta, cents, cb, sub), dir, "append")
   }
 
-  /** Centroids and codebook of the index under `dir` in ONE scan: both
-    * relations read with one schema holding both schemas' columns (no
-    * inference job); a row's non-null key columns say which relation it
-    * came from.
+  /** Centroids and the whole codebook (every subspace) of one index. */
+  private final case class Meta(cents: Array[(Int, Array[Double])],
+      cb: Seq[(Long, Long, Array[Double])])
+
+  /** Index dir → (identity of its centroids and codebook files, their
+    * contents): one entry per dir, replaced when a rebuild writes new
+    * files. Driver-side; the entries are broadcast-sized.
     */
-  private def metadata(spark: SparkSession, dir: String,
-      m: Int): (Array[(Int, Array[Double])], Seq[(Long, Long, Array[Double])]) = {
-    val both = spark.read.schema(s"$CentroidsSchema, $CodebookSchema")
-      .parquet(s"$dir/centroids.parquet", s"$dir/codebook.parquet")
-      .select(col("centroid_id"), col("centroid").cast("array<double>"),
-        col("s"), col("code"), col("cent").cast("array<double>"))
-      .collect()
-    val (cents, cb) = both.partition(!_.isNullAt(0))
-    (cents.map(r => r.getInt(0) -> doubles(r, 1)),
-      cb.map(r => (r.getLong(2), r.getLong(3), doubles(r, 4)))
-        .filter { case (s, _, _) => s >= 0 && s < m }.toSeq)
+  private val memo = new ConcurrentHashMap[String, (Seq[(String, Long, Long)], Meta)]()
+
+  /** (path, length, modification time) of every data file under the
+    * centroids and codebook relations of `dir`: one Hadoop listing per
+    * relation, no Spark job. Every write of a relation makes new part
+    * files, so a rebuild changes the identity.
+    */
+  private def fileIdentity(spark: SparkSession, dir: String): Seq[(String, Long, Long)] = {
+    val conf = spark.sessionState.newHadoopConf()
+    Seq("centroids.parquet", "codebook.parquet").flatMap { rel =>
+      val path = new Path(s"$dir/$rel")
+      path.getFileSystem(conf).listStatus(path).toSeq
+        .filter(f => f.isFile && !f.getPath.getName.startsWith("_") &&
+          !f.getPath.getName.startsWith("."))
+        .map(f => (f.getPath.toString, f.getLen, f.getModificationTime)).sorted
+    }
   }
+
+  /** Centroids and the codebook's subspaces below `m` of the index under
+    * `dir`, from the memo while the files it was filled from are
+    * unchanged. A miss reads both relations in ONE scan, with one schema
+    * holding both schemas' columns (no inference job); a row's non-null
+    * key columns say which relation it came from. The identity is listed
+    * before the read, so a rebuild racing the read can only leave an
+    * entry the next listing misses.
+    */
+  private[graft] def metadata(spark: SparkSession, dir: String,
+      m: Int): (Array[(Int, Array[Double])], Seq[(Long, Long, Array[Double])]) = {
+    val id = fileIdentity(spark, dir)
+    val meta = Option(memo.get(dir)).collect { case (`id`, meta) => meta }.getOrElse {
+      val both = spark.read.schema(s"$CentroidsSchema, $CodebookSchema")
+        .parquet(s"$dir/centroids.parquet", s"$dir/codebook.parquet")
+        .select(col("centroid_id"), col("centroid").cast("array<double>"),
+          col("s"), col("code"), col("cent").cast("array<double>"))
+        .collect()
+      val (cents, cb) = both.partition(!_.isNullAt(0))
+      val read = Meta(cents.map(r => r.getInt(0) -> doubles(r, 1)),
+        cb.map(r => (r.getLong(2), r.getLong(3), doubles(r, 4))).toSeq)
+      memo.put(dir, id -> read)
+      read
+    }
+    (meta.cents, below(meta.cb, m))
+  }
+
+  /** The codebook rows of the `m` subspaces a vector is cut into. */
+  private def below(cb: Seq[(Long, Long, Array[Double])], m: Int): Seq[(Long, Long, Array[Double])] =
+    cb.filter { case (s, _, _) => s >= 0 && s < m }
 
   /** Column `i` of `r`, an `array<double>`, as an array (null stays null). */
   private def doubles(r: Row, i: Int): Array[Double] =
@@ -207,11 +252,9 @@ object AnnIndex {
     vectors(cents, col("centroid_id"), "centroid")
       .map { case (c, v) => c.asInstanceOf[Int] -> v }
 
-  /** (s, code, cent) of the `m` subspaces a vector is cut into. */
-  private def codebookVectors(cb: DataFrame, m: Int): Seq[(Long, Long, Array[Double])] =
+  private def codebookVectors(cb: DataFrame): Seq[(Long, Long, Array[Double])] =
     vectors(cb, struct(col("s"), col("code")), "cent")
-      .map { case (r: Row, v) => (r.getLong(0), r.getLong(1), v) }
-      .filter { case (s, _, _) => s >= 0 && s < m }.toSeq
+      .map { case (r: Row, v) => (r.getLong(0), r.getLong(1), v) }.toSeq
 
   /** Top-k per query against the PERSISTED index only. `queries` carries
     * (`query_id`, `qv`); `excludeSelf` drops `vec_id == query_id` hits for
@@ -219,16 +262,20 @@ object AnnIndex {
     * (query_id, rank, vec_id, adc_u).
     *
     * Everything sized by the query batch or the index metadata runs on the
-    * driver: the centroids (k rows) and the codebook (m·kcode rows) are
-    * collected in one [[metadata]] scan and the batch is collected (a
-    * literal batch collects without a job), then
-    * cells are ranked per query (cosine desc, lowest `centroid_id` on
-    * ties, top `nprobe`) and the LUT is built with the same kernels and
-    * ordering as the relational form ([[VectorFunctions.cosine]],
-    * [[VectorFunctions.dot]], Spark's double order). The (query, cell)
-    * pairs and the LUT enter the plan as broadcast local relations, so the
-    * only distributed work is the partition-pruned codes scan, the ADC sum
-    * and the top-k window.
+    * driver: the centroids (k rows) and the codebook (m·kcode rows) come
+    * from [[metadata]] (no job while its memo holds them) and the batch
+    * is collected (a literal batch collects without a job), then cells are
+    * ranked per query (cosine desc, lowest `centroid_id` on ties, top
+    * `nprobe`) and the LUT is built with the same kernels and ordering as
+    * the relational form ([[VectorFunctions.cosine]],
+    * [[VectorFunctions.dot]], Spark's double order). Both travel in the
+    * closure of ONE narrow pass over the partition-pruned codes scan: a
+    * probed cell → query slots table, and a dense LUT over (slot, s, code)
+    * with a null/absent mask, each bounded by the batch. The pass emits
+    * (query_id, vec_id, dot_u) — the rows the relational (cell ⋈ codes ⋈
+    * LUT) joins emit, vectors sharing a query id summed per LUT entry —
+    * and the only distributed work is that scan, the ADC sum and the top-k
+    * window: one exchange, so a literal batch runs two jobs.
     */
   def query(spark: SparkSession, dir: String, queries: DataFrame,
       k: Int, nprobe: Int, m: Int = 8, sub: Int = 8,
@@ -240,31 +287,52 @@ object AnnIndex {
     // are ranked together, as a per-id window ranks them
     val batch = vectors(queries, $"query_id", "qv").filter(_._1 != null)
       .groupBy(_._1).toSeq.map { case (id, vs) => id -> vs.map(_._2).toSeq }
-    val cellRows = batch.flatMap { case (id, vs) =>
+    val ids = batch.map(_._1).toArray
+    // probed cell -> the slots (batch positions) probing it, once per
+    // ranked (vector, cell) pair, as the relational cell join repeats them
+    val slotsByCell: Map[Int, Array[Int]] = batch.zipWithIndex.flatMap { case ((_, vs), slot) =>
       val scored = for (qv <- vs; (c, cv) <- cents)
         yield (Option(qv).map(VectorFunctions.cosine(_, cv)), c)
       scored.sortWith((a, b) => ranksAbove(a._1, a._2, b._1, b._2))
-        .take(nprobe).map { case (_, c) => Row(id, c) }
+        .take(nprobe).map { case (_, c) => c -> slot }
+    }.groupMap(_._1)(_._2).map { case (c, slots) => c -> slots.toArray }
+    // dense LUT, entry (slot, s, code) at (slot·m + s)·width + code − codeLo;
+    // state 0: no LUT row (the join drops the code), 1: only null rows,
+    // 2: the sum of the non-null rows (the ADC sum skips nulls)
+    val codeLo = if (cb.isEmpty) 0L else cb.map(_._2).min
+    val width = if (cb.isEmpty) 0 else Math.toIntExact(cb.map(_._2).max - codeLo + 1)
+    val lut = new Array[Long](Math.multiplyExact(Math.multiplyExact(ids.length, m), width))
+    val state = new Array[Byte](lut.length)
+    for (((_, vs), slot) <- batch.zipWithIndex; qv <- vs; (s, code, cent) <- cb) {
+      val i = (slot * m + s.toInt) * width + (code - codeLo).toInt
+      if (qv != null) {
+        lut(i) += math.floor(VectorFunctions.dot(
+          qv.slice((s * sub).toInt, (s * sub + sub).toInt), cent) * 1000000.0).toLong
+        state(i) = 2
+      } else if (state(i) == 0) state(i) = 1
     }
-    val lutRows = for ((id, vs) <- batch; qv <- vs; (s, code, cent) <- cb) yield {
-      val dotU = if (qv == null) null else math.floor(VectorFunctions.dot(
-        qv.slice((s * sub).toInt, (s * sub + sub).toInt), cent) * 1000000.0).toLong
-      Row(id, s, code, dotU)
-    }
-    val qid = queries.schema("query_id")
-    def local(rows: Seq[Row], fields: StructField*): DataFrame =
-      broadcast(spark.createDataFrame(rows.asJava, StructType(qid +: fields)))
-    val qcells = local(cellRows, StructField("centroid_id", IntegerType))
-    val lut = local(lutRows, StructField("s", LongType),
-      StructField("code", LongType), StructField("dot_u", LongType))
+    val hit = StructType(Seq(queries.schema("query_id"),
+      StructField("vec_id", LongType), StructField("dot_u", LongType)))
     // nprobe·|queries| cell ids -> a STATIC partition-pruning predicate on
     // the codes scan (bounded by the query batch, never by data)
-    val probed = cellRows.map(_.getInt(1)).distinct.sorted
-    val codes = spark.read.schema(CodesSchema).parquet(s"$dir/codes.parquet")
+    val probed = slotsByCell.keys.toSeq.sorted
+    val adc = spark.read.schema(CodesSchema).parquet(s"$dir/codes.parquet")
       .filter($"centroid_id".isin(probed.map(Integer.valueOf): _*))
-    val adc = codes.join(qcells, Seq("centroid_id"))
+      .flatMap { r =>
+        val s = if (r.isNullAt(1)) -1L else r.getLong(1)
+        val code = if (r.isNullAt(2)) -1L else r.getLong(2) - codeLo
+        if (s < 0 || s >= m || code < 0 || code >= width) Iterator.empty
+        else {
+          val at = s.toInt * width + code.toInt
+          val vecId = r.get(0)
+          slotsByCell.getOrElse(r.getInt(3), Array.emptyIntArray).iterator.flatMap { slot =>
+            val i = slot * m * width + at
+            if (state(i) == 0) None
+            else Some(Row(ids(slot), vecId, if (state(i) == 1) null else lut(i)))
+          }
+        }
+      }(Encoders.row(hit))
       .filter(if (excludeSelf) $"vec_id" =!= $"query_id" else lit(true))
-      .join(lut, Seq("query_id", "s", "code"))
       // one exchange serves both the ADC sum and the top-k window: a
       // map-side partial sum would shuffle m× fewer rows but costs a
       // second exchange, i.e. one more job per ask

@@ -36,8 +36,6 @@ object Dedup {
     * keeps both engines exact and identical.
     */
   val MinhashModulus = 2147483647L
-  def minhashA(j: Int): Long = (1000003L * (j + 1)) % MinhashModulus
-  def minhashB(j: Int): Long = 12345L + 7919L * j
 
   /** MinHash signature (array<bigint> of length numHashes) added as
     * `minhash`. Runs as ONE compiled loop per row via the native
@@ -209,15 +207,6 @@ object Dedup {
       Bridge.toExpr(textA), Bridge.toExpr(textB), n))
   }
 
-  /** The HOF formulation of [[jaccard]] — kept as the independent
-    * cross-check the native expression is spec-pinned against.
-    */
-  def jaccardHof(textA: Column, textB: Column, n: Int): Column = {
-    val sa = array_distinct(shinglesCol(textA, n))
-    val sb = array_distinct(shinglesCol(textB, n))
-    size(array_intersect(sa, sb)).cast("double") / size(array_union(sa, sb))
-  }
-
   /** Exact n-gram CONTAINMENT C(A,B) = |S_A ∩ S_B| / |S_A| — the
     * asymmetric near-superset signal Jaccard misses: a short document
     * quoted whole inside a long one scores containment ~1 while its
@@ -242,15 +231,6 @@ object Dedup {
     import org.apache.spark.sql.graft.Bridge
     Bridge.toColumn(org.apache.spark.sql.graft.expressions.ShinglePairScores(
       Bridge.toExpr(textA), Bridge.toExpr(textB), n))
-  }
-
-  /** The HOF formulation of [[containment]] — the independent cross-check
-    * the native expression is spec-pinned against.
-    */
-  def containmentHof(textA: Column, textB: Column, n: Int): Column = {
-    val sa = array_distinct(shinglesCol(textA, n))
-    val sb = array_distinct(shinglesCol(textB, n))
-    size(array_intersect(sa, sb)).cast("double") / size(sa)
   }
 
   /** 32-bit SimHash over whitespace tokens: bit k set iff the ±1 sum of bit

@@ -35,17 +35,6 @@ object QualitySignals {
       Bridge.toExpr(tokens), n))
   }
 
-  /** The HOF formulation of [[ngramsStrict]] — kept as the independent
-    * cross-check the native expression is spec-pinned against.
-    */
-  private[graft] def ngramsStrictHof(tokens: Column, n: Int): Column = {
-    require(n >= 1, "n must be >= 1")
-    val sz = size(tokens)
-    when(sz < n, array().cast("array<string>"))
-      .otherwise(transform(sequence(lit(1), sz - (n - 1)),
-        i => array_join(slice(tokens, i, lit(n)), " ")))
-  }
-
   // -------------------------------------------------------------------
   // PII scan + redaction. Deliberately simple, deterministic regexes that
   // parse identically under Java regex (Spark) and RE2 (DuckDB oracle):

@@ -68,12 +68,13 @@ object Retriever {
     * recall gap against the brute-force path on the same queries. Returns
     * (hits in rank order, assembled prompt).
     *
-    * Job shape per ask, six jobs: [[graft.index.AnnIndex.query]] collects
-    * the centroids and the codebook in one scan (one job) and ranks cells
-    * and builds the LUT on the driver; the prompt's collect then runs the
-    * broadcasts (probed cells, LUT, context text), the pruned codes scan
-    * with its one exchange, and the result stage. The k rows are put in
-    * rank order in a single partition, so no range-partitioned sort runs.
+    * Job shape per ask, three jobs: [[graft.index.AnnIndex.query]] takes
+    * the centroids and the codebook from its memo (one collect the first
+    * time a driver serves an index it did not build) and ranks cells and
+    * builds the LUT on the driver; the prompt's collect then runs the
+    * pruned codes scan with its one exchange, the context-text broadcast
+    * and the result stage. The k rows are put in rank order in a single
+    * partition, so no range-partitioned sort runs.
     */
   def askViaIndex(
       index: DataFrame,

@@ -157,6 +157,7 @@ class AnnIndexSpec extends AnyFunSuite {
         case Seq(a, b) => a >= b; case _ => true
       })
     }
+    org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(dir))
   }
 
   test("askViaIndex: retrieval runs off the persisted index; the context join prunes the corpus scan to (id, text); prompt assembles in rank order") {
@@ -188,9 +189,10 @@ class AnnIndexSpec extends AnyFunSuite {
       rows.map(_.getString(4)).toSeq)
     assert(prompt.startsWith(rows.map(_.getString(4)).mkString("\n")))
     assert(prompt.endsWith("\n\n Question: doc 7"))
+    org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(dir))
   }
 
-  test("askViaIndex runs at most 6 Spark jobs; the serve path runs no parquet schema-inference job") {
+  test("askViaIndex runs at most 3 Spark jobs; the serve path runs no parquet schema-inference job") {
     import spark.implicits._
     val (index, dir, embedder) = askFixture("graft_annjobs")
     val (prompt, jobs) = JobNames.during(spark.sparkContext) {
@@ -198,7 +200,7 @@ class AnnIndexSpec extends AnyFunSuite {
         index, s"$dir/idx", "doc 7", embedder, k = 3, nprobe = 3, m = 8, sub = 2)._2
     }
     assert(prompt.endsWith("\n\n Question: doc 7"))
-    assert(jobs.size <= 6, s"${jobs.size} jobs:\n" + jobs.mkString("\n"))
+    assert(jobs.size <= 3, s"${jobs.size} jobs:\n" + jobs.mkString("\n"))
     val (_, serveJobs) = JobNames.during(spark.sparkContext) {
       AnnIndex.query(spark, s"$dir/idx",
           Seq((0L, embedder.embedOne("doc 7").toSeq)).toDF("query_id", "qv"),
@@ -221,11 +223,12 @@ class AnnIndexSpec extends AnyFunSuite {
       m = m, sub = sub, kcode = 16)
     val cells = spark.read.parquet(s"$dir/idx/centroids.parquet").count().toInt
     def same(what: String, queries: DataFrame, k: Int, nprobe: Int,
-        excludeSelf: Boolean = false): Array[org.apache.spark.sql.Row] = {
-      val got = AnnIndex.query(spark, s"$dir/idx", queries, k, nprobe, m, sub, excludeSelf)
-        .collect().sortBy(r => (r.getLong(0), r.getLong(1)))
-      val want = relationalQuery(s"$dir/idx", queries, k, nprobe, m, sub, excludeSelf)
-        .collect().sortBy(r => (r.getLong(0), r.getLong(1)))
+        excludeSelf: Boolean = false, qm: Int = m): Array[org.apache.spark.sql.Row] = {
+      val res = AnnIndex.query(spark, s"$dir/idx", queries, k, nprobe, qm, sub, excludeSelf)
+      assert(res.schema("query_id").dataType == queries.schema("query_id").dataType, what)
+      val got = res.collect().sortBy(r => (String.valueOf(r.get(0)), r.getLong(1)))
+      val want = relationalQuery(s"$dir/idx", queries, k, nprobe, qm, sub, excludeSelf)
+        .collect().sortBy(r => (String.valueOf(r.get(0)), r.getLong(1)))
       assert(got.toSeq == want.toSeq, what)
       got
     }
@@ -252,7 +255,102 @@ class AnnIndexSpec extends AnyFunSuite {
     same("array<double> queries, excludeSelf",
       (0 until 6).map(i => (i.toLong, vec(i).map(_.toDouble))).toDF("query_id", "qv"),
       k = 10, nprobe = 4, excludeSelf = true)
+    val ints = same("int query_id",
+      Seq((0, vec(3)), (1, vec(77))).toDF("query_id", "qv"), k = 5, nprobe = 2)
+    assert(ints.length == 10 && ints.forall(_.get(0).isInstanceOf[Int]))
+    val nullId: Option[Long] = None
+    val kept = same("null query_id row",
+      Seq(nullId -> vec(3), Some(1L) -> vec(77)).toDF("query_id", "qv"), k = 5, nprobe = 2)
+    assert(kept.length == 5 && kept.forall(_.getLong(0) == 1L))
+    // the LUT covers s < 4; the inner join drops the codes of s = 4..7
+    same("query m smaller than the build's",
+      Seq((0L, vec(3)), (1L, vec(77))).toDF("query_id", "qv"), k = 5, nprobe = 3, qm = 4)
+    val twin = same("two query ids probing the same cells",
+      Seq((0L, vec(3)), (1L, vec(3)), (2L, vec(4))).toDF("query_id", "qv"), k = 5, nprobe = 3)
+    assert(twin.filter(_.getLong(0) == 0L).map(r => (r.getLong(2), r.getLong(3))).toSeq ==
+      twin.filter(_.getLong(0) == 1L).map(r => (r.getLong(2), r.getLong(3))).toSeq)
+    // vec 5 re-added: its rows span the base and the appended file, and
+    // the ADC sum adds both
+    AnnIndex.appendDelta(spark, s"$dir/idx", Seq((5L, vec(5))).toDF("vec_id", "embedding"),
+      m = m, sub = sub)
+    val twice = same("a vec_id appended twice",
+      Seq((0L, vec(5)), (1L, vec(6))).toDF("query_id", "qv"), k = 10, nprobe = cells)
+    assert(twice.exists(_.getLong(2) == 5L))
     org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(dir))
+  }
+
+  test("metadata memo: build seeds what a cold read of the directory returns, on both build paths") {
+    import spark.implicits._
+    val dir = java.nio.file.Files.createTempDirectory("graft_annmemo").toString
+    val emb = (0 until 80).map(i => (i.toLong, vec(i))).toDF("vec_id", "embedding")
+    def cold(idx: String): (Seq[(Int, Seq[Double])], Seq[((Long, Long), Seq[Double])]) = (
+      spark.read.parquet(s"$idx/centroids.parquet")
+        .select($"centroid_id", $"centroid".cast("array<double>")).as[(Int, Seq[Double])]
+        .collect().sortBy(_._1).toSeq,
+      spark.read.parquet(s"$idx/codebook.parquet")
+        .select($"s", $"code", $"cent".cast("array<double>")).as[(Long, Long, Seq[Double])]
+        .collect().map { case (s, c, v) => (s, c) -> v }.sortBy(_._1).toSeq)
+    try {
+      for ((path, limit) <- Seq("local" -> None, "distributed" -> Some("0"))) {
+        limit.foreach(spark.conf.set("spark.graft.localRowLimit", _))
+        try AnnIndex.build(emb, s"$dir/$path", m = 8, sub = 2, kcode = 16)
+        finally spark.conf.unset("spark.graft.localRowLimit")
+        val ((cents, cb), jobs) = JobNames.during(spark.sparkContext) {
+          AnnIndex.metadata(spark, s"$dir/$path", 8)
+        }
+        assert(jobs.isEmpty, s"$path: the first read after build ran jobs:\n" + jobs.mkString("\n"))
+        val (wantCents, wantCb) = cold(s"$dir/$path")
+        val gotCents = cents.map { case (c, v) => c -> v.toSeq }.sortBy(_._1).toSeq
+        val gotCb = cb.map { case (s, c, v) => (s, c) -> v.toSeq }.sortBy(_._1)
+        assert(gotCents.map(_._1) == wantCents.map(_._1), path)
+        assert(gotCb.map(_._1) == wantCb.map(_._1), path)
+        // element by element as doubles: bit-equal, NaN included
+        for (((_, g), (_, w)) <- gotCents.zip(wantCents) ++ gotCb.zip(wantCb)) {
+          assert(g.length == w.length, path)
+          g.zip(w).foreach { case (a, b) =>
+            assert(java.lang.Double.doubleToLongBits(a) == java.lang.Double.doubleToLongBits(b), path)
+          }
+        }
+      }
+    } finally org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(dir))
+  }
+
+  test("metadata memo: a second query on an unchanged index runs no metadata job; a rebuilt or replaced index is re-read") {
+    import spark.implicits._
+    val (m, sub) = (8, 2)
+    val dir = java.nio.file.Files.createTempDirectory("graft_annstale").toString
+    def corpus(seed: Int): DataFrame =
+      (0 until 80).map(i => (i.toLong, vec(i * 7 + seed))).toDF("vec_id", "embedding")
+    val queries = Seq((0L, vec(3)), (1L, vec(77))).toDF("query_id", "qv")
+    def rows(df: DataFrame): Seq[String] = df.collect().map(_.toString).sorted.toSeq
+    def served(idx: String): Seq[String] = rows(AnnIndex.query(spark, idx, queries, 5, 3, m, sub))
+    def fromAnnIndex(jobs: Seq[Seq[String]]): Seq[String] = jobs.flatten.filter(n =>
+      n.startsWith("collect at AnnIndex") || n.startsWith("parquet at AnnIndex"))
+    try {
+      AnnIndex.build(corpus(0), s"$dir/a", m = m, sub = sub, kcode = 16)
+      // a copy this driver never built: its first query reads the metadata
+      org.apache.commons.io.FileUtils.copyDirectory(new java.io.File(s"$dir/a"),
+        new java.io.File(s"$dir/copy"))
+      val (first, firstJobs) = JobNames.during(spark.sparkContext)(served(s"$dir/copy"))
+      assert(fromAnnIndex(firstJobs).nonEmpty, firstJobs.mkString("\n"))
+      val (second, secondJobs) = JobNames.during(spark.sparkContext)(served(s"$dir/copy"))
+      assert(fromAnnIndex(secondJobs).isEmpty, secondJobs.mkString("\n"))
+      assert(first == second && first == rows(relationalQuery(s"$dir/copy", queries, 5, 3, m, sub)))
+      // rebuild a different corpus into the same directory
+      AnnIndex.build(corpus(1), s"$dir/a", m = m, sub = sub, kcode = 16)
+      val rebuilt = served(s"$dir/a")
+      assert(rebuilt == rows(relationalQuery(s"$dir/a", queries, 5, 3, m, sub)))
+      assert(rebuilt != first)
+      // replace the copy's files behind this driver's back: the memo entry
+      // filled from the old files must miss
+      AnnIndex.build(corpus(2), s"$dir/b", m = m, sub = sub, kcode = 16)
+      org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(s"$dir/copy"))
+      org.apache.commons.io.FileUtils.copyDirectory(new java.io.File(s"$dir/b"),
+        new java.io.File(s"$dir/copy"))
+      val replaced = served(s"$dir/copy")
+      assert(replaced == rows(relationalQuery(s"$dir/copy", queries, 5, 3, m, sub)))
+      assert(replaced != first)
+    } finally org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(dir))
   }
 
   test("q210's index directory is deleted by releaseStaging") {
@@ -321,6 +419,7 @@ class AnnIndexSpec extends AnyFunSuite {
         assert(got((id, s.toLong)) == want(s), s"vec $id sub $s")
       }
     }
+    org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(dir))
   }
 
   test("fused encode: build and appendDelta write the relational assign ⋈ encode rows, degenerate deltas included") {
@@ -380,7 +479,7 @@ class AnnIndexSpec extends AnyFunSuite {
     org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(dir))
   }
 
-  test("appendDelta runs at most 4 Spark jobs and no parquet schema-inference job") {
+  test("appendDelta runs at most 3 Spark jobs and no parquet schema-inference job") {
     import spark.implicits._
     val dir = java.nio.file.Files.createTempDirectory("graft_anndeltajobs").toString
     AnnIndex.build((0 until 80).map(i => (i.toLong, vec(i))).toDF("vec_id", "embedding"),
@@ -389,7 +488,7 @@ class AnnIndexSpec extends AnyFunSuite {
     val (_, jobs) = JobNames.callStacks(spark.sparkContext) {
       AnnIndex.appendDelta(spark, s"$dir/idx", delta, m = 8, sub = 2)
     }
-    assert(jobs.size <= 4, s"${jobs.size} jobs:\n" + jobs.map(_.map(_.takeWhile(_ != '\n'))).mkString("\n"))
+    assert(jobs.size <= 3, s"${jobs.size} jobs:\n" + jobs.map(_.map(_.takeWhile(_ != '\n'))).mkString("\n"))
     assert(!jobs.flatten.exists(_.contains("DataFrameReader.parquet")), jobs.mkString("\n"))
     assert(spark.read.parquet(s"$dir/idx/codes.parquet").count() == 8L * 100)
     org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(dir))
@@ -442,6 +541,7 @@ class AnnIndexSpec extends AnyFunSuite {
           s"q=$qid rank=${i + 1}: got ${got((qid, i + 1L))}, want ($id, $u)")
       }
     }
+    org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(dir))
   }
 
   test("PqCodebook.train: iters=0 is the seed grid; training cuts quantization error; exact clone invariance") {

@@ -217,9 +217,9 @@ class FunnelIndexBatchSpec extends AnyFunSuite {
       s" $frag " + (40 until 80).map(i => s"tail$i item$i").mkString(" ")
     val df = Seq((frag, host)).toDF("a", "b")
       .select(
-        graft.operators.Dedup.containmentHof(col("a"), col("b"), 5).as("c_ab"),
-        graft.operators.Dedup.containmentHof(col("b"), col("a"), 5).as("c_ba"),
-        graft.operators.Dedup.jaccardHof(col("a"), col("b"), 5).as("jac"))
+        ParityRefs.containmentHof(col("a"), col("b"), 5).as("c_ab"),
+        ParityRefs.containmentHof(col("b"), col("a"), 5).as("c_ba"),
+        ParityRefs.jaccardHof(col("a"), col("b"), 5).as("jac"))
       .collect()(0)
     assert(df.getDouble(0) > 0.95, s"fragment-in-host containment ${df.getDouble(0)}")
     assert(df.getDouble(1) < 0.3, s"host-in-fragment containment ${df.getDouble(1)}")

@@ -57,7 +57,7 @@ class QualitySignalsSpec extends AnyFunSuite {
       val tk = graft.operators.TextAnalysis.tokensCol($"text")
       val nat = docs.select($"id", QualitySignals.ngramsStrict(tk, n).as("g"))
         .collect().map(r => (r.getLong(0), r.getSeq[String](1))).toSeq.sortBy(_._1)
-      val hof = docs.select($"id", QualitySignals.ngramsStrictHof(tk, n).as("g"))
+      val hof = docs.select($"id", ParityRefs.ngramsStrictHof(tk, n).as("g"))
         .collect().map(r => (r.getLong(0), r.getSeq[String](1))).toSeq.sortBy(_._1)
       assert(nat === hof, s"n=$n")
     }

@@ -40,7 +40,7 @@ object SketchProps extends Properties("SketchExpressions") {
     val bases = refShingles(s, shingle)
       .map(sh => HashFunctions.stableHash64(sh) % Dedup.MinhashModulus)
     (0 until numHashes).map { j =>
-      bases.map(h => (h * Dedup.minhashA(j) + Dedup.minhashB(j)) % Dedup.MinhashModulus).min
+      bases.map(h => (h * ParityRefs.minhashA(j) + ParityRefs.minhashB(j)) % Dedup.MinhashModulus).min
     }.toVector
   }
 

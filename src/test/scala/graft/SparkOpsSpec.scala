@@ -382,7 +382,7 @@ class SparkOpsSpec extends AnyFunSuite {
           s => graft.functions.HashFunctions.stableHash64(s) % graft.operators.Dedup.MinhashModulus))
       .withColumn("minhash", array((0 until 4).map { j =>
         array_min(transform(col("shash"), h =>
-          (h * graft.operators.Dedup.minhashA(j) + graft.operators.Dedup.minhashB(j)) %
+          (h * ParityRefs.minhashA(j) + ParityRefs.minhashB(j)) %
             graft.operators.Dedup.MinhashModulus))
       }: _*))
       .select($"id", $"minhash").collect().map(r => r.getLong(0) -> r.getSeq[Long](1)).toMap
@@ -406,13 +406,13 @@ class SparkOpsSpec extends AnyFunSuite {
     val df = pairs.toDF("ta", "tb")
     val both = df.select(
         graft.operators.Dedup.jaccard($"ta", $"tb", 4).as("native"),
-        graft.operators.Dedup.jaccardHof($"ta", $"tb", 4).as("hof"))
+        ParityRefs.jaccardHof($"ta", $"tb", 4).as("hof"))
       .collect().map(r => (r.getDouble(0), r.getDouble(1)))
     both.foreach { case (n, h) => assert(n == h, s"native $n != hof $h") }
     // same pin for the asymmetric containment twin (same shingle sets)
     val cont = df.select(
         graft.operators.Dedup.containment($"ta", $"tb", 4).as("native"),
-        graft.operators.Dedup.containmentHof($"ta", $"tb", 4).as("hof"))
+        ParityRefs.containmentHof($"ta", $"tb", 4).as("hof"))
       .collect().map(r => (r.getDouble(0), r.getDouble(1)))
     cont.foreach { case (n, h) => assert(n == h, s"containment native $n != hof $h") }
     // the one-pass pair scorer is bit-identical to the three singles
