@@ -3,6 +3,7 @@
 # list from build.sbt, classes + Spark jars on the classpath.
 # Usage: scripts/run_main.sh <mainClass> [args...]
 set -e
+ROOT="$(cd "$(dirname "${BASH_SOURCE[0]}")/.." && pwd)"
 CLS="$1"; shift
 exec java \
   --add-opens java.base/java.lang=ALL-UNNAMED \
@@ -20,5 +21,5 @@ exec java \
   --add-opens java.base/sun.util.calendar=ALL-UNNAMED \
   -Dspark.ui.enabled=false -Dspark.sql.session.timeZone=UTC \
   -Xmx"${SPARK_DRIVER_MEM:-8g}" \
-  -cp /root/repo/target/scala-2.13/classes:/opt/spark/jars/'*' \
+  -cp "$ROOT/target/scala-2.13/classes":/opt/spark/jars/'*' \
   "$CLS" "$@"

@@ -22,6 +22,12 @@ import org.apache.spark.sql.SparkSession
   * evidence stays: /proc/loadavg snapshots at start/end, per-pass
   * totals, the contended flag (+1 pass when the machine starts busy),
   * and the contended-run divert that protects an uncontended record.
+  *
+  * CLONE SCALE: with `SPARK_GRAFT_SCALE_COPIES` = c > 1 the same pass runs
+  * over a c× [[Tables.cloneDir]] clone of the sf dir (written before the
+  * passes, deleted at exit), so the paths above the in-process size gates
+  * run the shipped queries unchanged; the record carries `"copies"` and
+  * goes where a filtered record goes (bench/clone_scale.md).
   */
 object Bench {
 
@@ -141,12 +147,24 @@ object Bench {
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
+    // clone scale: above 1 copy the pass runs over a Tables.cloneDir clone
+    // of the sf dir (written untimed, deleted at exit), so the paths above
+    // the size gates run the shipped queries unchanged
+    val copies = sys.env.getOrElse("SPARK_GRAFT_SCALE_COPIES", "1").toInt.max(1)
+    val runDir = if (copies > 1) Tables.cloneDir(spark, sfDir, copies) else sfDir
+    try run(spark, sfDir, runDir, copies, cpus, passes)
+    finally if (runDir != sfDir)
+      org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(runDir))
+  }
+
+  private def run(spark: SparkSession, sfDir: String, runDir: String,
+      copies: Int, cpus: String, passes: Int): Unit = {
     val loadStart = loadavg()
     val (calSingle, calWall, effCores) = calibrate(cpus.toInt)
 
     // warm-up: touch every table once (scan + codegen init, no shuffle)
     Tables.Names.foreach { n =>
-      try Tables.load(spark, sfDir, n).limit(1).count()
+      try Tables.load(spark, runDir, n).limit(1).count()
       catch { case _: Throwable => () }
     }
 
@@ -162,18 +180,28 @@ object Bench {
     def wanted(name: String): Boolean =
       only.forall(_.exists(p => name == p || name.startsWith(p)))
     val ordered = SparkEntry.queries.toSeq.filter(kv => wanted(kv._1)).sortBy(_._1)
-    def onePass(): Seq[(String, Double)] = ordered.map { case (name, fn) =>
+    // each output's row count rides the write as an observed metric (no
+    // second evaluation); -1 marks a failed attempt
+    def onePass(): Seq[(String, Double, Long)] = ordered.map { case (name, fn) =>
+      // the query's jobs carry its name as their job group, so an event
+      // log attributes every job (and each size gate's decision) to it
+      spark.sparkContext.setJobGroup(name, name)
       val t0 = System.nanoTime()
+      val obs = org.apache.spark.sql.Observation(name)
       val ok =
-        try { fn(spark, sfDir).write.mode("overwrite").format("noop").save(); true }
-        catch { case e: Throwable =>
+        try {
+          fn(spark, runDir).observe(obs, org.apache.spark.sql.functions.count("*").as("rows"))
+            .write.mode("overwrite").format("noop").save()
+          true
+        } catch { case e: Throwable =>
           System.err.println(s"[bench] $name FAILED: ${e.getMessage}"); false
         }
       val elapsed = (System.nanoTime() - t0) / 1e9
       // outside the timed region: bookkeeping, not query work — a staged
       // cache (q56's band view) must not skew every LATER query's memory
       SparkEntry.releaseStaging(spark)
-      name -> (if (ok) elapsed else -1.0)
+      spark.sparkContext.clearJobGroup()
+      if (ok) (name, elapsed, obs.get("rows").asInstanceOf[Long]) else (name, -1.0, -1L)
     }
     // contention hygiene (round-4 lesson: a pass run at loadavg >2 produced
     // six phantom sub-1.5 s regressions): when the machine is already busy
@@ -194,6 +222,9 @@ object Bench {
     val loadEnd = loadavg()
     val qs = results.map { case (k, v) => "\"" + k + "\":" + v }
       .mkString("{", ",", "}")
+    val rows = ordered.map(_._1).zipWithIndex.map { case (name, i) =>
+      "\"" + name + "\":" + allPasses.map(_(i)._3).max
+    }.mkString("{", ",", "}")
     // failed queries carry the -1 sentinel in `queries` but must not
     // subtract from the headline total; surface them as a count instead
     val total = results.collect { case (_, v) if v >= 0 => v }.sum
@@ -201,28 +232,29 @@ object Bench {
     // per-pass totals expose inter-pass variance directly — a reader can see
     // machine contention in the record instead of trusting loadavg alone
     val perPass = allPasses
-      .map(p => p.collect { case (_, v) if v >= 0 => v }.sum)
+      .map(p => p.collect { case (_, v, _) if v >= 0 => v }.sum)
       .mkString("[", ",", "]")
     // EVERY attempt goes into the committed record — the anti-cherry-pick
     // half of the protocol (readers can recompute min/median/max per query)
     val perPassQueries = allPasses.map(p =>
-      p.map { case (k, v) => "\"" + k + "\":" + v }.mkString("{", ",", "}"))
+      p.map { case (k, v, _) => "\"" + k + "\":" + v }.mkString("{", ",", "}"))
       .mkString("[", ",", "]")
     // plain Double interpolation everywhere: Double.toString is
     // locale-independent, where an f-interpolator would emit comma
     // decimals (invalid JSON) under a comma-decimal default locale
     val cal = s""""cal_single_s":${round3(calSingle)},"cal_parallel_s":${round3(calWall)},"effective_cores":${round1(effCores)}"""
-    val record = s"""{"metric":"total","value":$total,"unit":"sec","stat":"median","failures":$failures,"passes":$effPasses,"contended":$contended,"totals_per_pass":$perPass,"load_start":"$loadStart","load_end":"$loadEnd",$cal,"queries":$qs,"queries_per_pass":$perPassQueries,"sf":"$sfDir"}"""
+    val record = s"""{"metric":"total","value":$total,"unit":"sec","stat":"median","failures":$failures,"passes":$effPasses,"contended":$contended,"totals_per_pass":$perPass,"load_start":"$loadStart","load_end":"$loadEnd",$cal,"queries":$qs,"queries_per_pass":$perPassQueries,"rows":$rows,"sf":"$sfDir","copies":$copies}"""
     println(record)
     // the driver's captured stdout tail has truncated alphabetically-early
     // per-query times in past rounds — persist the COMPLETE record in-repo
     // too (path overridable; writing must never fail the bench itself).
     // recordTarget diverts a contended run away from an uncontended record,
-    // and an SPARK_GRAFT_ONLY-filtered run must NEVER touch the committed
-    // record paths (a partial total would replace the full-suite number):
+    // and a SPARK_GRAFT_ONLY-filtered or clone-scale run must NEVER touch
+    // the committed record paths (its total is not the 1× full-suite number):
     // it defaults to /tmp and skips the stable summary below.
+    val partial = only.isDefined || copies > 1
     var fullPath = sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT",
-      if (only.isDefined) "/tmp/bench_partial.json" else "bench/bench_full.json")
+      if (partial) "/tmp/bench_partial.json" else "bench/bench_full.json")
     try {
       val out = recordTarget(java.nio.file.Paths.get(fullPath), contended)
       fullPath = out.toString
@@ -237,7 +269,7 @@ object Bench {
     // to a stable in-repo path so a tail-parse failure is recoverable
     val compact = compactRecord(results, total, failures, effPasses, contended,
       perPass, loadStart, loadEnd, sfDir, fullPath, effectiveCores = effCores)
-    if (only.isEmpty)
+    if (!partial)
       try writeSummary(compact, contended)
       catch { case e: Throwable =>
         System.err.println(s"[bench] summary write failed: ${e.getMessage}")

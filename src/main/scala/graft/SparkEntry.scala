@@ -100,12 +100,15 @@ object SparkEntry {
     * recompute the corpus scan per join side — so harnesses (Bench,
     * Verify) call this after each query's write instead; otherwise the
     * band relation rides executor memory into every subsequent query of
-    * the pass. */
+    * the pass. The [[graft.index.AnnIndex]] metadata memo forgets the
+    * indexes under the deleted directories. */
   def releaseStaging(s: SparkSession): Unit = {
     s.sql("UNCACHE TABLE IF EXISTS v_sql_bands")
     s.sql("DROP TABLE IF EXISTS sql_bands_stage")
-    stagedDirs.synchronized(stagedDirs.remove(s)).getOrElse(Nil)
-      .foreach(d => org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(d)))
+    stagedDirs.synchronized(stagedDirs.remove(s)).getOrElse(Nil).foreach { d =>
+      org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(d))
+      graft.index.AnnIndex.forget(d)
+    }
   }
 
   private val stagedDirs = scala.collection.mutable.Map.empty[SparkSession, List[String]]
@@ -122,10 +125,11 @@ object SparkEntry {
     d
   }
 
-  /** q176's body against any events relation — factored so [[ScaleProbe]]
-    * measures exactly the shipped IVM refresh on a 10× event stream
-    * (closed forms: counts and micro-sums scale by the copy factor while
-    * the registers — a function of the distinct-user SET — are unchanged).
+  /** q176's body against any events relation — factored so
+    * `CloneClosedFormSpec` checks the shipped IVM refresh on exact event
+    * copies (closed forms: counts and micro-sums scale by the copy factor
+    * while the registers — a function of the distinct-user SET — are
+    * unchanged).
     * History is everything before `tcutNs` (default 2024-01-25 UTC), the
     * delta everything after; the refresh merges the two aggregates and
     * never rescans the union.
@@ -199,11 +203,10 @@ object SparkEntry {
           .cast("long").as("ham_d"))
   }
 
-  /** q192's body against any events relation — factored so [[ScaleProbe]]
-    * measures exactly the shipped sweep-line on a 10× user population
-    * (closed form under exact copies with disjoint user ids: every
-    * endpoint multiset scales by the copy factor, so per-bucket peaks and
-    * start/end counts all scale by exactly c).
+  /** q192's body against any events relation. Closed form under exact
+    * copies with disjoint user ids ([[Tables.cloneDir]],
+    * `CloneClosedFormSpec`): every endpoint multiset scales by the copy
+    * factor, so per-bucket peaks and start/end counts all scale by c.
     */
   def peakConcurrency(ev: DataFrame): DataFrame = {
     val s = ev.sparkSession
@@ -218,12 +221,13 @@ object SparkEntry {
       .orderBy($"bucket")
   }
 
-  /** q193's body against any documents relation — factored so [[ScaleProbe]]
-    * runs exactly the shipped strip on a 10× corpus (closed form under
-    * exact copies with fresh doc ids: df and n_docs_src both scale by c so
-    * the template SET is invariant — requiring every source to hold ≥ 101
-    * docs so the 1% ratio, not the minDocs floor, is binding at both
-    * scales — while affected docs, instances, and tokens scale by c).
+  /** q193's body against any documents relation — factored so
+    * `CloneClosedFormSpec` runs the shipped strip on regrouped sources
+    * (closed form under exact copies with fresh doc ids: df and
+    * n_docs_src both scale by c so the template SET is invariant —
+    * requiring every source to hold ≥ 101 docs so the 1% ratio, not the
+    * minDocs floor, is binding at both scales — while affected docs,
+    * instances, and tokens scale by c).
     */
   def boilerplateStrip(docs: DataFrame): DataFrame = {
     val s = docs.sparkSession
@@ -278,7 +282,7 @@ object SparkEntry {
   }
 
   /** q143's body against any embeddings relation — factored out so
-    * [[ScaleProbe]] measures exactly the shipped shape on a 10× corpus.
+    * `CloneClosedFormSpec` checks the shipped shape on a 4× clone.
     * Cell-restricted mutual-kNN + label purity: the cell count is
     * data-driven (k = 0 → [[graft.operators.IvfIndex.autoK]], one count
     * action), so cell interiors stay ~[[graft.operators.IvfIndex.DefaultTargetCellSize]]
@@ -348,20 +352,19 @@ object SparkEntry {
   }
 
   /** The q56 SQL-text dedup pipeline against an existing `v_documents` temp
-    * view — factored out so [[ScaleProbe]] measures exactly the shipped
-    * statements. The band relation must be staged so the corpus scan +
-    * MinHash pass runs ONCE (Spark inlines WITH-CTEs into every consumer,
-    * so a single-statement form would compute signatures once per self-join
+    * view. The band relation must be staged so the corpus scan + MinHash
+    * pass runs ONCE (Spark inlines WITH-CTEs into every consumer, so a
+    * single-statement form would compute signatures once per self-join
     * side). Staging is chosen from the source relation's estimated size
-    * against `spark.graft.sqlDedup.autoTableBytes` (default 4 MiB — between
-    * the bench corpus where cache measured faster and the 10× probe corpus
-    * where CTAS did; any production corpus is far above):
+    * against `autoTableBytes` (4 MiB — between the bench corpus where cache
+    * measured faster and its 10× clone where CTAS did; any production
+    * corpus is far above; specs pass 1 to force the CTAS path):
     *
     *  - at or below it, an eagerly-cached temp view. Wins interactively at
-    *    bench scale (no disk round-trip), but ScaleProbe measured it LOSING
-    *    at 10× (61-72 s vs 34-51 s): the in-memory row cache feeds both
-    *    join sides where the CTAS variant's self-join probes compressed
-    *    columnar parquet scans.
+    *    bench scale (no disk round-trip), but measured LOSING at 10× the
+    *    sf0.1 corpus (61-72 s vs 34-51 s): the in-memory row cache feeds
+    *    both join sides where the CTAS variant's self-join probes
+    *    compressed columnar parquet scans.
     *  - above it, a parquet CTAS (`sql_bands_stage`). The 100 TB deployment
     *    shape: the band relation lands columnar-compressed on storage the
     *    executors scan independently, nothing pins executor memory across
@@ -374,12 +377,13 @@ object SparkEntry {
     * view is expanded, which defeats the cache manager's
     * canonicalized-plan match and silently recomputes.
     */
-  def sqlDedupPipeline(s: SparkSession): DataFrame = {
+  private[graft] def sqlDedupPipeline(s: SparkSession,
+      autoTableBytes: Long = 4L << 20): DataFrame = {
     graft.functions.VectorFunctions.register(s)
     releaseStaging(s) // clean slate per run
     // file-stats estimate of the scan feeding the bands
-    val useTable = s.table("v_documents").queryExecution.optimizedPlan.stats.sizeInBytes >
-      s.conf.get("spark.graft.sqlDedup.autoTableBytes", (4L << 20).toString).toLong
+    val useTable =
+      s.table("v_documents").queryExecution.optimizedPlan.stats.sizeInBytes > autoTableBytes
     val body = sqlBandsBodyN(s.sparkContext.defaultParallelism)
     val stage =
       if (useTable) {

@@ -25,6 +25,53 @@ object Tables {
     if (name == "events") normalizeEventTs(df) else df
   }
 
+  /** Id stride between the copies [[cloneDir]] writes. A power of ten, so
+    * the fixture class moduli keyed on ids (WarcReader's and the link
+    * fixture's `% 4` / `% 8`) divide it and every per-class count scales
+    * exactly.
+    */
+  val CloneOffset: Long = 10000000L
+
+  /** The columns [[cloneDir]] offsets by `i · CloneOffset` in copy `i`.
+    * Ids of the RAG and event tables stay disjoint across copies; among
+    * the TPC-H tables only the two fact tables are copied, with their
+    * order key offset, so every fact–fact and fact–dimension join scales
+    * exactly ×copies. Tables not named here are written once.
+    */
+  private val cloneKeys: Map[String, Seq[String]] = Map(
+    "documents" -> Seq("doc_id"),
+    "embeddings" -> Seq("vec_id"),
+    "events" -> Seq("event_id", "user_id"),
+    "orders" -> Seq("o_orderkey"),
+    "lineitem" -> Seq("l_orderkey"))
+
+  /** Write a `copies`× clone of the sf directory `srcDir` into a fresh
+    * temp directory and return its path (the caller deletes it). Every
+    * copy is an exact copy of its table with the [[cloneKeys]] policy
+    * applied, so shipped queries over the clone have closed forms in the
+    * 1× output (`CloneClosedFormSpec`): counts ×c, pairs c²·P + C(c,2)·n,
+    * ratios invariant, survivors in copy 0. Columns are read and written
+    * with their physical types, so [[load]] normalizes the clone exactly
+    * as it normalizes the source.
+    */
+  def cloneDir(spark: SparkSession, srcDir: String, copies: Int): String = {
+    import org.apache.spark.sql.functions.{col, lit}
+    require(copies >= 1, s"copies must be >= 1, got $copies")
+    val out = java.nio.file.Files.createTempDirectory("graft_clone_").toString
+    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+    Names.foreach { name =>
+      val src = spark.read.parquet(s"$srcDir/$name.parquet")
+      val keys = cloneKeys.getOrElse(name, Nil)
+      val cloned = if (keys.isEmpty) src else (0 until copies).map { i =>
+        keys.foldLeft(src) { (df, k) =>
+          df.withColumn(k, (col(k) + lit(i * CloneOffset)).cast(src.schema(k).dataType))
+        }
+      }.reduce(_ unionByName _)
+      cloned.write.parquet(s"$out/$name.parquet")
+    }
+    out
+  }
+
   /** Rewrite a timestamp-typed `ts` to epoch-nano longs. The NTZ branch is
     * deliberately TIMEZONE-FREE: an NTZ→TIMESTAMP cast would re-interpret
     * the wall-clock in the session zone (a silent ±hours shift anywhere

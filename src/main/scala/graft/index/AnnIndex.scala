@@ -131,6 +131,17 @@ object AnnIndex {
     */
   private val memo = new ConcurrentHashMap[String, (Seq[(String, Long, Long)], Meta)]()
 
+  /** Drop the memo entries of `dir` and of every index dir under it: for
+    * callers deleting a directory that held indexes
+    * ([[graft.SparkEntry.releaseStaging]]), whose entries could never be
+    * hit again.
+    */
+  private[graft] def forget(dir: String): Unit =
+    memo.keySet.removeIf(k => k == dir || k.startsWith(dir.stripSuffix("/") + "/"))
+
+  /** Memo entries held; for specs. */
+  private[graft] def memoSize: Int = memo.size
+
   /** (path, length, modification time) of every data file under the
     * centroids and codebook relations of `dir`: one Hadoop listing per
     * relation, no Spark job. Every write of a relation makes new part

@@ -19,7 +19,7 @@ import graft.functions.HashFunctions
   * the first grouped aggregate; all statistics run on histograms
   * (distinct-value-sized), calendar grids, or fixed bins. That makes each
   * metric closed-form predictable under c-fold corpus cloning — the
-  * ScaleProbe hook: counts scale exactly ×c, ratio statistics (AUC,
+  * `CloneClosedFormSpec` hook: counts scale exactly ×c, ratio statistics (AUC,
   * t-closeness, MAPE, calibration) are invariant because floor(a·c/(b·c))
   * = floor(a/b) exactly.
   */

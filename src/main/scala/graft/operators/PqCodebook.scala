@@ -23,7 +23,7 @@ import graft.functions.VectorFunctions
   * is the exact BIGINT sum divided (in IEEE double, same expression both
   * engines) by the exact count. Exact integer sums also make the codebook
   * invariant under exact corpus cloning (10·Σ / 10·n ≡ Σ/n in correctly-
-  * rounded division — the ScaleProbe closed form). |component| ≤ ~2 in
+  * rounded division — pinned at test scale in AnnIndexSpec). |component| ≤ ~2 in
   * micro-units and clusters ≤ 2^40 rows keep the sums far inside the
   * double-exact 2^53 window.
   *

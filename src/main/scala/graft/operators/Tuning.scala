@@ -1,6 +1,7 @@
 package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.catalyst.plans.logical._
 
 /** Scale-adaptive tuning helpers shared by the query suite.
   *
@@ -17,15 +18,11 @@ import org.apache.spark.sql.{Column, DataFrame}
   */
 object Tuning {
 
-  /** Target fan-out for compute-bound stages: `spark.graft.spreadPartitions`
-    * when set, else the cluster's default parallelism (local[N] → N; a real
-    * cluster → total executor cores).
+  /** Target fan-out for compute-bound stages: the cluster's default
+    * parallelism (local[N] → N; a real cluster → total executor cores).
     */
-  def spreadPartitions(df: DataFrame): Int = {
-    val spark = df.sparkSession
-    spark.conf.getOption("spark.graft.spreadPartitions").map(_.toInt)
-      .getOrElse(spark.sparkContext.defaultParallelism)
-  }
+  def spreadPartitions(df: DataFrame): Int =
+    df.sparkSession.sparkContext.defaultParallelism
 
   /** Hash-repartition `df` on `keys` to [[spreadPartitions]] — but ONLY
     * when the incoming layout is narrower than that: a one-split small
@@ -33,18 +30,32 @@ object Tuning {
     * already yields more partitions passes through untouched (no exchange
     * added). Row-identical either way; this only moves rows.
     *
-    * CALLER CONTRACT: `df` must be exchange-free (scan / project / filter
-    * / generate lineage). The partition probe plans the input via
-    * `df.rdd`; on an exchange-bearing plan AQE's `execute()` would
-    * MATERIALIZE the upstream stages — for those, use a plain explicit-N
-    * `repartition(spreadPartitions(df), …)` instead.
+    * The partition probe plans the input via `df.rdd`, and on a plan with
+    * an exchange AQE's `execute()` would MATERIALIZE the upstream stages.
+    * So the probe runs only on exchange-free lineage (scan / project /
+    * filter / generate / union); any other input takes the plain
+    * explicit-N `repartition(spreadPartitions(df), …)`, which runs no job.
     */
   def spread(df: DataFrame, keys: Column*): DataFrame = {
     val target = spreadPartitions(df)
-    if (df.rdd.getNumPartitions >= target) df
+    if (!hasExchange(df.queryExecution.analyzed) &&
+      df.rdd.getNumPartitions >= target) df
     else if (keys.isEmpty) df.repartition(target)
     else df.repartition(target, keys: _*)
   }
+
+  /** Whether planning `plan` inserts a shuffle: any repartition,
+    * aggregate, join, set operation, global sort, window, distinct or
+    * global limit in its lineage.
+    */
+  private def hasExchange(plan: LogicalPlan): Boolean =
+    plan.find {
+      case _: RepartitionOperation | _: RebalancePartitions | _: Aggregate |
+          _: Join | _: Window | _: Distinct | _: Deduplicate | _: GlobalLimit |
+          _: Intersect | _: Except => true
+      case s: Sort => s.global
+      case _ => false
+    }.isDefined
 
   /** [[spread]] keyed on doc_id — the common "spread the per-document
     * codec work" shape (the q90 lesson with a session-derived fan-out).

@@ -681,7 +681,7 @@ private[graft] object AnnQueries {
     // (the 100 TB point — ~8 bytes/vector resident vs 256), the LUT is
     // queries×128 rows broadcast, ADC is one broadcast join + a
     // partial-agg sum keyed (query, vec), and each train iteration's
-    // corpus-side work is ONE sub-vector scan (ScaleProbe pins the
+    // corpus-side work is ONE sub-vector scan (AnnIndexSpec pins the
     // clone-invariance closed form). Output: recall@10 of the
     // compressed scan vs the exact MIPS truth per query.
     "q178_pq_ann" -> ((s, dir) => {

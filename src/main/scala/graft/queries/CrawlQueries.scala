@@ -22,15 +22,15 @@ private[graft] object CrawlQueries {
     * percent escape, parent-relative (`../`), query-only carrying a
     * tracking param, a SINGLE-QUOTED path-absolute and an UNQUOTED
     * relative href (the round-14 attribute forms — both same-host so the
-    * q284/ScaleProbe host-graph quotient is untouched), fragment-only,
+    * q284 host-graph quotient is untouched), fragment-only,
     * and a non-hierarchical `mailto:` that resolution passes through and
     * the http(s) filter drops.
     *
     * Round 15 layers `<base href>` (WHATWG fallback-base order, the
     * round-14 verdict's top coverage gap): doc_id%4==1 pages declare an
     * ABSOLUTE base on another host — `basehost{m%3}.org` (keyed off `m`
-    * so the q284/ScaleProbe host-graph stays a corpus quotient; the
-    * SELECTOR modulus is 4 because it must divide the probe's 10⁷ id
+    * so the q284 host-graph stays a corpus quotient; the
+    * SELECTOR modulus is 4 because it must divide the clone's 10⁷ id
     * offset — per-copy counts of base-carrying docs must be EXACT for
     * the link-mass closure) — plus a SECOND `<base>` that must be
     * ignored (first-wins); doc_id%4==3 pages declare a RELATIVE base
@@ -75,11 +75,10 @@ private[graft] object CrawlQueries {
   }
 
   /** Host-level link edges of [[linkFixture]] pages: (src_host, dst_host,
-    * n_links), self-edges dropped. Shared by q284 and the ScaleProbe
-    * closure — the host graph is a QUOTIENT of the corpus (its edge set
-    * is bounded by host combinatorics, not document count), which the
-    * probe pins by requiring the 10× edge set to equal the 1× set while
-    * every multiplicity scales exactly ×c.
+    * n_links), self-edges dropped. The host graph is a QUOTIENT of the
+    * corpus (its edge set is bounded by host combinatorics, not document
+    * count), which `CloneClosedFormSpec` pins on q284: the 3× clone keeps
+    * the 1× hosts, degrees and ranks while the link mass scales ×c.
     */
   private[graft] def hostEdges(docs: DataFrame): DataFrame = {
     val fx = linkFixture(docs)

@@ -495,8 +495,7 @@ private[graft] object DedupQueries {
 
     // Nightly incremental span-dedup as a shipped query: docs >= 400 are
     // tonight's delta, the spanIndex of the base (< 400) stands in for
-    // the stored parquet gram index (ScaleProbe materializes the same
-    // relation). The oracle IS the parity property: the full-corpus
+    // the stored parquet gram index. The oracle IS the parity property: the full-corpus
     // keep-first apply (q131's recursive SQL) restricted to the delta —
     // the driver gate certifies the combined-rank drop rule
     // (n_base >= 1 ∨ rn_delta >= 2 under append-only id order) end to

@@ -637,9 +637,9 @@ object WarcReader {
     * the zstd decode too, not just the q302 census); 404s stay
     * identity. The walk + split + dechunk + inflate chain must hand the
     * extractor exactly the bytes [[buildFixture]] would — the q296
-    * byte-for-byte contract, one layer deeper. The modulus divides the
-    * ScaleProbe's 10^7 id offset, keeping per-class counts exact under
-    * probe copies.
+    * byte-for-byte contract, one layer deeper. The modulus divides
+    * [[graft.Tables.CloneOffset]], keeping per-class counts exact under
+    * clone copies.
     */
   def buildContentEncodedFixture(docs: DataFrame, nShards: Int = 24): DataFrame = {
     val spark = docs.sparkSession
@@ -690,8 +690,8 @@ object WarcReader {
     * flag reflects a REAL failed decode. This is the standing
     * quantification of the brotli gap: at 100 TB the same census runs
     * over real archives and prices what a vendored decoder would
-    * unlock. The modulus divides the ScaleProbe's 10^7 id offset, so
-    * probe copies keep per-class counts exact.
+    * unlock. The modulus divides [[graft.Tables.CloneOffset]], so clone
+    * copies keep per-class counts exact.
     */
   def buildEncodingCensusFixture(docs: DataFrame, nShards: Int = 24): DataFrame = {
     val spark = docs.sparkSession
@@ -746,7 +746,9 @@ object WarcReader {
     * read — executor-side writes (no driver collect), local-FS scope
     * (fixture concession like the builders' `groupByKey`: a production
     * corpus ARRIVES as files; nothing writes archives at query time).
-    * Deterministic names, so repeated runs overwrite byte-identically.
+    * Deterministic names, so repeated runs overwrite byte-identically;
+    * each part is written to a hidden temp file and moved into place, so
+    * sessions sharing the directory never read a partial part.
     */
   def writeBlobs(df: DataFrame, shardCol: String, binCol: String,
       dir: String): Unit = {
@@ -760,9 +762,16 @@ object WarcReader {
           case i: Int => i.toLong
           case other => other.toString.toLong
         }
-        java.nio.file.Files.write(
-          java.nio.file.Paths.get(dir, f"part-$shard%05d.warc.gz"),
-          r.getAs[Array[Byte]](bIdx))
+        // temp file + atomic rename in the same directory: a concurrent
+        // reader of the fixed fixture dir sees the old part or the new
+        // one, never a truncated one (the `.` prefix keeps the listing off it)
+        val part = java.nio.file.Paths.get(dir, f"part-$shard%05d.warc.gz")
+        val tmp = java.nio.file.Files.createTempFile(
+          part.getParent, s".${part.getFileName}", ".tmp")
+        java.nio.file.Files.write(tmp, r.getAs[Array[Byte]](bIdx))
+        java.nio.file.Files.move(tmp, part,
+          java.nio.file.StandardCopyOption.ATOMIC_MOVE,
+          java.nio.file.StandardCopyOption.REPLACE_EXISTING)
       }
     }
   }

@@ -373,6 +373,21 @@ class AnnIndexSpec extends AnyFunSuite {
     org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(sf))
   }
 
+  test("metadata memo: releaseStaging evicts the entry of the q210 index it deletes") {
+    import spark.implicits._
+    val sf = java.nio.file.Files.createTempDirectory("graft_annsf").toString
+    (0 until 40).map(i => (i.toLong, (0 until 64).map(d => math.cos(i * 17 + d * 5).toFloat), i % 4))
+      .toDF("vec_id", "embedding", "label")
+      .write.parquet(s"$sf/embeddings.parquet")
+    val before = AnnIndex.memoSize
+    try {
+      assert(SparkEntry.queries("q210_ann_index_serve")(spark, sf).collect().nonEmpty)
+      assert(AnnIndex.memoSize == before + 1, "q210's build did not seed the memo")
+      SparkEntry.releaseStaging(spark)
+      assert(AnnIndex.memoSize == before)
+    } finally org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(sf))
+  }
+
   test("appendDelta: delta-only encode against the stored codebook; base code files untouched; on-disk codes match the driver-side replay") {
     import spark.implicits._
     import scala.jdk.CollectionConverters._
@@ -573,7 +588,7 @@ class AnnIndexSpec extends AnyFunSuite {
     val e0 = qerr(graft.operators.PqCodebook.train(emb, m, sub, kcode, 0))
     val e2 = qerr(cb2df)
     assert(e2 < e0 * 0.9, s"training did not reduce quantization error: $e2 vs $e0")
-    // exact clone invariance (the ScaleProbe closed form at test scale):
+    // exact clone invariance (q178's clone closed form at test scale):
     // 3 exact copies with offset ids train to the BIT-identical codebook
     val cloned = (0 until 3).map(k =>
       emb.select(($"vec_id" + lit(k * 1000L)).as("vec_id"), $"embedding"))

@@ -1265,15 +1265,31 @@ class SparkOpsSpec extends AnyFunSuite {
       assert(viaCache.nonEmpty)
 
       // a 1-byte threshold forces CTAS: the source crosses it
-      spark.conf.set("spark.graft.sqlDedup.autoTableBytes", "1")
-      val viaTable = run()
+      SparkEntry.t(spark, dir, "documents").createOrReplaceTempView("v_documents")
+      val viaTable = SparkEntry.sqlDedupPipeline(spark, autoTableBytes = 1L)
+        .collect().toSeq
       assert(spark.catalog.tableExists("sql_bands_stage"))
       assert(!spark.catalog.isCached("v_sql_bands")) // cache path not taken
       assert(viaTable == viaCache) // staging is invisible in the output
-    } finally {
-      spark.conf.unset("spark.graft.sqlDedup.autoTableBytes")
-      SparkEntry.releaseStaging(spark)
+    } finally SparkEntry.releaseStaging(spark)
+  }
+
+  test("Tuning.spread: an input with an exchange runs no job and gets the explicit-N repartition; an exchange-free one keeps its probe") {
+    import spark.implicits._
+    val agg = (0 until 100).map(i => (i % 7, i)).toDF("k", "v").groupBy($"k").count()
+    val (spread, jobs) = org.apache.spark.JobNames.during(spark.sparkContext) {
+      graft.operators.Tuning.spread(agg, $"k")
     }
+    assert(jobs.isEmpty, jobs)
+    val n = graft.operators.Tuning.spreadPartitions(agg)
+    assert(spread.queryExecution.analyzed.collectFirst {
+      case r: org.apache.spark.sql.catalyst.plans.logical.RepartitionByExpression =>
+        r.numPartitions
+    }.contains(n))
+    assert(spread.collect().map(_.getLong(1)).sum == 100L)
+    // a scan wide enough already passes through untouched
+    val wide = spark.range(0, 100, 1, n + 1).toDF("k")
+    assert(graft.operators.Tuning.spread(wide, $"k") eq wide)
   }
 
   test("bucketed tables co-locate the join: no Exchange in the plan") {
