@@ -3,7 +3,7 @@
 
 Usage:
     python3 scripts/joblist.py <event log file or rolling-log dir>
-        [--desc NAME] [--block K]
+        [--desc NAME] [--block K] [--summary [site|desc]]
 
 Each line holds the job id, its job description (the job group a caller set
 with `setJobGroup`, e.g. a perfbench trace span, or a size gate's
@@ -16,7 +16,9 @@ as the stage's operator for the SQL action that owns it, e.g.
 "Exchange for parquet at AnnIndex.scala:110". `--desc NAME` keeps the jobs
 whose description is NAME; consecutive kept jobs form a block, each block
 ends with a summary line, and `--block K` prints only the K-th block
-(1-based).
+(1-based). `--summary` prints, instead of the jobs, how many jobs each call
+site ran (`--summary desc`: each job description, e.g. a `graft.Bench` query
+name) and the total, for the whole log or the jobs `--desc` keeps.
 
 Write a log by running a Spark program with
     JAVA_TOOL_OPTIONS="-Dspark.eventLog.enabled=true \
@@ -91,7 +93,20 @@ def main():
     ap.add_argument("log")
     ap.add_argument("--desc", help="keep only jobs with this job description")
     ap.add_argument("--block", type=int, help="print only the K-th block of kept jobs")
+    ap.add_argument("--summary", nargs="?", const="site", choices=["site", "desc"],
+                    help="print the job count per call site (or description) and the total")
     args = ap.parse_args()
+
+    if args.summary:
+        counts = {}
+        for _, desc, site, _, _ in jobs(args.log):
+            if args.desc is None or desc == args.desc:
+                key = site if args.summary == "site" else desc
+                counts[key] = counts.get(key, 0) + 1
+        for key, n in sorted(counts.items(), key=lambda kv: (-kv[1], kv[0])):
+            print(f"{n:>6}  {key}")
+        print(f"{sum(counts.values()):>6}  total")
+        return
 
     blocks, cur, prev_end = [], None, None
     for j, desc, site, t0, t1 in jobs(args.log):

@@ -5,6 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.functions.{TextFunctions, VectorFunctions}
+import graft.operators.Tuning
 
 /** Driver contract — see /root/repo/SURVEY.md §7 + the builder prompt.
   *
@@ -151,9 +152,8 @@ object SparkEntry {
       .groupBy($"event_type", $"day")
       .agg(count(lit(1)).as("n"), sum($"vu").as("sum_value_u"),
         hll($"bkt", $"rnk").as("regs"))
-    val merged = aggOf(ev.filter($"ts" < lit(tcutNs)))
-      .unionByName(aggOf(ev.filter($"ts" >= lit(tcutNs))))
-      .localCheckpoint() // scalar re-sum + register max both read it
+    val merged = Tuning.cut(aggOf(ev.filter($"ts" < lit(tcutNs)))
+      .unionByName(aggOf(ev.filter($"ts" >= lit(tcutNs))))) // scalar re-sum + register max both read it
     val scalars = merged.groupBy($"event_type", $"day")
       .agg(sum($"n").as("n"), sum($"sum_value_u").as("sum_value_u"))
     val regs = graft.operators.HllSketch.rollupRegisters(
@@ -180,10 +180,9 @@ object SparkEntry {
     // overload: plain repartition(col) is AQE-coalescible)
     val imgs = graft.operators.Multimodal
       .synthImageCorpus(graft.operators.Tuning.spreadDocs(docs), "doc_id", groupDiv = 4L)
-    val hashed = graft.operators.Multimodal.perceptualHashes(imgs, "img")
+    val hashed = Tuning.cut(graft.operators.Multimodal.perceptualHashes(imgs, "img")
       .select($"doc_id", $"a0", $"a1", $"a2", $"a3",
-        $"d0", $"d1", $"d2", $"d3")
-      .localCheckpoint() // banding + both verify sides read it
+        $"d0", $"d1", $"d2", $"d3")) // banding + both verify sides read it
     val bands = hashed.select($"doc_id",
       posexplode(array($"a0", $"a1", $"a2", $"a3")).as(Seq("b", "v")))
     val cand = bands.as("x").join(bands.as("y"),
@@ -252,10 +251,9 @@ object SparkEntry {
   def ksDrift(docs: DataFrame): DataFrame = {
     val s = docs.sparkSession
     import s.implicits._
-    val cnt = docs
+    val cnt = Tuning.cut(docs
       .select($"source", $"n_chars".as("v"))
-      .groupBy($"source", $"v").agg(count(lit(1)).as("c"))
-      .localCheckpoint() // sizes, value cums, and the grid read it
+      .groupBy($"source", $"v").agg(count(lit(1)).as("c"))) // sizes, value cums, and the grid read it
     val ns = cnt.groupBy($"source").agg(sum($"c").as("n1"))
     val tot = broadcast(cnt.agg(sum($"c").as("n")))
     val gcum = cnt.groupBy($"v").agg(sum($"c").as("cv"))
@@ -293,8 +291,7 @@ object SparkEntry {
     val s = emb.sparkSession
     import s.implicits._
     val cents = graft.operators.IvfIndex.centroids(emb, k = 0, iters = 0)
-    val cells = graft.operators.IvfIndex.assign(emb, cents, "vec_id", "embedding")
-      .localCheckpoint() // assignment scan feeds both pair-join sides
+    val cells = Tuning.cut(graft.operators.IvfIndex.assign(emb, cents, "vec_id", "embedding")) // assignment scan feeds both pair-join sides
     // Salt the pair join: centroid_id alone has only k distinct values,
     // so the scoring stage would run k tasks no matter the cluster size.
     // Splitting the probe side by hash(src) and replicating the build
@@ -306,13 +303,12 @@ object SparkEntry {
       .crossJoin(s.range(8).toDF("__slt"))
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy($"src").orderBy($"cos4".desc, $"dst")
-    val top = a.join(b, Seq("centroid_id", "__slt")).filter($"src" =!= $"dst")
+    val top = Tuning.cut(a.join(b, Seq("centroid_id", "__slt")).filter($"src" =!= $"dst")
       .select($"src", $"dst",
         floor(graft.functions.VectorFunctions.cosineSim($"va", $"vb")
           * lit(10000.0)).cast("long").as("cos4"))
       .withColumn("rn", row_number().over(w)).filter($"rn" <= 3)
-      .select($"src", $"dst")
-      .localCheckpoint() // k-sized lists; mutuality joins it to itself
+      .select($"src", $"dst")) // k-sized lists; mutuality joins it to itself
     val mutual = top
       .join(top.select($"dst".as("src"), $"src".as("dst")), Seq("src", "dst"))
       .filter($"src" < $"dst")

@@ -23,6 +23,9 @@ object Verify {
     def wanted(name: String): Boolean =
       only.forall(_.exists(p => name == p || name.startsWith(p)))
     SparkEntry.queries.filter(kv => wanted(kv._1)).foreach { case (name, fn) =>
+      // the query's name as job group, as in Bench: an event log then
+      // attributes every job to its query
+      spark.sparkContext.setJobGroup(name, name)
       try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
         .parquet(s"$outDir/$name")
       catch { case e: Throwable =>
@@ -30,6 +33,7 @@ object Verify {
       }
       // staged caches (q56's band view) must not outlive their query
       SparkEntry.releaseStaging(spark)
+      spark.sparkContext.clearJobGroup()
     }
     // JSON string escape: backslash, quote, and ALL control chars (<0x20)
     // — a tab or CR in builder-authored SQL would otherwise make the

@@ -40,16 +40,15 @@ object Batching {
     */
   def globalRowNumber(
       df: DataFrame, ord: Seq[Column], numPartitions: Int, out: String): DataFrame = {
-    // localCheckpoint pins ONE partitioning for both jobs below: the counts
+    // the cut pins ONE partitioning for both jobs below: the counts
     // action and the final join would otherwise each re-execute the range
     // exchange, whose sampled boundaries are not guaranteed identical across
     // plans — offsets computed against one layout must not be applied to
     // another.
-    val parted = df.repartitionByRange(numPartitions, ord: _*)
+    val parted = Tuning.cut(df.repartitionByRange(numPartitions, ord: _*)
       .sortWithinPartitions(ord: _*)
       .withColumn("__pid", spark_partition_id())
-      .withColumn("__lrn", monotonically_increasing_id().bitwiseAND(lit(LocalMask)) + 1)
-      .localCheckpoint()
+      .withColumn("__lrn", monotonically_increasing_id().bitwiseAND(lit(LocalMask)) + 1))
     val counts = parted.groupBy(col("__pid")).agg(count(lit(1)).as("cnt"))
       .collect().map(r => (r.getInt(0), r.getLong(1))).sortBy(_._1)
     // the local position lives in monotonically_increasing_id's low 33 bits;
@@ -97,8 +96,8 @@ object Batching {
     *
     * The spans relation is group-count-sized: tiny for split strata
     * (broadcast is right and measured 3.2× faster than the sort-merge
-    * plan AQE actually picks here — the checkpointed ranked side hides
-    * its stats, so AQE does NOT convert this join on its own), but
+    * plan AQE actually picks here — the cut ranked side reports only
+    * an estimate, so AQE does NOT convert this join on its own), but
     * potentially millions of rows when the group key is high-cardinality
     * (registrable domains at crawl scale), where a forced broadcast
     * would blow the driver. `broadcastSpans` makes the choice explicit
@@ -139,10 +138,9 @@ object Batching {
       outPos: String = "pos", outCum: String = "cum"): DataFrame = {
     import org.apache.spark.sql.Row
     import org.apache.spark.sql.types.LongType
-    val parted = df.repartitionByRange(numPartitions, ord: _*)
+    val parted = Tuning.cut(df.repartitionByRange(numPartitions, ord: _*)
       .sortWithinPartitions(ord: _*)
-      .withColumn("__pid", spark_partition_id())
-      .localCheckpoint() // pin one layout for the offsets job and the fold
+      .withColumn("__pid", spark_partition_id())) // pin one layout for the offsets job and the fold
     val perPart = parted.groupBy(col("__pid"))
       .agg(count(lit(1)).as("n"), sum(col(valueCol)).as("s"))
       .collect().map(r => (r.getInt(0), r.getLong(1), r.getLong(2))).sortBy(_._1)

@@ -19,7 +19,7 @@ import org.apache.spark.sql.functions._
   * partitionings), and the merge itself is a higher-order-function fold
   * over each word's symbol array: greedy left-to-right, exactly the
   * reference BPE semantics (`a a a` + merge(a,a) → `[aa, a]`). The
-  * vocabulary is localCheckpoint'ed per round so round N's plan does not
+  * vocabulary is cut per round so round N's plan does not
   * re-execute rounds 1..N-1.
   */
 object BpeTokenizer {
@@ -69,7 +69,7 @@ object BpeTokenizer {
     * (w, c).
     */
   def train(wordFreq: DataFrame, nMerges: Int): Seq[Merge] = {
-    var vocab = initSymbols(wordFreq).localCheckpoint(true)
+    var vocab = Tuning.cut(initSymbols(wordFreq))
     val merges = Seq.newBuilder[Merge]
     var done = false
     var round = 0
@@ -85,9 +85,7 @@ object BpeTokenizer {
         merges += m
         val next = vocab.select(applyMerge(col("syms"), m.l, m.r).as("syms"),
           col("c"))
-        val prev = vocab
-        vocab = next.localCheckpoint(true)
-        prev.unpersist()
+        vocab = Tuning.cut(next)
       }
       round += 1
     }

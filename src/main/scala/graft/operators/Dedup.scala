@@ -74,14 +74,11 @@ object Dedup {
   private def bandSelfJoin(
       sigDF: DataFrame, idCol: String, bands: Int, rowsPerBand: Int,
       carryCols: Seq[String]): DataFrame = {
-    // materialize the exploded band rows ONCE before self-joining: Spark does
-    // not reuse the exchange across the two join sides here, so without the
-    // cut the full text scan + signature computation runs twice. The
-    // signatures are the expensive part (md5 per shingle over the whole
-    // corpus) while a band row is ~10 small values — at 100 TB the
-    // checkpoint is a tiny fraction of the scan it avoids re-running.
-    val exploded = bandExplode(sigDF, idCol, bands, rowsPerBand, carryCols)
-      .localCheckpoint()
+    // cut the exploded band rows before self-joining: Spark does not reuse
+    // the exchange across the two join sides here, so without the cut the
+    // text scan + signatures (md5 per shingle over the corpus) run twice,
+    // while a band row is ~10 small values
+    val exploded = Tuning.cut(bandExplode(sigDF, idCol, bands, rowsPerBand, carryCols))
     val a = exploded.as("a")
     val b = exploded.as("b")
     a.join(b,
@@ -153,7 +150,7 @@ object Dedup {
     * tagged `new_new` / `new_old`. Contract: delta ids are disjoint from
     * corpus ids.
     *
-    * The delta band rows are localCheckpoint'ed once and feed both the
+    * The delta band rows are cut once and feed both the
     * index probe and the delta self-join — one signature computation per
     * new document. The probe join is a plain (band, band_hash) equi-join:
     * with a small delta AQE broadcasts the delta side; a huge backfill
@@ -163,8 +160,8 @@ object Dedup {
       corpusIndex: DataFrame, delta: DataFrame, idCol: String, textCol: String,
       numHashes: Int, shingle: Int, bands: Int, rowsPerBand: Int,
       threshold: Double): DataFrame = {
-    val deltaBands = signatureIndex(
-      delta, idCol, textCol, numHashes, shingle, bands, rowsPerBand).localCheckpoint()
+    val deltaBands = Tuning.cut(signatureIndex(
+      delta, idCol, textCol, numHashes, shingle, bands, rowsPerBand))
     def sides(df: DataFrame, suffix: String) = df.select(
       col("band"), col("band_hash"),
       col(idCol).as(s"id_$suffix"), col("minhash").as(s"minhash_$suffix"))
@@ -250,7 +247,7 @@ object Dedup {
     * `maxHamming <= 3` the banding is COMPLETE by pigeonhole — at most 3
     * differing bits cannot touch all 4 bands, so at least one band
     * matches and no qualifying pair can be missed (spec-proven against
-    * brute force). The banded relation is localCheckpoint'ed once so the
+    * brute force). The banded relation is cut once so the
     * simhash scan feeds both join sides without recomputation — the same
     * staging the MinHash path uses (`nearDupPairs`).
     */
@@ -258,13 +255,12 @@ object Dedup {
       df: DataFrame, idCol: String, textCol: String, maxHamming: Int): DataFrame = {
     require(maxHamming >= 0 && maxHamming <= 3,
       s"4x8-bit banding is only complete for hamming <= 3, got $maxHamming")
-    val banded = simhash32(
+    val banded = Tuning.cut(simhash32(
         Tuning.spread(df.select(col(idCol), col(textCol)), col(idCol)),
         textCol, "__sh")
       .select(col(idCol), col("__sh").cast("long").as("__sh"))
       .select(col(idCol), col("__sh"), explode(sequence(lit(0), lit(3))).as("__b"))
-      .withColumn("__key", expr("shiftright(__sh, __b * 8) & 255"))
-      .localCheckpoint()
+      .withColumn("__key", expr("shiftright(__sh, __b * 8) & 255")))
     val left = banded.select(col("__b"), col("__key"),
       col(idCol).as("id_a"), col("__sh").as("__sh_a"))
     val right = banded.select(col("__b"), col("__key"),
@@ -286,7 +282,7 @@ object Dedup {
     * (edges ⋈ labels + min-aggregate) followed by one label-of-label
     * shortcut join against the previous round's materialized labels, so
     * rounds are O(log component diameter) rather than O(diameter). Labels
-    * are `localCheckpoint`ed per round so lineage stays O(1), and the loop
+    * are cut per round so lineage stays O(1), and the loop
     * stops when a round changes nothing. At 100 TB this never materializes
     * the graph on the driver — the only driver-side values are the
     * per-round change counts.
@@ -373,11 +369,10 @@ object Dedup {
     */
   def resolveClustersCounted(pairs: DataFrame, allIds: DataFrame): (DataFrame, Int) = {
     val idc = allIds.columns.head
-    val edges = pairs.select(col("id_a").as("src"), col("id_b").as("dst"))
-      .union(pairs.select(col("id_b").as("src"), col("id_a").as("dst")))
-      .localCheckpoint() // reused every round; pairs' lineage paid once
-    var labels = allIds.select(col(idc).as("id")).distinct()
-      .withColumn("label", col("id")).localCheckpoint()
+    val edges = Tuning.cut(pairs.select(col("id_a").as("src"), col("id_b").as("dst"))
+      .union(pairs.select(col("id_b").as("src"), col("id_a").as("dst")))) // reused every round; pairs' lineage paid once
+    var labels = Tuning.cut(allIds.select(col(idc).as("id")).distinct()
+      .withColumn("label", col("id")))
     var changed = 1L
     var rounds = 0
     while (changed > 0) {
@@ -397,14 +392,13 @@ object Dedup {
       val stepped = labels.join(nbrMin, Seq("id"), "left")
         .select(col("id"), col("label").as("__old"),
           least(col("label"), coalesce(col("nbr_min"), col("label"))).as("__l1"))
-      val next = stepped
+      val next = Tuning.cut(stepped
         .join(labels.select(col("id").as("__l1"), col("label").as("__ll")),
           Seq("__l1"), "left")
         .select(col("id"),
           least(col("__l1"), coalesce(col("__ll"), col("__l1"))).as("label"),
           (least(col("__l1"), coalesce(col("__ll"), col("__l1"))) < col("__old"))
-            .as("__moved"))
-        .localCheckpoint()
+            .as("__moved")))
       changed = next.filter(col("__moved")).count()
       if (changed > 0) rounds += 1
       labels = next.drop("__moved")

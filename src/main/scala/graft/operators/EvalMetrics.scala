@@ -25,6 +25,13 @@ import graft.functions.HashFunctions
   */
 object EvalMetrics {
 
+  /** Daily event counts (event_type, day, y) behind a cut: the backtests
+    * and trend tests read them more than once.
+    */
+  def dailyCounts(events: DataFrame): DataFrame = Tuning.cut(events
+    .groupBy(col("event_type"), expr("(ts div 1000) div 86400000000").as("day"))
+    .agg(count(lit(1)).as("y")))
+
   /** Exact one-vs-rest AUC of `valueCol` as a discriminator of each group
     * in `groupCol`, via the Mann–Whitney midrank identity on count
     * histograms: AUC = Σ_v pos(v)·(2·cumneg(&lt;v) + neg(v)) / (2·n_pos·n_neg).
@@ -34,9 +41,9 @@ object EvalMetrics {
   def histAuc(df: DataFrame, groupCol: String, valueCol: String): DataFrame = {
     val s = df.sparkSession
     import s.implicits._
-    val hist = df
+    val hist = Tuning.cut(df
       .groupBy(col(groupCol).as("g"), col(valueCol).as("v"))
-      .agg(count(lit(1)).as("cnt")).localCheckpoint()
+      .agg(count(lit(1)).as("cnt")))
     val byV = hist.groupBy($"v").agg(sum($"cnt").as("tot"))
     val groups = hist.select($"g".as("tgt")).distinct()
     val pos = hist.select($"g".as("tgt"), $"v", $"cnt".as("pos"))
@@ -71,8 +78,8 @@ object EvalMetrics {
       bucketCol: String): DataFrame = {
     val s = df.sparkSession
     import s.implicits._
-    val cls = df.groupBy(col(q1), col(q2), col(bucketCol).as("b"))
-      .agg(count(lit(1)).as("cnt")).localCheckpoint()
+    val cls = Tuning.cut(df.groupBy(col(q1), col(q2), col(bucketCol).as("b"))
+      .agg(count(lit(1)).as("cnt")))
     val glob = cls.groupBy($"b").agg(sum($"cnt").as("gcnt"))
       .withColumn("gcum", sum($"gcnt").over(
         Window.orderBy($"b")
@@ -124,7 +131,6 @@ object EvalMetrics {
         sum($"y").as("n_pos"))
       .select($"bin", $"n", expr("ssc div n").as("mean_score4"),
         expr("n_pos * 10000 div n").as("pos4"))
-      .localCheckpoint() // bin rows + ECE scalar both read it
     val ece = broadcast(bins.agg(
       expr("sum(n * abs(mean_score4 - pos4)) div sum(n)").as("ece4")))
     bins.crossJoin(ece)
@@ -139,9 +145,7 @@ object EvalMetrics {
   def seasonalBacktest(events: DataFrame): DataFrame = {
     val s = events.sparkSession
     import s.implicits._
-    val daily = events
-      .groupBy($"event_type", expr("(ts div 1000) div 86400000000").as("day"))
-      .agg(count(lit(1)).as("y")).localCheckpoint()
+    val daily = dailyCounts(events)
     val f7 = daily.select($"event_type", ($"day" + 7L).as("day"),
       $"y".as("f7"))
     val f1 = daily.select($"event_type", ($"day" + 1L).as("day"),
@@ -206,9 +210,7 @@ object EvalMetrics {
   def mannKendall(events: DataFrame): DataFrame = {
     val s = events.sparkSession
     import s.implicits._
-    val daily = events
-      .groupBy($"event_type", expr("(ts div 1000) div 86400000000").as("day"))
-      .agg(count(lit(1)).as("y")).localCheckpoint()
+    val daily = dailyCounts(events)
     val sAgg = daily.as("a").join(daily.as("b"),
         $"a.event_type" === $"b.event_type" && $"a.day" < $"b.day")
       .groupBy($"a.event_type".as("event_type"))

@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -35,44 +35,14 @@ object ExactQuantiles {
   /** Quantile table (prob4, rank, value) for `probs4` (probabilities in
     * 1e-4 units, e.g. 5000 = median) over integer column `valueCol`.
     * `coarseWidth` is the pass-1 bucket width; any positive value is
-    * correct (it only shifts work between the two passes).
+    * correct (it only shifts work between the two passes). This is
+    * [[groupedQuantiles]] over one group, whose bucket-table window is the
+    * single partition described above.
     */
   def quantiles(df: DataFrame, valueCol: String, probs4: Seq[Long],
-      coarseWidth: Long = 64L): DataFrame = {
-    require(coarseWidth > 0, "coarseWidth must be positive")
-    val spark = df.sparkSession
-    import spark.implicits._
-    val v = col(valueCol).cast("long")
-    val vals = df.select(v.as("v"), (v - pmod(v, lit(coarseWidth))).as("b"))
-      .localCheckpoint() // both passes read this projection
-    // pass 1: coarse histogram + cumulative counts (bucket-count-sized)
-    val wb = Window.orderBy(col("b"))
-      .rowsBetween(Window.unboundedPreceding, -1)
-    val h1 = vals.groupBy(col("b")).agg(count(lit(1)).as("cnt"))
-      .withColumn("cum_before", coalesce(sum(col("cnt")).over(wb), lit(0L)))
-    val total = h1.agg(sum(col("cnt")).as("n"))
-    val targets = probs4.toDF("p4").crossJoin(broadcast(total))
-      .withColumn("rank", expr("(p4 * n + 9999) div 10000"))
-      .join(h1, col("cum_before") < col("rank") &&
-        col("rank") <= col("cum_before") + col("cnt"))
-      .select(col("p4"), col("n"), col("rank"), col("b"),
-        (col("rank") - col("cum_before")).as("res_rank"))
-      .localCheckpoint() // probs-sized; drives the pass-2 semi-join
-    // pass 2: exact per-value counts inside the (≤ probs.size) hit buckets
-    val wv = Window.partitionBy(col("b")).orderBy(col("v"))
-      .rowsBetween(Window.unboundedPreceding, -1)
-    val h2 = vals
-      .join(broadcast(targets.select(col("b")).distinct()), Seq("b"), "left_semi")
-      .groupBy(col("b"), col("v")).agg(count(lit(1)).as("vcnt"))
-      .withColumn("vcum_before", coalesce(sum(col("vcnt")).over(wv), lit(0L)))
-    targets
-      .join(h2, Seq("b"))
-      .filter(col("vcum_before") < col("res_rank") &&
-        col("res_rank") <= col("vcum_before") + col("vcnt"))
-      .select((col("p4").cast("double") / lit(10000.0)).as("prob4"),
-        col("rank"), col("v").as("value"))
-      .orderBy(col("prob4"))
-  }
+      coarseWidth: Long = 64L): DataFrame =
+    groupedQuantiles(df.withColumn("__q", lit(0)), "__q", valueCol, probs4, coarseWidth)
+      .drop("__q")
 
   /** Per-GROUP exact nearest-rank quantiles — the same two-histogram
     * refinement keyed by (`groupCol`, bucket). Strictly better-shaped than
@@ -88,14 +58,12 @@ object ExactQuantiles {
     import spark.implicits._
     val g = col(groupCol)
     val v = col(valueCol).cast("long")
-    val vals = df.select(g.as("g"), v.as("v"),
-        (v - pmod(v, lit(coarseWidth))).as("b"))
-      .localCheckpoint() // both passes read this projection
+    val vals = Tuning.cut(df.select(g.as("g"), v.as("v"),
+        (v - pmod(v, lit(coarseWidth))).as("b"))) // both passes read this projection
     val wb = Window.partitionBy(col("g")).orderBy(col("b"))
       .rowsBetween(Window.unboundedPreceding, -1)
-    val h1 = vals.groupBy(col("g"), col("b")).agg(count(lit(1)).as("cnt"))
-      .withColumn("cum_before", coalesce(sum(col("cnt")).over(wb), lit(0L)))
-      .localCheckpoint() // totals + the rank join both read it
+    val h1 = Tuning.cut(vals.groupBy(col("g"), col("b")).agg(count(lit(1)).as("cnt"))
+      .withColumn("cum_before", coalesce(sum(col("cnt")).over(wb), lit(0L)))) // totals + the rank join both read it
     val totals = h1.groupBy(col("g")).agg(sum(col("cnt")).as("n"))
     val targets = probs4.toDF("p4").crossJoin(totals)
       .withColumn("rank", expr("(p4 * n + 9999) div 10000"))
@@ -104,7 +72,6 @@ object ExactQuantiles {
         col("rank") <= col("cum_before") + col("cnt"))
       .select(col("g"), col("p4"), col("n"), col("rank"), col("b"),
         (col("rank") - col("cum_before")).as("res_rank"))
-      .localCheckpoint() // (groups × probs)-sized; drives pass 2
     val wv = Window.partitionBy(col("g"), col("b")).orderBy(col("v"))
       .rowsBetween(Window.unboundedPreceding, -1)
     val h2 = vals

@@ -37,33 +37,36 @@ import org.apache.spark.sql.functions._
   */
 object GraphMetrics {
 
+  /** The canonical (lo, hi) edge list of a pair list, self-loops dropped,
+    * behind a cut: every pass of a metric reads it instead of re-running
+    * the upstream pipeline (for q147: the whole LSH dedup pass).
+    */
+  private def canonicalEdges(pairs: DataFrame, aCol: String, bCol: String): DataFrame =
+    Tuning.cut(pairs.select(least(col(aCol), col(bCol)).as("lo"),
+        greatest(col(aCol), col(bCol)).as("hi"))
+      .filter(col("lo") =!= col("hi")))
+
+  /** Node degrees (v, `out`) of a canonical edge list. */
+  private def degrees(edges: DataFrame, out: String): DataFrame =
+    edges.select(col("lo").as("v")).union(edges.select(col("hi").as("v")))
+      .groupBy("v").agg(count(lit(1)).as(out))
+
   /** One-row summary: node/edge/wedge/triangle counts and the global
     * clustering coefficient (transitivity = 3·triangles / wedges,
     * floor-quantized to 1e-4; 0 when the graph has no wedge).
     */
   def triangleSummary(pairs: DataFrame, aCol: String, bCol: String): DataFrame = {
-    // canonical (lo, hi) edge list — staged once; degree, orientation and
-    // the closing-edge probe all read this cut instead of re-running the
-    // upstream pipeline (for q147: the whole LSH dedup pass) per consumer
-    val edges = pairs
-      .select(least(col(aCol), col(bCol)).as("lo"),
-        greatest(col(aCol), col(bCol)).as("hi"))
-      .filter(col("lo") =!= col("hi"))
-      .localCheckpoint()
-    val deg = edges.select(col("lo").as("v"))
-      .union(edges.select(col("hi").as("v")))
-      .groupBy("v").agg(count(lit(1)).as("d"))
-      .localCheckpoint() // node-sized; feeds orientation twice + wedge total
+    val edges = canonicalEdges(pairs, aCol, bCol)
+    val deg = Tuning.cut(degrees(edges, "d")) // node-sized; feeds orientation twice + wedge total
     // orient each edge u→v with (deg, id) strictly increasing — the total
     // order that makes the triangle's minimal vertex the unique apex
     val fromLo = col("dlo") < col("dhi") ||
       (col("dlo") === col("dhi") && col("lo") < col("hi"))
-    val oriented = edges
+    val oriented = Tuning.cut(edges
       .join(deg.select(col("v").as("lo"), col("d").as("dlo")), "lo")
       .join(deg.select(col("v").as("hi"), col("d").as("dhi")), "hi")
       .select(when(fromLo, col("lo")).otherwise(col("hi")).as("u"),
-        when(fromLo, col("hi")).otherwise(col("lo")).as("w"))
-      .localCheckpoint() // the wedge self-join reads it twice
+        when(fromLo, col("hi")).otherwise(col("lo")).as("w"))) // the wedge self-join reads it twice
     // wedges at the apex: pairs of out-neighbors, emitted in canonical
     // order so the closing probe is a plain (lo, hi) equi-join
     val wedges = oriented.select(col("u"), col("w").as("x"))
@@ -109,7 +112,7 @@ object GraphMetrics {
     * Scale shape: each round is one node-sized degree aggregation plus two
     * semi-joins of the edge list against the surviving-node relation —
     * never a corpus² product — and the edge list shrinks monotonically.
-    * `localCheckpoint` per round truncates the iteration's lineage
+    * a cut per round truncates the iteration's lineage
     * (PageRank's staging move) so round r+1 replans from materialized
     * edges instead of r stacked joins.
     *
@@ -144,25 +147,16 @@ object GraphMetrics {
           col("core_degree")), peels)
       case Left(cut) => cut
     }
-    var edges = staged
-      .select(least(col(aCol), col(bCol)).as("lo"),
-        greatest(col(aCol), col(bCol)).as("hi"))
-      .filter(col("lo") =!= col("hi"))
-      .localCheckpoint(false)
+    var edges = canonicalEdges(staged, aCol, bCol)
     var prev = edges.count()
     var peels = 0
     var fixed = prev == 0L // the empty graph is already its own k-core
     while (peels < rounds && !fixed) {
-      val keep = edges.select(col("lo").as("v"))
-        .union(edges.select(col("hi").as("v")))
-        .groupBy("v").agg(count(lit(1)).as("c"))
-        .filter(col("c") >= k)
-        .localCheckpoint() // node-sized; read by both semi-joins
-      edges = edges
+      val keep = degrees(edges, "c").filter(col("c") >= k)
+      edges = Tuning.cut(edges
         .join(keep.select(col("v").as("lo")), Seq("lo"), "left_semi")
         .join(keep.select(col("v").as("hi")), Seq("hi"), "left_semi")
-        .select(col("lo"), col("hi"))
-        .localCheckpoint(false)
+        .select(col("lo"), col("hi")))
       val cur = edges.count()
       fixed = cur == prev
       prev = cur
@@ -196,15 +190,8 @@ object GraphMetrics {
     */
   def degreeAssortativity(
       pairs: DataFrame, aCol: String, bCol: String): DataFrame = {
-    val edges = pairs
-      .select(least(col(aCol), col(bCol)).as("lo"),
-        greatest(col(aCol), col(bCol)).as("hi"))
-      .filter(col("lo") =!= col("hi"))
-      .localCheckpoint() // degrees + the moment pass both read it
-    val deg = edges.select(col("lo").as("v"))
-      .union(edges.select(col("hi").as("v")))
-      .groupBy("v").agg(count(lit(1)).as("d"))
-      .localCheckpoint()
+    val edges = canonicalEdges(pairs, aCol, bCol)
+    val deg = degrees(edges, "d")
     val stats = edges
       .join(deg.select(col("v").as("lo"), col("d").as("dlo")), "lo")
       .join(deg.select(col("v").as("hi"), col("d").as("dhi")), "hi")
@@ -268,22 +255,20 @@ object GraphMetrics {
     val edges = staged
       .select(col(aCol).as("src"), col(bCol).as("dst"))
       .filter(col("src") =!= col("dst"))
-    val sym = edges
-      .unionByName(edges.select(col("dst").as("src"), col("src").as("dst")))
-      .localCheckpoint() // re-joined every hop
-    var dist = sym.select(col("src").as("u"), col("dst").as("v"),
-      lit(1L).as("d")).localCheckpoint()
+    val sym = Tuning.cut(edges
+      .unionByName(edges.select(col("dst").as("src"), col("src").as("dst")))) // re-joined every hop
+    var dist = Tuning.cut(sym.select(col("src").as("u"), col("dst").as("v"),
+      lit(1L).as("d")))
     var frontier = dist
     var h = 2
     while (h <= hops) {
-      val next = frontier
+      val next = Tuning.cut(frontier
         .join(sym.select(col("src").as("v"), col("dst").as("w")), "v")
         .filter(col("u") =!= col("w"))
         .select(col("u"), col("w").as("v")).distinct()
         .join(dist.select(col("u"), col("v")), Seq("u", "v"), "left_anti")
-        .select(col("u"), col("v"), lit(h.toLong).as("d"))
-        .localCheckpoint()
-      dist = dist.unionByName(next).localCheckpoint()
+        .select(col("u"), col("v"), lit(h.toLong).as("d")))
+      dist = Tuning.cut(dist.unionByName(next))
       frontier = next
       h += 1
     }
@@ -314,18 +299,17 @@ object GraphMetrics {
     // round 16: stage the pair list ONCE — it feeds the component labels,
     // the flag gate and the BFS; without the cut the upstream pipeline
     // (for q221 the whole LSH dedup pass) re-ran per consumer
-    val p = pairs.localCheckpoint()
+    val p = Tuning.cut(pairs)
     val labels = Dedup.componentsOverEndpoints(
         p.select(col(aCol).as("id_a"), col(bCol).as("id_b")))
       .select(col("id"), col("keeper_id").as("__cid"))
     val sizes = labels.groupBy(col("__cid")).agg(count(lit(1)).as("__sz"))
     val tot = broadcast(totalIds.select(col(totalIds.columns.head).as("id"))
       .distinct().agg(count(lit(1)).as("__n")))
-    val flags = labels.join(sizes, Seq("__cid")).crossJoin(tot)
+    val flags = Tuning.cut(labels.join(sizes, Seq("__cid")).crossJoin(tot)
       .select(col("id"),
         (col("__sz") * lit(10000L) > lit(maxShare4) * col("__n"))
-          .cast("int").as("flagged"))
-      .localCheckpoint() // read by the edge gate and the final join
+          .cast("int").as("flagged"))) // read by the edge gate and the final join
     val ok = flags.filter(col("flagged") === 0).select(col("id").as(aCol))
     val keptPairs = p.join(ok, Seq(aCol), "left_semi")
     flags.join(harmonicCentrality(keptPairs, aCol, bCol, hops), Seq("id"), "left")
@@ -353,7 +337,7 @@ object GraphMetrics {
     *
     * Scale shape: per round, one edge-sized equi-join (labels are
     * node-sized) and one (node, label)-keyed count; the argmax window is
-    * PARTITIONED BY node — never a global sort. `localCheckpoint` per
+    * PARTITIONED BY node — never a global sort. A cut per
     * round truncates the iteration lineage (the kCore staging move).
     * Returns (id, label) after `rounds` rounds.
     */
@@ -375,18 +359,16 @@ object GraphMetrics {
           col("label").cast(idType).as("label"))
       case Left(cut) => cut
     }
-    val edges = staged
+    val edges = Tuning.cut(staged
       .select(col(aCol).as("src"), col(bCol).as("dst"))
       .union(staged.select(col(bCol).as("src"), col(aCol).as("dst")))
-      .filter(col("src") =!= col("dst"))
-      .localCheckpoint() // every round joins it
-    var labels = edges.select(col("src").as("id")).distinct()
-      .select(col("id"), col("id").as("label"))
-      .localCheckpoint()
+      .filter(col("src") =!= col("dst"))) // every round joins it
+    var labels = Tuning.cut(edges.select(col("src").as("id")).distinct()
+      .select(col("id"), col("id").as("label")))
     val byVote = org.apache.spark.sql.expressions.Window
       .partitionBy(col("id")).orderBy(col("c").desc, col("label"))
     for (_ <- 1 to rounds) {
-      labels = edges
+      labels = Tuning.cut(edges
         .join(labels.withColumnRenamed("id", "src"), "src")
         .select(col("dst").as("id"), col("label"))
         .union(labels) // the self-vote
@@ -394,8 +376,7 @@ object GraphMetrics {
         .agg(count(lit(1)).as("c"))
         .withColumn("rn", row_number().over(byVote))
         .filter(col("rn") === 1)
-        .select(col("id"), col("label"))
-        .localCheckpoint()
+        .select(col("id"), col("label")))
     }
     labels
   }

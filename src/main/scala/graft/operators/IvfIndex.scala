@@ -78,7 +78,7 @@ object IvfIndex {
     *
     * Seeds are numbered via a k-row collect (no single-partition window for
     * k rows; `array<double>` seeds are stored as floats, as every centroid
-    * is), and each iteration is `localCheckpoint`ed: without the cut,
+    * is), and each iteration is cut: without the cut,
     * iteration i's plan embeds all prior iterations — assignment recomputed
     * i times by iteration i and an optimizer blow-up at real scale.
     */
@@ -95,11 +95,10 @@ object IvfIndex {
       val means = meanVectors(assigned.withColumnRenamed(vecCol, "__v"), "__v")
       // keep old centroid where a cell went empty; checkpoint cuts lineage
       // (k rows — the materialization is trivial)
-      cents = cents.alias("old")
+      cents = Tuning.cut(cents.alias("old")
         .join(means.alias("new"), Seq("centroid_id"), "left")
         .select(col("centroid_id"),
-          coalesce(col("new.centroid"), col("old.centroid")).as("centroid"))
-        .localCheckpoint()
+          coalesce(col("new.centroid"), col("old.centroid")).as("centroid")))
     }
     cents
   }

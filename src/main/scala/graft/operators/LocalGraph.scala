@@ -12,13 +12,13 @@ import org.apache.spark.sql.types._
   * which is orders of magnitude smaller than the corpus itself (5 000
   * docs → ~50 000 verified pairs; 100 TB of pages → a host graph bounded
   * by site combinatorics). The distributed loops pay per round: 2-3
-  * shuffles, an eager checkpoint and a driver action — dominated by fixed
+  * shuffles, a cut and a driver action — dominated by fixed
   * job overhead whenever the edge list is small, and O(log diameter) or
   * fixed-k rounds of it.
   *
   * This object holds the in-process algorithms; [[LocalStrategy.stage]]
   * decides whether they run. When the edge list fits under
-  * `spark.graft.localRowLimit` rows (one count on its checkpoint — the
+  * `spark.graft.localRowLimit` rows (one count on its cut — the
   * materialization the distributed path pays anyway), shares one id type
   * and holds no null endpoint, it is collected once, the exact same
   * integer fixpoint runs in-process, and the result comes back as a local

@@ -13,15 +13,15 @@ import org.apache.spark.sql.types._
   * event-type² matrix) that is usually small enough to collect; the
   * distributed loops then pay fixed job overhead per round for nothing. [[stage]] decides:
   *
-  *  1. the slim input is checkpointed once (`localCheckpoint`, lazy);
-  *  2. it is counted over that checkpoint — the count materializes it, as
-  *     one RDD count (one job; a Dataset count under AQE runs two, its
-  *     exchange and its collect);
+  *  1. the slim input is staged behind one [[Tuning.cut]];
+  *  2. it is counted over that cut — the count materializes it, as one RDD
+  *     count (one job; a Dataset count under AQE runs two, its exchange and
+  *     its collect);
   *  3. only at or below `spark.graft.localRowLimit` rows (default 2^20) is
   *     it collected;
   *  4. the rows are returned only when the caller's `accept` holds on them.
   *
-  * Otherwise the checkpointed frame is returned and the caller runs its
+  * Otherwise the cut frame is returned and the caller runs its
   * distributed loop over it: the hand-off never re-runs the input's
   * lineage, and a size check never costs a pass the distributed loop would
   * not have paid to materialize its input anyway.
@@ -55,7 +55,7 @@ object LocalStrategy {
     spark.conf.getOption("spark.graft.localRowLimit").map(_.toLong).getOrElse(1L << 20)
 
   /** `df`'s rows when `schemaOk`, at most [[rowLimit]] of them and
-    * `accept` holds on them (Right); otherwise `df` checkpointed (Left).
+    * `accept` holds on them (Right); otherwise `df` behind its cut (Left).
     */
   def stage(df: DataFrame, site: String, schemaOk: Boolean = true)(
       accept: Array[Row] => Boolean): Either[DataFrame, Array[Row]] = {
@@ -63,13 +63,13 @@ object LocalStrategy {
     rows.toRight(cut)
   }
 
-  /** [[stage]]'s decision with the checkpoint handed back either way, for
+  /** [[stage]]'s decision with the cut handed back either way, for
     * callers that run part of their work in-process and the rest as a
     * distributed pass over the same materialized input.
     */
   def staged(df: DataFrame, site: String, schemaOk: Boolean = true)(
       accept: Array[Row] => Boolean): (DataFrame, Option[Array[Row]]) = {
-    val cut = df.localCheckpoint(false)
+    val cut = Tuning.cut(df)
     val limit = rowLimit(df.sparkSession)
     val sc = df.sparkSession.sparkContext
     def described[T](what: String)(job: => T): T = {

@@ -26,7 +26,7 @@ import org.apache.spark.sql.functions._
   * per-query window argmax, all co-partitioned on the query id. Every
   * relation is (queries × fanIn)-bounded — the corpus appears only
   * upstream, in the candidate generator — and each round cuts the lineage
-  * with a lazy localCheckpoint so round i never re-plans rounds < i (the
+  * with a cut so round i never re-plans rounds < i (the
   * PageRank loop's contract). Nothing is collected to the driver.
   */
 object MmrRerank {
@@ -65,9 +65,8 @@ object MmrRerank {
       .filter(col("__rn") === 1)
       .select(col(qCol), col(idCol), col("__mmr"), lit(rank.toLong).as("pick_rank"))
     // round 1: no penalty — the plain relevance argmax
-    var selected = argmax(
-      cand.withColumn("__mmr", lit(lambdaNum) * col("__rel")), 1)
-      .localCheckpoint()
+    var selected = Tuning.cut(argmax(
+      cand.withColumn("__mmr", lit(lambdaNum) * col("__rel")), 1))
     for (round <- 2 to k) {
       val remaining = cand.join(selected.select(col(qCol), col(idCol)),
         Seq(qCol, idCol), "left_anti")
@@ -85,9 +84,8 @@ object MmrRerank {
         .withColumn("__mmr",
           lit(lambdaNum) * col("__rel") -
             lit(lambdaDen - lambdaNum) * col("__pen"))
-      selected = selected
-        .unionByName(argmax(penalized, round))
-        .localCheckpoint() // round i must not re-plan rounds < i
+      selected = Tuning.cut(selected
+        .unionByName(argmax(penalized, round))) // round i must not re-plan rounds < i
     }
     selected.select(col(qCol), col("pick_rank"), col(idCol),
       col("__mmr").as("mmr_u"))

@@ -12,7 +12,7 @@ import org.apache.spark.sql.functions._
   * micro-nat log-probs).
   *
   * Scale shape is the q53 label-propagation loop's: the degree-annotated
-  * adjacency list is built once and staged (localCheckpoint — reused
+  * adjacency list is built once and staged (a cut — reused
   * every round, lineage paid once), each iteration is ONE equi-join
   * (ranks ⋈ adjacency on src) + one aggregation (sum of contributions by
   * dst) + a left join back to the node set for dangling-free re-seeding,
@@ -45,8 +45,8 @@ object PageRank {
     * Join strategy: node-sized relations (ranks, contributions) are
     * BROADCAST when the node count is at most `broadcastNodeLimit`, so an
     * iteration touches the adjacency in place — no shuffle of the edge
-    * list, ever; checkpoint-backed tables otherwise report unknown stats
-    * and Catalyst falls back to shuffling the (edge-sized) join. Above the
+    * list, ever; a cut table reports only its child's estimate, and
+    * Catalyst would otherwise fall back to shuffling the (edge-sized) join. Above the
     * limit the joins degrade to shuffle-hash on src/dst — the
     * billion-node path, where per-iteration exchanges of node-sized tables
     * are the accepted cost (the map-side partial sum still bounds the
@@ -96,20 +96,17 @@ object PageRank {
     // dedup pipeline — a corpus scan + signature pass per branch;
     // 7.4 s → 2.6 s at sf0.1)
     val fwd = staged.select(col(aCol).as("src"), col(bCol).as("dst"))
-    // …then the edge list, which degree, adjacency and node set each read
-    // (no distinct — see the contract above; self-loops still dropped)
+    // …then the edge list (no distinct — see the contract above; self-loops
+    // still dropped), a narrow pass over that checkpoint per reader
     val sym = fwd.union(fwd.select(col("dst").as("src"), col("src").as("dst")))
       .filter(col("src") =!= col("dst"))
-      .localCheckpoint(false)
     // node set with out-degree — one aggregation over the staged edges
-    val nodes = sym.groupBy(col("src").as("id")).agg(count(lit(1)).as("deg"))
-      .localCheckpoint(false)
+    val nodes = Tuning.cut(sym.groupBy(col("src").as("id")).agg(count(lit(1)).as("deg")))
     val small = nodes.count() <= broadcastNodeLimit // nodes just materialized
     def nodeSized(df: DataFrame): DataFrame = if (small) broadcast(df) else df
     // adjacency with the degree attached — built once, read every round
-    val adj = sym
-      .join(nodeSized(nodes.select(col("id").as("src"), col("deg"))), "src")
-      .localCheckpoint()
+    val adj = Tuning.cut(sym
+      .join(nodeSized(nodes.select(col("id").as("src"), col("deg"))), "src"))
     var rank = nodes.select(col("id"), lit(1000000L).as("rank_u"))
     var it = 0
     var converged = false
@@ -117,11 +114,10 @@ object PageRank {
       val contrib = adj.join(nodeSized(rank), adj("src") === rank("id"))
         .select(col("dst"), expr("rank_u div deg").as("c"))
         .groupBy(col("dst")).agg(sum(col("c")).as("mass"))
-      val next = nodes
+      val next = Tuning.cut(nodes
         .join(nodeSized(contrib), nodes("id") === contrib("dst"), "left")
         .select(nodes("id"),
-          (lit(150000L) + expr("(85 * coalesce(mass, 0)) div 100")).as("rank_u"))
-        .localCheckpoint(false) // cut: round i must not re-plan rounds < i
+          (lit(150000L) + expr("(85 * coalesce(mass, 0)) div 100")).as("rank_u"))) // cut: round i must not re-plan rounds < i
       // convergence probe: node-sized equi-join + scalar max; the action
       // materializes `next`'s checkpoint, which the loop needs anyway
       val delta = next
@@ -169,28 +165,24 @@ object PageRank {
     val fwd = staged.select(col(aCol).as("src"), col(bCol).as("dst"))
     val sym = fwd.union(fwd.select(col("dst").as("src"), col("src").as("dst")))
       .filter(col("src") =!= col("dst"))
-      .localCheckpoint(false)
-    val nodes = sym.groupBy(col("src").as("id")).agg(count(lit(1)).as("deg"))
+    val nodes = Tuning.cut(sym.groupBy(col("src").as("id")).agg(count(lit(1)).as("deg"))
       // the seed indicator is a literal IN — seed sets are query-sized
       .withColumn("s", col("id").isin(seeds.map(_.asInstanceOf[Any]): _*)
-        .cast("long"))
-      .localCheckpoint(false)
+        .cast("long")))
     val small = nodes.count() <= broadcastNodeLimit
     def nodeSized(df: DataFrame): DataFrame = if (small) broadcast(df) else df
-    val adj = sym
-      .join(nodeSized(nodes.select(col("id").as("src"), col("deg"))), "src")
-      .localCheckpoint()
+    val adj = Tuning.cut(sym
+      .join(nodeSized(nodes.select(col("id").as("src"), col("deg"))), "src"))
     var rank = nodes.select(col("id"), (col("s") * lit(1000000L)).as("rank_u"))
     (0 until iters).foreach { _ =>
       val contrib = adj.join(nodeSized(rank), adj("src") === rank("id"))
         .select(col("dst"), expr("rank_u div deg").as("c"))
         .groupBy(col("dst")).agg(sum(col("c")).as("mass"))
-      rank = nodes
+      rank = Tuning.cut(nodes
         .join(nodeSized(contrib), nodes("id") === contrib("dst"), "left")
         .select(nodes("id"),
           (col("s") * lit(150000L) + expr("(85 * coalesce(mass, 0)) div 100"))
-            .as("rank_u"))
-        .localCheckpoint()
+            .as("rank_u")))
     }
     nodes.join(nodeSized(rank), "id").select(col("id"), col("deg"), col("rank_u"))
   }

@@ -57,8 +57,8 @@ object PqCodebook {
     *
     * Round 16: size-gated LOCAL Lloyd (the [[LocalGraph]] strategy applied
     * to codebook training) — each iteration of the distributed loop costs
-    * one n·m-row shuffle, a positional-mean aggregation and an eager
-    * checkpoint, all fixed overhead when the corpus is small. `train` is
+    * one n·m-row shuffle, a positional-mean aggregation and a
+    * cut, all fixed overhead when the corpus is small. `train` is
     * the gate plus the two loops it chooses between: when
     * [[LocalStrategy.stage]] keeps the (id, vector) corpus local (at most
     * `spark.graft.localRowLimit` vectors, default 2^20 — a 64-dim float
@@ -66,7 +66,7 @@ object PqCodebook {
     * of magnitude) [[trainLocal]] runs the SAME arithmetic (ascending-index
     * double dot, max-margin argmax with lowest-code ties, micro-unit BIGINT
     * mean) in-process; otherwise [[lloyd]], the distributed loop, runs over
-    * the gate's checkpoint (the input is evaluated once either way). The
+    * the gate's cut (the input is evaluated once either way). The
     * gate's conditions are [[localSchema]] and [[localRows]];
     * `AnnIndex.build` stages its corpus under the same ones and calls the
     * two loops directly. LocalGraphSpec pins both paths' parity on the
@@ -105,7 +105,7 @@ object PqCodebook {
     rows.map(r => (r.getAs[Number](0).longValue, r.getSeq[Float](1))).sortBy(_._1)
 
   /** The distributed Lloyd loop (the seed grid alone at `iters = 0`): one
-    * sub-vector scan, one n·m-row shuffle and an eager checkpoint per
+    * sub-vector scan, one n·m-row shuffle and a cut per
     * iteration. Centroids are `array<float>` whatever the vectors' element
     * type, as `AnnIndex` reads its stored codebook.
     */
@@ -117,13 +117,11 @@ object PqCodebook {
     val seeds = corpus.orderBy(col(idCol)).limit(kcode)
       .withColumn("code",
         (row_number().over(Window.orderBy(col(idCol))) - 1).cast("long"))
-    var cb = seeds.crossJoin(subs)
+    var cb = Tuning.cut(seeds.crossJoin(subs)
       .select($"s", $"code",
-        slice(col(vecCol), ($"s" * sub + 1).cast("int"), lit(sub)).cast("array<float>").as("cent"))
-      .localCheckpoint() // m·kcode rows; feeds every iteration + caller
+        slice(col(vecCol), ($"s" * sub + 1).cast("int"), lit(sub)).cast("array<float>").as("cent"))) // m·kcode rows; feeds every iteration + caller
     if (iters == 0) return cb
-    val svs = subVectors(corpus, m, sub, idCol, vecCol)
-      .localCheckpoint() // scanned once per iteration; cut re-slicing
+    val svs = Tuning.cut(subVectors(corpus, m, sub, idCol, vecCol)) // scanned once per iteration; cut re-slicing
     for (_ <- 0 until iters) {
       val cbScore = cb.withColumn("half_norm2",
         VectorFunctions.dotProduct($"cent", $"cent") / lit(2.0))
@@ -149,11 +147,10 @@ object PqCodebook {
           .as("cent"))
       // keep old centroid where a code went empty; checkpoint cuts lineage
       // (m·kcode rows — the materialization is trivial)
-      cb = cb.alias("old")
+      cb = Tuning.cut(cb.alias("old")
         .join(means.alias("new"), Seq("s", "code"), "left")
         .select($"s", $"code",
-          coalesce(col("new.cent"), col("old.cent")).as("cent"))
-        .localCheckpoint()
+          coalesce(col("new.cent"), col("old.cent")).as("cent")))
     }
     cb
   }

@@ -40,8 +40,8 @@ object QuantileNorm {
   def normalize(df: DataFrame, groupCol: String, vCol: String,
       maxDistinct: Long = 1L << 16): DataFrame = {
     val scores = df.select(col(groupCol).as("source"), col(vCol).as("v"))
-    val hist0 = scores.groupBy(col("source"), col("v"))
-      .agg(count(lit(1)).as("cnt")).localCheckpoint(false)
+    val hist0 = Tuning.cut(scores.groupBy(col("source"), col("v"))
+      .agg(count(lit(1)).as("cnt")))
     val exactPath = hist0.select(col("v")).distinct().count() <= maxDistinct
     val hist = if (exactPath) hist0
     else {
@@ -58,7 +58,6 @@ object QuantileNorm {
           expr("if(cu = 0, cast(0 as bigint), shiftleft(cast(1 as bigint), bkt - 1))")
             .as("v"))
         .agg(sum(col("cnt")).as("cnt"))
-        .localCheckpoint()
     }
     val sizes = hist.groupBy(col("source")).agg(sum(col("cnt")).as("ns"))
     val srcCum = hist

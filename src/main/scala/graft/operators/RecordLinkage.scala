@@ -65,11 +65,10 @@ object RecordLinkage {
       .withColumn("rn", row_number().over(w))
       .filter(col("rn") <= rarest)
       .select(col("id"), col("g"))
-    val cand = nominate(gl).as("a")
+    val cand = Tuning.cut(nominate(gl).as("a")
       .join(nominate(gr).as("b"), col("a.g") === col("b.g"))
       .select(col("a.id").as("lid"), col("b.id").as("rid"))
-      .distinct()
-      .localCheckpoint() // candidate census + verify both read it
+      .distinct()) // candidate census + verify both read it
     val nc = cand.groupBy(col("rid")).agg(count(lit(1)).as("n_cands"))
     val ver = cand
       .join(left.select(col(idL).as("lid"), col(nameL).as("__ln")), "lid")

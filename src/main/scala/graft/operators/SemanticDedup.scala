@@ -16,7 +16,7 @@ import graft.functions.VectorFunctions
   * Scale shape: the centroid set is a k-row broadcast and the cell
   * assignment is [[IvfIndex.assign]]'s map-side partial+final `max_by` —
   * one corpus scan, n (never k·n) rows through the shuffle; the assigned
-  * relation is staged once (localCheckpoint) because the pair join
+  * relation is staged once (a cut) because the pair join
   * reads it twice and the report three times. The quadratic pair check
   * runs INSIDE each cell via a self-equi-join on `centroid_id`: with
   * cells balanced at size s, cost is n·s comparisons instead of n² — at
@@ -32,7 +32,7 @@ object SemanticDedup {
   /** One corpus scan: cells = (id, vec, centroid_id), staged for reuse. */
   private def cellsOf(corpus: DataFrame, centroids: DataFrame,
       idCol: String, vecCol: String): DataFrame =
-    IvfIndex.assign(corpus, centroids, idCol, vecCol).localCheckpoint()
+    Tuning.cut(IvfIndex.assign(corpus, centroids, idCol, vecCol))
 
   /** Within-cluster duplicate ids over an assigned `cells` relation:
     * vectors with at least one LOWER-id cluster-mate at `cosine >= tau`.

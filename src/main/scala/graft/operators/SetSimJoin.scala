@@ -184,7 +184,7 @@ object SetSimJoin {
       shingleN: Int, tau4: Long): DataFrame = {
     require(tau4 > 0 && tau4 <= 10000, s"tau4 must be in (0, 10000], got $tau4")
     // both the prefix explode and the verify join read the sets — stage once
-    val sets = canonicalSets(docs, idCol, textCol, shingleN).localCheckpoint()
+    val sets = Tuning.cut(canonicalSets(docs, idCol, textCol, shingleN))
     verifyPairs(
       candidatePairs(sets, tau4, positional = true, asymmetric = true),
       sets, tau4)
@@ -238,9 +238,9 @@ object SetSimJoin {
     require(tau4 > 0 && tau4 <= 10000, s"tau4 must be in (0, 10000], got $tau4")
     val baseEl = elements(baseDocs, idCol, textCol, shingleN)
     val dfc = baseEl.groupBy(col("__g")).agg(count(lit(1)).as("__df"))
-    val baseSets = canonicalUnder(baseEl, dfc).localCheckpoint()
-    val deltaSets = canonicalUnder(
-      elements(deltaDocs, idCol, textCol, shingleN), dfc).localCheckpoint()
+    val baseSets = Tuning.cut(canonicalUnder(baseEl, dfc))
+    val deltaSets = Tuning.cut(canonicalUnder(
+      elements(deltaDocs, idCol, textCol, shingleN), dfc))
     deltaCore(baseSets, prefixOf(baseSets, tau4), deltaSets, tau4)
   }
 
@@ -252,7 +252,7 @@ object SetSimJoin {
     */
   private def deltaCore(baseSets: DataFrame, pb: DataFrame,
       deltaSets: DataFrame, tau4: Long): DataFrame = {
-    val allSets = baseSets.unionByName(deltaSets).localCheckpoint()
+    val allSets = Tuning.cut(baseSets.unionByName(deltaSets))
     val pd = prefixOf(deltaSets, tau4)
     val sizeOk = least(col("a.sz"), col("b.sz")) * lit(10000L) >=
       lit(tau4) * greatest(col("a.sz"), col("b.sz"))
@@ -322,8 +322,8 @@ object SetSimJoin {
     val dfc = spark.read.parquet(s"$dir/df.parquet")
     val baseSets = spark.read.parquet(s"$dir/sets.parquet")
     val pb = spark.read.parquet(s"$dir/prefix.parquet")
-    val deltaSets = canonicalUnder(
-      elements(deltaDocs, idCol, textCol, shingleN), dfc).localCheckpoint()
+    val deltaSets = Tuning.cut(canonicalUnder(
+      elements(deltaDocs, idCol, textCol, shingleN), dfc))
     deltaCore(baseSets, pb, deltaSets, tau4)
   }
 }

@@ -36,7 +36,7 @@ object Skyline {
       gridCells: Int = 32): DataFrame = {
     require(!df.columns.exists(_.startsWith("__sky")),
       "input already carries internal __sky columns")
-    val pts = df.localCheckpoint() // scan feeds widths, cells, candidates
+    val pts = Tuning.cut(df) // scan feeds widths, cells, candidates
     // cell widths from the (min, max) RANGE, cells from min-shifted values:
     // width = (mx − mn) div cells + 1 is ≥ 1 for ANY sign of the data, so
     // the documented negate-a-column-to-minimize usage cannot produce a
@@ -55,7 +55,6 @@ object Skyline {
     val cellSet = cells.groupBy(col("__sky_cx"), col("__sky_cy"))
       .agg(count(lit(1)).as("__sky_n"))
       .select(col("__sky_cx"), col("__sky_cy"))
-      .localCheckpoint() // ≤ (gridCells+1)² rows; both sides of the cut
     val surviving = cellSet
       .join(broadcast(cellSet.select(col("__sky_cx").as("__sky_dx"),
           col("__sky_cy").as("__sky_dy"))),
@@ -64,7 +63,6 @@ object Skyline {
     val cand = cells
       .join(broadcast(surviving), Seq("__sky_cx", "__sky_cy"), "left_semi")
       .drop("__sky_cx", "__sky_cy")
-      .localCheckpoint() // frontier band; dominance probe reads it twice
     val others = broadcast(cand.select(col(xCol).as("__sky_bx"),
       col(yCol).as("__sky_by")))
     cand.join(others,

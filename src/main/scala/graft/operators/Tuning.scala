@@ -3,7 +3,8 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.catalyst.plans.logical._
 
-/** Scale-adaptive tuning helpers shared by the query suite.
+/** Scale-adaptive tuning helpers shared by the query suite, and [[cut]],
+  * the one way the engine materializes an intermediate.
   *
   * Round-16 rationale (spark_optimization_guide §2/§4): the suite carried
   * hard-coded `repartition(32, …)` calls — the q90 lesson (a small parquet
@@ -17,6 +18,15 @@ import org.apache.spark.sql.catalyst.plans.logical._
   * overhead).
   */
 object Tuning {
+
+  /** A lazy, shared materialization boundary over `df`
+    * ([[org.apache.spark.sql.graft.plans.Cut]]): no job at the call; the
+    * first reader computes `df` once and every reader shares those blocks.
+    * A site keeps a cut only where it pays: it pins a non-deterministic
+    * result for several readers, truncates a loop's lineage, or spares an
+    * expensive child a recompute that exchange reuse does not cover.
+    */
+  def cut(df: DataFrame): DataFrame = org.apache.spark.sql.graft.plans.Cut.of(df)
 
   /** Target fan-out for compute-bound stages: the cluster's default
     * parallelism (local[N] → N; a real cluster → total executor cores).
@@ -68,8 +78,8 @@ object Tuning {
     * segment (codec work, regex chains, pair verification) runs TWICE —
     * once for the boundaries, once for the shuffle write. A hash
     * exchange on the (output-sized) result materializes an AQE stage the
-    * sampler reads instead. Row-identical; unlike a localCheckpoint cut
-    * it keeps the full lineage visible in the plan and AQE alive.
+    * sampler reads instead. Row-identical; unlike a [[cut]] it keeps the
+    * full lineage visible in the plan and AQE alive.
     */
   def sortShield(df: DataFrame, keys: Column*): DataFrame =
     df.repartition(spreadPartitions(df), keys: _*)

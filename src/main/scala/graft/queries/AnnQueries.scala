@@ -6,6 +6,7 @@ import org.apache.spark.sql.functions._
 
 import graft.functions.{TextFunctions, VectorFunctions}
 import graft.SparkEntry._
+import graft.operators.Tuning
 
 /** Vector search and retrieval: brute/LSH/IVF/PQ ANN, the persisted build/serve index, BM25/hybrid/phrase/proximity ranking, retrieval eval, ask paths.
   *
@@ -309,10 +310,10 @@ private[graft] object AnnQueries {
       val qs = emb.filter($"vec_id" < 10).select($"vec_id".as("query_id"), $"embedding")
       // truth and candidates are each read twice (hit count + NN-rank
       // probe): stage the k·q-row results, not the scans
-      val truth = graft.operators.SimilaritySearch
-        .bruteForceTopK(emb, qs, k = 10).localCheckpoint()
-      val cand = graft.operators.SimilaritySearch
-        .lshTopK(emb, qs, k = 10, dim = 64, planes = 4).localCheckpoint()
+      val truth = Tuning.cut(graft.operators.SimilaritySearch
+        .bruteForceTopK(emb, qs, k = 10))
+      val cand = Tuning.cut(graft.operators.SimilaritySearch
+        .lshTopK(emb, qs, k = 10, dim = 64, planes = 4))
       val hits = truth.select($"query_id", $"neighbor_id")
         .join(cand.select($"query_id", $"neighbor_id"), Seq("query_id", "neighbor_id"))
         .groupBy($"query_id").agg(count(lit(1)).as("n_hit"))
@@ -346,12 +347,11 @@ private[graft] object AnnQueries {
       import s.implicits._
       val emb = t(s, dir, "embeddings")
       val cents = graft.operators.IvfIndex.centroids(emb, k = 8, iters = 0)
-      val cells = graft.operators.IvfIndex.assign(emb, cents, "vec_id", "embedding")
+      val cells = Tuning.cut(graft.operators.IvfIndex.assign(emb, cents, "vec_id", "embedding")
         .join(broadcast(cents), "centroid_id")
         .select($"centroid_id", $"vec_id",
           floor(graft.functions.VectorFunctions.cosineSim($"embedding", $"centroid")
-            * lit(10000.0)).cast("long").as("cos4"))
-        .localCheckpoint() // stats + flagging read the scored cells
+            * lit(10000.0)).cast("long").as("cos4"))) // stats + flagging read the scored cells
       val stats = cells.groupBy($"centroid_id")
         .agg(count(lit(1)).as("n"), sum($"cos4").as("s1"),
           sum($"cos4" * $"cos4").as("s2"))
@@ -377,14 +377,13 @@ private[graft] object AnnQueries {
       import s.implicits._
       val emb = t(s, dir, "embeddings")
       val qs = emb.filter($"vec_id" < 10).select($"vec_id".as("query_id"), $"embedding")
-      val truth = graft.operators.SimilaritySearch
-        .bruteForceTopK(emb, qs, k = 10).localCheckpoint()
+      val truth = Tuning.cut(graft.operators.SimilaritySearch
+        .bruteForceTopK(emb, qs, k = 10))
       // candidate ranking sees ONLY the 16-dim prefix of both sides
       val emb16 = emb.select($"vec_id", slice($"embedding", 1, 16).as("embedding"))
       val qs16 = qs.select($"query_id", slice($"embedding", 1, 16).as("embedding"))
-      val cand = graft.operators.SimilaritySearch
-        .bruteForceTopK(emb16, qs16, k = 10, qidCol = "query_id")
-        .localCheckpoint()
+      val cand = Tuning.cut(graft.operators.SimilaritySearch
+        .bruteForceTopK(emb16, qs16, k = 10, qidCol = "query_id"))
       val hits = truth.select($"query_id", $"neighbor_id")
         .join(cand.select($"query_id", $"neighbor_id"), Seq("query_id", "neighbor_id"))
         .groupBy($"query_id").agg(count(lit(1)).as("n_hit"))
@@ -414,9 +413,8 @@ private[graft] object AnnQueries {
     // both phrase chains.
     "q113_phrase_search" -> ((s, dir) => {
       import s.implicits._
-      val post = graft.query.InvertedIndex
-        .postings(t(s, dir, "documents"), "doc_id", "text")
-        .localCheckpoint()
+      val post = Tuning.cut(graft.query.InvertedIndex
+        .postings(t(s, dir, "documents"), "doc_id", "text"))
       def hits(phrase: Seq[String]) =
         graft.query.InvertedIndex.phraseMatches(post, phrase)
           .groupBy($"doc_id")
@@ -467,10 +465,9 @@ private[graft] object AnnQueries {
       val emb = t(s, dir, "embeddings")
       val queries = emb.filter($"vec_id".isin(0, 1, 2))
         .select($"vec_id".as("query_id"), $"embedding")
-      val cand = graft.operators.SimilaritySearch.bruteForceTopK(emb, queries, 8)
+      val cand = Tuning.cut(graft.operators.SimilaritySearch.bruteForceTopK(emb, queries, 8)
         .select($"query_id", $"neighbor_id",
-          floor($"score" * 10000.0).cast("long").as("rel_u"))
-        .localCheckpoint() // candidate set feeds pairs AND the loop
+          floor($"score" * 10000.0).cast("long").as("rel_u"))) // candidate set feeds pairs AND the loop
       val vecs = emb.select($"vec_id", $"embedding")
       val pairs = cand.select($"query_id", $"neighbor_id".as("id_a"))
         .join(cand.select($"query_id", $"neighbor_id".as("id_b")), Seq("query_id"))
@@ -518,12 +515,11 @@ private[graft] object AnnQueries {
       val emb = t(s, dir, "embeddings")
       val qs = emb.filter($"vec_id" < 16)
         .select($"vec_id".as("query_id"), $"embedding".as("qv"), $"label".as("qlabel"))
-      val scored = emb.crossJoin(broadcast(qs))
+      val scored = Tuning.cut(emb.crossJoin(broadcast(qs))
         .filter($"vec_id" =!= $"query_id")
         .select($"query_id", $"qlabel", $"vec_id", $"label",
           floor(graft.functions.VectorFunctions.cosineSim($"embedding", $"qv")
-            * lit(10000.0)).cast("long").as("cos4"))
-        .localCheckpoint() // one scored scan feeds pos/neg/n_harder
+            * lit(10000.0)).cast("long").as("cos4"))) // one scored scan feeds pos/neg/n_harder
       val w = org.apache.spark.sql.expressions.Window
         .partitionBy($"query_id").orderBy($"cos4".desc, $"vec_id")
       val pos = scored.filter($"label" === $"qlabel")
@@ -570,7 +566,6 @@ private[graft] object AnnQueries {
         .filter($"vec_id" =!= $"query_id")
         .select($"query_id", $"cell_rank", $"vec_id",
           VectorFunctions.cosineSim($"embedding", $"qv").as("sc"))
-        .localCheckpoint() // one scored relation feeds all sweep points
       val wb = Window.partitionBy($"query_id").orderBy($"sc".desc, $"vec_id")
       val brute = emb.crossJoin(broadcast(queries))
         .filter($"vec_id" =!= $"query_id")
@@ -578,7 +573,6 @@ private[graft] object AnnQueries {
           VectorFunctions.cosineSim($"embedding", $"qv").as("sc"))
         .withColumn("rn", row_number().over(wb)).filter($"rn" <= 10)
         .select($"query_id", $"vec_id")
-        .localCheckpoint() // k·queries-sized truth set
       val sweep = Seq(1L, 2L, 4L, 8L).toDF("nprobe")
       val wk = Window.partitionBy($"nprobe", $"query_id")
         .orderBy($"sc".desc, $"vec_id")
@@ -617,13 +611,12 @@ private[graft] object AnnQueries {
       val cents0 = graft.operators.IvfIndex.centroids(emb, k = autoK, iters = 0)
       val cents2 = graft.operators.IvfIndex.centroids(emb, k = autoK, iters = 2)
       val wb = Window.partitionBy($"query_id").orderBy($"sc".desc, $"vec_id")
-      val brute = emb.crossJoin(broadcast(queries))
+      val brute = Tuning.cut(emb.crossJoin(broadcast(queries))
         .filter($"vec_id" =!= $"query_id")
         .select($"query_id", $"vec_id",
           VectorFunctions.cosineSim($"embedding", $"qv").as("sc"))
         .withColumn("rn", row_number().over(wb)).filter($"rn" <= 10)
-        .select($"query_id", $"vec_id")
-        .localCheckpoint() // 10·queries-sized truth feeds both sweeps
+        .select($"query_id", $"vec_id")) // 10·queries-sized truth feeds both sweeps
       def sweep(cents: DataFrame, grid: String): DataFrame = {
         val cells = graft.operators.IvfIndex.assign(emb, cents, "vec_id", "embedding")
         val wq = Window.partitionBy($"query_id").orderBy($"csc".desc, $"centroid_id")
@@ -632,11 +625,10 @@ private[graft] object AnnQueries {
             VectorFunctions.cosineSim($"qv", $"centroid").as("csc"))
           .withColumn("cell_rank", row_number().over(wq))
           .select($"query_id", $"qv", $"centroid_id", $"cell_rank")
-        val cand = cells.join(broadcast(qcells), Seq("centroid_id"))
+        val cand = Tuning.cut(cells.join(broadcast(qcells), Seq("centroid_id"))
           .filter($"vec_id" =!= $"query_id")
           .select($"query_id", $"cell_rank", $"vec_id",
-            VectorFunctions.cosineSim($"embedding", $"qv").as("sc"))
-          .localCheckpoint() // one scored relation feeds all sweep points
+            VectorFunctions.cosineSim($"embedding", $"qv").as("sc"))) // one scored relation feeds all sweep points
         val sweepDf = Seq(1L, 2L, 4L).toDF("nprobe")
         val wk = Window.partitionBy($"nprobe", $"query_id")
           .orderBy($"sc".desc, $"vec_id")
@@ -690,7 +682,6 @@ private[graft] object AnnQueries {
       val emb = t(s, dir, "embeddings")
       val cb = graft.operators.PqCodebook.train(emb, m, sub, kcode, iters = 2)
       val codes = graft.operators.PqCodebook.encode(emb, cb, m, sub)
-        .localCheckpoint() // the compressed index — ADC reads ONLY this
       val queries = emb.filter($"vec_id" < 16)
         .select($"vec_id".as("query_id"), $"embedding".as("qv"))
       val lut = graft.operators.PqCodebook.lut(queries, cb, m, sub)
@@ -743,13 +734,12 @@ private[graft] object AnnQueries {
         .select($"vec_id".as("query_id"), $"embedding".as("qv"))
       val lut = graft.operators.PqCodebook.lut(queries, cb, m, sub)
       val wq = Window.partitionBy($"query_id").orderBy($"adc_u".desc, $"vec_id")
-      val short = codes.join(broadcast(lut), Seq("s", "code"))
+      val short = Tuning.cut(codes.join(broadcast(lut), Seq("s", "code"))
         .filter($"vec_id" =!= $"query_id")
         .groupBy($"query_id", $"vec_id")
         .agg(sum($"dot_u").as("adc_u"))
         .withColumn("rn", row_number().over(wq)).filter($"rn" <= shortlist)
-        .select($"query_id", $"vec_id", $"rn")
-        .localCheckpoint() // shortlist feeds raw-ADC top-10 + rerank
+        .select($"query_id", $"vec_id", $"rn")) // shortlist feeds raw-ADC top-10 + rerank
       // exact re-score of ONLY the shortlist: 50 raw-vector reads/query
       val wr = Window.partitionBy($"query_id").orderBy($"ex_u".desc, $"vec_id")
       val reranked = short
@@ -761,14 +751,13 @@ private[graft] object AnnQueries {
         .withColumn("rn2", row_number().over(wr)).filter($"rn2" <= 10)
         .select($"query_id", $"vec_id")
       val wb = Window.partitionBy($"query_id").orderBy($"dot_u".desc, $"vec_id")
-      val brute = emb.crossJoin(broadcast(queries))
+      val brute = Tuning.cut(emb.crossJoin(broadcast(queries))
         .filter($"vec_id" =!= $"query_id")
         .select($"query_id", $"vec_id",
           floor(VectorFunctions.dotProduct($"embedding", $"qv") * lit(1000000.0))
             .cast("long").as("dot_u"))
         .withColumn("rn", row_number().over(wb)).filter($"rn" <= 10)
-        .select($"query_id", $"vec_id")
-        .localCheckpoint() // truth feeds all three recall columns
+        .select($"query_id", $"vec_id")) // truth feeds all three recall columns
       def hits(cand: DataFrame, name: String) = cand
         .join(brute, Seq("query_id", "vec_id"))
         .groupBy($"query_id").agg(count(lit(1)).as(name))
@@ -806,12 +795,10 @@ private[graft] object AnnQueries {
       val cells = graft.operators.IvfIndex
         .assign(emb, cents, "vec_id", "embedding")
         .select($"vec_id", $"centroid_id")
-        .localCheckpoint() // coarse index; candidate filter reads it
       // round 12: Lloyd-trained codebook (q178's train, shared machinery)
       val cb = graft.operators.PqCodebook.train(emb, m, sub, kcode, iters = 2)
       val codes = graft.operators.PqCodebook.encode(emb, cb, m, sub)
-        .join(cells, Seq("vec_id")) // codes carry their cell — the index layout
-        .localCheckpoint()
+        .join(cells, Seq("vec_id"))
       val queries = emb.filter($"vec_id" < 16)
         .select($"vec_id".as("query_id"), $"embedding".as("qv"))
       val wc = Window.partitionBy($"query_id").orderBy($"csc".desc, $"centroid_id")
@@ -829,7 +816,6 @@ private[graft] object AnnQueries {
         .join(broadcast(lut), Seq("query_id", "s", "code"))
         .groupBy($"query_id", $"vec_id", $"cell_rank")
         .agg(sum($"dot_u").as("adc_u"))
-        .localCheckpoint()
       val wb = Window.partitionBy($"query_id").orderBy($"dot_u".desc, $"vec_id")
       val brute = emb.crossJoin(broadcast(queries))
         .filter($"vec_id" =!= $"query_id")
@@ -838,12 +824,10 @@ private[graft] object AnnQueries {
             .cast("long").as("dot_u"))
         .withColumn("rn", row_number().over(wb)).filter($"rn" <= 10)
         .select($"query_id", $"vec_id")
-        .localCheckpoint()
       val sweep = Seq(1L, 2L, 4L, 8L).toDF("nprobe")
       val wk = Window.partitionBy($"nprobe", $"query_id")
         .orderBy($"adc_u".desc, $"vec_id")
-      val scored = cand.join(broadcast(sweep), $"cell_rank" <= $"nprobe")
-        .localCheckpoint() // candidate counts + top-k both read it
+      val scored = Tuning.cut(cand.join(broadcast(sweep), $"cell_rank" <= $"nprobe")) // candidate counts + top-k both read it
       val hits = scored
         .withColumn("rn", row_number().over(wk)).filter($"rn" <= 10)
         .join(brute, Seq("query_id", "vec_id"))
@@ -913,8 +897,8 @@ private[graft] object AnnQueries {
       val emb = t(s, dir, "embeddings")
       val queries = emb.filter($"vec_id".isin(0, 1, 2))
         .select($"vec_id".as("query_id"), $"embedding")
-      val r1 = graft.operators.SimilaritySearch.bruteForceTopK(emb, queries, 5)
-        .select($"query_id", $"neighbor_id").localCheckpoint()
+      val r1 = Tuning.cut(graft.operators.SimilaritySearch.bruteForceTopK(emb, queries, 5)
+        .select($"query_id", $"neighbor_id"))
       val fb = r1
         .join(emb.select($"vec_id".as("neighbor_id"), $"embedding"), Seq("neighbor_id"))
         .select($"query_id", posexplode($"embedding").as(Seq("pos", "comp")))
@@ -953,8 +937,8 @@ private[graft] object AnnQueries {
       import s.implicits._
       val docs = t(s, dir, "documents")
       val baseTerms = Bm25Terms
-      val r1 = graft.query.LexicalRetriever.bm25MicroScores(
-        docs, "doc_id", "text", baseTerms).localCheckpoint(false)
+      val r1 = Tuning.cut(graft.query.LexicalRetriever.bm25MicroScores(
+        docs, "doc_id", "text", baseTerms))
       val fbIds = r1.orderBy($"score_u".desc, $"doc_id").limit(5)
         .select($"doc_id").as[Long].collect().toSeq
       val stop = (baseTerms ++

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.SparkEntry._
+import graft.operators.Tuning
 
 /** Crawl link analysis and scheduling — the WAT side of the round-12/13
   * crawl wing: outlink extraction + RFC 3986 resolution, the host-level
@@ -161,8 +162,7 @@ private[graft] object CrawlQueries {
     // three rank rounds.
     "q284_host_graph" -> ((s, dir) => {
       import s.implicits._
-      val edges = hostEdges(t(s, dir, "documents"))
-        .localCheckpoint() // degree aggs + pair list all read it
+      val edges = Tuning.cut(hostEdges(t(s, dir, "documents"))) // degree aggs + pair list all read it
       val pairs = edges.select(
         least($"src_host", $"dst_host").as("a"),
         greatest($"src_host", $"dst_host").as("b")).distinct()
@@ -428,11 +428,10 @@ private[graft] object CrawlQueries {
           concat(lit("site"), $"m", lit(".com")).as("src_domain"),
           $"p.anchor".as("anchor"))
       // ONE corpus pass: the (url, anchor, src_domain) rollup is tiny and
-      // both downstream aggregates read it — checkpoint so the regexp
+      // both downstream aggregates read it — cut so the regexp
       // chain never re-runs per branch
-      val rollup = links.groupBy($"url", $"anchor", $"src_domain")
-        .agg(count(lit(1)).as("n"))
-        .localCheckpoint()
+      val rollup = Tuning.cut(links.groupBy($"url", $"anchor", $"src_domain")
+        .agg(count(lit(1)).as("n")))
       val perAnchor = rollup.groupBy($"url", $"anchor")
         .agg(sum($"n").cast("long").as("n"))
       perAnchor.groupBy($"url")
@@ -534,12 +533,11 @@ private[graft] object CrawlQueries {
       // round 16: through the DSv2 `warc` table (q273's routing) so the
       // record walk prunes to the consumed columns; the checkpoint holds
       // (type, digest, payload length)-sized rows for the two consumers
-      val recs = graft.sources.WarcReader.viaTable(s, warcs, "warc",
+      val recs = Tuning.cut(graft.sources.WarcReader.viaTable(s, warcs, "warc",
           "q292-" + dir.replaceAll("[^A-Za-z0-9.]", "_"))
         .filter($"warc_type" =!= "warcinfo")
         .select($"warc_type", $"payload_digest",
-          length($"payload").cast("long").as("payload_len"))
-        .localCheckpoint() // census + resolution join both read it
+          length($"payload").cast("long").as("payload_len"))) // census + resolution join both read it
       val responses = recs.filter($"warc_type" === "response")
         .select($"payload_digest".as("rd")).distinct()
       recs.groupBy($"warc_type")
@@ -654,12 +652,11 @@ private[graft] object CrawlQueries {
         element_at(prefixes, (pmod($"doc_id", lit(3)) + 1).cast("int")),
         lit("site"), pmod($"doc_id", lit(37)), lit("."),
         element_at(tlds, (pmod(pmod($"doc_id", lit(37)), lit(5)) + 1).cast("int")))
-      val scored = t(s, dir, "documents").transform(graft.operators.Tuning.spreadDocs)
+      val scored = Tuning.cut(t(s, dir, "documents").transform(graft.operators.Tuning.spreadDocs)
         .select($"doc_id",
           graft.operators.UrlOps.registrableDomainPsl(
             host, graft.operators.UrlOps.pslSnapshot).as("domain"),
-          (score > 0).cast("int").as("keep"))
-        .localCheckpoint() // the prior agg and the join-back both read it
+          (score > 0).cast("int").as("keep"))) // the prior agg and the join-back both read it
       val prior = scored.groupBy($"domain")
         .agg(count(lit(1)).as("n_docs"), sum($"keep").as("n_keep"))
         .withColumn("prior_ppm",
@@ -872,7 +869,7 @@ private[graft] object CrawlQueries {
         val b = conv(substring(md5(x), 1, 8), 16, 10).cast("long") % 4096
         acc + ((b * 2654435761L) % 2003 - 1001)
       })
-      val uu = burl.unionByName(trp)
+      val uu = Tuning.cut(burl.unionByName(trp)
         .withColumn("keep", (score > 0).cast("int"))
         .withColumn("spam_class", graft.operators.UrlOps.urlSpamClass($"url",
           Seq("casino", "viagra", "xxx", "poker")))
@@ -880,8 +877,7 @@ private[graft] object CrawlQueries {
           size(split(regexp_extract($"url", "\\?(.*)$", 1), "&")))
           .otherwise(0))
         .withColumn("digest", sha2($"text", 256))
-        .drop("text")
-        .localCheckpoint() // domain rollup + gated output both read it
+        .drop("text")) // domain rollup + gated output both read it
       // shuffle 1: trap signals and the prior share one domain rollup,
       // broadcast back (domains are a corpus quotient)
       val dom = uu.groupBy($"domain")
@@ -1053,14 +1049,13 @@ private[graft] object CrawlQueries {
         .buildRedirectFixture(t(s, dir, "documents"))
       // round 16: DSv2 `warc` table — the warc_type=response gate pushes
       // into the record walk (request/warcinfo payloads never copied)
-      val recs = graft.sources.WarcReader.viaTable(s, warcs, "warc",
+      val recs = Tuning.cut(graft.sources.WarcReader.viaTable(s, warcs, "warc",
           "q301-" + dir.replaceAll("[^A-Za-z0-9.]", "_"))
         .filter($"warc_type" === "response")
         .select($"target_uri", $"http_status", $"http_location",
           when($"http_status" === 200 && $"content_type".startsWith("text/html"),
             graft.operators.HtmlOps.metaRefreshUrl(decode($"payload", "UTF-8")))
-            .otherwise("").as("meta_target"))
-        .localCheckpoint() // starts + edges + final-status all read it
+            .otherwise("").as("meta_target"))) // starts + edges + final-status all read it
       val httpEdges = recs
         .filter($"http_status" >= 300 && $"http_status" < 400 &&
           $"http_location" =!= "")

@@ -6,6 +6,7 @@ import org.apache.spark.sql.functions._
 
 import graft.functions.{TextFunctions, VectorFunctions}
 import graft.SparkEntry._
+import graft.operators.Tuning
 
 /** Deduplication: exact/span/paragraph/semantic/Unicode dedup, MinHash-LSH, SimHash, exact set-similarity joins, cluster resolution, dedup eval.
   *
@@ -132,7 +133,7 @@ private[graft] object DedupQueries {
     // (est_jac = 1.0 — the "same document" candidates; looser thresholds on
     // this templated corpus collapse into one giant component) → connected
     // components by iterative min-label propagation (one join shuffle per
-    // round, localCheckpoint'ed labels, O(diameter) rounds) → every doc
+    // round, cut labels, O(diameter) rounds) → every doc
     // mapped to its component's minimum id as the dedup keeper.
     "q53_dedup_resolve" -> ((s, dir) => {
       import s.implicits._
@@ -308,7 +309,7 @@ private[graft] object DedupQueries {
     // WITH-CTEs into every consumer, so a single-statement form would scan
     // the corpus + compute signatures TWICE (once per self-join side); the
     // band relation is therefore staged through an eagerly-cached temp view
-    // — the SQL analogue of the DataFrame path's localCheckpoint in
+    // — the SQL analogue of the DataFrame path's cut in
     // Dedup.bandSelfJoin. All statements are plain SQL: a SQL-only user
     // stages at scale exactly this way (or INSERTs into a staging table).
     "q56_sql_dedup" -> ((s, dir) => {
@@ -443,11 +444,10 @@ private[graft] object DedupQueries {
     "q148_novelty_score" -> ((s, dir) => {
       import s.implicits._
       val docs = t(s, dir, "documents")
-      val g = docs
+      val g = Tuning.cut(docs
         .select($"doc_id", explode(graft.operators.QualitySignals.ngramsStrict(
           graft.operators.TextAnalysis.tokensCol($"text"), 5)).as("g"))
-        .select($"doc_id", xxhash64($"g").as("h")).distinct()
-        .localCheckpoint() // distinct doc-gram set feeds df + per-doc agg
+        .select($"doc_id", xxhash64($"g").as("h")).distinct()) // distinct doc-gram set feeds df + per-doc agg
       val df5 = g.groupBy($"h").agg(count(lit(1)).as("nd"))
       val per = g.join(df5, Seq("h"))
         .groupBy($"doc_id")
@@ -526,9 +526,8 @@ private[graft] object DedupQueries {
     "q187_medoid_survivors" -> ((s, dir) => {
       import s.implicits._
       val docs = t(s, dir, "documents")
-      val pairs = graft.operators.Dedup.nearDupPairs(docs, "doc_id", "text",
-        numHashes = 8, shingle = 4, bands = 4, rowsPerBand = 2, threshold = 0.75)
-        .localCheckpoint() // labels + strengths both read it
+      val pairs = Tuning.cut(graft.operators.Dedup.nearDupPairs(docs, "doc_id", "text",
+        numHashes = 8, shingle = 4, bands = 4, rowsPerBand = 2, threshold = 0.75)) // labels + strengths both read it
       val lab = graft.operators.Dedup
         .resolveClustersSparse(pairs, docs.select($"doc_id"))
       val strength = pairs
@@ -536,7 +535,7 @@ private[graft] object DedupQueries {
         .unionByName(pairs
           .select($"id_b".as("id"), expr("cast(floor(est_jac * 10000) as bigint)").as("w4")))
         .groupBy($"id").agg(sum($"w4").as("strength4"), count(lit(1)).as("degree"))
-      val labeled = lab.join(strength, Seq("id")).localCheckpoint()
+      val labeled = Tuning.cut(lab.join(strength, Seq("id")))
       val wm = Window.partitionBy($"keeper_id").orderBy($"strength4".desc, $"id")
       labeled.withColumn("rk", row_number().over(wm)).filter($"rk" === 1)
         .join(labeled.groupBy($"keeper_id").agg(count(lit(1)).as("n_members")),
@@ -574,20 +573,19 @@ private[graft] object DedupQueries {
     "q207_dedup_eval" -> ((s, dir) => {
       import s.implicits._
       val docs = t(s, dir, "documents")
-      val sub = docs.filter(pmod(graft.functions.HashFunctions.stableHash64(
+      val sub = Tuning.cut(docs.filter(pmod(graft.functions.HashFunctions.stableHash64(
           concat(lit("de:"), $"doc_id".cast("string"))), lit(8L)) === 0)
-        .select($"doc_id", $"text").localCheckpoint()
-      val gramsAll = sub.select($"doc_id",
+        .select($"doc_id", $"text"))
+      val gramsAll = Tuning.cut(sub.select($"doc_id",
           explode(graft.operators.Dedup.shinglesCol($"text", 4)).as("g"))
         .select($"doc_id",
           pmod(graft.functions.HashFunctions.stableHash64($"g"),
             lit(2147483647L)).as("gh"))
-        .distinct().localCheckpoint()
-      val hot = gramsAll.groupBy($"gh").agg(count(lit(1)).as("df"))
-        .filter($"df" > 64L).select($"gh").localCheckpoint()
+        .distinct())
+      val hot = Tuning.cut(gramsAll.groupBy($"gh").agg(count(lit(1)).as("df"))
+        .filter($"df" > 64L).select($"gh"))
       val nCapped = broadcast(hot.agg(count(lit(1)).as("n_grams_capped")))
-      val grams = gramsAll.join(hot, Seq("gh"), "left_anti")
-        .localCheckpoint()
+      val grams = Tuning.cut(gramsAll.join(hot, Seq("gh"), "left_anti"))
       val sizes = grams.groupBy($"doc_id").agg(count(lit(1)).as("sz"))
       val inter = grams.as("a").join(grams.as("b"),
           $"a.gh" === $"b.gh" && $"a.doc_id" < $"b.doc_id")
@@ -595,7 +593,6 @@ private[graft] object DedupQueries {
         .agg(count(lit(1)).as("ni"))
         .join(sizes.select($"doc_id".as("id_a"), $"sz".as("sza")), "id_a")
         .join(sizes.select($"doc_id".as("id_b"), $"sz".as("szb")), "id_b")
-        .localCheckpoint() // three thresholds read it
       val th = Seq(2500L, 5000L, 7500L).toDF("t4")
       val truth = inter.crossJoin(broadcast(th))
         .filter($"ni" * 10000L >= $"t4" * ($"sza" + $"szb" - $"ni"))
@@ -604,7 +601,6 @@ private[graft] object DedupQueries {
           numHashes = 8, shingle = 4, bands = 4, rowsPerBand = 2, threshold = 0.0)
         .join(sub.select($"doc_id".as("id_a")), "id_a")
         .join(sub.select($"doc_id".as("id_b")), "id_b")
-        .localCheckpoint()
       val pred = predAll.crossJoin(broadcast(th))
         .filter($"est_jac" * 10000.0 >= $"t4".cast("double"))
         .select($"t4", $"id_a", $"id_b")
@@ -732,15 +728,14 @@ private[graft] object DedupQueries {
     // equality with the full self-join restricted to touching pairs).
     "q226_setsim_incremental" -> ((s, dir) => {
       import s.implicits._
-      val win = t(s, dir, "documents")
+      val win = Tuning.cut(t(s, dir, "documents")
         .filter($"doc_id" < 200)
         .withColumn("stride", greatest(lit(1L), floor(length($"text") / lit(8.0))))
         .withColumn("wlen", greatest(lit(4L), floor(length($"text") / lit(2.0))))
         .select(($"doc_id" * 3).as("base"), $"text", $"stride", $"wlen",
           explode(sequence(lit(0L), lit(2L))).as("w"))
         .select(($"base" + $"w").as("win_id"),
-          $"text".substr(($"w" * $"stride" + 1).cast("int"), $"wlen".cast("int")).as("wtext"))
-        .localCheckpoint() // base and delta sides both read it
+          $"text".substr(($"w" * $"stride" + 1).cast("int"), $"wlen".cast("int")).as("wtext"))) // base and delta sides both read it
       graft.operators.SetSimJoin
         .deltaJoin(win.filter(pmod($"win_id", lit(4L)) =!= 0),
           win.filter(pmod($"win_id", lit(4L)) === 0),
@@ -806,7 +801,7 @@ private[graft] object DedupQueries {
         when(pmod($"doc_id", lit(2L)) === 0,
           concat($"text", lit(" cafe\u0301 jalapen\u0303o")))
           .otherwise(concat($"text", lit(" beta"))).as("txt"))
-      val corpus2 = va.unionByName(vb).localCheckpoint()
+      val corpus2 = Tuning.cut(va.unionByName(vb))
       val nfc = Bridge.toColumn(
         org.apache.spark.sql.graft.expressions.NfcNormalize(Bridge.toExpr($"txt")))
       def census(h: org.apache.spark.sql.Column, pfx: String) = corpus2
@@ -833,10 +828,8 @@ private[graft] object DedupQueries {
           t(s, dir, "documents"), "doc_id", "text",
           numHashes = 8, shingle = 4, bands = 4, rowsPerBand = 2,
           threshold = 0.5)
-        .localCheckpoint() // five τ cuts read one verified relation
       val taus = broadcast(Seq(0.5, 0.625, 0.75, 0.875, 1.0).toDF("tau"))
-      val cut = pairs.crossJoin(taus).filter($"est_jac" >= $"tau")
-        .localCheckpoint() // pair counts + endpoint distinct
+      val cut = Tuning.cut(pairs.crossJoin(taus).filter($"est_jac" >= $"tau")) // pair counts + endpoint distinct
       val np = cut.groupBy($"tau").agg(count(lit(1)).as("n_pairs"))
       val nd = cut
         .select($"tau", explode(array($"id_a", $"id_b")).as("id"))
@@ -859,10 +852,9 @@ private[graft] object DedupQueries {
     "q251_bbit_minhash" -> ((s, dir) => {
       import s.implicits._
       val docs = t(s, dir, "documents")
-      val sigs = graft.operators.Dedup
+      val sigs = Tuning.cut(graft.operators.Dedup
         .minhashSig(docs, "text", numHashes = 8, shingle = 4)
-        .select($"doc_id", $"minhash")
-        .localCheckpoint() // joined to both pair sides
+        .select($"doc_id", $"minhash")) // joined to both pair sides
       val cand = graft.operators.Dedup.nearDupPairs(
           docs, "doc_id", "text",
           numHashes = 8, shingle = 4, bands = 4, rowsPerBand = 2,

@@ -6,6 +6,7 @@ import org.apache.spark.sql.functions._
 
 import graft.functions.{TextFunctions, VectorFunctions}
 import graft.SparkEntry._
+import graft.operators.Tuning
 
 /** Event analytics: funnels, sessions, cohorts, attribution, concurrency sweep-lines, transitions.
   *
@@ -219,21 +220,19 @@ private[graft] object EventQueries {
         .select(expr("ts div 86400000000000").as("day"),
           graft.functions.HashFunctions.stableHash64(
             concat(lit("mau:"), $"user_id".cast("string"))).as("h"))
-      val daily = ev
+      val daily = Tuning.cut(ev
         .withColumn("bkt", graft.operators.HllSketch.bucketCol($"h", p))
         .withColumn("rnk", graft.operators.HllSketch.rankExpr("h", p))
-        .groupBy($"day").agg(hll($"bkt", $"rnk").as("regs"))
-        .localCheckpoint() // the persisted register table
-      val days = daily.select($"day").localCheckpoint()
+        .groupBy($"day").agg(hll($"bkt", $"rnk").as("regs"))) // the persisted register table
       val fan = daily
         .withColumn("target_day", explode(sequence($"day", $"day" + 6)))
-        .join(days.select($"day".as("target_day")), Seq("target_day"), "left_semi")
+        .join(daily.select($"day".as("target_day")), Seq("target_day"), "left_semi")
       val rolled = graft.operators.HllSketch.rollupRegisters(
         fan.select($"target_day", $"regs"), Seq("target_day"), "regs")
       val exact = t(s, dir, "events")
         .select(expr("ts div 86400000000000").as("day"), $"user_id").distinct()
         .withColumn("target_day", explode(sequence($"day", $"day" + 6)))
-        .join(days.select($"day".as("target_day")), Seq("target_day"), "left_semi")
+        .join(daily.select($"day".as("target_day")), Seq("target_day"), "left_semi")
         .groupBy($"target_day")
         .agg(count_distinct($"user_id").as("mau_exact"))
       rolled.join(exact, Seq("target_day"))
@@ -257,11 +256,10 @@ private[graft] object EventQueries {
     "q186_multitouch" -> ((s, dir) => {
       import s.implicits._
       val ev = t(s, dir, "events")
-      val purchases = ev.filter($"event_type" === "purchase")
+      val purchases = Tuning.cut(ev.filter($"event_type" === "purchase")
         .select($"user_id", $"event_id".as("p_id"),
           expr("cast(floor(value * 1000000) as bigint)").as("value_u"),
-          ($"ts" - lit(604800000000000L)).as("lo"), $"ts".as("hi"))
-        .localCheckpoint() // interval side + the direct anti-join
+          ($"ts" - lit(604800000000000L)).as("lo"), $"ts".as("hi"))) // interval side + the direct anti-join
       val touches = ev.filter($"event_type" =!= "purchase")
         .select($"user_id", $"ts".as("t_ts"), $"event_id".as("t_id"),
           $"event_type".as("channel"))
@@ -276,11 +274,10 @@ private[graft] object EventQueries {
             .when($"rn" === 1 || $"rn" === $"n", lit(4000L))
             .otherwise(expr("2000 div (n - 2)")))
         .withColumn("credit0", expr("(value_u * bp) div 10000"))
-      val credited = base
+      val credited = Tuning.cut(base
         .withColumn("tot0", sum($"credit0").over(Window.partitionBy($"p_id")))
         .withColumn("credit_u", $"credit0" +
-          when($"rn" === $"n", $"value_u" - $"tot0").otherwise(lit(0L)))
-        .localCheckpoint() // channel rollup + the direct anti-join
+          when($"rn" === $"n", $"value_u" - $"tot0").otherwise(lit(0L)))) // channel rollup + the direct anti-join
       val attributed = credited.groupBy($"channel")
         .agg(count(lit(1)).as("n_touchpoints"), sum($"credit_u").as("credit_u"))
       val direct = purchases
@@ -344,14 +341,13 @@ private[graft] object EventQueries {
       import s.implicits._
       val w = org.apache.spark.sql.expressions.Window
         .partitionBy($"user_id").orderBy($"tu", $"event_id")
-      val tri = t(s, dir, "events")
+      val tri = Tuning.cut(t(s, dir, "events")
         .select($"user_id", $"event_id", expr("ts div 1000").as("tu"),
           $"event_type".as("e1"))
         .withColumn("e2", lead($"e1", 1).over(w))
         .withColumn("e3", lead($"e1", 2).over(w))
         .filter($"e3".isNotNull)
-        .groupBy($"e1", $"e2", $"e3").agg(count(lit(1)).as("n_paths"))
-        .localCheckpoint() // census + total share both read it
+        .groupBy($"e1", $"e2", $"e3").agg(count(lit(1)).as("n_paths"))) // census + total share both read it
       val tot = broadcast(tri.agg(sum($"n_paths").as("n_tot")))
       tri.crossJoin(tot)
         .select(concat_ws(">", $"e1", $"e2", $"e3").as("path"), $"n_paths",

@@ -6,6 +6,7 @@ import org.apache.spark.sql.functions._
 
 import graft.functions.{TextFunctions, VectorFunctions}
 import graft.SparkEntry._
+import graft.operators.Tuning
 
 /** Graph science on the near-dup graph: PageRank, PPR, triangles, k-core, assortativity, harmonic centrality, link prediction, label-propagation communities, components.
   *
@@ -182,9 +183,8 @@ private[graft] object GraphQueries {
         t(s, dir, "documents"), "doc_id", "text",
         numHashes = 8, shingle = 4, bands = 4, rowsPerBand = 2,
         threshold = 0.75)
-      val edges = pairs.select($"id_a".as("src"), $"id_b".as("dst"))
-        .union(pairs.select($"id_b".as("src"), $"id_a".as("dst")))
-        .localCheckpoint() // wedge join reads it three ways
+      val edges = Tuning.cut(pairs.select($"id_a".as("src"), $"id_b".as("dst"))
+        .union(pairs.select($"id_b".as("src"), $"id_a".as("dst")))) // wedge join reads it three ways
       val deg = edges.groupBy($"src".as("id")).agg(count(lit(1)).as("deg"))
       val wedges = edges.as("e1").join(edges.as("e2"),
           $"e1.dst" === $"e2.src" && $"e1.src" < $"e2.dst")

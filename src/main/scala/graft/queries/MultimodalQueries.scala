@@ -6,6 +6,7 @@ import org.apache.spark.sql.functions._
 
 import graft.functions.{TextFunctions, VectorFunctions}
 import graft.SparkEntry._
+import graft.operators.Tuning
 
 /** Multimodal columns: real image/PCM-audio decode paths, perceptual hashing, container metadata (MP4/ADTS/FLAC/MPEG) without codecs.
   *
@@ -80,9 +81,8 @@ private[graft] object MultimodalQueries {
     "q213_image_dedup_clusters" -> ((s, dir) => {
       import s.implicits._
       val docs = t(s, dir, "documents").select($"doc_id")
-      val pairs = imagePhashPairs(docs)
-        .filter($"ham_a" <= 6)
-        .localCheckpoint() // labels + the pair census both read it
+      val pairs = Tuning.cut(imagePhashPairs(docs)
+        .filter($"ham_a" <= 6)) // labels + the pair census both read it
       val lab = graft.operators.Dedup.resolveClustersSparse(
         pairs.select($"id_a", $"id_b"), docs)
       val sizes = lab.groupBy($"keeper_id")
@@ -202,8 +202,7 @@ private[graft] object MultimodalQueries {
         .transform(graft.operators.Tuning.spreadDocs) // spread the codec work (q90 lesson)
       val wavs = graft.operators.Multimodal.synthAudioGroups(
         docs, "doc_id", groupDiv = 4, nSamples = 64, sampleRate = 8000)
-      val feats = graft.operators.Multimodal.audioSignBands(wavs, "wav")
-        .localCheckpoint() // band explode + verify both read it
+      val feats = Tuning.cut(graft.operators.Multimodal.audioSignBands(wavs, "wav")) // band explode + verify both read it
       val ex = feats.select($"doc_id",
         posexplode(array($"ab0", $"ab1", $"ab2", $"ab3")).as(Seq("band", "bh")))
       val cand = ex.as("a").join(ex.as("b"),

@@ -6,6 +6,7 @@ import org.apache.spark.sql.functions._
 
 import graft.functions.{TextFunctions, VectorFunctions}
 import graft.SparkEntry._
+import graft.operators.Tuning
 
 /** Lakehouse and training-data pipeline operations: manifests, compaction, z-order, splits/shards/sampling, decontamination, skew handling, CDC, incremental views.
   *
@@ -247,15 +248,11 @@ private[graft] object PipelineQueries {
         long.union(short).select($"doc_id", xxhash64($"g").as("gh"))
       }
       val all = grams(toks)
-      // the eval side is SMALL by definition — checkpoint its distinct
-      // grams once so the bloom build, the cardinality count and the exact
-      // verify join all read the materialized set instead of re-hashing
-      // the eval scan three times (the corpus branch still scans once).
-      // LAZY: the ev.count() below materializes it; construction itself
-      // still runs jobs for the Bloom build (inherent — the filter is a
-      // driver-side value), which the q87 scaladoc-level comment owns
-      val ev = all.filter($"doc_id" % 83 === 7).select($"gh").distinct()
-        .localCheckpoint(false)
+      // the eval side is SMALL by definition — cut its distinct grams so
+      // the bloom build, the cardinality count and the exact verify join
+      // all read the materialized set instead of re-hashing the eval scan
+      // three times (the corpus branch still scans once)
+      val ev = Tuning.cut(all.filter($"doc_id" % 83 === 7).select($"gh").distinct())
       val corpus = all.filter($"doc_id" % 83 =!= 7)
       // size the filter from the eval set's true cardinality (one count of
       // the SMALL side — the eval set, not the corpus) so fpp holds at any SF
@@ -842,15 +839,13 @@ private[graft] object PipelineQueries {
     // disagree on negative log-probs).
     "q138_curriculum_tiers" -> ((s, dir) => {
       import s.implicits._
-      val bi = t(s, dir, "documents")
+      val bi = Tuning.cut(t(s, dir, "documents")
         .select($"doc_id", graft.operators.TextAnalysis.tokensCol($"text").as("w"))
         .filter(size($"w") >= 2)
         .select($"doc_id", explode(expr(
           "transform(sequence(2, size(w)), i -> struct(element_at(w, i - 1) AS p, element_at(w, i) AS c))")).as("b"))
-        .select($"doc_id", $"b.p".as("p"), $"b.c".as("c"))
-        .localCheckpoint() // one corpus scan; counts + scoring read this
-      val bic = bi.groupBy($"p", $"c").agg(count(lit(1)).as("cbi"))
-        .localCheckpoint()
+        .select($"doc_id", $"b.p".as("p"), $"b.c".as("c"))) // one corpus scan; counts + scoring read this
+      val bic = Tuning.cut(bi.groupBy($"p", $"c").agg(count(lit(1)).as("cbi")))
       val prevc = bic.groupBy($"p").agg(sum($"cbi").as("cp"))
       val curc = bic.groupBy($"c").agg(sum($"cbi").as("cc"))
       val tot = bic.agg(sum($"cbi").as("nbi"))
@@ -949,11 +944,10 @@ private[graft] object PipelineQueries {
         numHashes = 8, shingle = 4, bands = 4, rowsPerBand = 2, threshold = 1.0)
       val keep = graft.operators.Dedup.resolveClustersSparse(pairs, docs.select($"doc_id"))
         .filter($"id" === $"keeper_id").select($"id".as("doc_id"))
-      val base = docs.join(keep, Seq("doc_id"))
+      val base = Tuning.cut(docs.join(keep, Seq("doc_id"))
         .select($"doc_id", $"lang", $"source",
           graft.operators.TextAnalysis.tokensCol($"text").as("w"))
-        .select($"doc_id", $"lang", $"source", size($"w").cast("long").as("n_tok"), $"w")
-        .localCheckpoint() // survivors feed three gram profiles + split
+        .select($"doc_id", $"lang", $"source", size($"w").cast("long").as("n_tok"), $"w")) // survivors feed three gram profiles + split
       val qs = graft.operators.QualitySignals
       def topCnt(n: Int, out: String) = base
         .select($"doc_id", explode(qs.ngramsStrict($"w", n)).as("g"))
@@ -1025,14 +1019,13 @@ private[graft] object PipelineQueries {
       // replaces the distinct + hash self-join (three 1M-row shuffles → one
       // shuffle of the raw gram stream); the ≤3-element set explodes into
       // ordered pairs driver-free.
-      val sg = t(s, dir, "documents")
+      val sg = Tuning.cut(t(s, dir, "documents")
         .select($"doc_id", $"text")
         .join(splits, Seq("doc_id"))
         .select($"split", explode(graft.operators.QualitySignals.ngramsStrict(
           graft.operators.TextAnalysis.tokensCol($"text"), 5)).as("g"))
         .select($"split", xxhash64($"g").as("h"))
-        .groupBy($"h").agg(collect_set($"split").as("ss"))
-        .localCheckpoint() // per-gram split sets feed sizes + overlap
+        .groupBy($"h").agg(collect_set($"split").as("ss"))) // per-gram split sets feed sizes + overlap
       val sizes = sg.select(explode($"ss").as("split"))
         .groupBy($"split").agg(count(lit(1)).as("n"))
       sg.select(explode($"ss").as("split_a"), $"ss")
@@ -1062,8 +1055,7 @@ private[graft] object PipelineQueries {
       val topk = udaf(new graft.operators.TopKAgg(5),
         org.apache.spark.sql.catalyst.encoders.ExpressionEncoder[(Long, Long)]())
       def stats(df: DataFrame, key: String): (DataFrame, DataFrame) = {
-        val counts = df.groupBy(col(key).as("k")).agg(count(lit(1)).as("c"))
-          .localCheckpoint() // one count shuffle feeds HH + totals
+        val counts = Tuning.cut(df.groupBy(col(key).as("k")).agg(count(lit(1)).as("c"))) // one count shuffle feeds HH + totals
         val hh = counts.agg(topk($"c", $"k").as("top"))
           .select(posexplode($"top"))
           .select($"col._2".as("k"), $"col._1".as("c"))
@@ -1241,13 +1233,12 @@ private[graft] object PipelineQueries {
       // 2024-01-20 / 2024-01-22 UTC as epoch nanos (engine ts contract)
       val t1 = lit(1705708800000000000L)
       val t2 = lit(1705881600000000000L)
-      val ev = t(s, dir, "events")
+      val ev = Tuning.cut(t(s, dir, "events")
         .select($"user_id",
           when($"ts" < t1, "train").when($"ts" >= t2, "test")
-            .otherwise("embargo").as("split"))
-        .localCheckpoint() // feeds split stats + both overlap sides
-      val trainUsers = ev.filter($"split" === "train")
-        .select($"user_id").distinct().localCheckpoint()
+            .otherwise("embargo").as("split"))) // feeds split stats + both overlap sides
+      val trainUsers = Tuning.cut(ev.filter($"split" === "train")
+        .select($"user_id").distinct())
       val overlap = broadcast(ev.filter($"split" === "test")
         .select($"user_id").distinct()
         .join(trainUsers, Seq("user_id"), "left_semi")
@@ -1297,11 +1288,10 @@ private[graft] object PipelineQueries {
     "q180_delete_cascade" -> ((s, dir) => {
       import s.implicits._
       val docs = t(s, dir, "documents")
-      val del = docs.filter($"doc_id" % 5 === 0)
-        .select($"doc_id".as("__del")).localCheckpoint()
+      val del = Tuning.cut(docs.filter($"doc_id" % 5 === 0)
+        .select($"doc_id".as("__del")))
       def audit(name: String, df: DataFrame, keyName: String): DataFrame = {
-        val kept = df.join(broadcast(del), col(keyName) === $"__del", "left_anti")
-          .localCheckpoint() // after-image feeds count + orphan probe
+        val kept = Tuning.cut(df.join(broadcast(del), col(keyName) === $"__del", "left_anti")) // after-image feeds count + orphan probe
         broadcast(df.agg(count(lit(1)).as("n_before")))
           .crossJoin(broadcast(kept.agg(count(lit(1)).as("n_after"))))
           .crossJoin(broadcast(
@@ -1478,9 +1468,8 @@ private[graft] object PipelineQueries {
     // sampled slice.
     "q220_join_size_probe" -> ((s, dir) => {
       import s.implicits._
-      val deg = t(s, dir, "events").groupBy($"user_id", $"event_type")
-        .agg(count(lit(1)).as("d"))
-        .localCheckpoint() // six filtered views read it
+      val deg = Tuning.cut(t(s, dir, "events").groupBy($"user_id", $"event_type")
+        .agg(count(lit(1)).as("d"))) // six filtered views read it
       Seq(("click", "view"), ("error", "signup"), ("purchase", "view"))
         .map { case (a, b) =>
           graft.operators.Salting.estimateJoinSize(
@@ -1505,12 +1494,11 @@ private[graft] object PipelineQueries {
     // q188 (plan on metadata, never rescan data to decide).
     "q232_retention_plan" -> ((s, dir) => {
       import s.implicits._
-      val files = t(s, dir, "events")
+      val files = Tuning.cut(t(s, dir, "events")
         .groupBy(expr("(ts div 1000) div 86400000000").as("day"),
           expr("((ts div 1000) div 3600000000) % 6").as("slot"))
         .agg(count(lit(1)).as("n_rows"),
-          sum(expr("cast(floor(value * 1000000) as bigint)")).as("bytes_u"))
-        .localCheckpoint() // horizon scalar + plan both read it
+          sum(expr("cast(floor(value * 1000000) as bigint)")).as("bytes_u"))) // horizon scalar + plan both read it
       val horizon = broadcast(files.agg(max($"day").as("mx")))
       files.crossJoin(horizon)
         .select($"day", $"n_rows", $"bytes_u",
@@ -2006,8 +1994,7 @@ private[graft] object PipelineQueries {
             lit(".com/sitemap-0.xml</loc></sitemap><sitemap><loc>https://site"),
             $"m", lit(".com/sitemap-1.xml</loc></sitemap></sitemapindex>"))
             .as("xml"))
-      val sitemaps = nonIndex.unionByName(children).unionByName(index)
-        .localCheckpoint() // entries and index edges both read it
+      val sitemaps = Tuning.cut(nonIndex.unionByName(children).unionByName(index)) // entries and index edges both read it
       val entries = graft.operators.Sitemap.urlEntries(sitemaps, "url", "xml")
       val viaIdx = graft.operators.Sitemap.childLocs(sitemaps, "url", "xml")
         .select($"child_url".as("sitemap_url")).distinct()

@@ -6,6 +6,7 @@ import org.apache.spark.sql.functions._
 
 import graft.functions.{TextFunctions, VectorFunctions}
 import graft.SparkEntry._
+import graft.operators.Tuning
 
 /** Statistics and monitoring: AUC, calibration, drift (PSI/KS), control charts, bootstrap CIs, trend tests, privacy (k-anon, l-diversity, t-closeness), mergeable sketches.
   *
@@ -289,14 +290,13 @@ private[graft] object StatsQueries {
       val tok = t(s, dir, "documents").filter($"source".isin(srcs: _*))
         .select($"source",
           explode(graft.operators.TextAnalysis.tokensCol($"text")).as("w"))
-      val regs = tok
+      val regs = Tuning.cut(tok
         .select($"source", $"w",
           graft.functions.HashFunctions.stableHash64(concat(lit("hll:"), $"w")).as("h"))
         .withColumn("bkt", graft.operators.HllSketch.bucketCol($"h", p))
         .withColumn("rnk", graft.operators.HllSketch.rankExpr("h", p))
-        .groupBy($"source").agg(hll($"bkt", $"rnk").as("regs"))
-        .localCheckpoint() // source-count-sized; feeds both join sides
-      val vocab = tok.select($"source", $"w").distinct().localCheckpoint()
+        .groupBy($"source").agg(hll($"bkt", $"rnk").as("regs"))) // source-count-sized; feeds both join sides
+      val vocab = Tuning.cut(tok.select($"source", $"w").distinct())
       val exact = vocab.toDF("src_a", "w")
         .join(vocab.toDF("src_b", "w"), Seq("w"))
         .filter($"src_a" < $"src_b")
@@ -330,11 +330,10 @@ private[graft] object StatsQueries {
     // token counts; everything after is source-count-sized.
     "q141_mixture_weights" -> ((s, dir) => {
       import s.implicits._
-      val per = t(s, dir, "documents")
+      val per = Tuning.cut(t(s, dir, "documents")
         .select($"source",
           size(graft.operators.TextAnalysis.tokensCol($"text")).cast("long").as("nt"))
-        .groupBy($"source").agg(sum($"nt").as("n_tok"))
-        .localCheckpoint() // source-count-sized; three derived aggs
+        .groupBy($"source").agg(sum($"nt").as("n_tok"))) // source-count-sized; three derived aggs
       val tot = per.agg(sum($"n_tok").as("tot"))
       val r = per.crossJoin(broadcast(tot))
         .withColumn("share_bp", expr("(n_tok * 10000) div tot"))
@@ -362,10 +361,9 @@ private[graft] object StatsQueries {
     // scan); everything after is vocab-sized.
     "q142_source_drift" -> ((s, dir) => {
       import s.implicits._
-      val cs = t(s, dir, "documents")
+      val cs = Tuning.cut(t(s, dir, "documents")
         .select($"source", explode(graft.operators.TextAnalysis.tokensCol($"text")).as("w"))
-        .groupBy($"source", $"w").agg(count(lit(1)).as("c_s"))
-        .localCheckpoint() // one corpus shuffle; c_g/n_s/n_g derive from it
+        .groupBy($"source", $"w").agg(count(lit(1)).as("c_s"))) // one corpus shuffle; c_g/n_s/n_g derive from it
       val cg = cs.groupBy($"w").agg(sum($"c_s").as("c_g"))
       val ns = cs.groupBy($"source").agg(sum($"c_s").as("n_s"))
       val ng = cg.agg(sum($"c_g").as("n_g"))
@@ -394,12 +392,11 @@ private[graft] object StatsQueries {
     // grows). PMI quantized to micro-nats at computation.
     "q144_pmi_pairs" -> ((s, dir) => {
       import s.implicits._
-      val dw = t(s, dir, "documents")
+      val dw = Tuning.cut(t(s, dir, "documents")
         .select($"doc_id", explode(graft.operators.TextAnalysis.tokensCol($"text")).as("w"))
-        .distinct()
-        .localCheckpoint() // doc×vocab sized; feeds df + the pair join
+        .distinct()) // doc×vocab sized; feeds df + the pair join
       val dfr = dw.groupBy($"w").agg(count(lit(1)).as("df"))
-      val kept = dfr.filter($"df" >= 50).localCheckpoint()
+      val kept = Tuning.cut(dfr.filter($"df" >= 50))
       val nd = t(s, dir, "documents").agg(count(lit(1)).as("n_docs"))
       val kdw = dw.join(broadcast(kept.select($"w")), Seq("w"))
       kdw.select($"doc_id", $"w".as("wa"))
@@ -459,10 +456,9 @@ private[graft] object StatsQueries {
     // 24× a TIME-BUCKET-sized table, never corpus-sized.
     "q157_ewma_hourly" -> ((s, dir) => {
       import s.implicits._
-      val hourly = t(s, dir, "events")
+      val hourly = Tuning.cut(t(s, dir, "events")
         .select(expr("ts div 3600000000000").as("hour_bucket"))
-        .groupBy($"hour_bucket").agg(count(lit(1)).as("n"))
-        .localCheckpoint() // contributions + the target join read it
+        .groupBy($"hour_bucket").agg(count(lit(1)).as("n"))) // contributions + the target join read it
       val contrib = hourly
         .select($"hour_bucket", $"n", explode(expr("sequence(1, 24)")).as("k"))
         .select(($"hour_bucket" + $"k").as("hour_bucket"),
@@ -505,10 +501,9 @@ private[graft] object StatsQueries {
     // hour-count-sized.
     "q161_robust_anomaly" -> ((s, dir) => {
       import s.implicits._
-      val hourly = t(s, dir, "events")
+      val hourly = Tuning.cut(t(s, dir, "events")
         .select($"event_type", expr("ts div 3600000000000").as("hour_bucket"))
-        .groupBy($"event_type", $"hour_bucket").agg(count(lit(1)).as("n"))
-        .localCheckpoint() // feeds the median, the MAD and the flags
+        .groupBy($"event_type", $"hour_bucket").agg(count(lit(1)).as("n"))) // feeds the median, the MAD and the flags
       val wm = Window.partitionBy($"event_type").orderBy($"n", $"hour_bucket")
       val wc = Window.partitionBy($"event_type")
       val med = hourly
@@ -600,14 +595,13 @@ private[graft] object StatsQueries {
       val tok = t(s, dir, "documents")
         .select($"source", $"lang",
           explode(graft.operators.TextAnalysis.tokensCol($"text")).as("w"))
-      val base = tok
+      val base = Tuning.cut(tok
         .select($"source", $"lang",
           graft.functions.HashFunctions.stableHash64(concat(lit("hll:"), $"w")).as("h"))
         .withColumn("bkt", graft.operators.HllSketch.bucketCol($"h", p))
         .withColumn("rnk", graft.operators.HllSketch.rankExpr("h", p))
-        .groupBy($"source", $"lang").agg(hll($"bkt", $"rnk").as("regs"))
-        .localCheckpoint() // the register table — all rollups read this
-      val vocab = tok.distinct().localCheckpoint() // exact sidecar
+        .groupBy($"source", $"lang").agg(hll($"bkt", $"rnk").as("regs"))) // the register table — all rollups read this
+      val vocab = Tuning.cut(tok.distinct()) // exact sidecar
       def e4 = fq4(graft.operators.HllSketch.estimateExpr("regs", p)).as("est4")
       val lvl0 = base
         .join(vocab.groupBy($"source", $"lang").agg(count(lit(1)).as("n_exact")),
@@ -682,19 +676,18 @@ private[graft] object StatsQueries {
     // HUGEINT twin is exact the same way), so the only doubles are the
     // final scalar ratios, computed in one pinned operation order on both
     // engines. Two scans of the per-user rollup (moments + arms) off one
-    // localCheckpoint; everything after the user-keyed aggregate is
+    // cut; everything after the user-keyed aggregate is
     // cohort-sized. θ's denominator is gated: a zero-variance covariate
     // yields null θ and null adjusted means, identically on both engines.
     "q189_cuped" -> ((s, dir) => {
       import s.implicits._
       val cut = 1705276800000000000L // 2024-01-15 00:00 UTC, epoch-ns
-      val users = t(s, dir, "events")
+      val users = Tuning.cut(t(s, dir, "events")
         .select($"user_id", $"ts",
           expr("cast(floor(value * 1000000) as bigint)").as("vu"))
         .groupBy($"user_id")
         .agg(sum(when($"ts" < lit(cut), $"vu").otherwise(0L)).as("xu"),
-          sum(when($"ts" >= lit(cut), $"vu").otherwise(0L)).as("yu"))
-        .localCheckpoint() // moments + arm rollup both read it
+          sum(when($"ts" >= lit(cut), $"vu").otherwise(0L)).as("yu"))) // moments + arm rollup both read it
       val mom = broadcast(users.agg(
         count(lit(1)).as("n"), sum($"xu").as("sx"), sum($"yu").as("sy"),
         sum($"xu".cast("decimal(19,0)") * $"yu".cast("decimal(19,0)")).as("sxy"),
@@ -822,11 +815,10 @@ private[graft] object StatsQueries {
     // pair matrix a recommender or anomaly rule-miner starts from.
     "q205_assoc_lift" -> ((s, dir) => {
       import s.implicits._
-      val st = graft.operators.Sessionize.assignSessions(
+      val st = Tuning.cut(graft.operators.Sessionize.assignSessions(
           t(s, dir, "events").select($"user_id", $"ts", $"event_id", $"event_type"),
           "user_id", "ts", "event_id", gap = 21600000000000L)
-        .select($"user_id", $"session_seq", $"event_type").distinct()
-        .localCheckpoint() // singles, pairs, and N all read it
+        .select($"user_id", $"session_seq", $"event_type").distinct()) // singles, pairs, and N all read it
       val n = broadcast(st.select($"user_id", $"session_seq").distinct()
         .agg(count(lit(1)).as("n_sess")))
       val singles = st.groupBy($"event_type").agg(count(lit(1)).as("n_t"))
@@ -1046,10 +1038,7 @@ private[graft] object StatsQueries {
     // accumulate in decimal(38,0) per the q189 policy.
     "q229_theil_sen" -> ((s, dir) => {
       import s.implicits._
-      val daily = t(s, dir, "events")
-        .groupBy($"event_type", expr("(ts div 1000) div 86400000000").as("day"))
-        .agg(count(lit(1)).as("y"))
-        .localCheckpoint() // pair join + OLS moments both read it
+      val daily = graft.operators.EvalMetrics.dailyCounts(t(s, dir, "events"))
       val pairs = daily.as("a")
         .join(daily.as("b"),
           $"a.event_type" === $"b.event_type" && $"a.day" < $"b.day")
@@ -1245,12 +1234,11 @@ private[graft] object StatsQueries {
       val days = t(s, dir, "events")
         .select($"event_type", expr("(ts div 1000) div 86400000000").as("day"))
       val d0 = broadcast(days.agg(min($"day").as("d0")))
-      val halves = days.crossJoin(d0)
+      val halves = Tuning.cut(days.crossJoin(d0)
         .select($"event_type",
           when($"day" < $"d0" + 15L, lit("old")).otherwise(lit("new"))
             .as("half"))
-        .groupBy($"event_type", $"half").agg(count(lit(1)).as("n"))
-        .localCheckpoint()
+        .groupBy($"event_type", $"half").agg(count(lit(1)).as("n")))
       val tot = broadcast(halves.groupBy($"half").agg(sum($"n").as("tn"))
         .groupBy().pivot("half", Seq("old", "new")).agg(first($"tn"))
         .select($"old".as("n_old_tot"), $"new".as("n_new_tot")))
@@ -1283,10 +1271,7 @@ private[graft] object StatsQueries {
       import s.implicits._
       val wts = Array(250000L, 187500L, 140625L, 105468L, 79101L, 59325L,
         44493L, 33369L) // w0 = 250000; w = w*3 div 4; sum = 899881
-      val daily = t(s, dir, "events")
-        .groupBy($"event_type",
-          expr("(ts div 1000) div 86400000000").as("day"))
-        .agg(count(lit(1)).as("y")).localCheckpoint()
+      val daily = graft.operators.EvalMetrics.dailyCounts(t(s, dir, "events"))
       val contrib = daily
         .select($"event_type", $"day", $"y",
           posexplode(lit(wts)).as(Seq("k", "w")))
@@ -1373,11 +1358,10 @@ private[graft] object StatsQueries {
     // for the 5×7 grid as literals — the decision is part of the output.
     "q246_chi2_independence" -> ((s, dir) => {
       import s.implicits._
-      val cells = t(s, dir, "events")
+      val cells = Tuning.cut(t(s, dir, "events")
         .groupBy($"event_type",
           expr("((ts div 1000) div 86400000000) % 7").as("weekday"))
-        .agg(count(lit(1)).as("n"))
-        .localCheckpoint() // margins + total + cells all read it
+        .agg(count(lit(1)).as("n"))) // margins + total + cells all read it
       val mt = cells.groupBy($"event_type").agg(sum($"n").as("n_t"))
       val mw = cells.groupBy($"weekday").agg(sum($"n").as("n_w"))
       val tot = broadcast(cells.agg(sum($"n").as("big_n")))
@@ -1391,7 +1375,6 @@ private[graft] object StatsQueries {
             * (cast(n as decimal(38,0)) * big_n - cast(n_t as decimal(38,0)) * n_w)
             * 10000 div (cast(n_t as decimal(38,0)) * n_w * big_n) as bigint)""")
             .as("cell4"))
-        .localCheckpoint() // cell rows + the statistic both read it
       val stat = broadcast(scored.agg(sum($"cell4").as("chi2_4")))
       scored.crossJoin(stat)
         .select($"event_type", $"weekday", $"n", $"exp_milli", $"cell4",
@@ -1487,19 +1470,16 @@ private[graft] object StatsQueries {
           out.toDF("event_type", "pi6", "resid6").orderBy($"event_type")
         case Left(p) =>
           val states = p.select($"cur".as("st")).distinct()
-            .localCheckpoint()
           val nStates = broadcast(states.agg(count(lit(1)).as("t")))
-          var pi = states.crossJoin(nStates)
-            .select($"st", expr("1000000 div t").as("pi6"))
-            .localCheckpoint()
+          var pi = Tuning.cut(states.crossJoin(nStates)
+            .select($"st", expr("1000000 div t").as("pi6")))
           var prev = pi
           for (_ <- 1 to 16) {
             prev = pi
-            pi = pi.join(p, pi("st") === p("cur"))
+            pi = Tuning.cut(pi.join(p, pi("st") === p("cur"))
               .groupBy($"nxt")
               .agg(sum(expr("pi6 * p6 div 1000000")).as("npi6"))
-              .select($"nxt".as("st"), $"npi6".as("pi6"))
-              .localCheckpoint()
+              .select($"nxt".as("st"), $"npi6".as("pi6")))
           }
           pi.join(prev.select($"st", $"pi6".as("prev6")), Seq("st"))
             .select($"st".as("event_type"), $"pi6",
@@ -1541,10 +1521,9 @@ private[graft] object StatsQueries {
           pmod(graft.functions.HashFunctions.stableHash64(
             concat(lit("ab:"), $"user_id".cast("string"))), lit(2L))
             .as("cohort"))
-      val perType = ev.groupBy($"event_type")
+      val perType = Tuning.cut(ev.groupBy($"event_type")
         .agg(sum(when($"cohort" === 0L, 1L).otherwise(0L)).as("k0"),
-          sum(when($"cohort" === 1L, 1L).otherwise(0L)).as("k1"))
-        .localCheckpoint() // totals + the per-type pass read it
+          sum(when($"cohort" === 1L, 1L).otherwise(0L)).as("k1"))) // totals + the per-type pass read it
       val tot = broadcast(perType.agg(sum($"k0").as("n0"), sum($"k1").as("n1")))
       val withP = perType.crossJoin(tot)
         .withColumn("z", expr(
@@ -1559,14 +1538,12 @@ private[graft] object StatsQueries {
              * (0.319381530D * t - 0.356563782D * t * t + 1.781477937D * t * t * t
                 - 1.821255978D * t * t * t * t + 1.330274429D * t * t * t * t * t))
              * 1000000.0D) as bigint)"""))
-        .localCheckpoint() // m rows; rank + m-count read it
       val m = broadcast(withP.agg(count(lit(1)).as("m")))
       val ranked = withP.crossJoin(m)
         .withColumn("bh_rank", row_number().over(
           org.apache.spark.sql.expressions.Window
             .orderBy($"p6", $"event_type")) // m-row window, never corpus
           .cast("long"))
-        .localCheckpoint() // the step-up max + the output read it
       val cut = broadcast(ranked
         .filter($"p6" * $"m" <= $"bh_rank" * lit(50000L))
         .agg(coalesce(max($"bh_rank"), lit(0L)).as("max_rej")))
@@ -1590,17 +1567,14 @@ private[graft] object StatsQueries {
     // runs on the calendar grid, the rank window keyed per type.
     "q264_conformal_forecast" -> ((s, dir) => {
       import s.implicits._
-      val daily = t(s, dir, "events")
-        .groupBy($"event_type", expr("(ts div 1000) div 86400000000").as("day"))
-        .agg(count(lit(1)).as("y")).localCheckpoint()
+      val daily = graft.operators.EvalMetrics.dailyCounts(t(s, dir, "events"))
       val d0 = broadcast(daily.agg(min($"day").as("d0")))
-      val joined = daily.join(
+      val joined = Tuning.cut(daily.join(
           daily.select($"event_type", ($"day" + 7L).as("day"), $"y".as("f7")),
           Seq("event_type", "day"))
         .crossJoin(d0)
         .select($"event_type", $"day", abs($"y" - $"f7").as("resid"),
-          ($"day" < $"d0" + 21L).cast("int").as("is_cal"))
-        .localCheckpoint() // calibration rank + eval coverage read it
+          ($"day" < $"d0" + 21L).cast("int").as("is_cal"))) // calibration rank + eval coverage read it
       val cal = joined.filter($"is_cal" === 1)
         .withColumn("rk", row_number().over(
           org.apache.spark.sql.expressions.Window

@@ -6,6 +6,7 @@ import org.apache.spark.sql.functions._
 
 import graft.functions.{TextFunctions, VectorFunctions}
 import graft.SparkEntry._
+import graft.operators.Tuning
 
 /** Text analysis: tokenization, language/quality signals, n-gram LMs, BPE training/encoding, Zipf/Heaps fits, PII, boilerplate, chunking.
   *
@@ -295,16 +296,11 @@ private[graft] object TextQueries {
     "q84_vocab_coverage" -> ((s, dir) => {
       import s.implicits._
       // the frequency table feeds the ranker AND the totals (and the
-      // ranker reads it twice for its prefix offsets): checkpoint the
-      // VOCAB-sized result once so the corpus token aggregation runs once.
-      // Eager, as every shared cut: a lazy one is computed by each of the
-      // concurrent jobs of the plans that read it, and once the first job
-      // truncates its lineage the others' tasks report metrics of a plan
-      // the driver has already dropped
-      val freq = t(s, dir, "documents")
+      // ranker reads it twice for its prefix offsets): cut the VOCAB-sized
+      // result so the corpus token aggregation runs once
+      val freq = Tuning.cut(t(s, dir, "documents")
         .select(explode(graft.operators.TextAnalysis.tokensCol($"text")).as("w"))
-        .groupBy($"w").agg(count(lit(1)).as("c"))
-        .localCheckpoint()
+        .groupBy($"w").agg(count(lit(1)).as("c")))
       val ranked = graft.operators.Batching.globalRunningSum(
         freq, Seq($"c".desc, $"w"), "c", numPartitions = 8,
         outPos = "rk", outCum = "cum")
@@ -448,24 +444,22 @@ private[graft] object TextQueries {
     "q100_data_card" -> ((s, dir) => {
       import s.implicits._
       val stopAny = graft.operators.TextAnalysis.Markers("en").map(_.asInstanceOf[Any])
-      val base = t(s, dir, "documents")
+      val base = Tuning.cut(t(s, dir, "documents")
         .select($"doc_id", $"source", $"lang", md5($"text").as("h"),
           graft.operators.TextAnalysis.tokensCol($"text").as("tk"))
         .select($"doc_id", $"source", $"lang", $"h",
           size($"tk").cast("long").as("n_tok"),
           aggregate($"tk", lit(0), (a, x) => a + length(x)).cast("long").as("sum_len"),
-          size(filter($"tk", x => x.isin(stopAny: _*))).cast("long").as("n_stop"))
-        .localCheckpoint() // its three consumers read it once
+          size(filter($"tk", x => x.isin(stopAny: _*))).cast("long").as("n_stop"))) // its three consumers read it once
       val dup = base.withColumn("n_occ",
         count(lit(1)).over(Window.partitionBy($"h")))
-      val per = dup.groupBy($"source").agg(
+      val per = Tuning.cut(dup.groupBy($"source").agg(
           count(lit(1)).as("n_docs"),
           sum(when($"n_occ" >= 2, 1L).otherwise(0L)).as("n_dup_docs"),
           sum($"n_tok").as("n_toks"),
           sum(when($"n_tok".between(20, 80) && $"n_stop" > 0 &&
             $"sum_len".cast("double") / $"n_tok" >= 3.0 &&
-            $"sum_len".cast("double") / $"n_tok" <= 6.0, 1L).otherwise(0L)).as("n_quality"))
-        .localCheckpoint()
+            $"sum_len".cast("double") / $"n_tok" <= 6.0, 1L).otherwise(0L)).as("n_quality")))
       val ent = base.groupBy($"source", $"lang").agg(count(lit(1)).as("nl"))
         .join(broadcast(per.select($"source", $"n_docs")), "source")
         .select($"source",
@@ -541,15 +535,13 @@ private[graft] object TextQueries {
     // key — same plan shape, no new scans.
     "q107_bigram_lm" -> ((s, dir) => {
       import s.implicits._
-      val bi = t(s, dir, "documents")
+      val bi = Tuning.cut(t(s, dir, "documents")
         .select($"doc_id", graft.operators.TextAnalysis.tokensCol($"text").as("w"))
         .filter(size($"w") >= 2)
         .select($"doc_id", explode(expr(
           "transform(sequence(2, size(w)), i -> struct(element_at(w, i - 1) AS p, element_at(w, i) AS c))")).as("b"))
-        .select($"doc_id", $"b.p".as("p"), $"b.c".as("c"))
-        .localCheckpoint() // one corpus scan; counts + scoring read this
-      val bic = bi.groupBy($"p", $"c").agg(count(lit(1)).as("cbi"))
-        .localCheckpoint() // vocab²-bounded; feeds three derived tables
+        .select($"doc_id", $"b.p".as("p"), $"b.c".as("c"))) // one corpus scan; counts + scoring read this
+      val bic = Tuning.cut(bi.groupBy($"p", $"c").agg(count(lit(1)).as("cbi"))) // vocab²-bounded; feeds three derived tables
       val prevc = bic.groupBy($"p").agg(sum($"cbi").as("cp"))
       val curc = bic.groupBy($"c").agg(sum($"cbi").as("cc"))
       val tot = bic.agg(sum($"cbi").as("nbi"))
@@ -607,10 +599,9 @@ private[graft] object TextQueries {
     "q136_repetition_rules" -> ((s, dir) => {
       import s.implicits._
       val qs = graft.operators.QualitySignals
-      val base = t(s, dir, "documents")
+      val base = Tuning.cut(t(s, dir, "documents")
         .select($"doc_id", graft.operators.TextAnalysis.tokensCol($"text").as("w"))
-        .select($"doc_id", size($"w").as("n_tok"), $"w")
-        .localCheckpoint() // one corpus scan feeds all three gram profiles
+        .select($"doc_id", size($"w").as("n_tok"), $"w")) // one corpus scan feeds all three gram profiles
       def topCnt(n: Int, out: String) = base
         .select($"doc_id", explode(qs.ngramsStrict($"w", n)).as("g"))
         .groupBy($"doc_id", $"g").agg(count(lit(1)).as("c"))
@@ -739,9 +730,8 @@ private[graft] object TextQueries {
       import s.implicits._
       val emb = t(s, dir, "embeddings")
       val cents = graft.operators.IvfIndex.centroids(emb, k = 8, iters = 0)
-      val cells = graft.operators.IvfIndex.assign(emb, cents, "vec_id", "embedding")
-        .join(emb.select($"vec_id", $"label".cast("long").as("label")), Seq("vec_id"))
-        .localCheckpoint() // assignment feeds both pair-join sides
+      val cells = Tuning.cut(graft.operators.IvfIndex.assign(emb, cents, "vec_id", "embedding")
+        .join(emb.select($"vec_id", $"label".cast("long").as("label")), Seq("vec_id"))) // assignment feeds both pair-join sides
       val a = cells.select($"centroid_id", $"vec_id".as("src"),
         $"label".as("label_a"), $"embedding".as("va"))
       val b = cells.select($"centroid_id", $"vec_id".as("dst"),
@@ -853,7 +843,6 @@ private[graft] object TextQueries {
           * log(cnt.cast("double") / n.cast("double")) * lit(1000000.0)).cast("long")
       val cells = t(s, dir, "documents")
         .groupBy($"lang", $"source").agg(count(lit(1)).as("c"))
-        .localCheckpoint() // cell table feeds all three entropy aggs
       val nRow = broadcast(cells.agg(sum($"c").as("n")))
       val hj = cells.crossJoin(nRow).agg(sum(entU($"c", $"n")).as("hj_u"))
       val hl = cells.groupBy($"lang").agg(sum($"c").as("cl")).crossJoin(nRow)
@@ -1007,9 +996,8 @@ private[graft] object TextQueries {
     // per-word fold; merge list ships in the plan), never the corpus.
     "q256_bpe_fertility" -> ((s, dir) => {
       import s.implicits._
-      val wf = graft.operators.BpeTokenizer.wordFrequencies(
-          t(s, dir, "documents"), graft.operators.TextAnalysis.tokensCol($"text"))
-        .localCheckpoint() // train's 6 argmax rounds + the encode read it
+      val wf = Tuning.cut(graft.operators.BpeTokenizer.wordFrequencies(
+          t(s, dir, "documents"), graft.operators.TextAnalysis.tokensCol($"text"))) // train's 6 argmax rounds + the encode read it
       val merges = graft.operators.BpeTokenizer.train(wf, 6)
       wf.select(
           size(element_at(

@@ -6,6 +6,8 @@ import org.apache.spark.sql.{DataFrame, Row, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{ArrayType, FloatType}
 
+import graft.operators.Tuning
+
 /** Sinks/sources beyond parquet (SURVEY.md §2.1 S6-S11). */
 object Sinks {
 
@@ -40,15 +42,14 @@ object Sinks {
       s"schema already has a '$corruptCol' column")
     val withCorrupt = schema.add(corruptCol,
       org.apache.spark.sql.types.StringType)
-    val raw = spark.read
+    // Spark's lazy corrupt-column contract: referencing the corrupt column
+    // requires it to be materialized through a checkpoint-like boundary; a
+    // cut keeps this a one-pass read
+    val raw = Tuning.cut(spark.read
       .schema(withCorrupt)
       .option("mode", "PERMISSIVE")
       .option("columnNameOfCorruptRecord", corruptCol)
-      .json(path)
-      // Spark's lazy corrupt-column contract: referencing the corrupt
-      // column requires it to be materialized through a checkpoint-like
-      // boundary; cache-free localCheckpoint keeps this a one-pass read
-      .localCheckpoint()
+      .json(path))
     val clean = raw.filter(col(corruptCol).isNull)
       .select(schema.fieldNames.map(col): _*)
     val quarantine = raw.filter(col(corruptCol).isNotNull)

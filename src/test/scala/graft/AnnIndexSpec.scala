@@ -14,7 +14,7 @@ import graft.index.AnnIndex
   * centroids/codebook), and its arithmetic must match a driver-side
   * re-implementation of the q178/q184 encode/LUT/ADC algebra.
   */
-class AnnIndexSpec extends AnyFunSuite {
+class AnnIndexSpec extends AnyFunSuite with TempDirs {
 
   private lazy val spark: SparkSession = {
     val s = SparkSession.builder()
@@ -116,7 +116,7 @@ class AnnIndexSpec extends AnyFunSuite {
     */
   private def askFixture(prefix: String): (DataFrame, String, graft.embed.DeterministicEmbedder) = {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory(prefix).toString
+    val dir = tempDirectory(prefix).toString
     val embedder = new graft.embed.DeterministicEmbedder(16)
     (0 until 60).map(i => (i.toLong, embedder.embedOne(s"doc $i").toSeq, s"text of doc $i"))
       .toDF("vector_id", "content_vector", "text")
@@ -129,7 +129,7 @@ class AnnIndexSpec extends AnyFunSuite {
 
   test("serve path: codes scan is partition-pruned to the probed cells; the raw corpus is never read") {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft_annpin").toString
+    val dir = tempDirectory("graft_annpin").toString
     (0 until 120).map(i => (i.toLong, vec(i)))
       .toDF("vec_id", "embedding")
       .write.mode("overwrite").parquet(s"$dir/raw_corpus.parquet")
@@ -216,7 +216,7 @@ class AnnIndexSpec extends AnyFunSuite {
     import spark.implicits._
     val m = 8
     val sub = 2
-    val dir = java.nio.file.Files.createTempDirectory("graft_anndegen").toString
+    val dir = tempDirectory("graft_anndegen").toString
     (0 until 120).map(i => (i.toLong, vec(i))).toDF("vec_id", "embedding")
       .write.mode("overwrite").parquet(s"$dir/emb.parquet")
     AnnIndex.build(spark.read.parquet(s"$dir/emb.parquet"), s"$dir/idx",
@@ -281,7 +281,7 @@ class AnnIndexSpec extends AnyFunSuite {
 
   test("metadata memo: build seeds what a cold read of the directory returns, on both build paths") {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft_annmemo").toString
+    val dir = tempDirectory("graft_annmemo").toString
     val emb = (0 until 80).map(i => (i.toLong, vec(i))).toDF("vec_id", "embedding")
     def cold(idx: String): (Seq[(Int, Seq[Double])], Seq[((Long, Long), Seq[Double])]) = (
       spark.read.parquet(s"$idx/centroids.parquet")
@@ -318,7 +318,7 @@ class AnnIndexSpec extends AnyFunSuite {
   test("metadata memo: a second query on an unchanged index runs no metadata job; a rebuilt or replaced index is re-read") {
     import spark.implicits._
     val (m, sub) = (8, 2)
-    val dir = java.nio.file.Files.createTempDirectory("graft_annstale").toString
+    val dir = tempDirectory("graft_annstale").toString
     def corpus(seed: Int): DataFrame =
       (0 until 80).map(i => (i.toLong, vec(i * 7 + seed))).toDF("vec_id", "embedding")
     val queries = Seq((0L, vec(3)), (1L, vec(77))).toDF("query_id", "qv")
@@ -356,7 +356,7 @@ class AnnIndexSpec extends AnyFunSuite {
   test("q210's index directory is deleted by releaseStaging") {
     import spark.implicits._
     // a 40-vector, 64-dim embeddings table: q210 builds with m = 8, sub = 8
-    val sf = java.nio.file.Files.createTempDirectory("graft_annsf").toString
+    val sf = tempDirectory("graft_annsf").toString
     (0 until 40).map(i => (i.toLong, (0 until 64).map(d => math.sin(i * 31 + d * 7 + 1).toFloat), i % 4))
       .toDF("vec_id", "embedding", "label")
       .write.parquet(s"$sf/embeddings.parquet")
@@ -375,7 +375,7 @@ class AnnIndexSpec extends AnyFunSuite {
 
   test("metadata memo: releaseStaging evicts the entry of the q210 index it deletes") {
     import spark.implicits._
-    val sf = java.nio.file.Files.createTempDirectory("graft_annsf").toString
+    val sf = tempDirectory("graft_annsf").toString
     (0 until 40).map(i => (i.toLong, (0 until 64).map(d => math.cos(i * 17 + d * 5).toFloat), i % 4))
       .toDF("vec_id", "embedding", "label")
       .write.parquet(s"$sf/embeddings.parquet")
@@ -394,7 +394,7 @@ class AnnIndexSpec extends AnyFunSuite {
     val m = 8
     val sub = 2
     val kcode = 16
-    val dir = java.nio.file.Files.createTempDirectory("graft_anndelta").toString
+    val dir = tempDirectory("graft_anndelta").toString
     val baseVs = (0 until 80).map(i => i.toLong -> vec(i).toArray)
     val deltaVs = (80 until 100).map(i => i.toLong -> vec(i).toArray)
     baseVs.map { case (id, v) => (id, v.toSeq) }.toDF("vec_id", "embedding")
@@ -441,7 +441,7 @@ class AnnIndexSpec extends AnyFunSuite {
     import spark.implicits._
     val m = 8
     val sub = 2
-    val dir = java.nio.file.Files.createTempDirectory("graft_annfused").toString
+    val dir = tempDirectory("graft_annfused").toString
     def buildSame(what: String, emb: DataFrame, idx: String, m: Int, sub: Int): Unit = {
       AnnIndex.build(emb, idx, m = m, sub = sub, kcode = 16)
       assert(codeRows(spark.read.parquet(s"$idx/codes.parquet")) ==
@@ -496,7 +496,7 @@ class AnnIndexSpec extends AnyFunSuite {
 
   test("appendDelta runs at most 3 Spark jobs and no parquet schema-inference job") {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft_anndeltajobs").toString
+    val dir = tempDirectory("graft_anndeltajobs").toString
     AnnIndex.build((0 until 80).map(i => (i.toLong, vec(i))).toDF("vec_id", "embedding"),
       s"$dir/idx", m = 8, sub = 2, kcode = 16)
     val delta = (80 until 100).map(i => (i.toLong, vec(i))).toDF("vec_id", "embedding")
@@ -515,7 +515,7 @@ class AnnIndexSpec extends AnyFunSuite {
     val m = 8
     val sub = 2
     val kcode = 16
-    val dir = java.nio.file.Files.createTempDirectory("graft_annadc").toString
+    val dir = tempDirectory("graft_annadc").toString
     val vs = (0 until n).map(i => i.toLong -> vec(i).toArray)
     vs.map { case (id, v) => (id, v.toSeq) }.toDF("vec_id", "embedding")
       .write.mode("overwrite").parquet(s"$dir/emb.parquet")

@@ -7,10 +7,10 @@ import org.scalatest.funsuite.AnyFunSuite
   * record line has never fit the driver's 2000-char stdout tail —
   * `parsed: null` in every round's bench capture).
   */
-class BenchRecordSpec extends AnyFunSuite {
+class BenchRecordSpec extends AnyFunSuite with TempDirs {
 
   test("recordTarget: a contended run diverts away from an uncontended record; every other combination writes in place") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_bench")
+    val dir = tempDirectory("graft_bench")
     val out = dir.resolve("bench_full.json")
     // no existing record: a contended run may take the slot
     assert(Bench.recordTarget(out, newContended = true) == out)
@@ -44,7 +44,7 @@ class BenchRecordSpec extends AnyFunSuite {
   }
 
   test("writeSummary: the compact record lands at a stable path, creating parents, newline-terminated") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_benchsum")
+    val dir = tempDirectory("graft_benchsum")
     val record = Bench.compactRecord(Seq(("q01_x", 1.5)), 1.5, 0, 2,
       contended = false, "[1.5,1.6]", "0.1", "0.2", "/sf", "bench/full.json")
     val out = Bench.writeSummary(record, contended = false,
@@ -59,7 +59,7 @@ class BenchRecordSpec extends AnyFunSuite {
   }
 
   test("writeSummary: a contended run diverts away from an uncontended summary (round-11 clobber)") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_benchsum2")
+    val dir = tempDirectory("graft_benchsum2")
     val path = dir.resolve("bench_summary.json").toString
     val good = Bench.compactRecord(Seq(("q01_x", 1.5)), 297.4, 0, 2,
       contended = false, "[297.4,299.0]", "0.1", "0.2", "/sf", "bench/full.json")

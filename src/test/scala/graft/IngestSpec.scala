@@ -7,7 +7,7 @@ import graft.functions.TextFunctions
 import graft.sources.{PdfIngest, Sinks}
 
 /** S1-S8/S11 source-and-sink specs with stubbed network/codec boundaries. */
-class IngestSpec extends AnyFunSuite {
+class IngestSpec extends AnyFunSuite with TempDirs {
 
   private lazy val spark: SparkSession = {
     val s = SparkSession.builder()
@@ -49,7 +49,7 @@ class IngestSpec extends AnyFunSuite {
   }
 
   test("S3 binaryFile source -> stub text extraction -> formName") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_bin").toString
+    val dir = tempDirectory("graft_bin").toString
     java.nio.file.Files.write(java.nio.file.Paths.get(dir, "formX.pdf"), "line one\nline two".getBytes)
     val texts = PdfIngest.extractText(PdfIngest.readBinaryDir(spark, dir)).collect()
     assert(texts.map(r => (r.getString(0), r.getString(1))).toSeq ==
@@ -105,7 +105,7 @@ class IngestSpec extends AnyFunSuite {
   }
 
   test("S3 e2e: binaryFile dir with a real PDF and a text file through the default decoder") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_pdfmix").toString
+    val dir = tempDirectory("graft_pdfmix").toString
     val pdf = buildPdf("BT (From a real pdf) Tj ET".getBytes("ISO-8859-1"), flate = true)
     java.nio.file.Files.write(java.nio.file.Paths.get(dir, "form10k.pdf"), pdf)
     java.nio.file.Files.write(java.nio.file.Paths.get(dir, "notes.pdf"), "plain notes".getBytes)
@@ -126,7 +126,7 @@ class IngestSpec extends AnyFunSuite {
 
   test("S6/S7 chunk CSV roundtrip with serialized embeddings") {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft_csv").toString
+    val dir = tempDirectory("graft_csv").toString
     val chunks = Seq(("hello world", 2, "formA", "formA_0", Seq(0.5f, -0.25f)))
       .toDF("Content", "TokenCount", "FormName", "ChunkId", "Embeddings")
     Sinks.writeChunkCsv(chunks, s"$dir/chunks")
@@ -138,7 +138,7 @@ class IngestSpec extends AnyFunSuite {
   test("ORC sink/source round-trips schema (incl. nested arrays) and values; filters push to the scan") {
     import spark.implicits._
     import org.apache.spark.sql.functions._
-    val dir = java.nio.file.Files.createTempDirectory("graft_orc").toString
+    val dir = tempDirectory("graft_orc").toString
     val df = Seq(
       (1L, "en", Seq(0.5f, -0.25f), 10L),
       (2L, "de", Seq(1.0f, 2.0f), 20L),
@@ -160,7 +160,7 @@ class IngestSpec extends AnyFunSuite {
   }
 
   test("JSONL quarantine source: clean rows parse, malformed lines keep their raw text, nothing is silently nulled") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_jsonl").toString
+    val dir = tempDirectory("graft_jsonl").toString
     val lines = Seq(
       """{"doc_id": 1, "text": "alpha"}""",
       """{"doc_id": 2, "text": "beta"}""",

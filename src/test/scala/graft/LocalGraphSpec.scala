@@ -22,7 +22,7 @@ import graft.operators.{Dedup, GraphMetrics, PageRank, PqCodebook}
   * null ids, mixed int/long ids, string ids) must be handed to the
   * distributed loop by the gate rather than crash or diverge locally.
   */
-class LocalGraphSpec extends AnyFunSuite {
+class LocalGraphSpec extends AnyFunSuite with TempDirs {
 
   private lazy val spark: SparkSession = {
     val s = SparkSession.builder()
@@ -79,6 +79,24 @@ class LocalGraphSpec extends AnyFunSuite {
     // sanity: the 5-chain really collapsed to min id 1, singletons kept
     assert(local.exists(_.contains("[5,1]")))
     assert(local.exists(_.contains("[30,30]")))
+  }
+
+  test("components: the distributed rounds on a multi-hop chain run at most 44 jobs") {
+    val s = spark
+    import s.implicits._
+    // chain 1-2-…-9: the min label needs several rounds to reach node 9;
+    // each round's cut is materialized by that round's mover count, not by
+    // a job of its own (51 jobs when every round also ran an eager cut)
+    val chain = (1L until 9L).map(i => (i, i + 1)).toDF("id_a", "id_b")
+    val ids = (1L to 9L).toDF("doc_id")
+    spark.conf.set(Limit, "0")
+    val (labels, jobs) =
+      try JobNames.during(spark.sparkContext)(
+        Dedup.resolveClustersSparse(chain, ids).collect())
+      finally spark.conf.unset(Limit)
+    assert(labels.map(r => r.getLong(0) -> r.getLong(1)).toMap ==
+      (1L to 9L).map(_ -> 1L).toMap)
+    assert(jobs.size <= 44, s"${jobs.size} jobs:\n" + jobs.map(_.mkString(", ")).mkString("\n"))
   }
 
   test("guarded components: flag + keeper parity") {
@@ -242,7 +260,7 @@ class LocalGraphSpec extends AnyFunSuite {
     */
   private def buildBoth(emb: DataFrame, m: Int = 8, sub: Int = 2)
       : ((Seq[String], Seq[String]), (Seq[String], Seq[String])) = {
-    val root = java.nio.file.Files.createTempDirectory("graft_localann").toString
+    val root = tempDirectory("graft_localann").toString
     var n = 0
     def built(): (Seq[String], Seq[String]) = {
       n += 1
@@ -303,7 +321,7 @@ class LocalGraphSpec extends AnyFunSuite {
     }
     // an index built from array<double> embeddings serves and takes deltas
     val doubles = cases.last._2
-    val dir = java.nio.file.Files.createTempDirectory("graft_annbuilddouble").toString
+    val dir = tempDirectory("graft_annbuilddouble").toString
     try {
       AnnIndex.build(doubles, dir, m = 8, sub = 2, kcode = 16)
       AnnIndex.appendDelta(spark, dir, doubles.limit(3), m = 8, sub = 2)
@@ -316,7 +334,7 @@ class LocalGraphSpec extends AnyFunSuite {
   test("AnnIndex.build evaluates its input once per row on either path") {
     val s = spark
     import s.implicits._
-    val root = java.nio.file.Files.createTempDirectory("graft_annevals").toString
+    val root = tempDirectory("graft_annevals").toString
     try for (limit <- Seq(None, Some("0"))) {
       val evals = spark.sparkContext.longAccumulator("ann build input evaluations")
       val seen = udf { (_: Long) => evals.add(1); true }.asNondeterministic()
@@ -335,7 +353,7 @@ class LocalGraphSpec extends AnyFunSuite {
   test("AnnIndex.build on 80 vectors runs at most 8 Spark jobs behind one gate decision") {
     val s = spark
     import s.implicits._
-    val root = java.nio.file.Files.createTempDirectory("graft_annbuildjobs").toString
+    val root = tempDirectory("graft_annbuildjobs").toString
     try {
       (0 until 80).map(i => (i.toLong, vec(i))).toDF("vec_id", "embedding")
         .write.parquet(s"$root/emb.parquet")
@@ -358,7 +376,7 @@ class LocalGraphSpec extends AnyFunSuite {
   test("q249: local and distributed power iteration agree on the integer algebra") {
     val s = spark
     import s.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft_localq249").toString
+    val dir = tempDirectory("graft_localq249").toString
     val types = Seq("click", "view", "buy", "share", null)
     // 12 users, 20 events each, one hour apart (ts in epoch nanos)
     val events = for (u <- 0 until 12; e <- 0 until 20) yield {

@@ -11,7 +11,7 @@ import graft.operators.SetSimJoin
   * all-pairs at every τ tried), and the prefix explode must emit strictly
   * fewer rows than the full element stream (the filter actually filters).
   */
-class SetSimJoinSpec extends AnyFunSuite {
+class SetSimJoinSpec extends AnyFunSuite with TempDirs {
 
   private lazy val spark: SparkSession = {
     val s = SparkSession.builder()
@@ -283,7 +283,7 @@ class SetSimJoinSpec extends AnyFunSuite {
     val base = docs.filter($"id" % 4 =!= 0)
     val delta = docs.filter($"id" % 4 === 0)
     val tau4 = 5000L
-    val dir = java.nio.file.Files.createTempDirectory("setsim_idx_spec").toString
+    val dir = tempDirectory("setsim_idx_spec").toString
     SetSimJoin.buildIndex(base, dir, "id", "text", shingleN = 5, tau4 = tau4)
     // the three index tables exist and are non-empty
     for (t <- Seq("sets", "prefix", "df"))

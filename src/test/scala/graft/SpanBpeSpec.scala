@@ -12,7 +12,7 @@ import graft.operators.{BpeTokenizer, SpanDedup, TextAnalysis}
   * plus plan pins for the bucketed join, the pruned partitioned scan and
   * the span-dedup shuffle key.
   */
-class SpanBpeSpec extends AnyFunSuite {
+class SpanBpeSpec extends AnyFunSuite with TempDirs {
 
   private lazy val spark: SparkSession = {
     val s = SparkSession.builder()
@@ -26,7 +26,7 @@ class SpanBpeSpec extends AnyFunSuite {
   }
 
   private def tmpDir(prefix: String): String =
-    java.nio.file.Files.createTempDirectory(prefix).toString
+    tempDirectory(prefix).toString
 
   // ------------------------------------------------------------------
   // SpanDedup

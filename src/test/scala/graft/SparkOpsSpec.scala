@@ -14,7 +14,7 @@ import graft.query.{AppQueries, Retriever}
   * the streaming ingest chain, and the windowed sectionizer vs the state
   * machine.
   */
-class SparkOpsSpec extends AnyFunSuite {
+class SparkOpsSpec extends AnyFunSuite with TempDirs {
 
   private lazy val spark: SparkSession = {
     val s = SparkSession.builder()
@@ -28,7 +28,7 @@ class SparkOpsSpec extends AnyFunSuite {
   }
 
   private def tmpDir(prefix: String): String =
-    java.nio.file.Files.createTempDirectory(prefix).toString
+    tempDirectory(prefix).toString
 
   private val docTexts = Seq(
     ("formA", 0L, "alpha beta gamma delta epsilon zeta eta theta"),
@@ -1587,14 +1587,14 @@ class SparkOpsSpec extends AnyFunSuite {
     (0 until 50).map(i => (i.toLong, e.embedOne(s"v$i").toSeq, i % 5))
       .toDF("vec_id", "embedding", "label")
       .write.mode("overwrite").parquet(s"$dir/embeddings.parquet")
-    // q78: the delta's minhash pass runs ONCE (checkpointed band rows feed
-    // the index probe and both self-join sides as ExistingRDD scans); only
+    // q78: the delta's minhash pass runs ONCE (cut band rows feed the
+    // index probe and both self-join sides as Cut leaves); only
     // the inline corpus index computes minhash_sig in this stateless
     // harness — in production that side is a stored table and disappears
     val p78 = SparkEntry.queries("q78_incremental_neardup")(spark, dir)
       .queryExecution.executedPlan.toString
     assert("minhash_sig".r.findAllIn(p78).size == 1, p78)
-    assert("Scan ExistingRDD".r.findAllIn(p78).size >= 3, p78)
+    assert("Cut \\[".r.findAllIn(p78).size >= 3, p78)
     assert(!p78.contains("CartesianProduct"), p78)
     // q80: queries broadcast (corpus scanned once, never shuffled), the
     // stage-1 quantized rank collapses via partial+final WindowGroupLimit

@@ -10,7 +10,7 @@ import graft.functions.VectorFunctions
   * expressions they stand in for on the driver (AnnIndex's cell ranking
   * and LUT), in both the interpreted and the whole-stage-codegen paths.
   */
-class VectorKernelSpec extends AnyFunSuite {
+class VectorKernelSpec extends AnyFunSuite with TempDirs {
 
   private lazy val spark: SparkSession = {
     val s = SparkSession.builder()
@@ -43,7 +43,7 @@ class VectorKernelSpec extends AnyFunSuite {
       .select(d("i"), VectorFunctions.dotProduct(d("a"), d("b")),
         VectorFunctions.cosineSim(d("a"), d("b")))
       .collect().sortBy(_.getInt(0)).map(r => (r.getDouble(1), r.getDouble(2)))
-    val dir = java.nio.file.Files.createTempDirectory("graft_kernels").toFile
+    val dir = tempDirectory("graft_kernels").toFile
     try {
       df.write.parquet(s"$dir/v.parquet")
       Seq(eval(df), eval(spark.read.parquet(s"$dir/v.parquet")))
