@@ -1,11 +1,13 @@
 package graft.index
 
-import java.util.concurrent.ConcurrentHashMap
+import scala.collection.mutable
+import scala.jdk.CollectionConverters._
 
 import org.apache.hadoop.fs.Path
+import org.apache.spark.Partitioner
 import org.apache.spark.sql.{Column, DataFrame, Encoders, Row, SparkSession}
 import org.apache.spark.sql.catalyst.util.SQLOrderingUtil
-import org.apache.spark.sql.expressions.Window
+import org.apache.spark.sql.execution.SQLExecution
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DoubleType, IntegerType, LongType, StructField, StructType}
 
@@ -35,10 +37,11 @@ import graft.operators.{IvfIndex, LocalStrategy, PqCodebook}
   * touched on the serve path (plan-pinned in the spec; q210 pins it
   * against the inline q184 arithmetic). Centroids and codebook are read
   * once per index and kept on the driver while their files are unchanged
-  * ([[metadata]]), so a batch runs the pruned codes scan and one exchange
-  * keyed by query. At 100 TB the serve-side cost is the probed cells'
-  * code lists — ~1/k of an 8-byte-per-vector table per probe — plus a
-  * batch-sized LUT in the scan's closure.
+  * ([[metadata]]), so a batch is one Spark job: the pruned codes scan with
+  * map-side ADC sums, one exchange keyed by query and a per-query top-k
+  * heap, collected to the driver. At 100 TB the serve-side cost is the
+  * probed cells' code lists — ~1/k of an 8-byte-per-vector table per
+  * probe — plus a batch-sized LUT in the scan's closure.
   *
   * Arithmetic is bit-identical to q178/q184: encode by max-margin argmax
   * (dot − ‖c‖²/2), ADC sums BIGINT micro-units, ties broken on lowest
@@ -97,7 +100,7 @@ object AnnIndex {
     cents.coalesce(1).write.mode("overwrite").parquet(s"$dir/centroids.parquet")
     cb.coalesce(1).write.mode("overwrite").parquet(s"$dir/codebook.parquet")
     val meta = Meta(centroidVectors(cents), codebookVectors(cb))
-    memo.put(dir, fileIdentity(spark, dir) -> meta)
+    remember(dir, fileIdentity(spark, dir), meta)
     writeCodes(encodeCells(cut, meta.cents, below(meta.cb, m), sub), dir, "overwrite")
   }
 
@@ -125,22 +128,36 @@ object AnnIndex {
   private final case class Meta(cents: Array[(Int, Array[Double])],
       cb: Seq[(Long, Long, Array[Double])])
 
+  /** Most index dirs the [[metadata]] memo holds at once. */
+  private[graft] val MemoCap = 16
+
   /** Index dir → (identity of its centroids and codebook files, their
     * contents): one entry per dir, replaced when a rebuild writes new
-    * files. Driver-side; the entries are broadcast-sized.
+    * files, at most [[MemoCap]] entries, the oldest filled evicted first
+    * (a driver building a fresh index per cycle would otherwise keep every
+    * one). Driver-side; the entries are broadcast-sized. Guarded by its
+    * own lock.
     */
-  private val memo = new ConcurrentHashMap[String, (Seq[(String, Long, Long)], Meta)]()
+  private val memo = new java.util.LinkedHashMap[String, (Seq[(String, Long, Long)], Meta)]() {
+    override def removeEldestEntry(
+        e: java.util.Map.Entry[String, (Seq[(String, Long, Long)], Meta)]): Boolean = size > MemoCap
+  }
+
+  /** Fill the memo entry of `dir`, as the newest entry. */
+  private def remember(dir: String, id: Seq[(String, Long, Long)], meta: Meta): Unit =
+    memo.synchronized { memo.remove(dir); memo.put(dir, id -> meta) }
 
   /** Drop the memo entries of `dir` and of every index dir under it: for
     * callers deleting a directory that held indexes
     * ([[graft.SparkEntry.releaseStaging]]), whose entries could never be
     * hit again.
     */
-  private[graft] def forget(dir: String): Unit =
+  private[graft] def forget(dir: String): Unit = memo.synchronized {
     memo.keySet.removeIf(k => k == dir || k.startsWith(dir.stripSuffix("/") + "/"))
+  }
 
   /** Memo entries held; for specs. */
-  private[graft] def memoSize: Int = memo.size
+  private[graft] def memoSize: Int = memo.synchronized(memo.size)
 
   /** (path, length, modification time) of every data file under the
     * centroids and codebook relations of `dir`: one Hadoop listing per
@@ -169,7 +186,7 @@ object AnnIndex {
   private[graft] def metadata(spark: SparkSession, dir: String,
       m: Int): (Array[(Int, Array[Double])], Seq[(Long, Long, Array[Double])]) = {
     val id = fileIdentity(spark, dir)
-    val meta = Option(memo.get(dir)).collect { case (`id`, meta) => meta }.getOrElse {
+    val meta = memo.synchronized(Option(memo.get(dir))).collect { case (`id`, meta) => meta }.getOrElse {
       val both = spark.read.schema(s"$CentroidsSchema, $CodebookSchema")
         .parquet(s"$dir/centroids.parquet", s"$dir/codebook.parquet")
         .select(col("centroid_id"), col("centroid").cast("array<double>"),
@@ -178,7 +195,7 @@ object AnnIndex {
       val (cents, cb) = both.partition(!_.isNullAt(0))
       val read = Meta(cents.map(r => r.getInt(0) -> doubles(r, 1)),
         cb.map(r => (r.getLong(2), r.getLong(3), doubles(r, 4))).toSeq)
-      memo.put(dir, id -> read)
+      remember(dir, id, read)
       read
     }
     (meta.cents, below(meta.cb, m))
@@ -270,12 +287,37 @@ object AnnIndex {
   /** Top-k per query against the PERSISTED index only. `queries` carries
     * (`query_id`, `qv`); `excludeSelf` drops `vec_id == query_id` hits for
     * corpus-sourced query sets (the q184 recall convention). Output:
-    * (query_id, rank, vec_id, adc_u).
+    * (query_id, rank, vec_id, adc_u); `query_id` keeps its input type, the
+    * rest are longs.
     *
-    * Everything sized by the query batch or the index metadata runs on the
+    * Eager: the batch is collected (a literal batch collects without a
+    * job) and served by [[serve]] before this returns; the result is a
+    * local relation of at most k·|queries| rows, bounded by the batch the
+    * driver already holds. A literal batch runs one Spark job, the SQL
+    * execution named [[ServeExecution]].
+    */
+  def query(spark: SparkSession, dir: String, queries: DataFrame,
+      k: Int, nprobe: Int, m: Int = 8, sub: Int = 8,
+      excludeSelf: Boolean = false): DataFrame = {
+    // a null query_id never matches the LUT join; vectors sharing an id
+    // are ranked together, as a per-id window ranks them
+    val batch = vectors(queries, col("query_id"), "qv").filter(_._1 != null)
+      .groupBy(_._1).toSeq.map { case (id, vs) => id -> vs.map(_._2).toSeq }
+    val out = StructType(Seq(queries.schema("query_id"),
+      StructField("rank", LongType, nullable = false),
+      StructField("vec_id", LongType), StructField("adc_u", LongType)))
+    spark.createDataFrame(serve(spark, dir, batch, k, nprobe, m, sub, excludeSelf).toSeq.asJava, out)
+  }
+
+  /** Name of the SQL execution [[serve]] runs its codes scan under. */
+  private[graft] val ServeExecution = "AnnIndex.query"
+
+  /** [[query]] over a driver-side batch of (query id, its vectors): rows
+    * (query_id, rank, vec_id, adc_u) by batch position, then rank.
+    *
+    * Everything sized by the batch or the index metadata runs on the
     * driver: the centroids (k rows) and the codebook (m·kcode rows) come
-    * from [[metadata]] (no job while its memo holds them) and the batch
-    * is collected (a literal batch collects without a job), then cells are
+    * from [[metadata]] (no job while its memo holds them), cells are
     * ranked per query (cosine desc, lowest `centroid_id` on ties, top
     * `nprobe`) and the LUT is built with the same kernels and ordering as
     * the relational form ([[VectorFunctions.cosine]],
@@ -283,21 +325,20 @@ object AnnIndex {
     * closure of ONE narrow pass over the partition-pruned codes scan: a
     * probed cell → query slots table, and a dense LUT over (slot, s, code)
     * with a null/absent mask, each bounded by the batch. The pass emits
-    * (query_id, vec_id, dot_u) — the rows the relational (cell ⋈ codes ⋈
-    * LUT) joins emit, vectors sharing a query id summed per LUT entry —
-    * and the only distributed work is that scan, the ADC sum and the top-k
-    * window: one exchange, so a literal batch runs two jobs.
+    * ((slot, vec_id), (dot_u, non-null)) — the rows the relational (cell ⋈
+    * codes ⋈ LUT) joins emit, vectors sharing a query id summed per LUT
+    * entry — and Spark's map-side combine sums them per key (the ADC sum:
+    * nulls skipped, null when every term is). One shuffle by slot over
+    * min(|batch|, defaultParallelism) partitions feeds a k-bounded heap per
+    * slot in the window's order ([[above]]), and the k·|batch| rows are
+    * collected: ONE job, run as the SQL execution [[ServeExecution]] of the
+    * scan, so the scan and its row counts show to the SQL tab and to
+    * query-execution listeners.
     */
-  def query(spark: SparkSession, dir: String, queries: DataFrame,
-      k: Int, nprobe: Int, m: Int = 8, sub: Int = 8,
-      excludeSelf: Boolean = false): DataFrame = {
-    import spark.implicits._
+  private[graft] def serve(spark: SparkSession, dir: String, batch: Seq[(Any, Seq[Array[Double]])],
+      k: Int, nprobe: Int, m: Int, sub: Int, excludeSelf: Boolean): Array[Row] = {
     // only the m subspaces the query vector is cut into get LUT entries
     val (cents, cb) = metadata(spark, dir, m)
-    // a null query_id never matches the LUT join; vectors sharing an id
-    // are ranked together, as a per-id window ranks them
-    val batch = vectors(queries, $"query_id", "qv").filter(_._1 != null)
-      .groupBy(_._1).toSeq.map { case (id, vs) => id -> vs.map(_._2).toSeq }
     val ids = batch.map(_._1).toArray
     // probed cell -> the slots (batch positions) probing it, once per
     // ranked (vector, cell) pair, as the relational cell join repeats them
@@ -322,37 +363,91 @@ object AnnIndex {
         state(i) = 2
       } else if (state(i) == 0) state(i) = 1
     }
-    val hit = StructType(Seq(queries.schema("query_id"),
-      StructField("vec_id", LongType), StructField("dot_u", LongType)))
     // nprobe·|queries| cell ids -> a STATIC partition-pruning predicate on
     // the codes scan (bounded by the query batch, never by data)
     val probed = slotsByCell.keys.toSeq.sorted
-    val adc = spark.read.schema(CodesSchema).parquet(s"$dir/codes.parquet")
-      .filter($"centroid_id".isin(probed.map(Integer.valueOf): _*))
-      .flatMap { r =>
+    val scan = spark.read.schema(CodesSchema).parquet(s"$dir/codes.parquet")
+      .filter(col("centroid_id").isin(probed.map(Integer.valueOf): _*))
+      .queryExecution
+    val bySlot = new SlotPartitioner(math.max(1, math.min(ids.length, spark.sparkContext.defaultParallelism)))
+    val top = SQLExecution.withNewExecutionId(scan, Some(ServeExecution)) {
+      scan.toRdd.flatMap { r =>
         val s = if (r.isNullAt(1)) -1L else r.getLong(1)
         val code = if (r.isNullAt(2)) -1L else r.getLong(2) - codeLo
         if (s < 0 || s >= m || code < 0 || code >= width) Iterator.empty
         else {
           val at = s.toInt * width + code.toInt
-          val vecId = r.get(0)
+          val nullId = r.isNullAt(0)
+          val vecId = if (nullId) 0L else r.getLong(0)
           slotsByCell.getOrElse(r.getInt(3), Array.emptyIntArray).iterator.flatMap { slot =>
             val i = slot * m * width + at
-            if (state(i) == 0) None
-            else Some(Row(ids(slot), vecId, if (state(i) == 1) null else lut(i)))
+            // excludeSelf is the relational `vec_id =!= query_id` filter,
+            // under which a null vec_id drops too
+            if (state(i) == 0 || excludeSelf && (nullId || sameId(vecId, ids(slot)))) None
+            else Some(Cand(slot, vecId, nullId) -> ((lut(i), state(i) == 2)))
           }
         }
-      }(Encoders.row(hit))
-      .filter(if (excludeSelf) $"vec_id" =!= $"query_id" else lit(true))
-      // one exchange serves both the ADC sum and the top-k window: a
-      // map-side partial sum would shuffle m× fewer rows but costs a
-      // second exchange, i.e. one more job per ask
-      .repartition($"query_id")
-      .groupBy($"query_id", $"vec_id")
-      .agg(sum($"dot_u").as("adc_u"))
-    val wk = Window.partitionBy($"query_id").orderBy($"adc_u".desc, $"vec_id")
-    adc.withColumn("rank", row_number().over(wk)).filter($"rank" <= k)
-      .select($"query_id", $"rank".cast("long").as("rank"), $"vec_id", $"adc_u")
+      }.reduceByKey(bySlot, (a, b) => (a._1 + b._1, a._2 || b._2))
+        .mapPartitions(topK(_, k))
+        .collect()
+    }
+    top.sortBy { case (rank, c, _) => (c.slot, rank) }.map { case (rank, c, (adc, any)) =>
+      Row(ids(c.slot), rank, if (c.nullId) null else c.vecId, if (any) adc else null)
+    }
+  }
+
+  /** A (query slot, vec_id) key of the serve pass, `nullId` for a null
+    * vec_id. Hashed without boxing: the map-side combine hashes one key
+    * per emitted row.
+    */
+  private final case class Cand(slot: Int, vecId: Long, nullId: Boolean) {
+    override def hashCode: Int = 31 * slot + java.lang.Long.hashCode(vecId) + (if (nullId) 1 else 0)
+  }
+
+  /** A slot's candidates → partition slot mod n. */
+  private final class SlotPartitioner(n: Int) extends Partitioner {
+    def numPartitions: Int = n
+    def getPartition(key: Any): Int = key.asInstanceOf[Cand].slot % n
+  }
+
+  /** Whether candidate `a` ranks above `b` of the same slot: `adc_u` DESC
+    * NULLS LAST (the flag says the sum is not null), then `vec_id` ASC
+    * NULLS FIRST — the order of the relational form's top-k window.
+    */
+  private def above(a: (Cand, (Long, Boolean)), b: (Cand, (Long, Boolean))): Boolean =
+    if (a._2._2 != b._2._2) a._2._2
+    else if (a._2._2 && a._2._1 != b._2._1) a._2._1 > b._2._1
+    else if (a._1.nullId != b._1.nullId) a._1.nullId
+    else a._1.vecId < b._1.vecId
+
+  /** The k best candidates of each slot of a partition, ranked from 1,
+    * kept in a k-bounded heap per slot whose head is its worst.
+    */
+  private def topK(cands: Iterator[(Cand, (Long, Boolean))],
+      k: Int): Iterator[(Long, Cand, (Long, Boolean))] = {
+    val worstFirst = Ordering.fromLessThan[(Cand, (Long, Boolean))]((a, b) => above(b, a))
+    val heaps = mutable.HashMap.empty[Int, java.util.PriorityQueue[(Cand, (Long, Boolean))]]
+    if (k > 0) cands.foreach { c =>
+      val heap = heaps.getOrElseUpdate(c._1.slot, new java.util.PriorityQueue(worstFirst))
+      if (heap.size < k) heap.add(c)
+      else if (above(c, heap.peek)) { heap.poll(); heap.add(c) }
+    }
+    heaps.valuesIterator.flatMap { heap =>
+      heap.asScala.toSeq.sortWith(above).iterator.zipWithIndex
+        .map { case ((c, adc), i) => (i + 1L, c, adc) }
+    }
+  }
+
+  /** `vec_id = query_id` for a non-null `vec_id`, as Spark compares a
+    * bigint with the id's type: integral ids as bigint, fractional ones as
+    * double, decimals exactly, strings cast to bigint.
+    */
+  private def sameId(vecId: Long, id: Any): Boolean = id match {
+    case x @ (_: Byte | _: Short | _: Int | _: Long) => vecId == x.asInstanceOf[Number].longValue
+    case x @ (_: Float | _: Double) => vecId.toDouble == x.asInstanceOf[Number].doubleValue
+    case x: java.math.BigDecimal => java.math.BigDecimal.valueOf(vecId).compareTo(x) == 0
+    case x: String => x.trim.toLongOption.contains(vecId)
+    case _ => false
   }
 
   /** `score DESC NULLS LAST, id ASC` with Spark's double order (NaN above

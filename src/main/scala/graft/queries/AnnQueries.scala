@@ -971,9 +971,13 @@ private[graft] object AnnQueries {
     // relations alone — the codes scan is partition-pruned to the probed
     // cells via a static isin over the partition column, and the raw
     // embedding corpus is never read on the serve path (plan-pinned in
-    // AnnIndexSpec). Arithmetic is bit-identical to q184's inline index
-    // (same encode argmax, BIGINT LUT micro-units, tie order), which the
-    // oracle replays relationally at nprobe = 4.
+    // AnnIndexSpec). The serve is eager: after the query batch's collect
+    // it runs as one job (the SQL execution "AnnIndex.query": scan,
+    // map-side ADC sums, one exchange by query, per-query top-k) and
+    // returns the 160 rows as a local relation, which the orderBy sorts.
+    // Arithmetic is bit-identical to q184's inline index (same encode
+    // argmax, BIGINT LUT micro-units, tie order), which the oracle replays
+    // relationally at nprobe = 4.
     "q210_ann_index_serve" -> ((s, dir) => {
       import s.implicits._
       val emb = t(s, dir, "embeddings")

@@ -1,7 +1,10 @@
 package graft.query
 
-import org.apache.spark.sql.{Column, DataFrame}
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{LongType, StructField, StructType}
 
 import graft.embed.Embedder
 import graft.functions.VectorFunctions
@@ -39,10 +42,11 @@ object Retriever {
   /** Context assembly (`QA_using_pinecone.py:45-55`): match texts joined by
     * "\n", then the prompt suffix. Driver-side over k collected rows.
     */
-  def assembleContext(topk: DataFrame, question: String, textCol: String = "text"): String = {
-    val texts = topk.select(col(textCol)).collect().map(_.getString(0))
+  def assembleContext(topk: DataFrame, question: String, textCol: String = "text"): String =
+    prompt(topk.select(col(textCol)).collect().map(_.getString(0)).toSeq, question)
+
+  private def prompt(texts: Seq[String], question: String): String =
     texts.mkString("\n") + "\n\n Question: " + question
-  }
 
   /** End-to-end ask: embed (pluggable), retrieve, assemble. The LLM
     * completion is an external sink outside the engine (temperature-0
@@ -63,18 +67,23 @@ object Retriever {
     * against the persisted [[graft.index.AnnIndex]] (centroids + codebook
     * + cell-partitioned PQ codes; the codes scan is partition-pruned to
     * the probed cells and the raw embedding corpus is NEVER read on the
-    * serve path), and hit ids join back to `index` only to fetch context
-    * text by key. Exactness is traded for serve cost — q244 measures the
-    * recall gap against the brute-force path on the same queries. Returns
-    * (hits in rank order, assembled prompt).
+    * serve path), and the hit ids select their context text from `index`
+    * by key. Exactness is traded for serve cost — q244 measures the recall
+    * gap against the brute-force path on the same queries. Returns (hits in
+    * rank order, assembled prompt); the hits are a local relation of
+    * (vec_id, query_id, rank, adc_u, text) with the inner join's
+    * semantics: a hit without a text row drops, an id held by several rows
+    * repeats.
     *
-    * Job shape per ask, three jobs: [[graft.index.AnnIndex.query]] takes
-    * the centroids and the codebook from its memo (one collect the first
-    * time a driver serves an index it did not build) and ranks cells and
-    * builds the LUT on the driver; the prompt's collect then runs the
-    * pruned codes scan with its one exchange, the context-text broadcast
-    * and the result stage. The k rows are put in rank order in a single
-    * partition, so no range-partitioned sort runs.
+    * Job shape per ask, two jobs: the embedded question goes to the
+    * index's driver-side serve as is (no DataFrame is planned for it),
+    * which takes the centroids and the codebook from its memo (one collect
+    * the first time a driver serves an index it did not build), ranks
+    * cells and builds the LUT on the driver and runs the pruned codes scan,
+    * the ADC sums and the top-k as one shuffle job; then one scan of
+    * `index` filtered to the k hit ids (pushed to the reader when `idCol`
+    * is already a long) collects their texts, and the prompt is assembled
+    * in rank order on the driver.
     */
   def askViaIndex(
       index: DataFrame,
@@ -88,14 +97,19 @@ object Retriever {
       idCol: String = "vector_id",
       textCol: String = "text"): (DataFrame, String) = {
     val spark = index.sparkSession
-    import spark.implicits._
     val qv = embedder.embed(Seq(question)).head
-    val queries = Seq((0L, qv)).toDF("query_id", "qv")
-    val hits = graft.index.AnnIndex
-      .query(spark, idxDir, queries, k, nprobe, m, sub)
-      .join(index.select(col(idCol).cast("long").as("vec_id"), col(textCol)),
-        Seq("vec_id"))
-      .coalesce(1).sortWithinPartitions(col("rank"))
-    (hits, assembleContext(hits, question, textCol))
+    // (query_id, rank, vec_id, adc_u) in rank order
+    val served = graft.index.AnnIndex.serve(spark, idxDir, Seq(0L -> Seq(qv.map(_.toDouble))),
+      k, nprobe, m, sub, excludeSelf = false).toSeq
+    val byKey = index.select(col(idCol).cast("long").as("vec_id"), col(textCol))
+    val texts = byKey.filter(col("vec_id").isin(served.flatMap(h => Option(h.get(2))): _*))
+      .collect().groupBy(_.get(0))
+    val hits = served.flatMap { h =>
+      texts.getOrElse(h.get(2), Array.empty[Row]).map(t => Row(h.get(2), h.get(0), h.get(1), h.get(3), t.get(1)))
+    }
+    val schema = StructType(Seq(StructField("vec_id", LongType),
+      StructField("query_id", LongType, nullable = false), StructField("rank", LongType, nullable = false),
+      StructField("adc_u", LongType), byKey.schema(textCol)))
+    (spark.createDataFrame(hits.asJava, schema), prompt(hits.map(_.getString(4)), question))
   }
 }

@@ -110,6 +110,13 @@ class AnnIndexSpec extends AnyFunSuite with TempDirs {
   private def codeRows(codes: DataFrame): Seq[String] =
     codes.select("vec_id", "s", "code", "centroid_id").collect().map(_.toString).sorted.toSeq
 
+  /** The executed plan of the one serve execution among `execs`. */
+  private def servePlan(execs: Seq[(String, String)]): String = {
+    val serves = execs.filter(_._1 == AnnIndex.ServeExecution)
+    assert(serves.size == 1, execs.map(_._1))
+    serves.head._2
+  }
+
   /** 60 "doc i" records embedded by the ask path's own embedder, persisted
     * as a vector-index table, and their AnnIndex (m = 8, sub = 2) under
     * `dir/idx`.
@@ -138,9 +145,10 @@ class AnnIndexSpec extends AnyFunSuite with TempDirs {
     // literal query batch: the serve path gets vectors from the caller,
     // not from any corpus relation
     val queries = Seq((0L, vec(3)), (1L, vec(77))).toDF("query_id", "qv")
-    val res = AnnIndex.query(spark, s"$dir/idx", queries,
-      k = 5, nprobe = 2, m = 8, sub = 2)
-    val plan = res.queryExecution.executedPlan.toString
+    val (res, execs) = JobNames.executions(spark) {
+      AnnIndex.query(spark, s"$dir/idx", queries, k = 5, nprobe = 2, m = 8, sub = 2)
+    }
+    val plan = servePlan(execs)
     assert(plan.contains("codes.parquet"), plan)
     assert(!plan.contains("raw_corpus.parquet"),
       "serve path read the raw corpus:\n" + plan)
@@ -165,14 +173,25 @@ class AnnIndexSpec extends AnyFunSuite with TempDirs {
     // corpus whose vectors come from the SAME embedder so the question
     // "doc 7" retrieves doc 7's own vector as the top hit
     val (index, dir, embedder) = askFixture("graft_annask")
-    val (hits, prompt) = graft.query.Retriever.askViaIndex(
-      index, s"$dir/idx", "doc 7", embedder, k = 3, nprobe = 3, m = 8, sub = 2)
-    val plan = hits.queryExecution.executedPlan.toString
-    // the serve side reads persisted codes; the corpus scan exists ONLY
-    // for the text fetch — its embedding column must be pruned away
+    val ((hits, prompt), execs) = JobNames.executions(spark) {
+      graft.query.Retriever.askViaIndex(
+        index, s"$dir/idx", "doc 7", embedder, k = 3, nprobe = 3, m = 8, sub = 2)
+    }
+    // the serve side reads persisted codes, partition-pruned, and never
+    // the corpus
+    val plan = servePlan(execs)
     assert(plan.contains("codes.parquet"), plan)
-    assert(!plan.contains("content_vector"),
-      "context join read the embedding column:\n" + plan)
+    assert("PartitionFilters: \\[[^\\]]*centroid_id".r.findFirstIn(plan).nonEmpty, plan)
+    assert(!plan.contains("corpus.parquet"), "serve path read the corpus:\n" + plan)
+    // the corpus scan exists ONLY for the text fetch — its embedding
+    // column must be pruned away, and long ids filter in the reader
+    val fetch = execs.filter(_._1 != AnnIndex.ServeExecution)
+    assert(fetch.size == 1, execs.map(_._1))
+    val fetchPlan = fetch.head._2
+    assert(fetchPlan.contains("corpus.parquet"), fetchPlan)
+    assert(!fetchPlan.contains("content_vector"),
+      "text fetch read the embedding column:\n" + fetchPlan)
+    assert("PushedFilters: \\[[^\\]]*In\\(vector_id".r.findFirstIn(fetchPlan).nonEmpty, fetchPlan)
     // join on vec_id fronts the key: (vec_id, query_id, rank, adc_u, text)
     val rows = hits.orderBy($"rank").collect()
     assert(rows.map(_.getLong(2)).toSeq == Seq(1L, 2L, 3L))
@@ -192,7 +211,7 @@ class AnnIndexSpec extends AnyFunSuite with TempDirs {
     org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(dir))
   }
 
-  test("askViaIndex runs at most 3 Spark jobs; the serve path runs no parquet schema-inference job") {
+  test("askViaIndex runs at most 2 Spark jobs and a literal-batch query exactly 1; the serve path runs no parquet schema-inference job") {
     import spark.implicits._
     val (index, dir, embedder) = askFixture("graft_annjobs")
     val (prompt, jobs) = JobNames.during(spark.sparkContext) {
@@ -200,16 +219,42 @@ class AnnIndexSpec extends AnyFunSuite with TempDirs {
         index, s"$dir/idx", "doc 7", embedder, k = 3, nprobe = 3, m = 8, sub = 2)._2
     }
     assert(prompt.endsWith("\n\n Question: doc 7"))
-    assert(jobs.size <= 3, s"${jobs.size} jobs:\n" + jobs.mkString("\n"))
+    assert(jobs.size <= 2, s"${jobs.size} jobs:\n" + jobs.mkString("\n"))
     val (_, serveJobs) = JobNames.during(spark.sparkContext) {
       AnnIndex.query(spark, s"$dir/idx",
           Seq((0L, embedder.embedOne("doc 7").toSeq)).toDF("query_id", "qv"),
           k = 3, nprobe = 3, m = 8, sub = 2)
         .collect()
     }
+    assert(serveJobs.size == 1, serveJobs.mkString("\n"))
     assert(!serveJobs.flatten.exists(_.startsWith("parquet at AnnIndex")),
       serveJobs.mkString("\n"))
     org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(dir))
+  }
+
+  test("askViaIndex: hits meet their text rows as the inner join on vec_id did — a hit without a text row drops, a duplicated id repeats") {
+    import spark.implicits._
+    val (index, dir, embedder) = askFixture("graft_annaskdup")
+    try {
+      val direct = AnnIndex.query(spark, s"$dir/idx",
+        Seq((0L, embedder.embedOne("doc 7").toSeq)).toDF("query_id", "qv"),
+        k = 3, nprobe = 3, m = 8, sub = 2)
+      val ids = direct.orderBy($"rank").select($"vec_id").as[Long].collect()
+      assert(ids.length == 3)
+      // the first hit's text row twice, the second hit's row gone
+      index.filter($"vector_id" =!= ids(1)).union(index.filter($"vector_id" === ids(0)))
+        .write.parquet(s"$dir/texts.parquet")
+      val texts = spark.read.parquet(s"$dir/texts.parquet")
+      val (hits, prompt) = graft.query.Retriever.askViaIndex(
+        texts, s"$dir/idx", "doc 7", embedder, k = 3, nprobe = 3, m = 8, sub = 2)
+      val joined = direct.join(texts.select($"vector_id".cast("long").as("vec_id"), $"text"), Seq("vec_id"))
+      assert(hits.schema.map(f => f.name -> f.dataType) == joined.schema.map(f => f.name -> f.dataType))
+      def rows(df: DataFrame): Seq[String] = df.collect().map(_.toString).sorted.toSeq
+      assert(rows(hits) == rows(joined))
+      val kept = Seq(ids(0), ids(0), ids(2))
+      assert(hits.collect().map(_.getLong(0)).toSeq == kept)
+      assert(prompt == kept.map(i => s"text of doc $i").mkString("\n") + "\n\n Question: doc 7")
+    } finally org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(dir))
   }
 
   test("driver-side cell ranking and LUT: same rows as the relational form on degenerate batches") {
@@ -276,6 +321,29 @@ class AnnIndexSpec extends AnyFunSuite with TempDirs {
     val twice = same("a vec_id appended twice",
       Seq((0L, vec(5)), (1L, vec(6))).toDF("query_id", "qv"), k = 10, nprobe = cells)
     assert(twice.exists(_.getLong(2) == 5L))
+    // more slots than reduce partitions: several slots share one heap pass
+    val dp = spark.sparkContext.defaultParallelism
+    val many = same(s"${2 * dp + 1} queries, slots sharing reduce partitions",
+      (0 until 2 * dp + 1).map(i => (i.toLong, vec(i * 13))).toDF("query_id", "qv"), k = 5, nprobe = 3)
+    assert(many.map(_.getLong(0)).distinct.length == 2 * dp + 1)
+    val one = same("k above the candidate count",
+      Seq((0L, vec(3)), (1L, vec(77))).toDF("query_id", "qv"), k = 1000, nprobe = 1)
+    assert(one.nonEmpty && one.length < 2 * 120)
+    val selfInts = same("int query_id, excludeSelf",
+      (0 until 6).map(i => (i, vec(i))).toDF("query_id", "qv"), k = 10, nprobe = 4, excludeSelf = true)
+    assert(selfInts.length == 60 && selfInts.forall(r => r.getInt(0).toLong != r.getLong(2)))
+    // vec 3's vector under two more ids: equal codes, so equal adc_u for
+    // every query; the tie goes to the lower vec_id, also across the k cut
+    AnnIndex.appendDelta(spark, s"$dir/idx",
+      Seq((1003L, vec(3)), (1004L, vec(3))).toDF("vec_id", "embedding"), m = m, sub = sub)
+    val tieQ = Seq((0L, vec(3)), (1L, vec(40))).toDF("query_id", "qv")
+    val allTies = same("equal adc_u ties, k above the candidate count", tieQ, k = 200, nprobe = cells)
+    val tied = allTies.filter(r => r.getLong(0) == 0L && Set(3L, 1003L, 1004L)(r.getLong(2)))
+    assert(tied.map(_.getLong(2)).toSeq == Seq(3L, 1003L, 1004L) && tied.map(_.get(3)).distinct.length == 1,
+      tied.toSeq)
+    val cut = same("equal adc_u ties across the k cut", tieQ, k = tied(1).getLong(1).toInt, nprobe = cells)
+    assert(cut.filter(_.getLong(0) == 0L).map(_.getLong(2)).toSet.intersect(Set(3L, 1003L, 1004L)) ==
+      Set(3L, 1003L))
     org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(dir))
   }
 
@@ -324,16 +392,18 @@ class AnnIndexSpec extends AnyFunSuite with TempDirs {
     val queries = Seq((0L, vec(3)), (1L, vec(77))).toDF("query_id", "qv")
     def rows(df: DataFrame): Seq[String] = df.collect().map(_.toString).sorted.toSeq
     def served(idx: String): Seq[String] = rows(AnnIndex.query(spark, idx, queries, 5, 3, m, sub))
+    // the metadata read's jobs, by the frame that submits them (the serve
+    // job's collect is in AnnIndex too)
     def fromAnnIndex(jobs: Seq[Seq[String]]): Seq[String] = jobs.flatten.filter(n =>
-      n.startsWith("collect at AnnIndex") || n.startsWith("parquet at AnnIndex"))
+      n.contains("graft.index.AnnIndex$.metadata(") || n.startsWith("parquet at AnnIndex"))
     try {
       AnnIndex.build(corpus(0), s"$dir/a", m = m, sub = sub, kcode = 16)
       // a copy this driver never built: its first query reads the metadata
       org.apache.commons.io.FileUtils.copyDirectory(new java.io.File(s"$dir/a"),
         new java.io.File(s"$dir/copy"))
-      val (first, firstJobs) = JobNames.during(spark.sparkContext)(served(s"$dir/copy"))
+      val (first, firstJobs) = JobNames.callStacks(spark.sparkContext)(served(s"$dir/copy"))
       assert(fromAnnIndex(firstJobs).nonEmpty, firstJobs.mkString("\n"))
-      val (second, secondJobs) = JobNames.during(spark.sparkContext)(served(s"$dir/copy"))
+      val (second, secondJobs) = JobNames.callStacks(spark.sparkContext)(served(s"$dir/copy"))
       assert(fromAnnIndex(secondJobs).isEmpty, secondJobs.mkString("\n"))
       assert(first == second && first == rows(relationalQuery(s"$dir/copy", queries, 5, 3, m, sub)))
       // rebuild a different corpus into the same directory
@@ -382,10 +452,37 @@ class AnnIndexSpec extends AnyFunSuite with TempDirs {
     val before = AnnIndex.memoSize
     try {
       assert(SparkEntry.queries("q210_ann_index_serve")(spark, sf).collect().nonEmpty)
-      assert(AnnIndex.memoSize == before + 1, "q210's build did not seed the memo")
+      // a full memo makes room for the new entry by evicting its oldest
+      val seeded = math.min(before + 1, AnnIndex.MemoCap)
+      assert(AnnIndex.memoSize == seeded, "q210's build did not seed the memo")
       SparkEntry.releaseStaging(spark)
-      assert(AnnIndex.memoSize == before)
+      assert(AnnIndex.memoSize == seeded - 1)
     } finally org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(sf))
+  }
+
+  test("metadata memo: holds at most MemoCap indexes, evicting the oldest; an evicted index serves the same rows after a cold read") {
+    import spark.implicits._
+    val dir = tempDirectory("graft_anncap").toString
+    val emb = (0 until 40).map(i => (i.toLong, vec(i))).toDF("vec_id", "embedding")
+    val queries = Seq((0L, vec(3)), (1L, vec(17))).toDF("query_id", "qv")
+    def served(idx: String): Seq[String] =
+      AnnIndex.query(spark, idx, queries, 5, 2, 8, 2).collect().map(_.toString).sorted.toSeq
+    try {
+      AnnIndex.build(emb, s"$dir/0", m = 8, sub = 2, kcode = 16)
+      val first = served(s"$dir/0")
+      for (i <- 1 to AnnIndex.MemoCap) {
+        AnnIndex.build(emb, s"$dir/$i", m = 8, sub = 2, kcode = 16)
+        assert(AnnIndex.memoSize <= AnnIndex.MemoCap, s"after build $i")
+      }
+      // index 0 was filled first, so the last build evicted it
+      val (again, jobs) = JobNames.callStacks(spark.sparkContext)(served(s"$dir/0"))
+      assert(jobs.flatten.exists(_.contains("graft.index.AnnIndex$.metadata(")), jobs.mkString("\n"))
+      assert(first.nonEmpty && again == first)
+      assert(AnnIndex.memoSize <= AnnIndex.MemoCap)
+    } finally {
+      AnnIndex.forget(dir)
+      org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(dir))
+    }
   }
 
   test("appendDelta: delta-only encode against the stored codebook; base code files untouched; on-disk codes match the driver-side replay") {
